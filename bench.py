@@ -114,7 +114,7 @@ def bench_extraction(spark, n_docs: int) -> dict:
     attempts = []
     for _ in range(3):
         t0 = time.perf_counter()
-        out = extract_pages(pages, partitions=2 * CPUS)
+        out = extract_pages(pages)
         counts = out.groupBy(F.isnull("error").alias("ok")).count().collect()
         n = sum(r["count"] for r in counts if r["ok"])
         n_total = sum(r["count"] for r in counts)

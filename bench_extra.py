@@ -29,15 +29,7 @@ sys.path.insert(0, REPO)
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-HEADLINE = [
-    "q01_pricing_summary", "q02_top_customers", "q04_running_value",
-    "q05_sessionize", "q06_event_type_daily", "q08_brand_volume",
-    "t01_token_stats", "t02_quality", "t03_langid", "t05_exact_dedup",
-    "i01_incremental_exact",
-    "d01_minhash_pairs", "d02_simhash_pairs", "d04_winnow_fingerprints",
-    "s01_topk_cosine", "s02_knn_sample",
-    "m02_image_dups", "t08_bpe_tokens", "c01_chunks",
-]
+from bench import HEADLINE  # noqa: E402
 
 
 def plan_text(df) -> str:
@@ -87,7 +79,7 @@ def main() -> None:
         for i in range(args.attempts):
             sc.setJobDescription(f"extract attempt {i}")
             t0 = time.perf_counter()
-            o = extract_pages(pages, partitions=2 * CPUS)
+            o = extract_pages(pages)
             o.groupBy(F.isnull("error").alias("ok")).count().collect()
             walls.append(round(time.perf_counter() - t0, 3))
         out["extract"] = {"count_walls": walls}
@@ -95,7 +87,7 @@ def main() -> None:
             os.makedirs(os.path.join(REPO, "plans", "r06"), exist_ok=True)
             with open(os.path.join(REPO, "plans", "r06",
                                    f"extract_{args.plans}.txt"), "w") as fh:
-                fh.write(plan_text(extract_pages(pages, partitions=2 * CPUS)))
+                fh.write(plan_text(extract_pages(pages)))
 
     for name in names:
         fn = reg[name]

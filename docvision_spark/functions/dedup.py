@@ -8,9 +8,10 @@ Scale notes (the 100 TB design):
    shuffles are the band-bucket groupBy and the candidate self-join, both on
    64-bit keys. Buckets with one member produce no candidates; a hot bucket
    (degenerate content, e.g. empty strings) is capped to bound the join.
- - SimHash: 64-bit signature via bit-bucket sums — expressions only; near-dup
-   pairs found by banding the signature into 4x16-bit keys (Hamming<=3 within
-   a band collision is probabilistic, like all SimHash deployments).
+ - SimHash: 64-bit signature; tokens are hashed JVM-side and the bit
+   majority vote runs over whole Arrow batches in numpy. Near-dup pairs are
+   found by banding the signature into 4x16-bit keys; recall is complete
+   for Hamming<=3 (pigeonhole), and radius-1 band probes extend it to <=7.
  - n-gram Jaccard: exact verification on candidate pairs only (never all
    pairs — that's O(n^2) and unrunnable at 10^12 docs).
 """
@@ -141,39 +142,6 @@ def word_shingle_hashes(col: Column, k: int = 3) -> Column:
 
 # ---------------------------------------------------------------- minhash --
 
-def minhash_signature(shingles: Column, num_hashes: int = 32) -> Column:
-    """MinHash signature: per hash-function j, min over shingles of
-    xxhash64(j || shingle). Pure expressions -> whole-stage codegen."""
-    def _minhash(j: int) -> Column:
-        # NB: the lambda must take exactly ONE arg — a second parameter
-        # (even defaulted) makes Spark bind the array index to it.
-        return F.array_min(F.transform(shingles, lambda s: F.xxhash64(F.lit(j), s)))
-
-    return F.array(*[_minhash(j) for j in range(num_hashes)])
-
-
-def minhash_signatures_agg(
-    df: DataFrame, id_col: str, shingles_col: str, num_hashes: int = 32,
-) -> DataFrame:
-    """MinHash signatures via explode + single-pass multi-min aggregation.
-
-    minhash_signature() is fine for one-off signatures, but inside a
-    collapsed projection the shingling subtree gets inlined into all
-    num_hashes expressions (regexp-normalize + substring fan-out recomputed
-    num_hashes times). Here shingling is computed ONCE per document; the
-    num_hashes mins ride one hash-aggregate with map-side partials — the
-    shuffle carries num_hashes longs per doc, not the shingle sets.
-    Returns (id, mh array<long>).
-    """
-    exploded = df.select(F.col(id_col).alias("id"),
-                         F.explode(shingles_col).alias("s"))
-    aggs = [F.min(F.xxhash64(F.lit(j), F.col("s"))).alias(f"m{j}")
-            for j in range(num_hashes)]
-    per_doc = exploded.groupBy("id").agg(*aggs)
-    return per_doc.select(
-        "id", F.array(*[F.col(f"m{j}") for j in range(num_hashes)]).alias("mh"))
-
-
 def minhash_signatures_expr(
     df: DataFrame, id_col: str, shingles_col: str, num_hashes: int = 32,
 ) -> DataFrame:
@@ -181,9 +149,9 @@ def minhash_signatures_expr(
     shingle array keeps a running-min accumulator of num_hashes longs —
     each shingle hashed num_hashes times inside the row projection, no
     explode, no groupBy. The shingle column is referenced exactly once, so
-    projection collapse cannot re-inline the shingling subtree (the failure
-    mode that motivated the explode+agg variant). Bit-exact with
-    minhash_signatures_agg (parity-tested). Returns (id, mh array<long>)."""
+    projection collapse cannot re-inline the shingling subtree. Signature
+    j is min over shingles s of xxhash64(j, s) (tests check it against an
+    explode + groupBy min). Returns (id, mh array<long>)."""
     staged = df.select(F.col(id_col).alias("id"),
                        F.col(shingles_col).alias("_sh"))
     mh = F.expr(
@@ -287,112 +255,12 @@ def minhash_lsh_pairs(
 
 # ---------------------------------------------------------------- simhash --
 
-def simhash64(col: Column) -> Column:
-    """64-bit SimHash of whitespace tokens — expressions only.
-
-    For each bit position, sum +1/-1 over token hashes and take the sign.
-    Implemented as: for bit k, count tokens with bit k set, compare to n/2
-    (strictly greater -> bit set; integer compare, no float).
-    """
-    toks = F.split(F.trim(normalized(col)), " ")
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
-    n = F.size(toks)
-    def _ones(mask: Column) -> Column:
-        return F.size(F.filter(hashes, lambda h: h.bitwiseAND(mask) != 0))
-
-    bit_terms = []
-    for k in range(64):
-        # shiftleft stays in JVM long space (1<<63 wraps to Long.MIN_VALUE,
-        # which a Python int literal would overflow)
-        mask = F.shiftleft(F.lit(1).cast("long"), k)
-        ones = _ones(mask)
-        bit_terms.append(F.when(ones * 2 > n, mask).otherwise(F.lit(0).cast("long")))
-    sig = bit_terms[0]
-    for t in bit_terms[1:]:
-        sig = sig.bitwiseOR(t)
-    return sig
-
-
-def simhash_signatures_agg(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-) -> DataFrame:
-    """SimHash signatures via explode + single-pass 64-sum aggregation.
-
-    simhash64() fans the token array into 64 collapsed-projection scans;
-    here each token is hashed once and the 64 bit-counters ride one
-    hash-aggregate (map-side partials carry 64 longs per doc).
-    Returns (id, sh long).
-    """
-    toks = F.split(F.trim(normalized(F.col(text_col))), " ")
-    exploded = df.select(F.col(id_col).alias("id"),
-                         F.explode(toks).alias("t"))
-    hashed = exploded.select("id", F.xxhash64("t").alias("h"))
-    aggs = [
-        F.sum(F.shiftright("h", k).bitwiseAND(F.lit(1).cast("long"))).alias(f"b{k}")
-        for k in range(64)
-    ] + [F.count("*").alias("n")]
-    per_doc = hashed.groupBy("id").agg(*aggs)
-    sig = F.lit(0).cast("long")
-    for k in range(64):
-        sig = sig.bitwiseOR(
-            F.when(F.col(f"b{k}") * 2 > F.col("n"),
-                   F.shiftleft(F.lit(1).cast("long"), k))
-            .otherwise(F.lit(0).cast("long")))
-    return per_doc.select("id", sig.alias("sh"))
-
-
-def simhash_signatures_expr(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-) -> DataFrame:
-    """SimHash signatures with ZERO shuffle: each token hashed once, all 64
-    bit-counters accumulated in ONE aggregate() pass over the token-hash
-    array, entirely within the row's projection.
-
-    vs simhash_signatures_agg: the explode+groupBy variant shuffles 64 longs
-    per doc (cheap but nonzero, and the explode multiplies the row count by
-    tokens-per-doc through the map side); this variant keeps the whole
-    signature computation inside whole-stage codegen so the only shuffle in
-    simhash_pairs is the band self-join. Bit-exact with the other two
-    variants (parity-tested).
-    """
-    toks = F.split(F.trim(normalized(F.col(text_col))), " ")
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
-    staged = df.select(F.col(id_col).alias("id"),
-                       hashes.alias("_h"), F.size(toks).alias("_n"))
-    # the inner shift-by-lambda-var needs SQL form (the python F.shiftright
-    # wrapper only takes an int); `_h` is the Column-API-built hash array
-    counts = F.expr(
-        "aggregate(_h, array_repeat(0L, 64), "
-        "(acc, h) -> zip_with(acc, transform(sequence(0, 63), "
-        "i -> shiftright(h, i) & 1), (a, b) -> a + b))")
-    n = F.col("_n")
-
-    def _fold(c: Column) -> Column:
-        # c is let_-bound: the counts aggregate evaluates ONCE per row.
-        # Referencing the raw `counts` expression 64x would be fine in an
-        # unconditional projection (codegen CSE collapses it) but the
-        # NULL-guarding when() below makes this branch CONDITIONAL, where
-        # Spark skips subexpression elimination — measured 25x slower.
-        s = F.lit(0).cast("long")
-        for k in range(64):
-            s = s.bitwiseOR(
-                F.when(F.element_at(c, k + 1) * 2 > n,
-                       F.shiftleft(F.lit(1).cast("long"), k))
-                .otherwise(F.lit(0).cast("long")))
-        return s
-
-    # NULL text must yield a NULL signature, not 0 — otherwise every
-    # NULL-text doc pairs with every other at hamming 0 (the agg variant
-    # drops such docs via explode; pairs-wise the two agree: no pair)
-    sig = F.when(n.isNotNull(), let_(counts, _fold))
-    return staged.select("id", sig.alias("sh"))
-
-
 def simhash_signatures_np(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
 ) -> DataFrame:
-    """SimHash signatures, bit-exact with the expr/agg variants, with the
-    64 bit-counters computed VECTORIZED in numpy (guide §4.2: hand whole
+    """64-bit SimHash signatures of whitespace tokens: bit k is set when
+    strictly more than half of the token hashes have bit k set. The
+    64 bit-counters are computed VECTORIZED in numpy (guide §4.2: hand whole
     Arrow batches to native code instead of deep interpreted HOF chains).
 
     Tokenization and hashing stay JVM-side (the SAME split + xxhash64
@@ -400,9 +268,10 @@ def simhash_signatures_np(
     semantics live); what crosses into python is (id, array<long>), and
     the majority vote runs as three numpy ops over the whole batch
     (unpackbits -> add.reduceat over document offsets -> packbits).
-    Measured ~3x over the aggregate() fold at 50k docs: the fold builds
+    Measured ~3x over an aggregate() fold at 50k docs: the fold builds
     two 64-element arrays per TOKEN in the interpreted evaluator.
-    NULL text -> NULL hashes -> NULL signature, like the expr variant.
+    NULL text -> NULL hashes -> NULL signature, so NULL-text docs never
+    pair with each other at hamming 0.
     """
     from typing import Iterator as _It
 
@@ -457,10 +326,12 @@ def simhash_pairs(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     max_hamming: int = 3,
 ) -> DataFrame:
-    """Near-dup pairs by SimHash banding (4 x 16-bit bands; any band equal
-    -> candidate; verify Hamming distance <= max_hamming). Recall is
-    pigeonhole-complete only while max_hamming < 4; larger radii are
-    probabilistic, like all SimHash deployments."""
+    """Near-dup pairs by SimHash banding: 4 x 16-bit bands, candidates
+    verified at Hamming distance <= max_hamming by banded_hamming_pairs.
+    Its probe radius follows max_hamming: exact band keys while
+    max_hamming < 4 (the default 3), radius-1 probes up to 7. Recall is
+    complete for max_hamming < 8 and probabilistic above, like all SimHash
+    deployments."""
     sig = simhash_signatures_np(
         parallelize_input(df.select(id_col, text_col)), id_col, text_col)
     return banded_hamming_pairs(sig, "id", "sh", n_bands=4,
@@ -471,19 +342,30 @@ def banded_hamming_pairs(
     sig: DataFrame, id_col: str, sig_col: str,
     n_bands: int = 4, max_hamming: int = 3,
 ) -> DataFrame:
-    """Near-dup pairs over any 64-bit signature column by banded hamming
-    join: split the signature into n_bands equal bands; candidates share a
-    (band_idx, band_value) key; the exact bit_count verify runs on
-    candidates only — never an all-pairs join. By pigeonhole, recall is
-    COMPLETE whenever max_hamming < n_bands; band width is the scale knob
-    (fewer/wider bands -> colder buckets at petabyte scale at the cost of
-    guaranteed-recall radius). Shared by simhash_pairs (text) and
-    image_dup_pairs (dHash). Returns (id_a, id_b, hamming:int), id_a < id_b.
+    """Near-dup pairs over any 64-bit signature column by multi-index
+    Hamming probing: split the signature into n_bands equal bands and index
+    each signature under its exact (band_idx, band_value) keys; candidates
+    are pairs whose probe key hits an index key, and the exact bit_count
+    verify runs on candidates only — never an all-pairs join.
+
+    The probe radius is derived from the inputs. While max_hamming <
+    n_bands it is 0: probes are the exact band keys and, by pigeonhole,
+    every pair within max_hamming agrees exactly on some band. Otherwise it
+    is 1: probes also enumerate every 1-bit flip of each band key, and a
+    pair whose every band differs by >= 2 bits is >= 2 * n_bands apart.
+    So recall is COMPLETE whenever max_hamming < 2 * n_bands and
+    probabilistic above. Band width is the scale knob: 8-bit keys have only
+    256 values and collapse into hot buckets at corpus scale (measured on
+    m02 at sf1.0: 72M candidate rows from 37k images at 8x8-bit exact
+    bands; 4x16-bit bands at radius 1 cut that ~20x for the same
+    guaranteed recall). Shared by simhash_pairs (text) and image_dup_pairs
+    (dHash). Returns (id_a, id_b, hamming:int), id_a < id_b.
     """
     if 64 % n_bands != 0:
         raise ValueError("n_bands must divide 64")
     width = 64 // n_bands
     mask = (1 << width) - 1
+    radius = 0 if max_hamming < n_bands else 1
     # materialize (id, sig) before banding: the self-join would otherwise
     # re-evaluate the signature expression tree (deep HOF aggregates /
     # python decode stages) on BOTH join sides and inside the explode —
@@ -495,95 +377,24 @@ def banded_hamming_pairs(
     base = sig.select(F.col(id_col).alias("id"), F.col(sig_col).alias("sig")) \
               .localCheckpoint() \
               .filter(F.col("sig").isNotNull())
-    bands = base.select(
-        "id", "sig",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(i).alias("band"),
-                F.shiftright("sig", width * i).bitwiseAND(F.lit(mask)).alias("bkey"),
-            ) for i in range(n_bands)
-        ])).alias("bb"),
-    ).select("id", "sig", "bb.band", "bb.bkey")
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(b, ["band", "bkey"]).filter(F.col("a.id") < F.col("b.id"))
-         .select("band", F.col("a.id").alias("id_a"),
-                 F.col("b.id").alias("id_b"),
-                 F.col("a.sig").alias("s_a"), F.col("b.sig").alias("s_b"))
-    )
-    # dedup candidates WITHOUT a shuffle: a pair colliding in k bands is
-    # emitted k times by the join; keep only the copy from the FIRST
-    # matching band (= index of the lowest zero xor-band, computable from
-    # the two signatures already on the row). The previous
-    # dropDuplicates([id_a, id_b]) shuffled every candidate row — at 8x8
-    # banding over clustered signatures that was 70M+ rows through an
-    # exchange (measured: m02 at sf1.0) for a result this filter gets for
-    # free inside the join stage (guide §2.4: remove shuffles outright).
-    x = F.col("s_a").bitwiseXOR(F.col("s_b"))
-    first_band = F.coalesce(*[
-        F.when(F.shiftright(x, width * j).bitwiseAND(F.lit(mask)) == 0,
-               F.lit(j))
-        for j in range(n_bands)
-    ])
-    cand = cand.filter(F.col("band") == first_band).drop("band")
-    ham = F.bit_count(F.col("s_a").bitwiseXOR(F.col("s_b"))).cast("int")
-    return (cand.withColumn("hamming", ham)
-                .filter(F.col("hamming") <= max_hamming)
-                .select("id_a", "id_b", "hamming"))
-
-
-def banded_hamming_pairs_multiprobe(
-    sig: DataFrame, id_col: str, sig_col: str,
-    n_bands: int = 4, max_hamming: int = 6,
-) -> DataFrame:
-    """Near-dup pairs by multi-index Hamming probing (the public
-    multi-index hashing scheme: index each signature under its exact band
-    keys; the PROBE side additionally enumerates every 1-bit flip of each
-    band key, so a pair collides whenever some band differs by <= 1 bit).
-
-    If every band differed by >= 2 bits the total distance would be
-    >= 2 * n_bands, so recall is COMPLETE whenever
-    max_hamming < 2 * n_bands: 4x16-bit bands cover hamming <= 7 where
-    the exact-match scheme needs 8x8-bit bands — whose 256-value key
-    space collapses into hot buckets at corpus scale (measured on m02 at
-    sf1.0: 72M candidate rows from 37k images; wide bands + radius-1
-    probes cut that ~20x for the same guaranteed recall). Exact
-    bit_count verify on candidates only; candidate dedup is the
-    first-qualifying-band filter (popcount of the xor band <= 1), which
-    keeps exactly one copy per pair with NO shuffle — the probe explode
-    emits one matching copy per qualifying band, and the a.id < b.id
-    filter removes the mirrored direction.
-    Returns (id_a, id_b, hamming:int), id_a < id_b.
-    """
-    if 64 % n_bands != 0:
-        raise ValueError("n_bands must divide 64")
-    if max_hamming >= 2 * n_bands:
-        raise ValueError("multiprobe recall requires max_hamming < 2*n_bands")
-    width = 64 // n_bands
-    mask = (1 << width) - 1
-    base = sig.select(F.col(id_col).alias("id"), F.col(sig_col).alias("sig")) \
-              .localCheckpoint() \
-              .filter(F.col("sig").isNotNull())
 
     def bkey(i: int) -> Column:
         return F.shiftright("sig", width * i).bitwiseAND(F.lit(mask))
 
-    index = base.select(
-        "id", "sig",
-        F.explode(F.array(*[
-            F.struct(F.lit(i).alias("band"), bkey(i).alias("bkey"))
-            for i in range(n_bands)
-        ])).alias("bb"),
-    ).select("id", "sig", "bb.band", "bb.bkey")
-    flips = [0] + [1 << j for j in range(width)]
-    probes = base.select(
-        "id", "sig",
-        F.explode(F.array(*[
-            F.struct(F.lit(i).alias("band"),
-                     bkey(i).bitwiseXOR(F.lit(f)).alias("bkey"))
-            for i in range(n_bands) for f in flips
-        ])).alias("bb"),
-    ).select("id", "sig", "bb.band", "bb.bkey")
+    def keyed(flips: list[int]) -> DataFrame:
+        # one row per (signature, band, flip), keyed on band value ^ flip
+        return base.select(
+            "id", "sig",
+            F.explode(F.array(*[
+                F.struct(F.lit(i).alias("band"),
+                         (bkey(i).bitwiseXOR(F.lit(f)) if f else bkey(i))
+                         .alias("bkey"))
+                for i in range(n_bands) for f in flips
+            ])).alias("bb"),
+        ).select("id", "sig", "bb.band", "bb.bkey")
+
+    index = keyed([0])
+    probes = keyed([0] + [1 << j for j in range(width)]) if radius else index
     cand = (
         probes.alias("a").join(index.alias("b"), ["band", "bkey"])
               .filter(F.col("a.id") < F.col("b.id"))
@@ -592,13 +403,22 @@ def banded_hamming_pairs_multiprobe(
                       F.col("a.sig").alias("s_a"),
                       F.col("b.sig").alias("s_b"))
     )
+    # dedup candidates WITHOUT a shuffle: a pair qualifying in k bands is
+    # emitted k times by the join (the a.id < b.id filter already removed
+    # the mirrored direction); keep only the copy from the FIRST band whose
+    # xor differs by <= radius bits, computable from the two signatures
+    # already on the row. A dropDuplicates([id_a, id_b]) would shuffle every
+    # candidate row — at 8x8 banding over clustered signatures that was 70M+
+    # rows through an exchange (measured: m02 at sf1.0) for a result this
+    # filter gets for free inside the join stage (guide §2.4: remove
+    # shuffles outright).
     x = F.col("s_a").bitwiseXOR(F.col("s_b"))
-    first_qual = F.coalesce(*[
+    first_band = F.coalesce(*[
         F.when(F.bit_count(F.shiftright(x, width * j)
-                            .bitwiseAND(F.lit(mask))) <= 1, F.lit(j))
+                            .bitwiseAND(F.lit(mask))) <= radius, F.lit(j))
         for j in range(n_bands)
     ])
-    cand = cand.filter(F.col("band") == first_qual).drop("band")
+    cand = cand.filter(F.col("band") == first_band).drop("band")
     ham = F.bit_count(x).cast("int")
     return (cand.withColumn("hamming", ham)
                 .filter(F.col("hamming") <= max_hamming)

@@ -462,21 +462,23 @@ def image_dup_pairs(features: DataFrame, max_hamming: int = 6,
                     n_bands: int = 8) -> DataFrame:
     """Near-duplicate image pairs by dHash hamming distance.
 
-    Scale shape (same family as simhash_pairs): split the 64-bit dhash into
-    n_bands equal bands; by pigeonhole, any pair with hamming < n_bands
-    agrees exactly on >= 1 band, so recall is COMPLETE whenever
-    max_hamming < n_bands (the default 6 < 8 qualifies — this is what lets
-    the O(n^2) SQL oracle match exactly). The join key is
-    (band_idx, band_value) — candidates share a band, the exact bit_count
-    verify runs on candidates only. Never an all-pairs join. Band width is
-    the scale knob: fewer/wider bands (e.g. 4x16-bit) give colder buckets
-    at petabyte scale at the cost of guaranteed-recall radius.
+    Scale shape (same operator as simhash_pairs): dedup.banded_hamming_pairs
+    splits the 64-bit dhash into equal bands, joins on (band_idx,
+    band_value) keys and runs the exact bit_count verify on candidates
+    only. Never an all-pairs join. The contract here is COMPLETE recall
+    (the O(n^2) SQL oracle matches exactly), so max_hamming < n_bands is
+    required. An even n_bands is halved: twice-as-wide bands keep complete
+    recall, because the operator derives a radius-1 probe once max_hamming
+    reaches the halved count and max_hamming < n_bands = 2 * (n_bands/2)
+    (the default 6 over 4x16-bit bands probes at radius 1). Perceptual hashes
+    cluster hard and narrow bands collapse into hot buckets as the corpus
+    grows (8-bit keys have only 256 values); wide bands keep the candidate
+    volume ~n^2/2^width instead of ~n^2/2^(width/2).
 
     Input: output of extract_media_features (needs media_id + dhash).
     Output: (id_a, id_b, hamming:int) with id_a < id_b.
     """
-    from docvision_spark.functions.dedup import (
-        banded_hamming_pairs, banded_hamming_pairs_multiprobe)
+    from docvision_spark.functions.dedup import banded_hamming_pairs
 
     if max_hamming >= n_bands:
         # the documented contract here is COMPLETE recall (the SQL oracle
@@ -486,17 +488,7 @@ def image_dup_pairs(features: DataFrame, max_hamming: int = 6,
             f"recall (got {max_hamming} >= {n_bands}); raise n_bands or use "
             f"banded_hamming_pairs directly for probabilistic recall")
     if n_bands % 2 == 0:
-        # same guaranteed-recall radius with HALF the bands (twice the
-        # width) via radius-1 multiprobe: max_hamming < n_bands
-        # <= 2 * (n_bands/2). Perceptual hashes cluster hard, and narrow
-        # exact-match bands collapse into hot buckets as the corpus grows
-        # (8-bit keys have only 256 values) — the wide-band probe scheme
-        # keeps the candidate volume ~n^2/2^width instead of ~n^2/2^(w/2).
-        # Result set is identical: both schemes have complete recall at
-        # this radius and verify exactly.
-        return banded_hamming_pairs_multiprobe(
-            features, "media_id", "dhash",
-            n_bands=n_bands // 2, max_hamming=max_hamming)
+        n_bands //= 2
     return banded_hamming_pairs(features, "media_id", "dhash",
                                 n_bands=n_bands, max_hamming=max_hamming)
 

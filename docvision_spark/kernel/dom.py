@@ -19,11 +19,9 @@ from dataclasses import dataclass, field
 
 from docvision_spark.kernel.entities import decode_entities
 from docvision_spark.kernel.html_tokenizer import (
-    _MASTER_RE,
-    _RAWTEXT_CLOSE,
-    RAWTEXT_ELEMENTS,
     VOID_ELEMENTS,
     parse_attrs,
+    scan,
 )
 
 # Tags that terminate the current text block when opened or closed.
@@ -359,43 +357,7 @@ class _Builder:
         # unmatched end tag: ignored (fixed error-recovery rule)
 
     def run(self, html: str) -> list[Block]:
-        # The tokenizer loop is INLINED here (token-for-token identical to
-        # html_tokenizer.scan, which remains the reference/tests API): the
-        # generator suspend/resume + 4-tuple pack/unpack per token was the
-        # single largest per-token overhead in the kernel profile, and this
-        # loop runs once per token of every document at 100 TB.
-        append_text = self._append_text
-        open_ = self._open
-        close = self._close
-        pos = 0
-        n = len(html)
-        search = _MASTER_RE.search
-        rawtext_close = _RAWTEXT_CLOSE
-        while pos < n:
-            m = search(html, pos)
-            if m is None:
-                append_text(html[pos:])
-                break
-            start = m.start()
-            if start > pos:
-                append_text(html[pos:start])
-            pos = m.end()
-            grp = m.lastgroup
-            if grp == "attrs" or grp == "start":
-                name = m.group("start").lower()
-                attrs = m.group("attrs") or ""
-                self_closing = attrs.rstrip().endswith("/")
-                open_(name, attrs, self_closing)
-                if not self_closing and name in RAWTEXT_ELEMENTS:
-                    cm = rawtext_close[name].search(html, pos)
-                    if cm is None:
-                        close(name)
-                        break
-                    pos = cm.end()  # rawtext content dropped
-                    close(name)
-            elif grp == "end":
-                close(m.group("end").lower())
-            # comment / doctype / pi: dropped
+        scan(html, self._append_text, self._open, self._close)
         self._close_to(0)
         self._flush()
         return self.blocks

@@ -1,11 +1,12 @@
 """Spec-subset HTML5 tokenizer — regex-scanner based, deterministic.
 
-Produces a flat token stream (start/end/text). Rawtext elements
+scan() walks the document once and reports each token (text, start tag,
+end tag) to three callbacks in document order. Rawtext elements
 (script/style/...) swallow their content so no JS/CSS leaks into extracted
-text. Designed for throughput: one compiled master regex scans the document;
-tokens are plain tuples (kind, data, attrs, self_closing) with kind as a
-small int — this is the hottest loop of the 100 TB path, so no NamedTuple
-allocation, and dispatch is on Match.lastgroup.
+text. Designed for throughput: one compiled master regex scans the document
+and dispatch is on Match.lastgroup. This is the hottest loop of the 100 TB
+path, so no token object is built: dom._Builder passes its own bound
+methods as the callbacks.
 
 Capability ancestor in the reference: OCR recognize (processing/
 ocr_engine.py:73-88) — "turn the raw payload into positioned text runs".
@@ -15,22 +16,17 @@ Here the positions are DOM positions instead of pixel boxes.
 from __future__ import annotations
 
 import re
-from typing import Iterator, NamedTuple
+from typing import Callable, NamedTuple
 
-TEXT = 0
-START = 1
-END = 2
 
-# Back-compat shim for tests/tools that want a readable token: tokenize()
-# yields plain tuples; Tok wraps one.
+# Readable token for tests and debugging: tokenize() collects the scan()
+# callbacks as a list of these.
 class Tok(NamedTuple):
     kind: str          # 'start' | 'end' | 'text'
     data: str          # tag name (lower) or raw text
     attrs: str = ""    # raw attribute substring for start tags
     self_closing: bool = False
 
-
-_KIND_NAME = {TEXT: "text", START: "start", END: "end"}
 
 _MASTER_RE = re.compile(
     r"""<(?:
@@ -84,40 +80,49 @@ def parse_attrs(attrs_raw: str) -> dict[str, str]:
     return out
 
 
-def scan(html: str) -> Iterator[tuple]:
-    """Yield (kind:int, data:str, attrs:str, self_closing:bool) tuples.
-    Comments, doctypes, and processing instructions are dropped here."""
+def scan(html: str, on_text: Callable[[str], None],
+         on_start: Callable[[str, str, bool], None],
+         on_end: Callable[[str], None]) -> None:
+    """Scan `html` once, in document order, calling on_text(text),
+    on_start(name, attrs_raw, self_closing) and on_end(name) per token.
+    Tag names are lower-cased. Comments, doctypes and processing
+    instructions are dropped; a rawtext element's content is skipped and
+    its start is followed directly by on_end (also when unclosed at EOF,
+    which ends the scan)."""
     pos = 0
     n = len(html)
     search = _MASTER_RE.search
     while pos < n:
         m = search(html, pos)
         if m is None:
-            yield (TEXT, html[pos:], "", False)
+            on_text(html[pos:])
             return
         start = m.start()
         if start > pos:
-            yield (TEXT, html[pos:start], "", False)
+            on_text(html[pos:start])
         pos = m.end()
         grp = m.lastgroup
         if grp == "attrs" or grp == "start":
             name = m.group("start").lower()
             attrs = m.group("attrs") or ""
             self_closing = attrs.rstrip().endswith("/")
-            yield (START, name, attrs, self_closing)
+            on_start(name, attrs, self_closing)
             if not self_closing and name in RAWTEXT_ELEMENTS:
                 cm = _RAWTEXT_CLOSE[name].search(html, pos)
+                on_end(name)
                 if cm is None:
-                    yield (END, name, "", False)
                     return
                 pos = cm.end()  # rawtext content dropped
-                yield (END, name, "", False)
         elif grp == "end":
-            yield (END, m.group("end").lower(), "", False)
+            on_end(m.group("end").lower())
         # comment / doctype / pi: dropped
 
 
-def tokenize(html: str) -> Iterator[Tok]:
-    """Readable-token wrapper over scan() (tests, debugging)."""
-    for kind, data, attrs, sc in scan(html):
-        yield Tok(_KIND_NAME[kind], data, attrs, sc)
+def tokenize(html: str) -> list[Tok]:
+    """The scan() callbacks collected as readable tokens (tests, debugging)."""
+    toks: list[Tok] = []
+    scan(html,
+         lambda text: toks.append(Tok("text", text)),
+         lambda name, attrs, sc: toks.append(Tok("start", name, attrs, sc)),
+         lambda name: toks.append(Tok("end", name)))
+    return toks

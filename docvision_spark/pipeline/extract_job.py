@@ -169,11 +169,6 @@ def extract_pages(pages: DataFrame, partitions: int | None = None) -> DataFrame:
 
     spark = pages.sparkSession
     ensure_py_files(spark)
-    if partitions is None:
-        # 2x total cores: enough slack to level stragglers (giant docs,
-        # hot-host salt keys) while each task still amortizes its worker
-        # handoff over many Arrow batches.
-        partitions = 2 * spark.sparkContext.defaultParallelism
     # Map-only fast path (guide §2.4/§8): when the SCAN already yields
     # enough splits (row-grouped corpus + small maxPartitionBytes), the
     # payload column never needs to cross an exchange at all — scan and
@@ -182,13 +177,19 @@ def extract_pages(pages: DataFrame, partitions: int | None = None) -> DataFrame:
     # moot (skew exists only when partitioning BY host). The salted
     # repartition remains the fallback for under-split inputs (single
     # giant files, post-limit plans) where an exchange is the only way to
-    # reach the cluster's parallelism.
+    # reach the cluster's parallelism. An explicit `partitions` is
+    # honoured: the scan is kept only if it already has that many splits.
     n_scan = pages.rdd.getNumPartitions()
-    if n_scan >= max(partitions // 2,
-                     spark.sparkContext.defaultParallelism):
+    default_parallelism = spark.sparkContext.defaultParallelism
+    if n_scan >= (default_parallelism if partitions is None else partitions):
         prepared = pages.sortWithinPartitions(
             F.octet_length("html").desc())
         return prepared.mapInPandas(_extract_batches, schema=OUTPUT_SCHEMA)
+    if partitions is None:
+        # 2x total cores: enough slack to level stragglers (giant docs,
+        # hot-host salt keys) while each task still amortizes its worker
+        # handoff over many Arrow batches.
+        partitions = 2 * default_parallelism
     prepared = (
         pages
         # skew: spread the hot host across N_SALT partitions while keeping

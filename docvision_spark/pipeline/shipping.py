@@ -10,6 +10,7 @@ it and prepends it to every worker's sys.path. Functions that ship Python
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -22,23 +23,36 @@ _SHIPPED_FLAG = "_docvision_spark_shipped"
 
 
 def build_zip() -> str:
+    """Zip the package sources into the temp dir once per content: the
+    name carries the version AND a digest of the sources, so an edited
+    checkout never ships a zip built from other code under the same
+    version."""
     import docvision_spark
 
     pkg_dir = os.path.dirname(os.path.abspath(docvision_spark.__file__))
+    sources: dict[str, bytes] = {}
+    for dirpath, _dirs, files in os.walk(pkg_dir):
+        if "__pycache__" in dirpath:
+            continue
+        for fn in files:
+            if fn.endswith(".py"):
+                full = os.path.join(dirpath, fn)
+                rel = os.path.join(
+                    "docvision_spark", os.path.relpath(full, pkg_dir))
+                with open(full, "rb") as fh:
+                    sources[rel] = fh.read()
+    digest = hashlib.sha1()
+    for rel in sorted(sources):
+        digest.update(rel.encode() + b"\0" + sources[rel] + b"\0")
     safe_ver = EXTRACTOR_VERSION.replace("/", "-")
-    zpath = os.path.join(tempfile.gettempdir(), f"docvision_spark-{safe_ver}.zip")
+    zpath = os.path.join(
+        tempfile.gettempdir(),
+        f"docvision_spark-{safe_ver}-{digest.hexdigest()[:12]}.zip")
     if not os.path.exists(zpath):
         tmp = zpath + f".{os.getpid()}.tmp"
         with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
-            for dirpath, _dirs, files in os.walk(pkg_dir):
-                if "__pycache__" in dirpath:
-                    continue
-                for fn in sorted(files):
-                    if fn.endswith(".py"):
-                        full = os.path.join(dirpath, fn)
-                        rel = os.path.join(
-                            "docvision_spark", os.path.relpath(full, pkg_dir))
-                        zf.write(full, rel)
+            for rel in sorted(sources):
+                zf.writestr(rel, sources[rel])
         os.replace(tmp, zpath)  # atomic; concurrent builders converge
     return zpath
 

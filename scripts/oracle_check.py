@@ -3,7 +3,9 @@ oracle (the driver's own check, locally reproduced) so any plan change that
 alters RESULTS is caught before commit.
 
 Usage: python scripts/oracle_check.py [--sf /root/testdata/sf0.1] q01 t05 ...
-       (no names = every query that has an oracle)
+       (no names = every query that has an oracle; a name selects the
+       query of that name or every `<name>_*` query; a name that selects
+       nothing exits 2 before Spark starts)
 """
 
 from __future__ import annotations
@@ -11,6 +13,7 @@ from __future__ import annotations
 import argparse
 import os
 import sys
+from collections.abc import Iterable
 
 import duckdb
 
@@ -19,6 +22,26 @@ sys.path.insert(0, REPO)
 
 TABLES = ["documents", "lineitem", "orders", "customer", "nation", "region",
           "events", "embeddings", "part", "supplier"]
+
+
+def resolve_names(requested: list[str], available: Iterable[str]) -> list[str]:
+    """The query names selected by `requested`, sorted. A request matches a
+    name exactly or as its prefix up to an underscore (`q01` selects
+    `q01_pricing_summary`; `q1` does not select `q10_*`). No request selects
+    every name. Raises ValueError listing the requests that match nothing."""
+    names = sorted(available)
+    if not requested:
+        return names
+    selected: set[str] = set()
+    unknown = []
+    for n in requested:
+        hits = [k for k in names if k == n or k.startswith(n + "_")]
+        if not hits:
+            unknown.append(n)
+        selected.update(hits)
+    if unknown:
+        raise ValueError(f"no query matches {unknown}")
+    return sorted(selected)
 
 
 def main() -> None:
@@ -32,23 +55,20 @@ def main() -> None:
     from docvision_spark.pipeline.session import get_spark
     import __spark_entry__ as entry
 
+    reg, orc = entry.queries(), entry.oracle_sql()
+    try:
+        names = resolve_names(args.names, orc)
+    except ValueError as e:
+        ap.error(str(e))
+
     spark = get_spark(app_name="oracle-check", cores=args.cores)
     spark.sparkContext.setLogLevel("ERROR")
-    reg, orc = entry.queries(), entry.oracle_sql()
     con = duckdb.connect()
     for t in TABLES:
         path = os.path.join(args.sf, f"{t}.parquet")
         if os.path.exists(path):
             con.execute(
                 f"create view {t} as select * from read_parquet('{path}')")
-
-    names = [n for n in (args.names or sorted(orc))
-             if any(k.startswith(n) or k == n for k in orc)]
-    resolved = []
-    for n in names:
-        resolved += [k for k in orc if k == n or k.startswith(n + "_")
-                     or (len(n) <= 3 and k.startswith(n))]
-    names = sorted(set(resolved)) or sorted(orc)
 
     failures = []
     for name in names:

@@ -31,7 +31,7 @@ spark.sparkContext.setLogLevel("ERROR")
 pages = read_pages(spark, pages_dir)
 extract_pages(pages.limit(256), partitions=cores).count()  # warm workers
 t0 = time.perf_counter()
-n = extract_pages(pages, partitions=2 * cores).filter("error is null").count()
+n = extract_pages(pages).filter("error is null").count()
 wall = time.perf_counter() - t0
 print(json.dumps({{"cores": cores, "docs": n, "wall_s": wall,
                    "docs_per_sec": n / wall}}))

@@ -51,16 +51,15 @@ def test_minhash_finds_near_dups(docs):
 
 @pytest.mark.spark
 def test_banded_hamming_multiprobe_parity(spark):
-    """The wide-band radius-1 multiprobe scheme (round-6: what
-    image_dup_pairs runs) must return the EXACT pair set of the
-    exact-match banding and of a brute-force O(n^2) check, at a radius
-    both schemes guarantee complete recall for (6 < 8 = n_bands and
-    6 < 2*4). Signatures are crafted to exercise: equal sigs, 1-bit per
-    band, all-6-bits-in-one-band, 2+2+1+1 spread, just-over-threshold."""
+    """banded_hamming_pairs must return the EXACT brute-force O(n^2) pair
+    set at a radius it guarantees complete recall for, both with exact band
+    keys (6 < 8 = n_bands: probe radius 0) and with radius-1 probes over
+    wide bands (6 >= 4 = n_bands, 6 < 2*4: what image_dup_pairs runs).
+    Signatures are crafted to exercise: equal sigs, 1-bit per band,
+    all-6-bits-in-one-band, 2+2+1+1 spread, just-over-threshold."""
     from itertools import combinations
 
-    from docvision_spark.functions.dedup import (
-        banded_hamming_pairs, banded_hamming_pairs_multiprobe)
+    from docvision_spark.functions.dedup import banded_hamming_pairs
 
     sigs = [
         (1, 0x0123456789ABCDEF), (2, 0x0123456789ABCDEF),      # equal
@@ -69,6 +68,9 @@ def test_banded_hamming_multiprobe_parity(spark):
         (5, 0x1123456799ABCDEC),                               # spread 2+2+1+1-ish
         (6, -0x7FEDCBA987654321),                              # far away, negative
         (7, None),                                             # null sig
+        (8, 0x0123456789ABCDEF ^ 0x0001000100010001),          # 1 bit per 16-bit band
+        (9, 0x0123456789ABCDEF ^ 0x0003000300010001),          # 2+2+1+1 over 16-bit bands
+        (10, 0x0123456789ABCDEF ^ 0x0003000300030001),         # 7 bits: just over
     ]
     df = spark.createDataFrame(sigs, "media_id long, dhash long")
     brute = set()
@@ -77,13 +79,11 @@ def test_banded_hamming_multiprobe_parity(spark):
         h = bin((vals[a] ^ vals[b]) & ((1 << 64) - 1)).count("1")
         if h <= 6:
             brute.add((a, b, h))
-    exact = {(r["id_a"], r["id_b"], r["hamming"]) for r in
-             banded_hamming_pairs(df, "media_id", "dhash", 8, 6).collect()}
-    mp = {(r["id_a"], r["id_b"], r["hamming"]) for r in
-          banded_hamming_pairs_multiprobe(
-              df, "media_id", "dhash", 4, 6).collect()}
-    assert exact == brute
-    assert mp == brute
+    for n_bands in (8, 4):
+        got = {(r["id_a"], r["id_b"], r["hamming"]) for r in
+               banded_hamming_pairs(df, "media_id", "dhash", n_bands, 6)
+               .collect()}
+        assert got == brute, n_bands
 
 
 @pytest.mark.spark
@@ -106,67 +106,69 @@ def test_ngram_jaccard_pairs(docs):
     assert not any({a, b} & {4} for a, b in pairs)
 
 
+def _simhash_vote(hashes: list[int] | None) -> int | None:
+    """Reference SimHash: bit k is set when strictly more than half of the
+    token hashes have bit k set; returned as a signed 64-bit long."""
+    if hashes is None:
+        return None
+    sig = 0
+    for k in range(64):
+        if sum((h >> k) & 1 for h in hashes) * 2 > len(hashes):
+            sig |= 1 << k
+    return sig - (1 << 64) if sig >> 63 else sig
+
+
 @pytest.mark.spark
 def test_expression_signature_variants(spark, docs):
-    """The one-off expression APIs (minhash_signature, simhash64) agree with
-    the aggregate implementations' semantics on identical/near content."""
-    from docvision_spark.functions.dedup import (
-        char_shingles, minhash_signature, simhash64, simhash_signatures_agg)
-
-    sig = docs.select(
-        "doc_id",
-        minhash_signature(char_shingles(F.col("text"), 5), 8).alias("mh"),
-        simhash64(F.col("text")).alias("sh"),
-    )
-    got = {r["doc_id"]: r for r in sig.collect()}
-    assert got[1]["mh"] == got[2]["mh"]           # exact dups: equal minhash
-    assert got[1]["sh"] == got[2]["sh"]           # and equal simhash
-    agree_13 = sum(1 for a, b in zip(got[1]["mh"], got[3]["mh"]) if a == b)
-    assert agree_13 >= 4                           # near dup: most mins agree
-    agg = {r["id"]: r["sh"] for r in
-           simhash_signatures_agg(docs).collect()}
-    assert agg[1] == got[1]["sh"]                  # agg == expression variant
-
-    # the zero-shuffle single-pass variant must be bit-exact with BOTH, on
-    # every doc (it is what simhash_pairs ran through round 5)
-    from docvision_spark.functions.dedup import simhash_signatures_expr
-    expr_sigs = {r["id"]: r["sh"] for r in
-                 simhash_signatures_expr(docs).collect()}
-    assert expr_sigs == agg
-
-    # the numpy-vectorized variant (round-6: what simhash_pairs runs now —
-    # JVM tokens/hashes, batch bit-count in numpy) must be bit-exact too,
-    # including NULL-text and empty-text rows
+    """simhash_signatures_np (JVM tokens/hashes, batch bit-count in numpy)
+    must equal a pure-Python majority vote over the same JVM token hashes
+    on every doc, including NULL-text and empty/blank-text rows, and an
+    even token count (a bit set in exactly half of the hashes stays 0)."""
     from docvision_spark.functions.dedup import simhash_signatures_np
+    from docvision_spark.functions.text import normalized
+
     edge = docs.unionByName(spark.createDataFrame(
-        [(9001, None), (9002, ""), (9003, "  ")],
+        [(9001, None), (9002, ""), (9003, "  "), (9004, "two words")],
         "doc_id long, text string"), allowMissingColumns=True)
-    np_sigs = {r["id"]: r["sh"] for r in
-               simhash_signatures_np(edge).collect()}
-    expr_edge = {r["id"]: r["sh"] for r in
-                 simhash_signatures_expr(edge).collect()}
-    assert np_sigs == expr_edge
+    toks = F.split(F.trim(normalized(F.col("text"))), " ")
+    hashes = edge.select(
+        "doc_id", F.transform(toks, lambda t: F.xxhash64(t)).alias("h"))
+    want = {r["doc_id"]: _simhash_vote(r["h"]) for r in hashes.collect()}
+    got = {r["id"]: r["sh"] for r in simhash_signatures_np(edge).collect()}
+    assert got == want
+    assert got[9001] is None
+    assert got[1] == got[2]                        # exact dups: equal simhash
 
 
 @pytest.mark.spark
 def test_minhash_signature_variant_parity(spark, docs):
     """minhash_signatures_expr (the zero-shuffle production path for
-    d01/d06/curate) must be bit-exact with minhash_signatures_agg on every
-    doc — including short and empty texts, where the shingle fallback path
-    (n < k -> single whole-text shingle) is exercised."""
+    d01/d06/curate) must equal, on every doc, the per-hash-function min of
+    xxhash64(j, shingle) computed by explode + groupBy — including short
+    and empty texts, where the shingle fallback path (n < k -> single
+    whole-text shingle) is exercised. Both shingle modes of
+    minhash_lsh_pairs: word 3-gram hashes and char 5-gram strings."""
     from docvision_spark.functions.dedup import (
-        minhash_signatures_agg, minhash_signatures_expr, word_shingle_hashes)
+        char_shingles, minhash_signatures_expr, word_shingle_hashes)
 
     extra = docs.unionByName(spark.createDataFrame(
         [(7, "one"), (8, "two words")], "doc_id long, text string"))
-    sh = extra.select(
-        "doc_id", word_shingle_hashes(F.col("text"), 3).alias("sh"))
-    agg = {r["id"]: r["mh"] for r in
-           minhash_signatures_agg(sh, "doc_id", "sh", 16).collect()}
-    expr = {r["id"]: r["mh"] for r in
-            minhash_signatures_expr(sh, "doc_id", "sh", 16).collect()}
-    assert expr == agg
-    assert set(expr) == {1, 2, 3, 4, 5, 6, 7, 8}
+    for shingles in (word_shingle_hashes(F.col("text"), 3),
+                     char_shingles(F.col("text"), 5)):
+        sh = extra.select("doc_id", shingles.alias("sh"))
+        mins = (sh.select("doc_id", F.explode("sh").alias("s"))
+                  .groupBy("doc_id")
+                  .agg(*[F.min(F.xxhash64(F.lit(j), F.col("s"))).alias(f"m{j}")
+                         for j in range(16)]))
+        want = {r["doc_id"]: [r[f"m{j}"] for j in range(16)]
+                for r in mins.collect()}
+        got = {r["id"]: r["mh"] for r in
+               minhash_signatures_expr(sh, "doc_id", "sh", 16).collect()}
+        assert got == want
+        assert set(got) == {1, 2, 3, 4, 5, 6, 7, 8}
+        assert got[1] == got[2]                    # exact dups: equal minhash
+        agree_13 = sum(a == b for a, b in zip(got[1], got[3]))
+        assert agree_13 >= 8                       # near dup: most mins agree
 
 
 @pytest.mark.spark

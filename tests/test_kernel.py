@@ -92,6 +92,36 @@ def test_tokenize_malformed():
     list(tokenize("<p attr="))  # must not raise
 
 
+def test_tokenize_rawtext_and_attr_edges():
+    """Edge cases of the rawtext and attribute branches, pinned on both the
+    token stream and the DOM blocks built from the same scan."""
+    S, E, T = (lambda n, a="", sc=False: Tok("start", n, a, sc),
+               lambda n: Tok("end", n), lambda t: Tok("text", t))
+    cases = [
+        # unclosed <script> at EOF: content dropped, element closed, scan ends
+        ("<p>before</p><script>var x = '<p>never</p>';",
+         [S("p"), T("before"), E("p"), S("script"), E("script")],
+         ["before"]),
+        # self-closing <script/> swallows nothing
+        ("<p>one <script/>two</p>",
+         [S("p"), T("one "), S("script", "/", True), T("two"), E("p")],
+         ["one two"]),
+        # upper-case close tag with trailing space still ends the rawtext
+        ("<p>x</p><script>if (a<b) {}</SCRIPT ><p>y</p>",
+         [S("p"), T("x"), E("p"), S("script"), E("script"),
+          S("p"), T("y"), E("p")],
+         ["x", "y"]),
+        # '>' inside quoted attribute values does not end the tag
+        ("<p title=\"a > b\">text <a href='/x?a>b'>link</a></p>",
+         [S("p", ' title="a > b"'), T("text "), S("a", " href='/x?a>b'"),
+          T("link"), E("a"), E("p")],
+         ["text link"]),
+    ]
+    for html, toks, texts in cases:
+        assert list(tokenize(html)) == toks, html
+        assert [b.text for b in segment(html)] == texts, html
+
+
 def test_parse_attrs():
     a = parse_attrs(' id="main" class=\'a b\' data-x=1 checked')
     assert a == {"id": "main", "class": "a b", "data-x": "1", "checked": ""}

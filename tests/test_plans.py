@@ -108,6 +108,21 @@ def test_extraction_stage_shape(spark, pages_dir):
 
 
 @pytest.mark.spark
+def test_extraction_honours_explicit_partitions(spark, pages_dir):
+    """An explicit `partitions` above the scan's split count is honoured
+    with the salted exchange, even when the scan alone already covers the
+    default parallelism (no silent undercut to the scan's split count)."""
+    from docvision_spark.pipeline.extract_job import extract_pages, read_pages
+
+    pages = read_pages(spark, pages_dir)
+    n_scan = pages.rdd.getNumPartitions()
+    plan = plan_of(extract_pages(pages, partitions=n_scan + 1))
+    body = plan.split("== Physical Plan ==", 1)[1].split("\n\n")[0]
+    assert body.count("Exchange") == 1, f"expected 1 exchange:\n{body}"
+    assert "REPARTITION_BY_NUM" in plan and f", {n_scan + 1})," in plan, plan
+
+
+@pytest.mark.spark
 def test_bucket_partition_pruning(spark, pages_dir):
     """Filtering on the bucket partition column must prune partitions at
     scan time (visible as PartitionFilters in the scan node)."""
