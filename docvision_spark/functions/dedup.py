@@ -3,10 +3,13 @@
 Scale notes (the 100 TB design):
  - exact: one hash-shuffle on a 32-char fingerprint — the cheapest possible
    dedup; fingerprint is computed JVM-side (md5 of normalized text).
- - MinHash+LSH: shingling and min-hashing are whole-stage-codegen expressions
-   (higher-order functions over arrays + xxhash64) — NO Python. The only
-   shuffles are the band-bucket groupBy and the candidate self-join, both on
-   64-bit keys. Buckets with one member produce no candidates; a hot bucket
+ - MinHash+LSH: minhash_artifacts is the single definition of shingling,
+   signing and banding — whole-stage-codegen expressions (higher-order
+   functions over arrays + xxhash64), NO Python — and every near-dup entry
+   point (minhash_lsh_pairs, incremental_minhash_pairs, curate's persisted
+   artifacts) reads its (shingled, banded) frames. The only shuffles are
+   the band-bucket groupBy/join and the verify join-backs, all on 64-bit
+   keys. Buckets with one member produce no candidates; a hot bucket
    (degenerate content, e.g. empty strings) is capped to bound the join.
  - SimHash: 64-bit signature; tokens are hashed JVM-side and the bit
    majority vote runs over whole Arrow batches in numpy. Near-dup pairs are
@@ -54,6 +57,40 @@ def _threshold_ratio(threshold: float) -> tuple[int, int]:
     small exact integers and matches the user's decimal intent."""
     f = Fraction(threshold).limit_denominator(1000)
     return f.numerator, f.denominator
+
+
+def join_back_sets(cand: DataFrame, sets_df: DataFrame,
+                   set_col: str = "sh",
+                   sets_b: DataFrame | None = None) -> DataFrame:
+    """Attach each candidate side's full set column for exact verification
+    (sets ride this narrow join only — never the band/inverted index).
+    id_a takes its set from sets_df, id_b from sets_b (default sets_df)."""
+    sets_b = sets_df if sets_b is None else sets_b
+    return (
+        cand.join(sets_df.select(F.col("id").alias("id_a"),
+                                 F.col(set_col).alias(f"{set_col}_a")), "id_a")
+            .join(sets_b.select(F.col("id").alias("id_b"),
+                                F.col(set_col).alias(f"{set_col}_b")), "id_b")
+    )
+
+
+def jaccard_verify(cand: DataFrame, sets_df: DataFrame, threshold: float,
+                   sets_b: DataFrame | None = None) -> DataFrame:
+    """Exact Jaccard of candidate pairs (id_a, id_b) over their (id, sh)
+    sets — the one verifier behind minhash_lsh_pairs,
+    incremental_minhash_pairs and ngram_jaccard_pairs. Returns (id_a,
+    id_b, jaccard) with jaccard >= threshold, compared as cross-multiplied
+    integers (no float wobble) and reported rounded to 4 places."""
+    cand = join_back_sets(cand, sets_df, "sh", sets_b)
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    union = F.size("sh_a") + F.size("sh_b") - inter
+    num, den = _threshold_ratio(threshold)
+    return (
+        cand.withColumn("n_inter", inter).withColumn("n_union", union)
+            .filter(F.col("n_inter") * den >= F.col("n_union") * num)
+            .select("id_a", "id_b",
+                    F.round(F.col("n_inter") / F.col("n_union"), 4).alias("jaccard"))
+    )
 
 # ----------------------------------------------------------------- exact --
 
@@ -143,7 +180,7 @@ def word_shingle_hashes(col: Column, k: int = 3) -> Column:
 # ---------------------------------------------------------------- minhash --
 
 def minhash_signatures_expr(
-    df: DataFrame, id_col: str, shingles_col: str, num_hashes: int = 32,
+    df: DataFrame, id_col: str, shingles_col: str, num_hashes: int,
 ) -> DataFrame:
     """MinHash signatures with ZERO shuffle: one aggregate() pass over the
     shingle array keeps a running-min accumulator of num_hashes longs —
@@ -161,26 +198,27 @@ def minhash_signatures_expr(
     return staged.select("id", mh.alias("mh"))
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 16,
-    bands: int = 8,
-    shingle_k: int = 3,
-    shingle_mode: str = "word",
-    max_bucket: int = 64,
-    jaccard_threshold: float = 0.8,
-) -> DataFrame:
-    """Near-duplicate pairs via MinHash banding + exact Jaccard verification.
+def minhash_artifacts(df: DataFrame, id_col: str = "doc_id",
+                      text_col: str = "text", num_hashes: int = 16,
+                      bands: int = 8, shingle_k: int = 3,
+                      shingle_mode: str = "word",
+                      ) -> tuple[DataFrame, DataFrame]:
+    """The one MinHash pipeline: shingle, sign and band a corpus once.
 
-    rows/band = num_hashes/bands; collision prob ≈ 1-(1-j^r)^b. Defaults
+    shingled = (id, sh array): exact-verification sets.
+    banded   = (id, band, bkey): LSH candidate keys.
+    Both pair finders (minhash_lsh_pairs, incremental_minhash_pairs) take
+    these frames, and a published corpus persists them (banded bucketed by
+    (band, bkey), shingled by id) so increments probe it without touching
+    its text. The MinHash settings live here only, so band keys from one
+    pipeline are always comparable.
+
+    rows/band r = num_hashes/bands; collision prob ≈ 1-(1-j^r)^b. Defaults
     16/8 (r=2): j=0.8 -> >99.9% recall; false candidates are cheap because
-    every candidate is exactly verified. Word 3-gram shingles by default
-    (~7x fewer shingles than char-5 at equal dedup quality on prose; pass
-    shingle_mode='char' for short/CJK-ish text). Returns (id_a, id_b,
-    jaccard) with id_a < id_b and jaccard >= threshold (threshold compared
-    as cross-multiplied integers — no float wobble).
+    every candidate is exactly verified. Word 3-gram shingle hashes by
+    default (~7x fewer shingles than char-5 at equal dedup quality on
+    prose; pass shingle_mode='char' for short/CJK-ish text). Band key =
+    xxhash64 of the band's signature slice.
     """
     r = num_hashes // bands
     mk = char_shingles if shingle_mode == "char" else word_shingle_hashes
@@ -194,7 +232,6 @@ def minhash_lsh_pairs(
         mk(F.col(text_col), shingle_k).alias("sh"),
     ).localCheckpoint()
     sig = minhash_signatures_expr(shingled, "id", "sh", num_hashes)
-
     # bands carry only (id, band, bkey) — never the shingle sets (an 8-way
     # band explode of 2000-element arrays would 8x the shuffle for nothing)
     banded = sig.select(
@@ -207,7 +244,19 @@ def minhash_lsh_pairs(
             for b in range(bands)
         ])).alias("bb"),
     ).select("id", "bb.band", "bb.bkey")
+    return shingled, banded
 
+
+def minhash_lsh_pairs(
+    shingled: DataFrame,
+    banded: DataFrame,
+    max_bucket: int = 64,
+    jaccard_threshold: float = 0.8,
+) -> DataFrame:
+    """Near-duplicate pairs within one minhash_artifacts output: band
+    buckets give candidates, jaccard_verify checks them exactly. Returns
+    (id_a, id_b, jaccard) with id_a < id_b and jaccard >= threshold.
+    """
     # Bucket members gathered per (band, bkey) in ONE partial-agg exchange;
     # the hot-bucket cap is slice(array_sort(...), 1, max_bucket) — the
     # same smallest-max_bucket-ids set the old row_number window kept —
@@ -233,24 +282,7 @@ def minhash_lsh_pairs(
                .select("p.id_a", "p.id_b")
                .dropDuplicates(["id_a", "id_b"])
     )
-    # exact-Jaccard verification only on candidates: shingle sets joined in
-    # here, never shuffled with the bands
-    cand = (
-        cand.join(shingled.select(F.col("id").alias("id_a"),
-                                  F.col("sh").alias("sh_a")), "id_a")
-            .join(shingled.select(F.col("id").alias("id_b"),
-                                  F.col("sh").alias("sh_b")), "id_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    num, den = _threshold_ratio(jaccard_threshold)
-    return (
-        cand.withColumn("n_inter", inter).withColumn("n_union", union)
-            .filter(F.col("n_inter") * den >= F.col("n_union") * num)
-            .select(
-                "id_a", "id_b",
-                F.round(F.col("n_inter") / F.col("n_union"), 4).alias("jaccard"))
-    )
+    return jaccard_verify(cand, shingled, jaccard_threshold)
 
 
 # ---------------------------------------------------------------- simhash --
@@ -448,18 +480,6 @@ def inverted_candidates(postings: DataFrame,
     )
 
 
-def join_back_sets(cand: DataFrame, sets_df: DataFrame,
-                   set_col: str = "sh") -> DataFrame:
-    """Attach each candidate side's full set column for exact verification
-    (sets ride this narrow join only — never the inverted index)."""
-    return (
-        cand.join(sets_df.select(F.col("id").alias("id_a"),
-                                 F.col(set_col).alias(f"{set_col}_a")), "id_a")
-            .join(sets_df.select(F.col("id").alias("id_b"),
-                                 F.col(set_col).alias(f"{set_col}_b")), "id_b")
-    )
-
-
 # ------------------------------------------------------------ ngram jaccard --
 
 def ngram_jaccard_pairs(
@@ -486,16 +506,7 @@ def ngram_jaccard_pairs(
     cand = inverted_candidates(postings, max_postings)
     # exact verification on candidates only: full shingle sets joined in
     # here, never shuffled through the inverted index
-    cand = join_back_sets(cand, sh, "sh")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    num, den = _threshold_ratio(threshold)
-    return (
-        cand.withColumn("n_inter", inter).withColumn("n_union", union)
-            .filter(F.col("n_inter") * den >= F.col("n_union") * num)
-            .select("id_a", "id_b",
-                    F.round(F.col("n_inter") / F.col("n_union"), 4).alias("jaccard"))
-    )
+    return jaccard_verify(cand, sh, threshold)
 
 
 # --------------------------------------------------- connected components --
@@ -626,95 +637,24 @@ def incremental_exact_dedup(new_df: DataFrame, history_fps: DataFrame,
                   .unionByName(nulls))
 
 
-def minhash_artifacts(df: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text", num_hashes: int = 16,
-                      bands: int = 8, shingle_k: int = 3,
-                      shingle_mode: str = "word",
-                      ) -> tuple[DataFrame, DataFrame]:
-    """(shingled, banded) projections — the persisted near-dup artifacts.
-
-    shingled = (id, sh array<long>): exact-verification sets.
-    banded   = (id, band, bkey):     LSH candidate keys.
-    A published corpus persists both (banded bucketed by (band, bkey),
-    shingled by id); increments join against them without touching the
-    published text. Same banding math as minhash_lsh_pairs — r =
-    num_hashes/bands rows per band, band key = xxhash64 of the band's
-    signature slice."""
-    r = num_hashes // bands
-    mk = char_shingles if shingle_mode == "char" else word_shingle_hashes
-    shingled = parallelize_input(df.select(id_col, text_col)).select(
-        F.col(id_col).alias("id"),
-        mk(F.col(text_col), shingle_k).alias("sh"),
-    ).localCheckpoint()
-    sig = minhash_signatures_expr(shingled, "id", "sh", num_hashes)
-    banded = sig.select(
-        "id",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(*[F.col("mh")[b * r + i] for i in range(r)])
-                 .alias("bkey"),
-            )
-            for b in range(bands)
-        ])).alias("bb"),
-    ).select("id", "bb.band", "bb.bkey")
-    return shingled, banded
-
-
 def incremental_minhash_pairs(
-    new_df: DataFrame,
-    history_df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 16,
-    bands: int = 8,
-    shingle_k: int = 3,
-    shingle_mode: str = "word",
+    new_shingled: DataFrame,
+    new_banded: DataFrame,
+    hist_shingled: DataFrame,
+    hist_banded: DataFrame,
     max_bucket: int = 64,
     jaccard_threshold: float = 0.8,
 ) -> DataFrame:
     """(new_id, hist_id, jaccard) pairs: increment docs near-duplicate with
-    the published corpus, MinHash-banded + exactly verified.
+    the published corpus, from both sides' minhash_artifacts output (the
+    history side typically read column-pruned from its persisted parquet).
 
     The candidate join is new-bands x history-bands on (band, bkey) — an
     increment-sized probe into the published band table, NOT a self-join
     over the union (which would rediscover every already-known
     history-internal pair on every run). Verification joins each side's
     candidates back to its OWN shingle table, so history text is never
-    read. Hot-bucket cap applies per side. Pass precomputed artifacts via
-    history_df being the raw docs here; jobs persist minhash_artifacts()
-    output and feed it to incremental_minhash_pairs_from_artifacts."""
-    h_sh, h_bands = minhash_artifacts(
-        history_df, id_col, text_col, num_hashes, bands, shingle_k,
-        shingle_mode)
-    return incremental_minhash_pairs_from_artifacts(
-        new_df, h_sh, h_bands, id_col, text_col, num_hashes, bands,
-        shingle_k, shingle_mode, max_bucket, jaccard_threshold)
-
-
-def incremental_minhash_pairs_from_artifacts(
-    new_df: DataFrame,
-    history_shingled: DataFrame,
-    history_banded: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 16,
-    bands: int = 8,
-    shingle_k: int = 3,
-    shingle_mode: str = "word",
-    max_bucket: int = 64,
-    jaccard_threshold: float = 0.8,
-) -> DataFrame:
-    """incremental_minhash_pairs against PERSISTED history artifacts —
-    the production entry point: the published corpus contributes only its
-    (id, band, bkey) and (id, sh) tables, read column-pruned from storage.
-    Banding parameters must match the ones the artifacts were built with
-    (same num_hashes/bands/shingle settings — band keys are not
-    comparable across parameterizations)."""
-    n_sh, n_bands = minhash_artifacts(
-        new_df, id_col, text_col, num_hashes, bands, shingle_k,
-        shingle_mode)
-
+    read. Hot-bucket cap applies per side."""
     def cap(banded: DataFrame) -> DataFrame:
         return (banded.withColumn(
                     "rn",
@@ -724,44 +664,12 @@ def incremental_minhash_pairs_from_artifacts(
                 .drop("rn"))
 
     cand = (
-        cap(n_bands).alias("n")
-        .join(cap(history_banded).alias("h"), ["band", "bkey"])
-        .select(F.col("n.id").alias("new_id"),
-                F.col("h.id").alias("hist_id"))
-        .dropDuplicates(["new_id", "hist_id"])
+        cap(new_banded).alias("n")
+        .join(cap(hist_banded).alias("h"), ["band", "bkey"])
+        .select(F.col("n.id").alias("id_a"), F.col("h.id").alias("id_b"))
+        .dropDuplicates(["id_a", "id_b"])
     )
-    cand = (
-        cand.join(n_sh.select(F.col("id").alias("new_id"),
-                              F.col("sh").alias("sh_n")), "new_id")
-            .join(history_shingled.select(F.col("id").alias("hist_id"),
-                                          F.col("sh").alias("sh_h")),
-                  "hist_id")
-    )
-    inter = F.size(F.array_intersect("sh_n", "sh_h"))
-    union = F.size("sh_n") + F.size("sh_h") - inter
-    num, den = _threshold_ratio(jaccard_threshold)
-    return (
-        cand.withColumn("n_inter", inter).withColumn("n_union", union)
-            .filter(F.col("n_inter") * den >= F.col("n_union") * num)
-            .select(
-                "new_id", "hist_id",
-                F.round(F.col("n_inter") / F.col("n_union"), 4)
-                 .alias("jaccard"))
-    )
-
-
-def incremental_minhash_dedup(
-    new_df: DataFrame,
-    history_df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    **kwargs,
-) -> DataFrame:
-    """Increment rows that are NOT near-duplicates of the published corpus
-    (the keep-set a re-crawl appends). Convenience over
-    incremental_minhash_pairs; NULL-text rows pass through (no shingles,
-    never candidates)."""
-    pairs = incremental_minhash_pairs(
-        new_df, history_df, id_col, text_col, **kwargs)
-    dup_ids = pairs.select(F.col("new_id").alias(id_col)).distinct()
-    return new_df.join(dup_ids, id_col, "left_anti")
+    return (jaccard_verify(cand, new_shingled, jaccard_threshold,
+                           sets_b=hist_shingled)
+            .withColumnRenamed("id_a", "new_id")
+            .withColumnRenamed("id_b", "hist_id"))

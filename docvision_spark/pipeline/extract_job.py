@@ -256,7 +256,8 @@ def run_extract_job(
     import os
 
     from docvision_spark.pipeline import snapshots
-    from docvision_spark.pipeline.lineage import write_metrics
+    from docvision_spark.pipeline.lineage import (partition_metrics,
+                                                  write_metrics)
 
     t0 = time.perf_counter()
     pages = read_pages(spark, pages_path)
@@ -309,12 +310,20 @@ def run_extract_job(
             summary["dedup_dropped"] = n_dropped
         return summary
 
-    written = spark.read.parquet(staging)
-    n_docs = written.count()
-    n_fail = written.filter(F.col("error").isNotNull()).count()
+    # one aggregate over this snapshot's staged rows gives the summary
+    # counts and the lineage rows (one small row per task partition). It
+    # is checkpointed: commit moves the staged files, so the metrics write
+    # must read the aggregate, not scan staging again. (cache() would pin
+    # the aggregate at spark.sql.shuffle.partitions, where AQE coalesces
+    # it to the few partitions the rows need.)
+    per_part = partition_metrics(spark.read.parquet(staging)) \
+        .localCheckpoint(eager=False)
+    parts = per_part.collect()
+    n_docs = sum(r["doc_count"] for r in parts)
+    n_fail = sum(r["n_failures"] for r in parts)
     snap = snapshots.commit(out_dir, staging, data_dir, n_docs)
     wall = time.perf_counter() - t0
-    write_metrics(spark, out_dir, snap, pages_path, wall)
+    write_metrics(per_part, out_dir, snap, pages_path, wall)
     summary = {"snapshot_id": snap, "docs": n_docs, "failures": n_fail,
                "wall_s": wall}
     if dedup_against is not None:

@@ -635,7 +635,8 @@ def _twin_sql(name: str) -> str:
 def d01_minhash_pairs(spark: SparkSession, sf: str) -> DataFrame:
     d = load(spark, sf, "documents")
     return _twin(spark, sf, "d01_minhash_pairs",
-                 dedup.minhash_lsh_pairs(d, jaccard_threshold=0.8))
+                 dedup.minhash_lsh_pairs(*dedup.minhash_artifacts(d),
+                                         jaccard_threshold=0.8))
 
 
 def _incr_split(spark: SparkSession, sf: str) -> tuple[DataFrame, DataFrame]:
@@ -664,7 +665,8 @@ def i02_incremental_minhash(spark: SparkSession, sf: str) -> DataFrame:
     hist, new = _incr_split(spark, sf)
     return _twin(spark, sf, "i02_incremental_minhash",
                  dedup.incremental_minhash_pairs(
-                     new, hist, jaccard_threshold=0.8))
+                     *dedup.minhash_artifacts(new),
+                     *dedup.minhash_artifacts(hist), jaccard_threshold=0.8))
 
 
 def d02_simhash_pairs(spark: SparkSession, sf: str) -> DataFrame:
@@ -733,7 +735,8 @@ def d06_dup_clusters(spark: SparkSession, sf: str) -> DataFrame:
 
     d = load(spark, sf, "documents")
     pairs = _twin(spark, sf, "d06_pairs",
-                  dedup.minhash_lsh_pairs(d, jaccard_threshold=0.5)
+                  dedup.minhash_lsh_pairs(*dedup.minhash_artifacts(d),
+                                          jaccard_threshold=0.5)
                        .select("id_a", "id_b"))
     return connected_components(pairs)
 

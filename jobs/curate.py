@@ -14,7 +14,10 @@ deduplicated, quality-filtered text corpus with an audit trail.
           ──exact dedup──> drop content copies (keep smallest url; content
                          hash recomputed on the STRIPPED text, so docs that
                          differed only in template lines collapse)
-          ──minhash near-dup──> drop jaccard>=0.8 duplicates (keep one per pair-cluster)
+          ──minhash near-dup──> drop jaccard>=0.8 duplicates (keep one per pair-cluster);
+                         the increment is shingled, signed and banded ONCE
+                         and the in-batch pairs, the history probe and the
+                         written artifacts all read that one pass
           ──history dedup (re-crawl mode, --history)──> drop exact copies of
                          a previously-curated corpus via its persisted
                          content_md5 column and near-dups via its persisted
@@ -75,7 +78,8 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from docvision_spark.functions.dedup import minhash_lsh_pairs
+    from docvision_spark.functions.dedup import (minhash_artifacts,
+                                                 minhash_lsh_pairs)
     from docvision_spark.functions.text import with_quality
     from docvision_spark.pipeline.extract_job import extract_pages, read_pages
     from docvision_spark.pipeline.session import get_spark
@@ -204,14 +208,16 @@ def main() -> None:
         exact = exact.join(h_md5, "content_md5", "left_anti")
         report["after_history_exact"] = exact.count()
 
-    # 5. near-dup drop: keep-lowest-url policy. The pair id is the url
+    # 5. near-dup drop: keep-lowest-url policy. `exact` is shingled,
+    #    signed and banded here ONCE; steps 5b and 6 restrict these two
+    #    frames by url instead of re-shingling. The pair id is the url
     #    itself (minhash_lsh_pairs only needs an orderable, groupable id),
     #    so id_a < id_b IS lexicographic url order and dropping every id_b
     #    keeps the lowest url of each pair. Chained groups (a~b, b~c) drop
     #    both b and c — greedy transitive drop under the lowest surviving
     #    representative, the standard near-dedup policy.
-    pairs = minhash_lsh_pairs(
-        exact, id_col="url", text_col="text", jaccard_threshold=args.jaccard)
+    sh, bands = minhash_artifacts(exact, id_col="url", text_col="text")
+    pairs = minhash_lsh_pairs(sh, bands, jaccard_threshold=args.jaccard)
     losers = pairs.select(F.col("id_b").alias("url")).distinct()
     curated = exact.join(losers, "url", "left_anti")
     n_final = curated.count()
@@ -220,38 +226,42 @@ def main() -> None:
     # 5b. re-crawl mode: near-dup drop against the published corpus's
     #     persisted minhash artifacts (band probe + exact verify against
     #     its shingle table) — history docs are never re-shingled, and
-    #     history-internal pairs are never rediscovered
+    #     history-internal pairs are never rediscovered. The probe side is
+    #     step 5's frames minus the in-batch losers (the url anti-join
+    #     that made `curated`).
     if args.history:
-        from docvision_spark.functions.dedup import (
-            incremental_minhash_pairs_from_artifacts)
+        from docvision_spark.functions.dedup import incremental_minhash_pairs
 
         art = os.path.join(args.history, "artifacts")
         if not os.path.isdir(art):
             raise SystemExit(
                 f"--history {args.history} has no artifacts/ dir (was it "
                 f"curated with --no-artifacts?)")
-        pairs_h = incremental_minhash_pairs_from_artifacts(
-            curated,
+        in_batch_losers = losers.select(F.col("url").alias("id"))
+        pairs_h = incremental_minhash_pairs(
+            sh.join(in_batch_losers, "id", "left_anti"),
+            bands.join(in_batch_losers, "id", "left_anti"),
             spark.read.parquet(os.path.join(art, "shingles")),
             spark.read.parquet(os.path.join(art, "bands")),
-            id_col="url", text_col="text",
             jaccard_threshold=args.jaccard)
         h_losers = pairs_h.select(F.col("new_id").alias("url")).distinct()
         curated = curated.join(h_losers, "url", "left_anti")
         n_final = curated.count()
         report["after_history_neardup"] = n_final
 
-    curated.write.mode("overwrite").parquet(os.path.join(args.output, "data"))
+    data = os.path.join(args.output, "data")
+    curated.write.mode("overwrite").parquet(data)
     if not args.no_artifacts:
-        # persist the dedup artifacts the NEXT curate run's --history
-        # consumes: (url, sh) exact-verification sets + (url, band, bkey)
-        # LSH keys for the surviving corpus
-        from docvision_spark.functions.dedup import minhash_artifacts
-
-        sh, bands = minhash_artifacts(curated, id_col="url", text_col="text")
+        # 6. persist the dedup artifacts the NEXT curate run's --history
+        #    consumes: (url, sh) exact-verification sets + (url, band, bkey)
+        #    LSH keys, step 5's frames semi-joined to the urls just written
+        #    (a url-only scan of data/: the near-dup lineage is not re-run)
+        written = spark.read.parquet(data).select(F.col("url").alias("id"))
         art = os.path.join(args.output, "artifacts")
-        sh.write.mode("overwrite").parquet(os.path.join(art, "shingles"))
-        bands.write.mode("overwrite").parquet(os.path.join(art, "bands"))
+        sh.join(written, "id", "left_semi").write.mode("overwrite") \
+          .parquet(os.path.join(art, "shingles"))
+        bands.join(written, "id", "left_semi").write.mode("overwrite") \
+             .parquet(os.path.join(art, "bands"))
     with open(os.path.join(args.output, "report.json"), "w") as f:
         json.dump(report, f, indent=1)
     print(json.dumps(report))

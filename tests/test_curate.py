@@ -309,6 +309,17 @@ def test_curate_history_recrawl_mode(tmp_path):
         f"'{tmp_path}/out_inc/data/*.parquet')").fetchall()}
     assert urls == {u for u, _ in novel}
 
+    # both runs persist artifacts for exactly the urls they wrote to data/
+    def ids(sub, col):
+        return {u for (u,) in duckdb.connect().execute(
+            f"select distinct {col} from read_parquet("
+            f"'{tmp_path}/{sub}/*.parquet')").fetchall()}
+
+    for out in ("out_hist", "out_inc"):
+        data = ids(f"{out}/data", "url")
+        assert ids(f"{out}/artifacts/shingles", "id") == data
+        assert ids(f"{out}/artifacts/bands", "id") == data
+
 
 @pytest.mark.spark
 @pytest.mark.slow

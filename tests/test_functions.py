@@ -40,10 +40,12 @@ def test_exact_dedup(docs):
 
 @pytest.mark.spark
 def test_minhash_finds_near_dups(docs):
-    from docvision_spark.functions.dedup import minhash_lsh_pairs
+    from docvision_spark.functions.dedup import (minhash_artifacts,
+                                                 minhash_lsh_pairs)
 
     pairs = {(r["id_a"], r["id_b"]): r["jaccard"]
-             for r in minhash_lsh_pairs(docs, jaccard_threshold=0.7).collect()}
+             for r in minhash_lsh_pairs(*minhash_artifacts(docs),
+                                        jaccard_threshold=0.7).collect()}
     assert (1, 2) in pairs and pairs[(1, 2)] == 1.0
     assert (1, 3) in pairs and pairs[(1, 3)] >= 0.7
     assert not any({a, b} & {4} for a, b in pairs)  # distinct doc never pairs
@@ -147,7 +149,7 @@ def test_minhash_signature_variant_parity(spark, docs):
     xxhash64(j, shingle) computed by explode + groupBy — including short
     and empty texts, where the shingle fallback path (n < k -> single
     whole-text shingle) is exercised. Both shingle modes of
-    minhash_lsh_pairs: word 3-gram hashes and char 5-gram strings."""
+    minhash_artifacts: word 3-gram hashes and char 5-gram strings."""
     from docvision_spark.functions.dedup import (
         char_shingles, minhash_signatures_expr, word_shingle_hashes)
 
@@ -219,13 +221,15 @@ def test_cjk_tokenization(spark):
 def test_cjk_minhash_near_dup(spark):
     """Planted zh near-dups are found by the minhash path (char-granular
     shingles via the CJK-aware normalized form)."""
-    from docvision_spark.functions.dedup import minhash_lsh_pairs
+    from docvision_spark.functions.dedup import (minhash_artifacts,
+                                                 minhash_lsh_pairs)
 
     rows = [(1, ZH), (2, ZH[:-2] + "要点"),  # near dup: 2-char tail edit
             (3, "完全不同的另一段文字内容讨论天气与旅行计划安排事项")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     pairs = {(r["id_a"], r["id_b"]) for r in
-             minhash_lsh_pairs(df, jaccard_threshold=0.5).collect()}
+             minhash_lsh_pairs(*minhash_artifacts(df),
+                               jaccard_threshold=0.5).collect()}
     assert (1, 2) in pairs
     assert not any({a, b} & {3} for a, b in pairs)
 

@@ -55,23 +55,26 @@ def test_incremental_exact_normalization(spark):
     assert sorted(r["doc_id"] for r in kept.collect()) == [11]
 
 
+def _pairs(new, hist, **kw):
+    """incremental_minhash_pairs over both sides' minhash_artifacts."""
+    from docvision_spark.functions.dedup import (
+        incremental_minhash_pairs, minhash_artifacts)
+
+    return incremental_minhash_pairs(*minhash_artifacts(new),
+                                     *minhash_artifacts(hist), **kw)
+
+
 @pytest.mark.spark
 def test_incremental_minhash_cross_corpus_twin(spark):
-    from docvision_spark.functions.dedup import (
-        incremental_minhash_dedup, incremental_minhash_pairs)
-
     hist = _df(spark, [(1, BASE), (2, DISTINCT)])
     new = _df(spark, [(10, NEAR), (11, DISTINCT + " extended with much "
                                        "more genuinely novel text content "
                                        "talking about entirely different "
                                        "things like cooking pasta dinners")])
-    pairs = incremental_minhash_pairs(new, hist, jaccard_threshold=0.8)
+    pairs = _pairs(new, hist, jaccard_threshold=0.8)
     got = {(r["new_id"], r["hist_id"]) for r in pairs.collect()}
     assert (10, 1) in got, "planted cross-corpus near-dup must be found"
     assert all(n != 11 for n, _ in got), "novel doc must not pair"
-
-    kept = incremental_minhash_dedup(new, hist, jaccard_threshold=0.8)
-    assert sorted(r["doc_id"] for r in kept.collect()) == [11]
 
 
 @pytest.mark.spark
@@ -79,21 +82,18 @@ def test_incremental_minhash_no_history_internal_pairs(spark):
     """The probe joins increment bands x history bands only: a near-dup
     pair INSIDE the published corpus is already known and must not be
     rediscovered on every increment run."""
-    from docvision_spark.functions.dedup import incremental_minhash_pairs
-
     hist = _df(spark, [(1, BASE), (2, NEAR)])       # internal near-dups
     new = _df(spark, [(10, DISTINCT)])
-    assert incremental_minhash_pairs(new, hist).count() == 0
+    assert _pairs(new, hist).count() == 0
 
 
 @pytest.mark.spark
 def test_incremental_minhash_from_persisted_artifacts(spark, tmp_path):
     """Production path: the published corpus contributes only its persisted
     (id, sh) + (id, band, bkey) parquet artifacts — pair set is identical
-    to the recompute-from-text path."""
+    to the in-memory artifacts path."""
     from docvision_spark.functions.dedup import (
-        incremental_minhash_pairs, incremental_minhash_pairs_from_artifacts,
-        minhash_artifacts)
+        incremental_minhash_pairs, minhash_artifacts)
 
     hist = _df(spark, [(1, BASE), (2, DISTINCT)])
     new = _df(spark, [(10, NEAR)])
@@ -102,11 +102,11 @@ def test_incremental_minhash_from_persisted_artifacts(spark, tmp_path):
     sh.write.parquet(str(tmp_path / "sh"))
     bands.write.parquet(str(tmp_path / "bands"))
 
-    from_disk = incremental_minhash_pairs_from_artifacts(
-        new,
+    from_disk = incremental_minhash_pairs(
+        *minhash_artifacts(new),
         spark.read.parquet(str(tmp_path / "sh")),
         spark.read.parquet(str(tmp_path / "bands")))
-    direct = incremental_minhash_pairs(new, hist)
+    direct = _pairs(new, hist)
     assert ({tuple(r) for r in from_disk.collect()}
             == {tuple(r) for r in direct.collect()} != set())
 
@@ -116,12 +116,12 @@ def test_incremental_plans_stay_jvm_side(spark):
     """No Python eval in either incremental operator's plan, and the
     near-dup probe is a key join, not a cartesian product."""
     from docvision_spark.functions.dedup import (
-        fingerprint_table, incremental_exact_dedup, incremental_minhash_pairs)
+        fingerprint_table, incremental_exact_dedup)
 
     hist = _df(spark, [(1, BASE)])
     new = _df(spark, [(10, NEAR)])
     for df in (incremental_exact_dedup(new, fingerprint_table(hist)),
-               incremental_minhash_pairs(new, hist)):
+               _pairs(new, hist)):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "EvalPython" not in plan
         assert "CartesianProduct" not in plan

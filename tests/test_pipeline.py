@@ -97,6 +97,12 @@ def test_resume_no_duplicates(spark, pages_dir, tmp_path):
     log = snapshots.snapshot_log(out_dir)
     assert [s["sequence"] for s in log] == [0, 1]
     assert log[1]["parent_id"] == log[0]["snapshot_id"]
+    # lineage rows of each snapshot count only that snapshot's docs
+    metrics = spark.read.parquet(os.path.join(out_dir, "metrics"))
+    per_snap = {r["snapshot_id"]: r["d"] for r in
+                metrics.groupBy("snapshot_id")
+                       .agg(F.sum("doc_count").alias("d")).collect()}
+    assert [per_snap[s["snapshot_id"]] for s in log] == [150, 150]
     t0 = snapshots.read_table(spark, out_dir, as_of=log[0]["snapshot_id"])
     assert t0.count() == 150
     assert {r["url"] for r in t0.select("url").collect()} == half
