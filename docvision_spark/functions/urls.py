@@ -102,19 +102,25 @@ def url_dedup(df: DataFrame, url_col: str = "url") -> DataFrame:
     newest warc_ts wins when the column exists; remaining ties are broken
     by every other column ascending (name order) — scalar columns compare
     natively, while BINARY and non-atomic (array/struct/map) columns
-    compare via xxhash64 of their bytes/JSON so the per-url window sort
-    never runs a row comparator over a multi-MB html payload and the
-    determinism guarantee holds even when re-crawls differ only in a
-    nested column. Output row CONTENT is therefore stable across runs and
-    partitionings (up to 2^-64 hash collisions between differing rows).
-    Null-url rows pass through untouched: they cannot be deduped, and
-    silently dropping them would hide upstream corruption."""
+    compare via xxhash64 of their bytes/JSON so the window sort never runs
+    a row comparator over a multi-MB html payload and the determinism
+    guarantee holds even when re-crawls differ only in a nested column.
+    Output row CONTENT is therefore stable across runs and partitionings
+    (up to 2^-64 hash collisions between differing rows).
+
+    One shuffle: a single window per canonical url ordered by url first
+    keeps the lowest url and, among its re-crawls, the policy survivor —
+    so downstream stages (the kernel) get the partitions AQE sizes for
+    this exchange, not a union with the scan's splits. Null-url rows pass
+    through untouched with a null canonical_url: they cannot be deduped,
+    and silently dropping them would hide upstream corruption. Output
+    columns: canonical_url, the url column, then the input's other
+    columns in input order."""
     from pyspark.sql import types as T
     from pyspark.sql.window import Window
 
-    nulls = df.filter(F.col(url_col).isNull()) \
-              .withColumn("canonical_url", F.lit(None).cast("string"))
-    base = with_canonical_url(df.filter(F.col(url_col).isNotNull()), url_col)
+    rest = [c for c in df.columns if c not in (url_col, "canonical_url")]
+    base = with_canonical_url(df, url_col)
     scalar, hashed = [], []
     for f in sorted(base.schema.fields, key=lambda f: f.name):
         if f.name in (url_col, "canonical_url"):
@@ -127,19 +133,19 @@ def url_dedup(df: DataFrame, url_col: str = "url") -> DataFrame:
             scalar.append(f.name)
         else:  # array/struct/map — not natively orderable here: hash JSON
             hashed.append(F.xxhash64(F.to_json(F.struct(F.col(f.name)))))
-    order = []
+    order = [F.col(url_col).asc_nulls_last()]
     if "warc_ts" in scalar:
         order.append(F.col("warc_ts").desc_nulls_last())  # newest crawl wins
         scalar.remove("warc_ts")
     order += [F.col(c).asc_nulls_last() for c in scalar]
     order += [h.asc_nulls_last() for h in hashed]
-    if not order:  # url-only frame: any row is the same row
-        order = [F.lit(1)]
-    w = Window.partitionBy(url_col).orderBy(*order)
-    c = (base.withColumn("_rn", F.row_number().over(w))
-             .filter(F.col("_rn") == 1).drop("_rn"))
-    keep = c.groupBy("canonical_url").agg(F.min(url_col).alias(url_col))
-    return c.join(keep, ["canonical_url", url_col]).unionByName(nulls)
+    # null urls share one null canonical_url; spread them over the
+    # exchange by content so they never pile onto a single task
+    spread = F.when(F.col(url_col).isNull(), F.xxhash64(*rest or [F.lit(0)]))
+    w = Window.partitionBy("canonical_url", spread).orderBy(*order)
+    return (base.withColumn("_rn", F.row_number().over(w))
+                .filter((F.col("_rn") == 1) | F.col(url_col).isNull())
+                .select("canonical_url", url_col, *rest))
 
 
 def resolve_href(base: Column, href: Column) -> Column:

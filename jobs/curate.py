@@ -25,6 +25,12 @@ deduplicated, quality-filtered text corpus with an audit trail.
                          the published text is never re-read
           ──> curated parquet + dedup artifacts + report JSON
 
+The report's funnel counts are not counted step by step: each stage's
+frame carries a pyspark Observation, filled while the job's own actions
+(the near-dup checkpoint, the curated write) run over it, and the report
+is read from them after the write. Each frame is computed by the actions
+that need its rows, never again for a number.
+
 Usage:
     spark-submit jobs/curate.py --input pages_dir [--warc] --output out_dir
         [--min-quality 60] [--cores N] [--history prior_out_dir]
@@ -75,7 +81,18 @@ def main() -> None:
     ap.add_argument("--lm-top-k", type=int, default=50000,
                     help="LM size: top-k bigram/context counts kept")
     args = ap.parse_args()
+    if args.history:
+        # checked before any work: a bad --history must not cost a whole
+        # extraction and funnel before it fails
+        for sub in ("data", "artifacts"):
+            if not os.path.isdir(os.path.join(args.history, sub)):
+                raise SystemExit(
+                    f"--history {args.history} has no {sub}/ dir"
+                    + (" (was it curated with --no-artifacts?)"
+                       if sub == "artifacts" else ""))
 
+    from py4j.protocol import Py4JJavaError
+    from pyspark.sql import DataFrame, Observation
     from pyspark.sql import functions as F
 
     from docvision_spark.functions.dedup import (minhash_artifacts,
@@ -87,7 +104,16 @@ def main() -> None:
     from docvision_spark.pipeline.warc import read_warc
 
     spark = get_spark(app_name="docvision-curate", cores=args.cores)
-    report: dict = {}
+    funnel: list[tuple[Observation, DataFrame, dict]] = []
+
+    def observe(df: DataFrame, **metrics) -> DataFrame:
+        """`df` with report metrics attached: they are collected while a
+        later action runs over it, at no action of their own."""
+        obs = Observation(next(iter(metrics)))
+        funnel.append((obs, df, metrics))
+        return df.observe(obs, *[m.alias(k) for k, m in metrics.items()])
+
+    rows = F.count(F.lit(1))
 
     pages = (read_warc(spark, args.input).select("url", "html", "lang")
              if args.warc else read_pages(spark, args.input))
@@ -97,9 +123,9 @@ def main() -> None:
     #    kernel cost twice (keep-lowest-url per canonical form)
     from docvision_spark.functions.urls import url_dedup
 
-    report["input_pages"] = pages.count()
-    pages = url_dedup(pages).drop("canonical_url")
-    report["after_url_dedup"] = pages.count()
+    pages = observe(pages, input_pages=rows)
+    pages = observe(url_dedup(pages).drop("canonical_url"),
+                    after_url_dedup=rows)
 
     # 0b. robots.txt gate BEFORE extraction (opt-in): machine-readable
     #     crawl permissions are a url-level predicate, so they belong with
@@ -112,14 +138,13 @@ def main() -> None:
         robots_rows = [(r["host"], r["robots_txt"])
                        for r in spark.read.parquet(args.robots).collect()]
         rules = robots_rules_df(spark, robots_rows, agent=args.robots_agent)
-        pages = (crawl_allowed(pages, rules)
-                 .filter(F.col("allowed")).drop("allowed"))
-        report["after_robots_txt"] = pages.count()
+        pages = observe(crawl_allowed(pages, rules)
+                        .filter(F.col("allowed")).drop("allowed"),
+                        after_robots_txt=rows)
 
-    # 1. extract (cache: every later stage reuses it)
-    out = extract_pages(pages).cache()
-    report["extracted"] = out.count()
-    report["extract_errors"] = out.filter(F.col("error").isNotNull()).count()
+    # 1. extract (read once: it feeds only the validation below)
+    out = observe(extract_pages(pages), extracted=rows,
+                  extract_errors=F.count_if(F.col("error").isNotNull()))
 
     # 2. structural validation
     valid = validation_flags(out).filter(F.col("valid") & F.col("error").isNull())
@@ -136,9 +161,11 @@ def main() -> None:
     #     whatever survives.
     from docvision_spark.functions.urls import resolve_href
 
-    valid = valid.filter(
-        ~F.coalesce(F.col("robots"), F.lit("")).contains("noindex")).cache()
-    report["after_robots"] = valid.count()
+    # cached: read on three plan branches (variant tags, their targets,
+    # the anti-join below)
+    valid = observe(valid.filter(
+        ~F.coalesce(F.col("robots"), F.lit("")).contains("noindex")),
+        after_robots=rows).cache()
     canon_abs = resolve_href(F.col("url"), F.col("canonical_url"))
     tagged = valid.withColumn("_canon_abs", canon_abs)
     is_variant = (F.col("_canon_abs").isNotNull()
@@ -148,8 +175,8 @@ def main() -> None:
     deferred = (tagged.filter(is_variant)
                       .join(nonvariant_targets, "_canon_abs", "left_semi")
                       .select("url"))
-    valid = valid.join(deferred, "url", "left_anti").cache()
-    report["after_canonical"] = valid.count()
+    valid = observe(valid.join(deferred, "url", "left_anti"),
+                    after_canonical=rows).cache()
 
     # 2c. host-frequency residual boilerplate: lines repeated verbatim in
     #     >= 4 distinct docs of one host are template text whatever their
@@ -161,17 +188,20 @@ def main() -> None:
     valid = strip_frequent_lines(valid, text_col="text", min_docs=4)
     valid = valid.filter(F.length(F.trim("text")) > 0)
 
-    # 3. quality floor (scored on the stripped text)
+    # 3. quality floor (scored on the stripped text). Cached: read on two
+    #    plan branches (the content-hash census and its join-back in step
+    #    4, or the LM's training and scoring passes). The boiler metric
+    #    belongs to the QUALITY-PASSED set — observed before the optional
+    #    LM gate reassigns `kept`, so its meaning does not depend on an
+    #    unrelated flag; coalesce: the sum over no rows is null.
     scored = with_quality(valid, "text")
-    kept = scored.filter(F.col("quality_score") >= args.min_quality) \
-                 .select("url", "id", "text", "markdown", "page_count",
-                         "lang", "quality_score", "n_stripped_lines").cache()
-    report["quality_pass"] = kept.count()
-    # boiler metric belongs to the QUALITY-PASSED set — computed before
-    # the optional LM gate reassigns `kept`, so its meaning does not
-    # depend on an unrelated flag
-    report["boiler_lines_stripped"] = (
-        kept.agg(F.sum("n_stripped_lines")).first()[0] or 0)
+    kept = observe(
+        scored.filter(F.col("quality_score") >= args.min_quality)
+              .select("url", "id", "text", "markdown", "page_count",
+                      "lang", "quality_score", "n_stripped_lines"),
+        quality_pass=rows,
+        boiler_lines_stripped=F.coalesce(F.sum("n_stripped_lines"),
+                                         F.lit(0))).cache()
 
     # 3b. LM quality gate (opt-in, CCNet-style): a bigram LM trained on
     #     the quality-passed corpus itself scores every doc in integer
@@ -184,11 +214,11 @@ def main() -> None:
                                                     train_bigram_lm)
 
         lm = train_bigram_lm(kept, "text", top_k=args.lm_top_k)
-        kept = (lm_score(kept, lm, text_col="text")
-                .filter(F.col("mb_per_token") <= args.lm_max_millibits)
-                .drop("n_tokens", "total_millibits", "mb_per_token")
-                .cache())
-        report["after_lm_quality"] = kept.count()
+        # cached: read on both plan branches of step 4
+        kept = observe(lm_score(kept, lm, text_col="text")
+                       .filter(F.col("mb_per_token") <= args.lm_max_millibits)
+                       .drop("n_tokens", "total_millibits", "mb_per_token"),
+                       after_lm_quality=rows).cache()
 
     # 4. exact dedup: keep the lexicographically smallest url per content
     #    hash, recomputed on the STRIPPED text (the doc id stays the sha3 of
@@ -196,8 +226,8 @@ def main() -> None:
     #    now-removed template lines must collapse here)
     kept = kept.withColumn("content_md5", F.md5(F.col("text")))
     w_min = kept.groupBy("content_md5").agg(F.min("url").alias("url"))
-    exact = kept.join(w_min, ["content_md5", "url"])
-    report["after_exact_dedup"] = exact.count()
+    exact = observe(kept.join(w_min, ["content_md5", "url"]),
+                    after_exact_dedup=rows)
 
     # 4b. re-crawl mode: exact dedup against the published corpus's
     #     persisted content_md5 column — a column-pruned anti-join, no
@@ -205,8 +235,8 @@ def main() -> None:
     if args.history:
         h_md5 = (spark.read.parquet(os.path.join(args.history, "data"))
                  .select("content_md5"))
-        exact = exact.join(h_md5, "content_md5", "left_anti")
-        report["after_history_exact"] = exact.count()
+        exact = observe(exact.join(h_md5, "content_md5", "left_anti"),
+                        after_history_exact=rows)
 
     # 5. near-dup drop: keep-lowest-url policy. `exact` is shingled,
     #    signed and banded here ONCE; steps 5b and 6 restrict these two
@@ -219,9 +249,8 @@ def main() -> None:
     sh, bands = minhash_artifacts(exact, id_col="url", text_col="text")
     pairs = minhash_lsh_pairs(sh, bands, jaccard_threshold=args.jaccard)
     losers = pairs.select(F.col("id_b").alias("url")).distinct()
-    curated = exact.join(losers, "url", "left_anti")
-    n_final = curated.count()
-    report["after_near_dedup"] = n_final
+    curated = observe(exact.join(losers, "url", "left_anti"),
+                      after_near_dedup=rows)
 
     # 5b. re-crawl mode: near-dup drop against the published corpus's
     #     persisted minhash artifacts (band probe + exact verify against
@@ -233,10 +262,6 @@ def main() -> None:
         from docvision_spark.functions.dedup import incremental_minhash_pairs
 
         art = os.path.join(args.history, "artifacts")
-        if not os.path.isdir(art):
-            raise SystemExit(
-                f"--history {args.history} has no artifacts/ dir (was it "
-                f"curated with --no-artifacts?)")
         in_batch_losers = losers.select(F.col("url").alias("id"))
         pairs_h = incremental_minhash_pairs(
             sh.join(in_batch_losers, "id", "left_anti"),
@@ -245,9 +270,8 @@ def main() -> None:
             spark.read.parquet(os.path.join(art, "bands")),
             jaccard_threshold=args.jaccard)
         h_losers = pairs_h.select(F.col("new_id").alias("url")).distinct()
-        curated = curated.join(h_losers, "url", "left_anti")
-        n_final = curated.count()
-        report["after_history_neardup"] = n_final
+        curated = observe(curated.join(h_losers, "url", "left_anti"),
+                          after_history_neardup=rows)
 
     data = os.path.join(args.output, "data")
     curated.write.mode("overwrite").parquet(data)
@@ -262,6 +286,19 @@ def main() -> None:
           .parquet(os.path.join(art, "shingles"))
         bands.join(written, "id", "left_semi").write.mode("overwrite") \
              .parquet(os.path.join(art, "bands"))
+    # every observed frame is in the lineage of the write, so each
+    # Observation is filled by now, by the first action that ran it. One
+    # comes back empty only when AQE pruned it from that action's plan (a
+    # join input downstream of it was empty at run time); only then is
+    # that frame counted on its own.
+    report: dict = {}
+    for obs, df, metrics in funnel:
+        try:
+            row = obs.get
+        except Py4JJavaError:
+            row = df.agg(*[m.alias(k) for k, m in metrics.items()]) \
+                    .first().asDict()
+        report.update({k: int(row[k]) for k in metrics})
     with open(os.path.join(args.output, "report.json"), "w") as f:
         json.dump(report, f, indent=1)
     print(json.dumps(report))

@@ -15,9 +15,10 @@ import pytest
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-@pytest.mark.spark
-@pytest.mark.slow
-def test_curate_drops_planted_duplicates(tmp_path):
+def write_planted_pages(tmp_path) -> tuple[str, int]:
+    """60 corpus pages plus planted copies: 8 exact duplicates under another
+    url, 3 url-level variants and 4 near duplicates. Returns the pages dir
+    and its row count."""
     from docvision_spark.corpus import gen_urls, make_page
 
     import re as _re
@@ -70,19 +71,24 @@ def test_curate_drops_planted_duplicates(tmp_path):
     in_dir.mkdir()
     pq.write_table(pa.Table.from_pydict(rows, schema=schema),
                    str(in_dir / "part-0.parquet"))
+    return str(in_dir), len(rows["url"])
 
+
+@pytest.mark.spark
+@pytest.mark.slow
+def test_curate_drops_planted_duplicates(tmp_path):
+    in_dir, n_input = write_planted_pages(tmp_path)
     out_dir = str(tmp_path / "curated")
     env = dict(os.environ, PYTHONPATH=REPO)
     proc = subprocess.run(
         [sys.executable, os.path.join(REPO, "jobs", "curate.py"),
-         "--input", str(in_dir), "--output", out_dir,
+         "--input", in_dir, "--output", out_dir,
          "--cores", "8", "--min-quality", "40"],
         capture_output=True, text=True, timeout=500, env=env,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     report = json.loads(proc.stdout.strip().splitlines()[-1])
 
-    n_input = len(rows["url"])
     assert report["input_pages"] == n_input
     # the 3 planted url variants collapse before extraction is paid
     assert report["after_url_dedup"] == n_input - 3
@@ -97,6 +103,60 @@ def test_curate_drops_planted_duplicates(tmp_path):
         f"select count(*), count(distinct id) from read_parquet('{out_dir}/data/*.parquet')"
     ).fetchone()
     assert got[0] == got[1] == report["after_near_dedup"]
+
+
+@pytest.mark.spark
+@pytest.mark.slow
+def test_curate_zero_survivor_report(tmp_path):
+    """A quality floor nothing passes: every stage after it is empty, and
+    the report still carries every default key as an int (an observed sum
+    over no rows is null, an observed count pruned from an empty plan is
+    absent), with the upstream counts intact. data/ is an empty table."""
+    in_dir, n_input = write_planted_pages(tmp_path)
+    out_dir = str(tmp_path / "curated")
+    env = dict(os.environ, PYTHONPATH=REPO)
+    proc = subprocess.run(
+        [sys.executable, os.path.join(REPO, "jobs", "curate.py"),
+         "--input", in_dir, "--output", out_dir,
+         "--cores", "4", "--min-quality", "101"],
+        capture_output=True, text=True, timeout=500, env=env)
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    with open(os.path.join(out_dir, "report.json")) as f:
+        report = json.load(f)
+    assert list(report) == [
+        "input_pages", "after_url_dedup", "extracted", "extract_errors",
+        "after_robots", "after_canonical", "quality_pass",
+        "boiler_lines_stripped", "after_exact_dedup", "after_near_dedup"]
+    assert all(type(v) is int for v in report.values()), report
+    assert report["input_pages"] == n_input
+    assert report["after_url_dedup"] == report["extracted"] == n_input - 3
+    assert report["after_canonical"] > 0
+    assert (report["quality_pass"] == report["after_exact_dedup"]
+            == report["after_near_dedup"] == 0)
+    assert report["boiler_lines_stripped"] == 0
+    assert pq.read_table(os.path.join(out_dir, "data")).num_rows == 0
+
+
+def test_curate_history_without_artifacts_fails_fast(tmp_path):
+    """--history naming an output curated with --no-artifacts (data/ and
+    report.json, no artifacts/) exits before any Spark work: non-zero, the
+    reason on stderr, and no --output dir."""
+    hist = tmp_path / "hist"
+    (hist / "data").mkdir(parents=True)
+    pq.write_table(pa.Table.from_pydict({"content_md5": ["0" * 32]}),
+                   str(hist / "data" / "part-0.parquet"))
+    (hist / "report.json").write_text("{}")
+    out_dir = tmp_path / "curated"
+    env = dict(os.environ, PYTHONPATH=REPO)
+    proc = subprocess.run(
+        [sys.executable, os.path.join(REPO, "jobs", "curate.py"),
+         "--input", str(tmp_path / "no_pages"), "--output", str(out_dir),
+         "--history", str(hist)],
+        capture_output=True, text=True, timeout=120, env=env)
+    assert proc.returncode != 0
+    assert "has no artifacts/ dir" in proc.stderr
+    assert "--no-artifacts" in proc.stderr
+    assert not out_dir.exists()
 
 
 @pytest.mark.spark

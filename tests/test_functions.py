@@ -249,13 +249,34 @@ def test_url_dedup_deterministic_survivor(spark):
         ("http://a.com/x", ts + dt.timedelta(days=3), "new body"),
         ("http://a.com/x", ts + dt.timedelta(days=3), "aaa tie"),  # ts tie
         ("http://b.com/y", None, "only"),
+        # canonical variants of c.com/z: the lowest url wins, and its own
+        # newest re-crawl is the survivor
+        ("http://c.com/z?utm_source=s", ts + dt.timedelta(days=9), "variant"),
+        ("http://c.com/z", ts, "z old"),
+        ("http://c.com/z", ts + dt.timedelta(days=1), "z new"),
+        ("HTTP://C.com/z/#top", None, "lowest"),
+        # null urls cannot be deduped: both pass, equal timestamps and all
+        (None, ts, "null one"),
+        (None, ts, "null two"),
     ]
     df = spark.createDataFrame(rows, "url string, warc_ts timestamp, text string")
     for n_parts in (1, 4):
-        got = {r["url"]: r["text"]
-               for r in url_dedup(df.repartition(n_parts)).collect()}
-        assert got["http://a.com/x"] == "aaa tie"  # newest ts, then text asc
-        assert got["http://b.com/y"] == "only"
+        out = url_dedup(df.repartition(n_parts))
+        assert out.columns == ["canonical_url", "url", "warc_ts", "text"]
+        got = out.collect()
+        kept = {r["url"]: r["text"] for r in got if r["url"] is not None}
+        assert kept == {"http://a.com/x": "aaa tie",  # newest ts, then text
+                        "http://b.com/y": "only",
+                        "HTTP://C.com/z/#top": "lowest"}
+        nulls = [r for r in got if r["url"] is None]
+        assert sorted(r["text"] for r in nulls) == ["null one", "null two"]
+        assert all(r["canonical_url"] is None for r in nulls)
+
+    # the lowest url's own survivor policy still applies among its re-crawls
+    no_upper = df.filter(~F.col("url").startswith("HTTP") | F.col("url").isNull())
+    got = {r["url"]: r["text"] for r in url_dedup(no_upper).collect()}
+    assert got["http://c.com/z"] == "z new"
+    assert "http://c.com/z?utm_source=s" not in got
 
 
 @pytest.mark.spark

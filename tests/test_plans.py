@@ -246,3 +246,27 @@ def test_robots_gate_no_url_side_shuffle(spark):
     # exactly one post-join shuffle: the final host rollup
     post_join = tree.split("BroadcastHashJoin", 1)[0]
     assert post_join.count("Exchange") == 1, tree
+
+
+@pytest.mark.spark
+def test_url_dedup_is_one_shuffle_into_the_kernel(spark, pages_dir):
+    """url_dedup reaches the kernel through ONE exchange. Null-url rows
+    ride the same plan instead of a Union with the scan, whose splits AQE
+    cannot coalesce (every stage downstream would inherit shuffle + scan
+    partitions), and no second shuffle sits between the dedup and
+    MapInPandas."""
+    from docvision_spark.functions.urls import url_dedup
+    from docvision_spark.pipeline.extract_job import extract_pages, read_pages
+
+    deduped = url_dedup(read_pages(spark, pages_dir))
+    assert "Union" not in plan_of(deduped)
+
+    # at unit scale AQE coalesces the dedup exchange below the core count
+    # and the default gate adds its salted fallback exchange; a corpus of a
+    # few MB per core keeps the exchange's partitions, so ask for those
+    n_dedup = deduped.rdd.getNumPartitions()
+    plan = plan_of(extract_pages(deduped, partitions=n_dedup))
+    tree = plan.split("== Physical Plan ==", 1)[1].split("\n\n")[0]
+    assert tree.count("MapInPandas") == 1
+    below = tree.split("MapInPandas", 1)[1]
+    assert below.count("Exchange") == 1, tree
