@@ -309,9 +309,8 @@ def simhash_signatures_np(
 
     import pandas as pd
 
-    from docvision_spark.pipeline.shipping import ensure_py_files
+    from docvision_spark.pipeline.shipping import map_in_pandas
 
-    ensure_py_files(df.sparkSession)
     toks = F.split(F.trim(normalized(F.col(text_col))), " ")
     hashes = F.transform(toks, lambda t: F.xxhash64(t))
     src = df.select(F.col(id_col).alias("id"), hashes.alias("_h"))
@@ -351,7 +350,7 @@ def simhash_signatures_np(
             # occur (split of any non-null string yields >= 1 element)
             yield pd.DataFrame({"id": pdf["id"], "sh": out})
 
-    return src.mapInPandas(fn, f"id {id_type}, sh long")
+    return map_in_pandas(src, fn, f"id {id_type}, sh long")
 
 
 def simhash_pairs(

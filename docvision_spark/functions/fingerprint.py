@@ -111,9 +111,7 @@ def winnow_np(text: str, k: int = 8, w: int = 16) -> np.ndarray:
 
 def winnow_fingerprints(df: DataFrame, id_col: str = "doc_id",
                         text_col: str = "text", k: int = 8, w: int = 16) -> DataFrame:
-    from docvision_spark.pipeline.shipping import ensure_py_files
-
-    ensure_py_files(df.sparkSession)
+    from docvision_spark.pipeline.shipping import map_in_pandas
 
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -132,8 +130,8 @@ def winnow_fingerprints(df: DataFrame, id_col: str = "doc_id",
 
     # a small single-file scan is one split -> the whole Python winnowing
     # stage runs on one core; no-op on a properly-partitioned big table
-    return parallelize_input(df.select(id_col, text_col)) \
-        .mapInPandas(fn, schema=FP_SCHEMA)
+    return map_in_pandas(parallelize_input(df.select(id_col, text_col)),
+                         fn, FP_SCHEMA)
 
 
 def winnow_overlap_pairs(df: DataFrame, id_col: str = "doc_id",

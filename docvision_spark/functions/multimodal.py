@@ -226,9 +226,7 @@ def extract_media_features(df: DataFrame) -> DataFrame:
     DVSM stub header. Per-row errors land in an `error` column — a corrupt
     payload never fails the task.
     """
-    from docvision_spark.pipeline.shipping import ensure_py_files
-
-    ensure_py_files(df.sparkSession)
+    from docvision_spark.pipeline.shipping import map_in_pandas
 
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib
@@ -407,7 +405,7 @@ def extract_media_features(df: DataFrame) -> DataFrame:
             yield pd.DataFrame(out, dtype=object,
                                columns=[f.name for f in FEATURE_SCHEMA.fields])
 
-    return df.mapInPandas(fn, schema=FEATURE_SCHEMA)
+    return map_in_pandas(df, fn, FEATURE_SCHEMA)
 
 
 THUMB_SCHEMA = StructType([
@@ -424,9 +422,7 @@ def resize_images(df: DataFrame, max_side: int = 16) -> DataFrame:
     side is `max_side` (never upscales) -> re-encode PNG. Mirrors the
     reference's adaptive resize (processing/image.py:351-366) as an
     Arrow-batched mapInPandas stage."""
-    from docvision_spark.pipeline.shipping import ensure_py_files
-
-    ensure_py_files(df.sparkSession)
+    from docvision_spark.pipeline.shipping import map_in_pandas
 
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from docvision_spark.kernel.image_codec import (
@@ -455,7 +451,7 @@ def resize_images(df: DataFrame, max_side: int = 16) -> DataFrame:
             yield pd.DataFrame(out, dtype=object,
                                columns=[f.name for f in THUMB_SCHEMA.fields])
 
-    return df.mapInPandas(fn, schema=THUMB_SCHEMA)
+    return map_in_pandas(df, fn, THUMB_SCHEMA)
 
 
 def image_dup_pairs(features: DataFrame, max_hamming: int = 6,
@@ -507,10 +503,9 @@ def synthesize_media(df: DataFrame, id_col: str = "doc_id",
     arrives as one parquet file -> 1-2 input splits, which would serialize
     the (CPU-heavy) synth/decode python stage onto one core. Same fix any
     decode-over-binary stage needs when upstream splits are coarse."""
-    from docvision_spark.pipeline.shipping import ensure_py_files
+    from docvision_spark.pipeline.shipping import map_in_pandas
 
     spark = df.sparkSession
-    ensure_py_files(spark)
     if partitions is None:
         partitions = 2 * spark.sparkContext.defaultParallelism
     ids = df.select(F.col(id_col).cast("long").alias("media_id")) \
@@ -596,4 +591,4 @@ def synthesize_media(df: DataFrame, id_col: str = "doc_id",
                 out.append({"media_id": mid, "kind": kind, "payload": payload})
             yield pd.DataFrame(out, columns=["media_id", "kind", "payload"])
 
-    return ids.mapInPandas(fn, schema=MEDIA_SCHEMA)
+    return map_in_pandas(ids, fn, MEDIA_SCHEMA)

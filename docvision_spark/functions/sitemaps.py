@@ -128,9 +128,7 @@ def sitemap_entries(df: DataFrame) -> DataFrame:
     (Arrow-batched; one task parses many sitemap files). Parse errors are
     per-row typed rows, never task failures — same discipline as the
     extraction kernel."""
-    from docvision_spark.pipeline.shipping import ensure_py_files
-
-    ensure_py_files(df.sparkSession)
+    from docvision_spark.pipeline.shipping import map_in_pandas
 
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [f.name for f in ENTRY_SCHEMA.fields]
@@ -150,7 +148,7 @@ def sitemap_entries(df: DataFrame) -> DataFrame:
                                 "lastmod": lm, "error": None})
             yield pd.DataFrame(out, dtype=object, columns=cols)
 
-    return df.mapInPandas(fn, schema=ENTRY_SCHEMA)
+    return map_in_pandas(df, fn, ENTRY_SCHEMA)
 
 
 def make_sitemap_xml(urls: list[str], lastmod: str | None = None,

@@ -268,6 +268,8 @@ def doc_pack_bins(df: DataFrame, id_col: str = "doc_id",
 
     import pandas as pd
 
+    from docvision_spark.pipeline.shipping import map_in_pandas
+
     spark = df.sparkSession
     n_parts = partitions or spark.sparkContext.defaultParallelism
     d = (df.select(F.col(id_col).alias("_id"),
@@ -285,7 +287,7 @@ def doc_pack_bins(df: DataFrame, id_col: str = "doc_id",
         yield pd.DataFrame([{"pid": pid, "total": t}])
 
     part_totals = {r["pid"]: r["total"]
-                   for r in d.mapInPandas(totals,
+                   for r in map_in_pandas(d, totals,
                                           "pid int, total long").collect()}
     acc = 0
     offsets = {}
@@ -305,8 +307,9 @@ def doc_pack_bins(df: DataFrame, id_col: str = "doc_id",
                 "bin": (before // budget).astype("int64")})
             start += int(pdf["_n"].sum())
 
-    out = d.mapInPandas(assign, f"_id {df.schema[id_col].dataType.simpleString()}, "
-                                "n_tokens long, bin long")
+    out = map_in_pandas(d, assign,
+                        f"_id {df.schema[id_col].dataType.simpleString()}, "
+                        "n_tokens long, bin long")
     return out.withColumnRenamed("_id", id_col)
 
 
@@ -361,6 +364,8 @@ def lm_score(df: DataFrame, lm: dict,
 
     import pandas as pd
 
+    from docvision_spark.pipeline.shipping import map_in_pandas
+
     spark = df.sparkSession
     b = spark.sparkContext.broadcast(
         {"b": lm["bigrams"], "c": lm["context"], "v": lm["vocab"]})
@@ -400,4 +405,4 @@ def lm_score(df: DataFrame, lm: dict,
         [f"`{f.name}` {f.dataType.simpleString()}"
          for f in df.schema.fields]
         + ["n_tokens int", "total_millibits long", "mb_per_token long"])
-    return src.mapInPandas(fn, out_schema)
+    return map_in_pandas(src, fn, out_schema)

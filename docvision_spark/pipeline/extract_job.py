@@ -13,11 +13,13 @@ Physical plan (SURVEY.md §4.3):
       -> metrics + failure samples from the written output (column-pruned)
 
 No per-row Python dispatch: the kernel runs over Arrow record batches via
-mapInPandas (Iterator variant — one worker init per partition), and the
-batch iterator is re-chunked by cumulative payload bytes so a partition of
-200 KB docs and a partition of 2 KB docs both hand the kernel ~equal-byte
-units (the analogue of the reference's bounded concurrency + size caps,
-core/parser.py:289, processing/image.py:351-366).
+mapInPandas (Iterator variant, one call per partition, in Python workers
+that are reused across tasks and prepared once per process by
+shipping.prepare_worker), and the batch iterator is re-chunked by
+cumulative payload bytes so a partition of 200 KB docs and a partition of
+2 KB docs both hand the kernel ~equal-byte units (the analogue of the
+reference's bounded concurrency + size caps, core/parser.py:289,
+processing/image.py:351-366).
 """
 
 from __future__ import annotations
@@ -35,6 +37,7 @@ from pyspark.sql.types import (
 )
 
 from docvision_spark import EXTRACTOR_VERSION
+from docvision_spark.pipeline.shipping import map_in_pandas
 
 SPAN_TYPE = ArrayType(StructType([
     StructField("block_id", IntegerType()),
@@ -165,10 +168,7 @@ def read_pages(spark: SparkSession, pages_path: str) -> DataFrame:
 
 def extract_pages(pages: DataFrame, partitions: int | None = None) -> DataFrame:
     """Logical plan for the kernel stage over a (url, html, lang) frame."""
-    from docvision_spark.pipeline.shipping import ensure_py_files
-
     spark = pages.sparkSession
-    ensure_py_files(spark)
     # Map-only fast path (guide §2.4/§8): when the SCAN already yields
     # enough splits (row-grouped corpus + small maxPartitionBytes), the
     # payload column never needs to cross an exchange at all — scan and
@@ -184,7 +184,7 @@ def extract_pages(pages: DataFrame, partitions: int | None = None) -> DataFrame:
     if n_scan >= (default_parallelism if partitions is None else partitions):
         prepared = pages.sortWithinPartitions(
             F.octet_length("html").desc())
-        return prepared.mapInPandas(_extract_batches, schema=OUTPUT_SCHEMA)
+        return map_in_pandas(prepared, _extract_batches, OUTPUT_SCHEMA)
     if partitions is None:
         # 2x total cores: enough slack to level stragglers (giant docs,
         # hot-host salt keys) while each task still amortizes its worker
@@ -205,7 +205,7 @@ def extract_pages(pages: DataFrame, partitions: int | None = None) -> DataFrame:
         .sortWithinPartitions(F.octet_length("html").desc())
         .drop("host", "salt")
     )
-    return prepared.mapInPandas(_extract_batches, schema=OUTPUT_SCHEMA)
+    return map_in_pandas(prepared, _extract_batches, OUTPUT_SCHEMA)
 
 
 def page_rows(

@@ -41,9 +41,11 @@ def get_spark(
         # WITHOUT a payload repartition (extract_job skips its salt
         # exchange when the scan is already parallel enough). 4m is sized
         # to the row-grouped corpus layout; on a petabyte table with
-        # thousands of splits the same setting simply yields more of them
-        # (scan tasks stay cheap — parquet open cost is per file, and the
-        # kernel cost per split dwarfs scheduling overhead at any scale).
+        # thousands of splits the same setting simply yields more of them.
+        # Each split is one Python task, and a task is not free: measured
+        # on 4 vCPUs with an empty mapInPandas body, ~0.3 core-seconds per
+        # task before shipping.prepare_worker (import-zip re-reads and a
+        # full-heap GC per task), ~0.03 after.
         .config("spark.sql.files.maxPartitionBytes",
                 os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "4m"))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))

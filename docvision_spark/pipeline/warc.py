@@ -226,9 +226,8 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
     (binaryFile source); archives fan out in parallel, each parsed in a
     python worker over Arrow. At CC scale: ~1 GB per .warc.gz, thousands of
     files, partitions = files."""
-    from docvision_spark.pipeline.shipping import ensure_py_files
+    from docvision_spark.pipeline.shipping import map_in_pandas
 
-    ensure_py_files(spark)
     blobs = spark.read.format("binaryFile") \
         .option("pathGlobFilter", "*.warc*").load(path) \
         .select("content")
@@ -243,4 +242,4 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
                 if rows:
                     yield pd.DataFrame(rows, columns=cols)
 
-    return blobs.mapInPandas(fn, schema=PAGES_SCHEMA)
+    return map_in_pandas(blobs, fn, PAGES_SCHEMA)

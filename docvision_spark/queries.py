@@ -19,6 +19,7 @@ from pyspark.sql.window import Window
 
 from docvision_spark.functions import dedup, similarity, text
 from docvision_spark.functions.fingerprint import winnow_fingerprints
+from docvision_spark.pipeline.shipping import map_in_pandas
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -1060,7 +1061,7 @@ def _sitemap_fixture_df(spark: SparkSession, sf: str) -> DataFrame:
             yield pd.DataFrame(out, dtype=object,
                                columns=["host", "payload"])
 
-    return grouped.mapInPandas(fn, schema="host string, payload binary")
+    return map_in_pandas(grouped, fn, "host string, payload binary")
 
 
 def r02_sitemap_frontier(spark: SparkSession, sf: str) -> DataFrame:

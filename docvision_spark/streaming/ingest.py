@@ -27,6 +27,7 @@ from pyspark.sql.types import (
 )
 
 from docvision_spark.pipeline.extract_job import N_SALT, OUTPUT_SCHEMA, _extract_batches
+from docvision_spark.pipeline.shipping import map_in_pandas
 
 PAGES_SCHEMA = StructType([
     StructField("url", StringType()),
@@ -39,9 +40,6 @@ PAGES_SCHEMA = StructType([
 
 def read_pages_stream(spark: SparkSession, pages_dir: str,
                       max_files_per_trigger: int = 4) -> DataFrame:
-    from docvision_spark.pipeline.shipping import ensure_py_files
-
-    ensure_py_files(spark)
     return (
         spark.readStream.schema(PAGES_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -61,7 +59,7 @@ def extract_stream(pages: DataFrame, partitions: int | None = None) -> DataFrame
         .repartition(partitions, F.col("host"), F.col("salt"))
         .drop("host", "salt")
     )
-    return prepared.mapInPandas(_extract_batches, schema=OUTPUT_SCHEMA)
+    return map_in_pandas(prepared, _extract_batches, OUTPUT_SCHEMA)
 
 
 def start_extract_query(

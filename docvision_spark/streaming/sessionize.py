@@ -23,6 +23,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from docvision_spark.pipeline.shipping import ensure_py_files, on_worker
+
 SESSION_SCHEMA = StructType([
     StructField("user_id", LongType()),
     StructField("session_start", TimestampType()),
@@ -88,11 +90,12 @@ def _sessionize_group(
 
 def sessionize_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     """events: streaming DF with (event_id, ts, user_id, value, ...)."""
+    ensure_py_files(events.sparkSession)
     return (
         events.withWatermark("ts", watermark)
         .groupBy("user_id")
         .applyInPandasWithState(
-            _sessionize_group,
+            on_worker(_sessionize_group),
             outputStructType=SESSION_SCHEMA,
             stateStructType=STATE_SCHEMA,
             outputMode="append",

@@ -4,7 +4,10 @@ lineage (SURVEY.md §5.2.3-5).
 
 from __future__ import annotations
 
+import json
 import os
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -328,3 +331,119 @@ def test_compact_rewrites_without_embedded_partition_column(
     assert "bucket" not in phys.columns
     # and the table read still reconstructs bucket from the directory
     assert "bucket" in snapshots.read_table(spark, out_dir).columns
+
+
+def _run_script(script: str, *args: str, cwd) -> dict:
+    """Run `script` in a fresh interpreter with the repo importable; return
+    the JSON object on its last stdout line."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", script, *args], capture_output=True,
+        text=True, timeout=300, cwd=str(cwd),
+        env=dict(os.environ, PYTHONPATH=repo))
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    return json.loads(proc.stdout.strip().splitlines()[-1])
+
+
+ZIP_GUARD_SCRIPT = r"""
+import importlib, json, os, sys, zipfile, zipimport
+
+from docvision_spark.pipeline.shipping import _guard_zip_invalidation
+
+zpath = os.path.join(sys.argv[1], "mods.zip")
+
+
+def write_zip(mods):
+    with zipfile.ZipFile(zpath + ".tmp", "w") as zf:
+        for m in mods:
+            zf.writestr(m + ".py", f"NAME = {m!r}\n")
+    os.replace(zpath + ".tmp", zpath)
+
+
+write_zip(["mod_a"])
+sys.path.insert(0, zpath)
+import mod_a
+_guard_zip_invalidation()
+
+reads = []
+real = zipimport._read_directory
+zipimport._read_directory = lambda path: (reads.append(path), real(path))[1]
+importlib.invalidate_caches()
+unchanged = reads.count(zpath)
+write_zip(["mod_a", "mod_b"])
+importlib.invalidate_caches()
+import mod_b
+print(json.dumps({"unchanged_reads": unchanged, "mod_b": mod_b.NAME}))
+"""
+
+
+def test_zip_guard_rereads_only_changed_archives(tmp_path):
+    """The worker's zipimport guard skips the directory re-read of an
+    unchanged archive and still re-reads one replaced on disk. Its own
+    process: the guard is process-global."""
+    got = _run_script(ZIP_GUARD_SCRIPT, str(tmp_path), cwd=tmp_path)
+    assert got["mod_b"] == "mod_b"
+    if sys.version_info < (3, 13):
+        assert got["unchanged_reads"] == 0
+
+
+WORKER_PREP_SCRIPT = r"""
+import gc, json, zipimport
+
+from docvision_spark.functions.dedup import simhash_signatures_np
+from docvision_spark.pipeline.session import get_spark
+from docvision_spark.pipeline.shipping import prepare_worker
+
+spark = get_spark(app_name="worker-prep", cores=2, shuffle_partitions=2)
+docs = spark.createDataFrame(
+    [(i, f"doc {i} words {i % 7}") for i in range(200)],
+    "doc_id long, text string").repartition(8)
+# a closure stage whose body never imports the package
+assert simhash_signatures_np(docs).count() == 200
+
+
+def probe(it):
+    import gc, importlib, os, zipimport
+
+    import pandas as pd
+
+    reads = []
+    real = zipimport._read_directory
+    zipimport._read_directory = lambda p: (reads.append(p), real(p))[1]
+    try:
+        importlib.invalidate_caches()
+    finally:
+        zipimport._read_directory = real
+    for _ in it:
+        pass
+    yield pd.DataFrame({"pid": [os.getpid()],
+                        "frozen": [gc.get_freeze_count()],
+                        "reads": [len(reads)]})
+
+
+rows = spark.range(0, 64, 1, 8).mapInPandas(
+    probe, "pid long, frozen long, reads long").collect()
+prepare_worker()  # the driver has no TaskContext: a no-op
+inv = zipimport.zipimporter.invalidate_caches
+print(json.dumps({
+    "workers": [r.asDict() for r in rows],
+    "driver_invalidate": f"{inv.__module__}.{inv.__qualname__}",
+    "driver_frozen": gc.get_freeze_count()}))
+spark.stop()
+"""
+
+
+@pytest.mark.spark
+def test_python_workers_prepared_once(tmp_path):
+    """Every executor Python worker that ran one of the package's stages
+    has its import-time heap frozen and re-reads no unchanged import zip
+    when pyspark invalidates import caches before a task; the driver
+    process is untouched. Own session, so the workers start fresh."""
+    got = _run_script(WORKER_PREP_SCRIPT, cwd=tmp_path)
+    assert len(got["workers"]) == 8
+    for w in got["workers"]:
+        assert w["frozen"] > 0, got["workers"]
+        if sys.version_info < (3, 13):
+            assert w["reads"] == 0, got["workers"]
+    assert got["driver_invalidate"] == "zipimport.zipimporter.invalidate_caches"
+    assert got["driver_frozen"] == 0
