@@ -744,7 +744,7 @@ def make_pdf(url: str, rng: random.Random, lang: str,
         ovs = hashlib.md5(b"ov" + id0).digest()[:8]
         oks = hashlib.md5(b"ok" + id0).digest()[:8]
         o_val = pdf_crypt.hash_r6(b"corpus-owner", ovs, u_val[:48]) + ovs + oks
-        oe_val = pdf_crypt._cbc_nopad(
+        oe_val = pdf_crypt.aes_cbc_nopad(
             pdf_crypt.hash_r6(b"corpus-owner", oks, u_val[:48]),
             b"\x00" * 16, fkey, decrypt=False)
 

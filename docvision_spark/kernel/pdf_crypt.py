@@ -1,20 +1,22 @@
-"""PDF standard security handler — from-scratch RC4 + AES-128 (stdlib+numpy).
+"""PDF standard security handler — RC4 + AES-CBC over OpenSSL.
 
-Implements the public specs only: PDF 32000-1:2008 §7.6 (Algorithms 1-5,
-/V 1/2/4, /R 2/3/4, RC4 and AESV2 crypt filters) over a from-scratch
-FIPS-197 AES-128 and the classic RC4 stream cipher. The reference opens
-encrypted PDFs through fitz/MuPDF (processing/image.py:62-108); here the
-kernel decrypts directly so encrypted crawl PDFs extract like plain ones.
+Implements the public specs: PDF 32000-1:2008 §7.6 (Algorithms 1-6,
+/V 1/2/4, /R 2/3/4, RC4 and AESV2 crypt filters) and ISO 32000-2 (V5
+AESV3, R5/R6 with the Algorithm 2.B hardened hash, Algorithms 8 and 11).
+The reference opens encrypted PDFs through fitz/MuPDF
+(processing/image.py:62-108); here the kernel decrypts directly so
+encrypted crawl PDFs extract like plain ones.
 
-Scale note: CBC *decryption* is embarrassingly parallel across blocks
-(each plaintext block = InvCipher(C_i) XOR C_{i-1}), so the hot decode
-path is numpy-vectorized over all blocks at once; the sequential CBC
-*encrypt* direction exists only for the corpus synthesizer. RC4 is
-inherently sequential — keystream generation is a pure-python loop, fine
+Every PDF-specific algorithm lives here. Only the AES block cipher comes
+from a library: `aes_cbc_nopad` is the single AES entry point, CBC
+without padding over the `cryptography` package (OpenSSL). Padding stays
+ours: `aes_cbc_decrypt` checks only the last pad byte, on purpose —
+OpenSSL's PKCS7 unpadder also validates every pad byte and would reject
+corrupt streams this kernel decrypts. RC4 is a pure-python loop, fine
 for the KB-scale streams PDFs carry.
 
-Everything is deterministic; test vectors from FIPS-197 App. B/C and the
-canonical RC4 "Plaintext" vector are pinned in tests/test_pdf_crypt.py.
+Everything is deterministic; FIPS-197 App. B/C, SP 800-38A CBC, the
+canonical RC4 vectors and pinned R6 hashes are in tests/test_pdf_crypt.py.
 """
 
 from __future__ import annotations
@@ -22,7 +24,7 @@ from __future__ import annotations
 import hashlib
 import struct
 
-import numpy as np
+from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
 
 # --------------------------------------------------------------------------
 # RC4 (symmetric: same function encrypts and decrypts)
@@ -46,143 +48,23 @@ def rc4(key: bytes, data: bytes) -> bytes:
 
 
 # --------------------------------------------------------------------------
-# AES-128 (FIPS-197) — tables generated at import (no hand-typed SBOX)
+# AES-CBC (OpenSSL)
 
 
-def _gf_mul(a: int, b: int) -> int:
-    p = 0
-    for _ in range(8):
-        if b & 1:
-            p ^= a
-        hi = a & 0x80
-        a = (a << 1) & 0xFF
-        if hi:
-            a ^= 0x1B
-        b >>= 1
-    return p
-
-
-def _build_tables():
-    # multiplicative inverses in GF(2^8) via log/antilog over generator 3
-    # (O(255), not a quadratic search — this runs at import in every worker)
-    log = [0] * 256
-    alog = [0] * 255
-    x = 1
-    for i in range(255):
-        alog[i] = x
-        log[x] = i
-        x = _gf_mul(x, 3)
-    inv = [0] * 256
-    for a in range(1, 256):
-        inv[a] = alog[(255 - log[a]) % 255]
-    sbox = [0] * 256
-    for a in range(256):
-        x = inv[a]
-        y = x
-        for _ in range(4):
-            x = ((x << 1) | (x >> 7)) & 0xFF
-            y ^= x
-        sbox[a] = y ^ 0x63
-    inv_sbox = [0] * 256
-    for a, v in enumerate(sbox):
-        inv_sbox[v] = a
-    mul = {m: np.array([_gf_mul(a, m) for a in range(256)], dtype=np.uint8)
-           for m in (2, 3, 9, 11, 13, 14)}
-    return (np.array(sbox, dtype=np.uint8),
-            np.array(inv_sbox, dtype=np.uint8), mul)
-
-
-_SBOX, _INV_SBOX, _MUL = _build_tables()
-
-# flat state layout: index = col*4 + row (FIPS-197 column-major)
-_SHIFT = np.array([(((c + r) % 4) * 4 + r) for c in range(4) for r in range(4)])
-_INV_SHIFT = np.array([(((c - r) % 4) * 4 + r) for c in range(4) for r in range(4)])
-_RCON = [0x01, 0x02, 0x04, 0x08, 0x10, 0x20, 0x40, 0x80, 0x1B, 0x36]
-
-
-def _expand_key(key: bytes) -> np.ndarray:
-    """AES key schedule for 128/192/256-bit keys -> (Nr+1, 16) round keys
-    (FIPS-197 §5.2: Nk = len/4 words, Nr = Nk + 6 rounds; Nk=8 adds the
-    extra SubWord at i % Nk == 4)."""
-    nk = len(key) // 4
-    if nk not in (4, 6, 8) or len(key) % 4:
-        raise ValueError("aes: key must be 16, 24 or 32 bytes")
-    nr = nk + 6
-    w = [list(key[i:i + 4]) for i in range(0, len(key), 4)]
-    for i in range(nk, 4 * (nr + 1)):
-        t = list(w[i - 1])
-        if i % nk == 0:
-            t = t[1:] + t[:1]
-            t = [int(_SBOX[b]) for b in t]
-            t[0] ^= _RCON[i // nk - 1]
-        elif nk > 6 and i % nk == 4:
-            t = [int(_SBOX[b]) for b in t]
-        w.append([a ^ b for a, b in zip(w[i - nk], t)])
-    flat = [b for word in w for b in word]
-    return np.array(flat, dtype=np.uint8).reshape(nr + 1, 16)
-
-
-def _mix_columns(st: np.ndarray, inverse: bool) -> np.ndarray:
-    s = st.reshape(-1, 4, 4)  # (n, col, row)
-    a, b, c, d = s[:, :, 0], s[:, :, 1], s[:, :, 2], s[:, :, 3]
-    out = np.empty_like(s)
-    if not inverse:
-        out[:, :, 0] = _MUL[2][a] ^ _MUL[3][b] ^ c ^ d
-        out[:, :, 1] = a ^ _MUL[2][b] ^ _MUL[3][c] ^ d
-        out[:, :, 2] = a ^ b ^ _MUL[2][c] ^ _MUL[3][d]
-        out[:, :, 3] = _MUL[3][a] ^ b ^ c ^ _MUL[2][d]
-    else:
-        out[:, :, 0] = _MUL[14][a] ^ _MUL[11][b] ^ _MUL[13][c] ^ _MUL[9][d]
-        out[:, :, 1] = _MUL[9][a] ^ _MUL[14][b] ^ _MUL[11][c] ^ _MUL[13][d]
-        out[:, :, 2] = _MUL[13][a] ^ _MUL[9][b] ^ _MUL[14][c] ^ _MUL[11][d]
-        out[:, :, 3] = _MUL[11][a] ^ _MUL[13][b] ^ _MUL[9][c] ^ _MUL[14][d]
-    return out.reshape(-1, 16)
-
-
-def _encrypt_blocks(blocks: np.ndarray, rk: np.ndarray) -> np.ndarray:
-    nr = rk.shape[0] - 1
-    st = blocks ^ rk[0]
-    for r in range(1, nr):
-        st = _SBOX[st][:, _SHIFT]
-        st = _mix_columns(st, inverse=False) ^ rk[r]
-    st = _SBOX[st][:, _SHIFT]
-    return st ^ rk[nr]
-
-
-def _decrypt_blocks(blocks: np.ndarray, rk: np.ndarray) -> np.ndarray:
-    nr = rk.shape[0] - 1
-    st = blocks ^ rk[nr]
-    for r in range(nr - 1, 0, -1):
-        st = _INV_SBOX[st[:, _INV_SHIFT]] ^ rk[r]
-        st = _mix_columns(st, inverse=True)
-    return _INV_SBOX[st[:, _INV_SHIFT]] ^ rk[0]
-
-
-def aes_encrypt_block(key: bytes, block: bytes) -> bytes:
-    rk = _expand_key(key)
-    arr = np.frombuffer(block, dtype=np.uint8).reshape(1, 16)
-    return _encrypt_blocks(arr, rk).tobytes()
-
-
-def aes_decrypt_block(key: bytes, block: bytes) -> bytes:
-    rk = _expand_key(key)
-    arr = np.frombuffer(block, dtype=np.uint8).reshape(1, 16)
-    return _decrypt_blocks(arr, rk).tobytes()
+def aes_cbc_nopad(key: bytes, iv: bytes, data: bytes, decrypt: bool) -> bytes:
+    """AES-CBC without padding; the key length (16/24/32) picks AES-128/
+    192/256. A bad key or IV length or unaligned `data` raise ValueError."""
+    cipher = Cipher(algorithms.AES(key), modes.CBC(iv))
+    ctx = cipher.decryptor() if decrypt else cipher.encryptor()
+    return ctx.update(data) + ctx.finalize()
 
 
 def aes_cbc_encrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
     """PKCS#5-pad then CBC-encrypt; returns iv + ciphertext (PDF AESV2
-    stream layout). Sequential by nature — synthesizer-side only."""
+    stream layout). Synthesizer-side only."""
     padlen = 16 - (len(data) % 16)
-    data = data + bytes([padlen]) * padlen
-    rk = _expand_key(key)
-    prev = np.frombuffer(iv, dtype=np.uint8).reshape(1, 16)
-    out = bytearray(iv)
-    for i in range(0, len(data), 16):
-        blk = np.frombuffer(data[i:i + 16], dtype=np.uint8).reshape(1, 16)
-        prev = _encrypt_blocks(blk ^ prev, rk)
-        out += prev.tobytes()
-    return bytes(out)
+    return iv + aes_cbc_nopad(key, iv, data + bytes([padlen]) * padlen,
+                              decrypt=False)
 
 
 class AesPaddingError(ValueError):
@@ -194,17 +76,14 @@ class AesPaddingError(ValueError):
 
 
 def aes_cbc_decrypt(key: bytes, data: bytes) -> bytes:
-    """Decrypt iv+ciphertext, strip PKCS#5 padding. All blocks decrypt in
-    ONE vectorized pass (P_i = InvCipher(C_i) ^ C_{i-1}) — no sequential
-    chain on the hot path. Trailing bytes past the last whole block are
+    """Decrypt iv+ciphertext, strip PKCS#5 padding. Only the last pad byte
+    is checked (1..16). Trailing bytes past the last whole block are
     dropped: PDF stream extraction captures the EOL before `endstream`,
     so the ciphertext routinely arrives with 1-2 junk tail bytes."""
     data = data[:len(data) - (len(data) % 16)]
     if len(data) < 32:
         return b""
-    arr = np.frombuffer(data, dtype=np.uint8).reshape(-1, 16)
-    plain = _decrypt_blocks(arr[1:], _expand_key(key)) ^ arr[:-1]
-    raw = plain.tobytes()
+    raw = aes_cbc_nopad(key, data[:16], data[16:], decrypt=True)
     padlen = raw[-1]
     if not 1 <= padlen <= 16:
         raise AesPaddingError(f"invalid CBC pad byte {padlen}")
@@ -304,124 +183,6 @@ def encrypt_object(fkey: bytes, oid: int, gen: int, data: bytes,
 # per-object key — every stream encrypts with the file key directly.
 
 
-# T-table scalar encryptor: the R6 hardened hash chains thousands of
-# single-block CBC encryptions (sequential by design — it is a slow KDF),
-# where per-block numpy dispatch costs ~500us. Four 256-entry 32-bit
-# tables make a pure-python block encrypt ~20x faster; the numpy path
-# stays for bulk parallel decryption.
-
-def _build_ttables():
-    te0 = [0] * 256
-    for a in range(256):
-        s = int(_SBOX[a])
-        te0[a] = (_gf_mul(s, 2) << 24) | (s << 16) | (s << 8) | _gf_mul(s, 3)
-    te1 = [((t >> 8) | ((t & 0xFF) << 24)) & 0xFFFFFFFF for t in te0]
-    te2 = [((t >> 16) | ((t & 0xFFFF) << 16)) & 0xFFFFFFFF for t in te0]
-    te3 = [((t >> 24) | ((t & 0xFFFFFF) << 8)) & 0xFFFFFFFF for t in te0]
-    return te0, te1, te2, te3
-
-
-_TE0, _TE1, _TE2, _TE3 = _build_ttables()
-_SBOX_L = _SBOX.tolist()   # plain-list sbox: numpy scalar indexing costs
-#                            ~100ns+int() per lookup — 16x/block adds up
-
-
-def _expand_key_words(key: bytes) -> tuple[list[int], int]:
-    """Key schedule directly as 32-bit big-endian words (no numpy round
-    trip): returns (4*(nr+1) words, nr). Same FIPS-197 §5.2 schedule as
-    _expand_key (parity-pinned by the FIPS vectors via aes_encrypt_block)."""
-    nk = len(key) // 4
-    if nk not in (4, 6, 8) or len(key) % 4:
-        raise ValueError("aes: key must be 16, 24 or 32 bytes")
-    nr = nk + 6
-    sb = _SBOX_L
-    w = list(struct.unpack(">%dI" % nk, key))
-    for i in range(nk, 4 * (nr + 1)):
-        t = w[i - 1]
-        if i % nk == 0:
-            t = ((t << 8) | (t >> 24)) & 0xFFFFFFFF          # RotWord
-            t = (sb[t >> 24] << 24 | sb[(t >> 16) & 0xFF] << 16
-                 | sb[(t >> 8) & 0xFF] << 8 | sb[t & 0xFF])  # SubWord
-            t ^= _RCON[i // nk - 1] << 24
-        elif nk > 6 and i % nk == 4:
-            t = (sb[t >> 24] << 24 | sb[(t >> 16) & 0xFF] << 16
-                 | sb[(t >> 8) & 0xFF] << 8 | sb[t & 0xFF])
-        w.append(w[i - nk] ^ t)
-    return w, nr
-
-
-def _rk_words(rk: np.ndarray) -> list[int]:
-    flat = rk.reshape(-1)
-    return [int.from_bytes(bytes(flat[i:i + 4]), "big")
-            for i in range(0, flat.shape[0], 4)]
-
-
-def _enc_block_words(w: list[int], nr: int,
-                     s0: int, s1: int, s2: int, s3: int
-                     ) -> tuple[int, int, int, int]:
-    """One AES block in word space (4x 32-bit ints in, 4 out). The caller
-    does the AddRoundKey-0 XOR as part of its CBC chaining — inputs here
-    are already plaintext^prev; this applies w[0..3] itself."""
-    te0, te1, te2, te3, sb = _TE0, _TE1, _TE2, _TE3, _SBOX_L
-    s0 ^= w[0]
-    s1 ^= w[1]
-    s2 ^= w[2]
-    s3 ^= w[3]
-    k = 4
-    for _ in range(nr - 1):
-        t0 = (te0[s0 >> 24] ^ te1[(s1 >> 16) & 0xFF]
-              ^ te2[(s2 >> 8) & 0xFF] ^ te3[s3 & 0xFF] ^ w[k])
-        t1 = (te0[s1 >> 24] ^ te1[(s2 >> 16) & 0xFF]
-              ^ te2[(s3 >> 8) & 0xFF] ^ te3[s0 & 0xFF] ^ w[k + 1])
-        t2 = (te0[s2 >> 24] ^ te1[(s3 >> 16) & 0xFF]
-              ^ te2[(s0 >> 8) & 0xFF] ^ te3[s1 & 0xFF] ^ w[k + 2])
-        t3 = (te0[s3 >> 24] ^ te1[(s0 >> 16) & 0xFF]
-              ^ te2[(s1 >> 8) & 0xFF] ^ te3[s2 & 0xFF] ^ w[k + 3])
-        s0, s1, s2, s3 = t0, t1, t2, t3
-        k += 4
-    return (
-        (sb[s0 >> 24] << 24 | sb[(s1 >> 16) & 0xFF] << 16
-         | sb[(s2 >> 8) & 0xFF] << 8 | sb[s3 & 0xFF]) ^ w[k],
-        (sb[s1 >> 24] << 24 | sb[(s2 >> 16) & 0xFF] << 16
-         | sb[(s3 >> 8) & 0xFF] << 8 | sb[s0 & 0xFF]) ^ w[k + 1],
-        (sb[s2 >> 24] << 24 | sb[(s3 >> 16) & 0xFF] << 16
-         | sb[(s0 >> 8) & 0xFF] << 8 | sb[s1 & 0xFF]) ^ w[k + 2],
-        (sb[s3 >> 24] << 24 | sb[(s0 >> 16) & 0xFF] << 16
-         | sb[(s1 >> 8) & 0xFF] << 8 | sb[s2 & 0xFF]) ^ w[k + 3],
-    )
-
-
-def _enc_block_fast(w: list[int], nr: int, inp: bytes) -> bytes:
-    """bytes-in/bytes-out single-block encrypt (kept for callers/tests;
-    the CBC hot loop below stays in word space and skips this wrapper)."""
-    s0, s1, s2, s3 = _enc_block_words(w, nr, *struct.unpack(">4I", inp))
-    return struct.pack(">4I", s0, s1, s2, s3)
-
-
-def _cbc_nopad(key: bytes, iv: bytes, data: bytes, decrypt: bool) -> bytes:
-    if len(data) % 16:
-        raise ValueError("aes-cbc-nopad: data not block-aligned")
-    if decrypt:
-        rk = _expand_key(key)
-        arr = np.frombuffer(iv + data, dtype=np.uint8).reshape(-1, 16)
-        return (_decrypt_blocks(arr[1:], rk) ^ arr[:-1]).tobytes()
-    # encrypt: sequential by nature (the R6 KDF chains thousands of these);
-    # everything stays in 32-bit word space — no per-block bytes/numpy
-    # round trips (measured ~3x over the bytes-based loop)
-    w, nr = _expand_key_words(key)
-    nwords = len(data) // 4
-    pw = struct.unpack(">%dI" % nwords, data)
-    p0, p1, p2, p3 = struct.unpack(">4I", iv)
-    out = []
-    ext = out.extend
-    enc = _enc_block_words
-    for i in range(0, nwords, 4):
-        p0, p1, p2, p3 = enc(w, nr, pw[i] ^ p0, pw[i + 1] ^ p1,
-                             pw[i + 2] ^ p2, pw[i + 3] ^ p3)
-        ext((p0, p1, p2, p3))
-    return struct.pack(">%dI" % nwords, *out)
-
-
 def hash_r6(password: bytes, salt: bytes, udata: bytes = b"") -> bytes:
     """ISO 32000-2 Algorithm 2.B hardened hash (revision 6). For revision
     5 the hash is a single SHA-256(password + salt + udata)."""
@@ -429,7 +190,7 @@ def hash_r6(password: bytes, salt: bytes, udata: bytes = b"") -> bytes:
     i = 0
     while True:
         k1 = (password + k + udata) * 64
-        e = _cbc_nopad(k[:16], k[16:32], k1, decrypt=False)
+        e = aes_cbc_nopad(k[:16], k[16:32], k1, decrypt=False)
         mod = sum(e[:16]) % 3
         k = (hashlib.sha256, hashlib.sha384, hashlib.sha512)[mod](e).digest()
         i += 1
@@ -453,7 +214,7 @@ def check_user_password_v5(password: bytes, u: bytes, ue: bytes,
     if _v5_hash(password, vsalt, b"", r) != u[:32]:
         return None
     inter = _v5_hash(password, ksalt, b"", r)
-    return _cbc_nopad(inter, b"\x00" * 16, ue[:32], decrypt=True)
+    return aes_cbc_nopad(inter, b"\x00" * 16, ue[:32], decrypt=True)
 
 
 def make_v5_user_entries(password: bytes, file_key: bytes, r: int,
@@ -462,7 +223,7 @@ def make_v5_user_entries(password: bytes, file_key: bytes, r: int,
     and deterministic salts."""
     u = _v5_hash(password, vsalt, b"", r) + vsalt + ksalt
     inter = _v5_hash(password, ksalt, b"", r)
-    ue = _cbc_nopad(inter, b"\x00" * 16, file_key, decrypt=False)
+    ue = aes_cbc_nopad(inter, b"\x00" * 16, file_key, decrypt=False)
     return u, ue
 
 

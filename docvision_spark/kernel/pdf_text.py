@@ -569,7 +569,6 @@ def _build_crypt(payload: bytes, objs: dict[int, bytes]) -> _Crypt | None:
         s = _string_at(payload, im.end())
         if s is not None:
             id0 = s
-    from docvision_spark.kernel import pdf_crypt
     key = pdf_crypt.check_user_password(b"", o, u, p, id0, n, r, enc_meta)
     if key is None:
         raise PdfEncryptedError("password required")
