@@ -13,4 +13,4 @@ pages table — no per-row Python, resumable snapshots, per-partition lineage.
 __version__ = "0.3.1"
 
 # bump on any kernel-output-visible change (goldens must be regenerated)
-EXTRACTOR_VERSION = "docvision-spark-kernel/0.11.1"  # 0.11.1: feed capture-leak/title-selfclose + href attr-boundary fixes; 0.11: out-link capture
+EXTRACTOR_VERSION = "docvision-spark-kernel/0.11.2"  # 0.11.2: one XML scanner (feed DOCTYPE subsets, PIs end at ?>, quoted ">" in attributes), V5 /Perms key check; 0.11.1: feed capture-leak/title-selfclose + href attr-boundary fixes; 0.11: out-link capture

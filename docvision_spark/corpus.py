@@ -77,7 +77,10 @@ PARALLEL_THRESHOLD = 5000  # use a process pool above this corpus size
 # main rng sequence untouched) — the web-graph edge fixture. The footer
 # is link-dense, so the classifier drops it and extracted text/markdown
 # stay byte-identical to v15; only the `links` column changes.
-CORPUS_VERSION = 16
+# v17: AES-256 (V5/R6) PDFs carry /Perms (ISO 32000-2 Algorithm 10), so
+# the kernel can validate the unwrapped file key; bytes of those PDFs
+# change, extracted text does not.
+CORPUS_VERSION = 17
 
 HOSTS = [
     "bigportal.example.com",  # hot host: ~30% of urls
@@ -747,6 +750,8 @@ def make_pdf(url: str, rng: random.Random, lang: str,
         oe_val = pdf_crypt.aes_cbc_nopad(
             pdf_crypt.hash_r6(b"corpus-owner", oks, u_val[:48]),
             b"\x00" * 16, fkey, decrypt=False)
+        perms_val = pdf_crypt.make_v5_perms(
+            fkey, -44, True, hashlib.md5(b"perms" + id0).digest())
 
         def enc_stream(oid: int, data: bytes) -> bytes:  # noqa: F811
             iv = hashlib.md5(id0 + bytes([oid & 0xFF])).digest()
@@ -758,7 +763,7 @@ def make_pdf(url: str, rng: random.Random, lang: str,
             b" /Length 32 >> >> /StmF /StdCF /StrF /StdCF"
             + f" /O <{o_val.hex()}> /U <{u_val.hex()}>"
               f" /OE <{oe_val.hex()}> /UE <{ue_val.hex()}>"
-              f" /P -44 >>".encode())
+              f" /Perms <{perms_val.hex()}> /P -44 >>".encode())
     elif encrypt_kind:
         from docvision_spark.kernel import pdf_crypt
         id0 = hashlib.md5(url.encode("utf-8")).digest()

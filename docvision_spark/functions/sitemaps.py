@@ -13,9 +13,9 @@ into a (host, kind, loc, lastmod) entry table with a mapInPandas stage
 The frontier diff (listed-but-not-crawled / crawled-but-not-listed) is
 then plain relational algebra against the pages table.
 
-The XML scan is the same deliberate subset as kernel/svg_info.py /
-kernel/feed.py: prolog constructs skipped, CDATA honored, entity decode
-via the shared WHATWG table, malformed markup degrades to skip-ahead.
+XML sitemaps are tokenized by kernel/xml_scan.py, the XML subset shared
+with the feed and SVG readers; entity decode uses the shared WHATWG table
+and malformed markup degrades to skip-ahead.
 """
 from __future__ import annotations
 
@@ -41,6 +41,7 @@ def parse_sitemap(payload: bytes) -> dict:
     """Sitemap bytes -> {kind, entries: [(loc, lastmod)], error}.
     For a sitemapindex, entries are the CHILD sitemap locations."""
     from docvision_spark.kernel.entities import decode_entities
+    from docvision_spark.kernel.xml_scan import CDATA, START, TEXT, scan
 
     if payload[:2] == b"\x1f\x8b":
         try:
@@ -63,59 +64,35 @@ def parse_sitemap(payload: bytes) -> dict:
                     "error": "not xml and no url lines"}
         return {"kind": "text", "entries": entries, "error": None}
 
-    # XML subset scan: track url/sitemap containers, capture loc/lastmod
+    # track url/sitemap containers, capture loc/lastmod text
     kind = None
     entries: list[tuple[str, str | None]] = []
     loc = lastmod = None
     capture: str | None = None
     buf: list[str] = []
-    pos, n = 0, len(text)
-    while pos < n and len(entries) < _MAX_ENTRIES:
-        lt = text.find("<", pos)
-        if lt < 0:
+    for tok in scan(text):
+        if len(entries) >= _MAX_ENTRIES:
             break
-        if capture is not None and lt > pos:
-            buf.append(text[pos:lt])
-        pos = lt
-        if text.startswith("<!--", pos):
-            end = text.find("-->", pos + 4)
-            pos = n if end < 0 else end + 3
-            continue
-        if text.startswith("<![CDATA[", pos):
-            end = text.find("]]>", pos + 9)
+        name = tok.data
+        if tok.kind == TEXT or tok.kind == CDATA:
             if capture is not None:
-                buf.append(text[pos + 9:n if end < 0 else end])
-            pos = n if end < 0 else end + 3
-            continue
-        if text.startswith("<?", pos) or text.startswith("<!", pos):
-            end = text.find(">", pos + 2)
-            pos = n if end < 0 else end + 1
-            continue
-        gt = text.find(">", pos)
-        if gt < 0:
-            break
-        raw = text[pos + 1:gt]
-        pos = gt + 1
-        endtag = raw.startswith("/")
-        name = raw[1:].split()[0] if endtag and raw[1:].split() else \
-            (raw.split()[0] if raw.split() else "")
-        name = name.rsplit(":", 1)[-1].rstrip("/").lower()
-        if not endtag:
+                buf.append(decode_entities(tok.data) if tok.kind == TEXT
+                           else tok.data)
+        elif tok.kind == START:
             if name in ("urlset", "sitemapindex") and kind is None:
                 kind = name
-            elif name in ("loc", "lastmod"):
+            elif name in ("loc", "lastmod") and not tok.selfclose:
                 capture, buf = name, []
-        else:
-            if name == "loc" and capture == "loc":
-                loc = decode_entities("".join(buf).strip())
-                capture = None
-            elif name == "lastmod" and capture == "lastmod":
-                lastmod = "".join(buf).strip() or None
-                capture = None
-            elif name in ("url", "sitemap"):
-                if loc:
-                    entries.append((loc, lastmod))
-                loc = lastmod = None
+        elif name == "loc" and capture == "loc":
+            loc = "".join(buf).strip()
+            capture = None
+        elif name == "lastmod" and capture == "lastmod":
+            lastmod = "".join(buf).strip() or None
+            capture = None
+        elif name in ("url", "sitemap"):
+            if loc:
+                entries.append((loc, lastmod))
+            loc = lastmod = None
     if kind is None:
         return {"kind": None, "entries": [], "error": "no urlset root"}
     if loc:  # truncated final entry

@@ -23,51 +23,44 @@ boilerplate. Item fields are flushed title-first at element close, so
 field order inside the XML never changes the output (reading-order
 normalization, same rule family as the PDF y-cluster sort).
 
-The scanner is the same deliberate XML subset as kernel/svg_info.py:
-prolog constructs skipped, quoted attributes, CDATA, entity decode via
-the shared WHATWG table; malformed markup degrades to skip-ahead.
+Tokens come from kernel/xml_scan.py, the XML subset shared with the SVG
+and sitemap readers; entity decode uses the shared WHATWG table and
+malformed markup degrades to skip-ahead.
 """
 from __future__ import annotations
 
-import re
-
 from docvision_spark.kernel.dom import Block, segment
 from docvision_spark.kernel.entities import decode_entities
-
-_NAME_RE = re.compile(r"[A-Za-z_:][-A-Za-z0-9._:]*")
+from docvision_spark.kernel.xml_scan import CDATA, END, START, TEXT, scan
 
 # local names whose text is an item's content, in preference order
 _RSS_CONTENT = ("encoded", "description")   # content:encoded, description
 _ATOM_CONTENT = ("content", "summary")
 _ITEM_TAGS = {"item", "entry"}
 _ROOTS = {"rss", "feed", "rdf"}
-
-
-def _local(tag: str) -> str:
-    return tag.rsplit(":", 1)[-1].lower()
+_PROLOG_CHARS = 4096  # the root must open within this many characters
 
 
 def looks_like_feed(s: str) -> bool:
     """True when the document's root element is a syndication root
     (<rss>, <feed>, or RSS 1.0's <rdf:RDF>). Scans only the prolog."""
-    pos, n = 0, min(len(s), 4096)
-    while pos < n:
-        lt = s.find("<", pos)
-        if lt < 0 or lt >= n:
-            return False
-        if s[pos:lt].strip():
-            return False  # character data before the root: not XML
-        if s.startswith("<!--", lt):
-            end = s.find("-->", lt + 4)
-            pos = n if end < 0 else end + 3
-            continue
-        if s.startswith("<?", lt) or s.startswith("<!", lt):
-            end = s.find(">", lt + 2)
-            pos = n if end < 0 else end + 1
-            continue
-        m = _NAME_RE.match(s, lt + 1)
-        return bool(m) and _local(m.group(0)) in _ROOTS
+    for tok in scan(s):
+        if tok.kind == TEXT and not tok.data.strip():
+            continue  # whitespace between prolog constructs
+        # anything else before the root's start tag is not XML
+        return (tok.kind == START and tok.start < _PROLOG_CHARS
+                and tok.data in _ROOTS)
     return False
+
+
+def _text_blocks(text: str, kind: str = "paragraph",
+                 level: int = 0) -> list[Block]:
+    """One whitespace-normalized block, none for blank text."""
+    t = " ".join(text.split())
+    if not t:
+        return []
+    return [Block(kind=kind, text=t, level=level, chars=len(t),
+                  words=len(t.split()), signal=1)]
 
 
 def _fragment_blocks(raw: str, cdata: list[str], saw_child: bool) -> list[Block]:
@@ -82,19 +75,13 @@ def _fragment_blocks(raw: str, cdata: list[str], saw_child: bool) -> list[Block]
         html = decode_entities(raw)
     if "<" in html:
         return segment(html)
-    text = " ".join(html.split())
-    if not text:
-        return []
-    return [Block(kind="paragraph", text=text, chars=len(text),
-                  words=len(text.split()), signal=1)]
+    return _text_blocks(html)
 
 
 def feed_blocks(s: str) -> list[Block]:
     """Parse feed markup -> Block list (see module docstring)."""
-    n = len(s)
-    pos = 0
     blocks: list[Block] = []
-    stack: list[str] = []
+    stack: list[str] = []  # local names of the open elements
 
     # per-item capture state
     item_title: str | None = None
@@ -103,18 +90,30 @@ def feed_blocks(s: str) -> list[Block]:
 
     # active capture: (local, depth, start_offset, cdata_bodies, saw_child)
     cap: list | None = None
+    # title / channel description text up to the next end tag:
+    # (destination, decoded parts); destination None discards it
+    txt: tuple[str | None, list[str]] | None = None
 
-    def heading(text: str, level: int) -> None:
-        t = " ".join(decode_entities(text).split())
-        if t:
-            blocks.append(Block(kind="heading", text=t, level=level,
-                                chars=len(t), words=len(t.split()), signal=1))
+    def finish_text() -> None:
+        nonlocal item_title
+        dest, parts = txt
+        if dest == "item_title":
+            item_title = "".join(parts)
+        elif dest == "chan_title":
+            blocks.extend(_text_blocks("".join(parts), "heading", 1))
+        elif dest == "chan_desc":
+            blocks.extend(_text_blocks("".join(parts)))
+
+    def complete_capture(end: int) -> None:
+        # the field's inner markup, sliced verbatim
+        if in_item():
+            item_fields.setdefault(cap[0], (s[cap[2]:end], cap[3], cap[4]))
 
     def flush_item() -> None:
         nonlocal item_title
         if item_title is not None:
-            heading(item_title, 2)
-        in_atom = "feed" in (_local(t) for t in stack)
+            blocks.extend(_text_blocks(item_title, "heading", 2))
+        in_atom = "feed" in stack
         for name in (_ATOM_CONTENT if in_atom else _RSS_CONTENT):
             if name in item_fields:
                 blocks.extend(_fragment_blocks(*item_fields[name]))
@@ -123,129 +122,86 @@ def feed_blocks(s: str) -> list[Block]:
         item_fields.clear()
 
     def in_item() -> bool:
-        return any(_local(t) in _ITEM_TAGS for t in stack)
+        return any(t in _ITEM_TAGS for t in stack)
 
-    while pos < n:
-        lt = s.find("<", pos)
-        if lt < 0:
-            lt = n
-        if lt > pos and cap is not None:
-            pass  # raw capture slices the source directly at close
-        pos = lt
-        if pos >= n:
-            break
-        if s.startswith("<!--", pos):
-            end = s.find("-->", pos + 4)
-            pos = n if end < 0 else end + 3
+    for tok in scan(s):
+        kind, name = tok.kind, tok.data
+        if kind == TEXT:
+            if txt is not None:
+                txt[1].append(decode_entities(name))
+            # a capture slices the source directly at close
             continue
-        if s.startswith("<![CDATA[", pos):
-            end = s.find("]]>", pos + 9)
-            body = s[pos + 9:n if end < 0 else end]
-            if cap is not None:
-                cap[3].append(body)
-            pos = n if end < 0 else end + 3
+        if kind == CDATA:
+            if txt is not None:
+                txt[1].append(name)
+            elif cap is not None:
+                cap[3].append(name)
             continue
-        if s.startswith("<?", pos) or s.startswith("<!", pos):
-            end = s.find(">", pos + 2)
-            pos = n if end < 0 else end + 1
-            continue
-        gt = s.find(">", pos)
-        if gt < 0:
-            break
-        raw = s[pos + 1:gt]
-        tag_start = pos
-        pos = gt + 1
-        if raw.startswith("/"):  # end tag
-            name = _local(raw[1:].strip())
+        if kind == END:
+            if txt is not None:
+                finish_text()
+                txt = None
             if cap is not None:
                 # cap[1] is the stack depth BEFORE the captured element was
                 # pushed; its own close tag arrives at depth cap[1] + 1
                 if name == cap[0] and len(stack) == cap[1] + 1:
-                    # capture complete: slice inner markup verbatim
-                    inner = s[cap[2]:tag_start]
-                    field = cap[0]
-                    saw_child = cap[4]
-                    if in_item():
-                        item_fields.setdefault(
-                            field, (inner, cap[3], saw_child))
+                    complete_capture(tok.start)
                     cap = None
                 else:
                     cap[4] = True  # child end tag inside the capture
             for i in range(len(stack) - 1, -1, -1):
-                if _local(stack[i]) == name:
+                if stack[i] == name:
                     if cap is not None and i <= cap[1]:
                         # error recovery: the pop removes the CAPTURED
                         # element itself (unclosed void child pushed a
                         # phantom depth, so the exact-depth check above
                         # missed) — complete the capture here rather
                         # than leak it into the next item
-                        if in_item():
-                            item_fields.setdefault(
-                                cap[0], (s[cap[2]:tag_start], cap[3],
-                                         cap[4]))
+                        complete_capture(tok.start)
                         cap = None
-                    closing_item = any(_local(t) in _ITEM_TAGS
-                                       for t in stack[i:])
+                    closing_item = any(t in _ITEM_TAGS for t in stack[i:])
                     del stack[i:]
                     if closing_item:
                         flush_item()
                     break
             continue
-        m = _NAME_RE.match(raw)
-        if not m:
-            continue
-        tag = m.group(0)
-        local = _local(tag)
-        selfclose = raw.rstrip().endswith("/")
+        selfclose = tok.selfclose
+        if txt is not None:
+            continue  # child markup inside a title: its text still counts
         if cap is not None:
             cap[4] = True  # child start tag inside the capture
             if not selfclose:
-                stack.append(tag)
+                stack.append(name)
             continue
-        if local == "title" and not selfclose:
-            # capture title text inline (plain, short); a self-closed
-            # <title/> (legal empty title) must NOT scan forward — the
-            # next sibling's markup is not a title
-            end = s.find("</", pos)
-            body_end = end if end >= 0 else n
-            body = s[pos:body_end]
-            if body.startswith("<![CDATA["):
-                ce = body.find("]]>")
-                body = body[9:ce if ce >= 0 else len(body)]
+        if selfclose:
+            # a self-closed <title/> (legal empty title) must not take the
+            # next sibling's text as its own
+            continue
+        if name == "title":
             if in_item():
-                if item_title is None:
-                    item_title = body
-            elif stack and _local(stack[-1]) in ("channel", "feed") \
+                dest = "item_title" if item_title is None else None
+            elif stack and stack[-1] in ("channel", "feed") \
                     and not chan_title_done:
-                heading(body, 1)
+                dest = "chan_title"
                 chan_title_done = True
-            pos = body_end
+            else:
+                dest = None
+            txt = (dest, [])
             continue
-        if in_item() and local in ("encoded", "description", "content",
-                                   "summary") and not selfclose:
-            cap = [local, len(stack), pos, [], False]
-            stack.append(tag)
+        if in_item() and name in ("encoded", "description", "content",
+                                  "summary"):
+            cap = [name, len(stack), tok.end, [], False]
+        elif name == "description" and stack and stack[-1] == "channel" \
+                and not in_item():
+            txt = ("chan_desc", [])
             continue
-        if not in_item() and local == "description" and stack \
-                and _local(stack[-1]) == "channel" and not selfclose:
-            end = s.find("</", pos)
-            body_end = end if end >= 0 else n
-            body = s[pos:body_end]
-            if body.startswith("<![CDATA["):
-                ce = body.find("]]>")
-                body = body[9:ce if ce >= 0 else len(body)]
-            t = " ".join(decode_entities(body).split())
-            if t:
-                blocks.append(Block(kind="paragraph", text=t, chars=len(t),
-                                    words=len(t.split()), signal=1))
-            pos = body_end
-            continue
-        if not selfclose:
-            stack.append(tag)
-    # truncated feed: complete an open capture with the remaining source,
-    # then flush any in-progress item
-    if cap is not None and any(_local(t) in _ITEM_TAGS for t in stack):
-        item_fields.setdefault(cap[0], (s[cap[2]:], cap[3], cap[4]))
-    if any(_local(t) in _ITEM_TAGS for t in stack):
+        stack.append(name)
+    # truncated feed: finish open text, complete an open capture with the
+    # remaining source, then flush any in-progress item
+    if txt is not None:
+        finish_text()
+    if cap is not None:
+        complete_capture(len(s))
+    if in_item():
         flush_item()
     return blocks

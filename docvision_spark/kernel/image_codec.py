@@ -47,52 +47,54 @@ def _png_unfilter(raw: np.ndarray, height: int, stride: int, bpp: int) -> np.nda
     (height, stride) uint8 of reconstructed bytes.
 
     Sub is vectorized with a modular cumsum over the pixel axis; Up is a
-    plain vector add; Average/Paeth carry an intra-row dependency and fall
-    back to a per-pixel-column loop (still vector across channels).
+    plain vector add; Average/Paeth carry an intra-row dependency and run a
+    per-byte loop over Python ints (numpy calls per pixel cost more). Rows
+    are zero-padded to whole pixels: PDF predictor rows (Columns x Colors
+    x BitsPerComponent) need not be a multiple of bpp, and a byte depends
+    only on bytes left of and above it, so the padding never leaks. Only
+    the current and prior rows are held as int32; a bpp wider than the row
+    is clamped to it (no byte then has a left neighbour either way), so
+    no buffer outgrows the input.
     """
     rows = raw.reshape(height, stride + 1)
-    ftypes = rows[:, 0]
-    data = rows[:, 1:].astype(np.int32)
-    out = np.zeros((height, stride), dtype=np.int32)
-    prior = np.zeros(stride, dtype=np.int32)
-    npix = stride // bpp
+    bpp = min(bpp, max(stride, 1))
+    npix = -(-stride // bpp)
+    width = npix * bpp
+    out = np.empty((height, stride), dtype=np.uint8)
+    prior = np.zeros(width, dtype=np.int32)
     for y in range(height):
-        ft = int(ftypes[y])
-        line = data[y]
+        ft = int(rows[y, 0])
+        line = np.zeros(width, dtype=np.int32)
+        line[:stride] = rows[y, 1:]
         if ft == 0:
             rec = line
         elif ft == 1:  # Sub: rec[i] = line[i] + rec[i-bpp]
             px = line.reshape(npix, bpp)
-            rec = np.cumsum(px, axis=0).reshape(stride) & 0xFF
+            rec = np.cumsum(px, axis=0).reshape(width) & 0xFF
         elif ft == 2:  # Up
             rec = (line + prior) & 0xFF
         elif ft == 3:  # Average
-            rec = np.empty(stride, dtype=np.int32)
-            left = np.zeros(bpp, dtype=np.int32)
-            for i in range(npix):
-                s = i * bpp
-                rec[s:s + bpp] = (line[s:s + bpp]
-                                  + ((left + prior[s:s + bpp]) >> 1)) & 0xFF
-                left = rec[s:s + bpp]
+            cur, up = line.tolist(), prior.tolist()
+            for i in range(width):
+                left = cur[i - bpp] if i >= bpp else 0
+                cur[i] = (cur[i] + ((left + up[i]) >> 1)) & 0xFF
+            rec = np.array(cur, dtype=np.int32)
         elif ft == 4:  # Paeth
-            rec = np.empty(stride, dtype=np.int32)
-            left = np.zeros(bpp, dtype=np.int32)
-            ul = np.zeros(bpp, dtype=np.int32)
-            for i in range(npix):
-                s = i * bpp
-                up = prior[s:s + bpp]
-                p = left + up - ul
-                pa, pb, pc = np.abs(p - left), np.abs(p - up), np.abs(p - ul)
-                pred = np.where((pa <= pb) & (pa <= pc), left,
-                                np.where(pb <= pc, up, ul))
-                rec[s:s + bpp] = (line[s:s + bpp] + pred) & 0xFF
-                left = rec[s:s + bpp]
-                ul = up
+            cur, up = line.tolist(), prior.tolist()
+            for i in range(width):
+                a = cur[i - bpp] if i >= bpp else 0
+                b = up[i]
+                c = up[i - bpp] if i >= bpp else 0
+                p = a + b - c
+                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+                pr = a if pa <= pb and pa <= pc else (b if pb <= pc else c)
+                cur[i] = (cur[i] + pr) & 0xFF
+            rec = np.array(cur, dtype=np.int32)
         else:
             raise ImageDecodeError(f"png: bad filter type {ft}")
-        out[y] = rec
+        out[y] = rec[:stride]
         prior = rec
-    return out.astype(np.uint8)
+    return out
 
 
 # Adam7 pass grid: (ystart, xstart, ystep, xstep) per PNG §8.2

@@ -2,7 +2,8 @@
 
 Implements the public specs: PDF 32000-1:2008 §7.6 (Algorithms 1-6,
 /V 1/2/4, /R 2/3/4, RC4 and AESV2 crypt filters) and ISO 32000-2 (V5
-AESV3, R5/R6 with the Algorithm 2.B hardened hash, Algorithms 8 and 11).
+AESV3, R5/R6 with the Algorithm 2.B hardened hash, Algorithms 8, 10,
+11 and 13).
 The reference opens encrypted PDFs through fitz/MuPDF
 (processing/image.py:62-108); here the kernel decrypts directly so
 encrypted crawl PDFs extract like plain ones.
@@ -225,6 +226,25 @@ def make_v5_user_entries(password: bytes, file_key: bytes, r: int,
     inter = _v5_hash(password, ksalt, b"", r)
     ue = aes_cbc_nopad(inter, b"\x00" * 16, file_key, decrypt=False)
     return u, ue
+
+
+def check_perms_v5(file_key: bytes, perms: bytes) -> bool:
+    """Algorithm 13: /Perms decrypted with the file key (AES-256 ECB, one
+    block) carries b"adb" at bytes 9-11; anything else means the file key
+    unwrapped from /UE is wrong."""
+    if len(perms) < 16:
+        return False
+    block = aes_cbc_nopad(file_key, b"\x00" * 16, perms[:16], decrypt=True)
+    return block[9:12] == b"adb"
+
+
+def make_v5_perms(file_key: bytes, p: int, encrypt_metadata: bool,
+                  tail: bytes) -> bytes:
+    """Synthesizer-side Algorithm 10: /Perms for a chosen file key; tail
+    supplies the 4 free bytes 12-15."""
+    block = (struct.pack("<I", p & 0xFFFFFFFF) + b"\xff" * 4
+             + (b"T" if encrypt_metadata else b"F") + b"adb" + tail[:4])
+    return aes_cbc_nopad(file_key, b"\x00" * 16, block, decrypt=False)
 
 
 def decrypt_object_v5(file_key: bytes, data: bytes) -> bytes:

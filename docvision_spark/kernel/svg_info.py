@@ -10,13 +10,13 @@ which is out of scope the same way OCR is (SURVEY §2 S3). The reference
 pipeline never rasterizes SVG either — cv2.imread returns None for it
 (/root/reference/src/docvision/core/parser.py:554-563 silently skips).
 
-The scanner is a deliberate XML subset, not a conformant parser: prolog
-(BOM / <?xml?> / comments / DOCTYPE with internal subset), start/empty/end
-tags with quoted attributes, CDATA, character data, entity references via
-the shared WHATWG decoder (a superset of XML's five predefined entities —
-correct for the crawl reality of SVG authored inside HTML). Unknown
-syntax degrades to skip-ahead, never an exception, except when the root
-element is not <svg> (then it isn't an SVG at all).
+Markup is tokenized by kernel/xml_scan.py, the XML subset shared with the
+feed and sitemap readers (prolog constructs skipped, quoted attributes,
+CDATA, entity references via the shared WHATWG decoder — a superset of
+XML's five predefined entities, correct for the crawl reality of SVG
+authored inside HTML). Malformed markup degrades to skip-ahead, never an
+exception, except when the root element is not <svg> (then it isn't an
+SVG at all).
 """
 from __future__ import annotations
 
@@ -24,6 +24,7 @@ import re
 
 from docvision_spark.kernel.charset import decode_html
 from docvision_spark.kernel.entities import decode_entities
+from docvision_spark.kernel.xml_scan import CDATA, END, TEXT, attributes, scan
 
 
 class SvgError(ValueError):
@@ -33,7 +34,7 @@ class SvgError(ValueError):
 _SCAN_CAP = 4 << 20          # bytes of markup scanned, same spirit as the
 #                              pixel budgets on the raster codecs
 _TEXT_TAGS = {"text", "tspan", "textpath", "title", "desc"}
-_SKIP_TAGS = {"style", "script", "metadata"}
+_SKIP_TAGS = {"style", "script", "metadata"}  # raw-text containers
 
 # CSS px per unit (SVG 1.1 / CSS absolute lengths); relative units
 # (em/ex/%/vw/vh) have no absolute answer without layout -> None
@@ -42,9 +43,6 @@ _UNIT_PX = {"": 1.0, "px": 1.0, "pt": 96.0 / 72.0, "pc": 16.0,
 
 _LENGTH_RE = re.compile(r"^\s*([+-]?\d*\.?\d+(?:[eE][+-]?\d+)?)\s*"
                         r"([a-z%]*)\s*$")
-_NAME_RE = re.compile(r"[A-Za-z_:][-A-Za-z0-9._:]*")
-_ATTR_RE = re.compile(
-    r"""([-A-Za-z0-9._:]+)\s*(?:=\s*("[^"]*"|'[^']*'|[^\s>]*))?""")
 
 
 def _parse_length(val: str) -> int | None:
@@ -60,10 +58,6 @@ def _parse_length(val: str) -> int | None:
     return int(round(px))
 
 
-def _localname(tag: str) -> str:
-    return tag.rsplit(":", 1)[-1].lower()
-
-
 def svg_info(payload: bytes) -> dict:
     """Parse SVG markup -> {width, height, n_elements, text}.
 
@@ -74,101 +68,39 @@ def svg_info(payload: bytes) -> dict:
     document order. Raises SvgError when the root element is not <svg>.
     """
     s, _ = decode_html(payload[:_SCAN_CAP])
-    s_low = s.lower()
-    n = len(s)
-    pos = 0
     width = height = None
     n_elements = 0
     texts: list[str] = []
     stack: list[str] = []
     seen_root = False
-
-    def attrs_of(body: str) -> dict[str, str]:
-        out = {}
-        for m in _ATTR_RE.finditer(body):
-            v = m.group(2) or ""
-            if v[:1] in "\"'":
-                v = v[1:-1]
-            out[m.group(1).lower()] = decode_entities(v)
-        return out
-
-    while pos < n:
-        lt = s.find("<", pos)
-        if lt < 0:
-            # truncated document: flush trailing character data
-            if stack and _localname(stack[-1]) in _TEXT_TAGS:
-                texts.append(decode_entities(s[pos:]))
-            break
-        if lt > pos and stack and _localname(stack[-1]) in _TEXT_TAGS:
-            texts.append(decode_entities(s[pos:lt]))
-        pos = lt
-        if s.startswith("<!--", pos):
-            end = s.find("-->", pos + 4)
-            pos = n if end < 0 else end + 3
-            continue
-        if s.startswith("<![CDATA[", pos):
-            end = s.find("]]>", pos + 9)
-            body = s[pos + 9:n if end < 0 else end]
-            if stack and _localname(stack[-1]) in _TEXT_TAGS:
-                texts.append(body)
-            pos = n if end < 0 else end + 3
-            continue
-        if s.startswith("<?", pos):
-            end = s.find("?>", pos + 2)
-            pos = n if end < 0 else end + 2
-            continue
-        if s.startswith("<!", pos):
-            # DOCTYPE, possibly with an [internal subset]
-            br = s.find("[", pos)
-            gt = s.find(">", pos)
-            if 0 <= br < gt:
-                close = s.find("]", br)
-                gt = s.find(">", close if close >= 0 else br)
-            pos = n if gt < 0 else gt + 1
-            continue
-        gt = s.find(">", pos)
-        if gt < 0:
-            break
-        raw = s[pos + 1:gt]
-        pos = gt + 1
-        if raw.startswith("/"):  # end tag
-            name = _localname(raw[1:].strip())
+    for tok in scan(s, skip=_SKIP_TAGS):
+        if tok.kind == TEXT or tok.kind == CDATA:
+            if stack and stack[-1] in _TEXT_TAGS:
+                texts.append(decode_entities(tok.data)
+                             if tok.kind == TEXT else tok.data)
+        elif tok.kind == END:
             for i in range(len(stack) - 1, -1, -1):
-                if _localname(stack[i]) == name:
+                if stack[i] == tok.data:
                     del stack[i:]
                     break
-            continue
-        m = _NAME_RE.match(raw)
-        if not m:
-            continue
-        tag = m.group(0)
-        local = _localname(tag)
-        selfclose = raw.rstrip().endswith("/")
-        if not seen_root:
-            if local != "svg":
-                raise SvgError(f"root element is <{local}>, not <svg>")
-            seen_root = True
-            a = attrs_of(raw[m.end():])
-            width = _parse_length(a.get("width", ""))
-            height = _parse_length(a.get("height", ""))
-            if (width is None or height is None) and "viewbox" in a:
-                parts = a["viewbox"].replace(",", " ").split()
-                if len(parts) == 4:
-                    vw, vh = _parse_length(parts[2]), _parse_length(parts[3])
-                    width = width if width is not None else vw
-                    height = height if height is not None else vh
-        n_elements += 1
-        if local in _SKIP_TAGS and not selfclose:
-            # raw-text containers: skip to the matching close tag
-            # (s_low precomputed once — re-lowercasing 4 MB per <style>
-            # element would be quadratic on style-heavy payloads)
-            end = s_low.find(f"</{local}", pos)
-            pos = n if end < 0 else s.find(">", end) + 1
-            if pos == 0:
-                pos = n
-            continue
-        if not selfclose:
-            stack.append(tag)
+        else:
+            if not seen_root:
+                if tok.data != "svg":
+                    raise SvgError(f"root element is <{tok.data}>, not <svg>")
+                seen_root = True
+                a = attributes(s[tok.start:tok.end])
+                width = _parse_length(a.get("width", ""))
+                height = _parse_length(a.get("height", ""))
+                if (width is None or height is None) and "viewbox" in a:
+                    parts = a["viewbox"].replace(",", " ").split()
+                    if len(parts) == 4:
+                        vw = _parse_length(parts[2])
+                        vh = _parse_length(parts[3])
+                        width = width if width is not None else vw
+                        height = height if height is not None else vh
+            n_elements += 1
+            if not tok.selfclose:
+                stack.append(tok.data)
     if not seen_root:
         raise SvgError("no <svg> root element")
     text = " ".join(" ".join(t.split()) for t in texts if t.strip())

@@ -50,6 +50,29 @@ def pages_for(sf_dir: str) -> str:
     return ensure_corpus(os.path.join(REPO, "data", f"pages_{tier}"), n)
 
 
+def _built_once(marker: str, sf: str, fields: dict, paths: list[str],
+                build) -> None:
+    """Run build() unless the JSON `marker` already records this sf tier
+    and `fields` and every path in `paths` exists; then record them."""
+    import json
+
+    meta = {"tier": os.path.basename(os.path.normpath(sf)) or "sf0.001",
+            **fields}
+    if os.path.exists(marker):
+        try:
+            with open(marker) as fh:
+                got = json.load(fh)
+            if (all(got.get(k) == v for k, v in meta.items())
+                    and all(os.path.exists(p) for p in paths)):
+                return
+        except (OSError, ValueError):
+            pass
+    build()
+    os.makedirs(os.path.dirname(marker), exist_ok=True)
+    with open(marker, "w") as fh:
+        json.dump(meta, fh)
+
+
 # Extraction-output cache: the x-query oracles read these fixed parquet
 # paths with DuckDB. Every x-query runs the REAL pipeline live on the Spark
 # side; the oracle aggregates this materialized twin, so each check is both
@@ -66,46 +89,31 @@ _XCACHE_REV = 4  # rev 4: links column (out-link hrefs, web-graph edges);
 
 def _xcache(spark: SparkSession, sf: str) -> None:
     """Materialize extraction output once per (sf tier, kernel version)."""
-    import json
-
     from docvision_spark import EXTRACTOR_VERSION
     from docvision_spark.corpus import CORPUS_VERSION
 
-    tier = os.path.basename(os.path.normpath(sf)) or "sf0.001"
-    marker = os.path.join(_XCACHE_DIR, "_tier.json")
-    if os.path.exists(marker):
-        try:
-            with open(marker) as fh:
-                meta = json.load(fh)
-            if (meta.get("tier") == tier
-                    and meta.get("version") == EXTRACTOR_VERSION
-                    and meta.get("corpus") == CORPUS_VERSION
-                    and meta.get("rev") == _XCACHE_REV
-                    and os.path.exists(_XCACHE_DOCS)
-                    and os.path.exists(_XCACHE_PAGES)):
-                return
-        except (OSError, ValueError):
-            pass
-    from docvision_spark.pipeline.extract_job import (
-        extract_pages, page_rows, read_pages)
-    from docvision_spark.pipeline.validate import validation_flags
+    def build() -> None:
+        from docvision_spark.pipeline.extract_job import (
+            extract_pages, page_rows, read_pages)
+        from docvision_spark.pipeline.validate import validation_flags
 
-    out = extract_pages(read_pages(spark, pages_for(sf))).cache()
-    flag_cols = ["v1_nonempty", "v2_span_bounds", "v3_span_order",
-                 "v4_tables_balanced", "v5_id_wellformed", "valid"]
-    (validation_flags(out)
-        .select("url", "id", F.length("text").alias("n_chars"), "markdown",
-                "page_count", "processing_mode", "lang", "charset",
-                "truncated", "canonical_url", "robots", "links", "bytes_in",
-                "error", *flag_cols)
-        .write.mode("overwrite").parquet(_XCACHE_DOCS))
-    (page_rows(out).select("url", "page_no", "markdown")
-        .write.mode("overwrite").parquet(_XCACHE_PAGES))
-    out.unpersist()
-    os.makedirs(_XCACHE_DIR, exist_ok=True)
-    with open(marker, "w") as fh:
-        json.dump({"tier": tier, "version": EXTRACTOR_VERSION,
-                   "corpus": CORPUS_VERSION, "rev": _XCACHE_REV}, fh)
+        out = extract_pages(read_pages(spark, pages_for(sf))).cache()
+        flag_cols = ["v1_nonempty", "v2_span_bounds", "v3_span_order",
+                     "v4_tables_balanced", "v5_id_wellformed", "valid"]
+        (validation_flags(out)
+            .select("url", "id", F.length("text").alias("n_chars"),
+                    "markdown", "page_count", "processing_mode", "lang",
+                    "charset", "truncated", "canonical_url", "robots",
+                    "links", "bytes_in", "error", *flag_cols)
+            .write.mode("overwrite").parquet(_XCACHE_DOCS))
+        (page_rows(out).select("url", "page_no", "markdown")
+            .write.mode("overwrite").parquet(_XCACHE_PAGES))
+        out.unpersist()
+
+    _built_once(os.path.join(_XCACHE_DIR, "_tier.json"), sf,
+                {"version": EXTRACTOR_VERSION, "corpus": CORPUS_VERSION,
+                 "rev": _XCACHE_REV},
+                [_XCACHE_DOCS, _XCACHE_PAGES], build)
 
 
 # ===========================================================================
@@ -607,25 +615,10 @@ _TWIN_REV = 2  # rev 2: exact rational jaccard thresholds (0.8 -> 4/5)
 
 
 def _twin(spark: SparkSession, sf: str, name: str, df: DataFrame) -> DataFrame:
-    import json
-
-    tier = os.path.basename(os.path.normpath(sf)) or "sf0.001"
-    marker = os.path.join(_TWIN_DIR, f"_{name}.json")
     path = os.path.join(_TWIN_DIR, f"{name}.parquet")
-    fresh = False
-    if os.path.exists(marker):
-        try:
-            with open(marker) as fh:
-                meta = json.load(fh)
-            fresh = (meta.get("tier") == tier and meta.get("rev") == _TWIN_REV
-                     and os.path.exists(path))
-        except (OSError, ValueError):
-            pass
-    if not fresh:
-        df.write.mode("overwrite").parquet(path)
-        os.makedirs(_TWIN_DIR, exist_ok=True)
-        with open(marker, "w") as fh:
-            json.dump({"tier": tier, "rev": _TWIN_REV}, fh)
+    _built_once(os.path.join(_TWIN_DIR, f"_{name}.json"), sf,
+                {"rev": _TWIN_REV}, [path],
+                lambda: df.write.mode("overwrite").parquet(path))
     return df
 
 
@@ -690,32 +683,13 @@ def d05_winnow_overlap(spark: SparkSession, sf: str) -> DataFrame:
     but the candidate-join + exact intersection logic IS re-derived by the
     DuckDB twin from those sets — stronger than a pure determinism twin.
     max_postings=None at oracle scale (exact recall, like d03)."""
-    import json as _json
-
     from docvision_spark.functions.fingerprint import (
         winnow_fingerprints, winnow_overlap_pairs)
 
     d = load(spark, sf, "documents")
     # materialize the fingerprint sets for the oracle (tier-keyed)
-    tier = os.path.basename(os.path.normpath(sf)) or "sf0.001"
-    marker = os.path.join(_TWIN_DIR, "_d05_fps.json")
-    path = os.path.join(_TWIN_DIR, "d05_fps.parquet")
-    fresh = False
-    if os.path.exists(marker):
-        try:
-            with open(marker) as fh:
-                meta = _json.load(fh)
-            fresh = (meta.get("tier") == tier
-                     and meta.get("rev") == _TWIN_REV
-                     and os.path.exists(path))
-        except (OSError, ValueError):
-            pass
-    if not fresh:
-        winnow_fingerprints(d).select("doc_id", "fingerprints") \
-            .write.mode("overwrite").parquet(path)
-        os.makedirs(_TWIN_DIR, exist_ok=True)
-        with open(marker, "w") as fh:
-            _json.dump({"tier": tier, "rev": _TWIN_REV}, fh)
+    _twin(spark, sf, "d05_fps",
+          winnow_fingerprints(d).select("doc_id", "fingerprints"))
     return winnow_overlap_pairs(d, min_shared=3, max_postings=None)
 
 
@@ -1204,23 +1178,11 @@ def _media_features(spark: SparkSession, sf: str):
 
 
 def _mcache(spark: SparkSession, sf: str) -> None:
-    import json
+    def build() -> None:
+        _media_features(spark, sf).write.mode("overwrite").parquet(_MCACHE)
 
-    tier = os.path.basename(os.path.normpath(sf)) or "sf0.001"
-    marker = os.path.join(_XCACHE_DIR, "_media.json")
-    if os.path.exists(marker):
-        try:
-            with open(marker) as fh:
-                meta = json.load(fh)
-            if (meta.get("tier") == tier and meta.get("rev") == _MCACHE_REV
-                    and os.path.exists(_MCACHE)):
-                return
-        except (OSError, ValueError):
-            pass
-    _media_features(spark, sf).write.mode("overwrite").parquet(_MCACHE)
-    os.makedirs(_XCACHE_DIR, exist_ok=True)
-    with open(marker, "w") as fh:
-        json.dump({"tier": tier, "rev": _MCACHE_REV}, fh)
+    _built_once(os.path.join(_XCACHE_DIR, "_media.json"), sf,
+                {"rev": _MCACHE_REV}, [_MCACHE], build)
 
 
 def _mfeats(spark: SparkSession, sf: str) -> DataFrame:

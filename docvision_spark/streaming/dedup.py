@@ -79,19 +79,12 @@ def start_incremental_dedup_query(
     available_now: bool = True,
 ) -> StreamingQuery:
     """Exactly-once re-crawl-deduplicated feed: parquet sink + checkpoint."""
-    from docvision_spark.streaming.ingest import read_pages_stream
+    from docvision_spark.streaming.ingest import (
+        read_pages_stream, start_parquet_sink)
 
     out = dedup_against_corpus_stream(
         read_pages_stream(spark, pages_dir), history_fps, watermark)
-    writer = (
-        out.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_parquet_sink(out, out_dir, checkpoint_dir, available_now)
 
 
 def start_dedup_query(
@@ -99,15 +92,8 @@ def start_dedup_query(
     watermark: str = "1 day", available_now: bool = True,
 ) -> StreamingQuery:
     """Exactly-once deduplicated feed: parquet sink + checkpoint."""
-    from docvision_spark.streaming.ingest import read_pages_stream
+    from docvision_spark.streaming.ingest import (
+        read_pages_stream, start_parquet_sink)
 
     out = dedup_pages_stream(read_pages_stream(spark, pages_dir), watermark)
-    writer = (
-        out.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_parquet_sink(out, out_dir, checkpoint_dir, available_now)

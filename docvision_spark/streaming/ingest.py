@@ -69,8 +69,15 @@ def start_extract_query(
     """Exactly-once streaming sink: parquet + checkpoint (the streaming twin
     of the batch snapshot commit)."""
     out = extract_stream(read_pages_stream(spark, pages_dir))
+    return start_parquet_sink(out, out_dir, checkpoint_dir, available_now)
+
+
+def start_parquet_sink(df: DataFrame, out_dir: str, checkpoint_dir: str,
+                       available_now: bool) -> StreamingQuery:
+    """Start an append-mode parquet sink with a checkpoint (exactly-once);
+    available_now drains what has arrived and stops."""
     writer = (
-        out.writeStream.format("parquet")
+        df.writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
@@ -101,12 +108,4 @@ def start_crawl_rate_query(
     available_now: bool = True,
 ) -> StreamingQuery:
     agg = crawl_rate(read_pages_stream(spark, pages_dir))
-    writer = (
-        agg.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_parquet_sink(agg, out_dir, checkpoint_dir, available_now)

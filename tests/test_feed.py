@@ -142,3 +142,23 @@ def test_self_closed_empty_title_is_not_a_heading_grab():
       <entry><title/><id>urn:x:1</id><summary>{_LONG}</summary></entry>
       </feed>""")
     assert "urn:x:1" not in md and _LONG in md
+
+
+def test_prolog_and_attribute_syntax_do_not_hide_or_leak():
+    """The feed reader shares kernel/xml_scan.py with the SVG and sitemap
+    readers: a DOCTYPE internal subset and a PI holding '>' are prolog,
+    not text before the root, and a quoted '>' stays inside its
+    attribute value."""
+    feed = ("<rss version=\"2.0\"><channel><title>Channel T</title><item>"
+            "<title>Item A</title><description>Body text here for the item."
+            "</description></item></channel></rss>")
+    want = extract("http://e.com/f.xml", feed.encode())
+    assert want.processing_mode == "feed"
+    assert want.markdown == ("# Channel T\n\n## Item A\n\n"
+                             "Body text here for the item.")
+    for prolog in ('<!DOCTYPE rss [<!ENTITY c "x">]>',
+                   '<?xml-stylesheet href="a>b"?>'):
+        r = extract("http://e.com/f.xml", (prolog + feed).encode())
+        assert (r.processing_mode, r.markdown) == ("feed", want.markdown)
+    md = _md(feed.replace("<description>", '<description x="a>b">'))
+    assert md == want.markdown

@@ -467,10 +467,31 @@ def _stream_body(filt: str, enc: bytes) -> bytes:
             + enc + b"\nendstream")
 
 
+def _png_predict(data: bytes, rowlen: int, bpp: int,
+                 types: tuple[int, ...]) -> bytes:
+    """PNG-predicted rows of rowlen bytes, cycling the filter types; the
+    last row keeps whatever bytes remain."""
+    import numpy as np
+
+    from docvision_spark.kernel.image_codec import _png_filter_row
+
+    out = bytearray()
+    prior = np.zeros(rowlen, dtype=np.uint8)
+    for y, i in enumerate(range(0, len(data), rowlen)):
+        line = np.frombuffer(data[i:i + rowlen], dtype=np.uint8)
+        ft = types[y % len(types)]
+        out.append(ft)
+        out += _png_filter_row(ft, line, prior[:len(line)], bpp).tobytes()
+        prior = line
+    return bytes(out)
+
+
 def test_pdf_filter_roundtrips():
     """Every supported /Filter (and the A85→Flate chain + Predictor-12
     parameterization) must decode back to the original stream bytes."""
     import zlib
+
+    import pytest
 
     from docvision_spark.corpus import _pdf_stream_filter, _png_up_encode, _rle_encode
     from docvision_spark.kernel import pdf_text
@@ -487,6 +508,33 @@ def test_pdf_filter_roundtrips():
         ("/Filter /FlateDecode /DecodeParms << /Predictor 12 /Columns 64 >> ",
          zlib.compress(_png_up_encode(data, 64))),
     ]
+    # PNG predictor rows of every type; len(data) is not a multiple of
+    # either row length, so the last row is truncated. 3 colors x 4 bits x
+    # 3 columns is a 5-byte row over 2-byte pixels.
+    for colors, bpc, columns, bpp in ((3, 8, 7, 3), (3, 4, 3, 2)):
+        rowlen = (colors * bpc * columns + 7) // 8
+        parms = (f"/DecodeParms << /Predictor 15 /Colors {colors} "
+                 f"/BitsPerComponent {bpc} /Columns {columns} >> ")
+        enc = _png_predict(data, rowlen, bpp, (1, 3, 4, 2, 0))
+        assert len(data) % rowlen
+        assert pdf_text._load_stream(_stream_body(
+            "/Filter /FlateDecode " + parms, zlib.compress(enc))) == data
+        with pytest.raises(pdf_text.PdfUnsupportedFilterError):
+            pdf_text._png_unpredict(enc[:rowlen + 1] + b"\x05" + enc[1:],
+                                    parms.encode())
+    # a hostile /Colors makes bpp and the row length huge: the lone
+    # partial row has no left or upper neighbours, and no buffer may be
+    # sized from the declared geometry instead of the input
+    import tracemalloc
+    tracemalloc.start()
+    try:
+        for ft in (1, 2, 3, 4):
+            assert pdf_text._png_unpredict(
+                bytes([ft]) + data,
+                b"/Predictor 15 /Colors 100000000 /Columns 1") == data
+        assert tracemalloc.get_traced_memory()[1] < 2 << 20
+    finally:
+        tracemalloc.stop()
     for filt, enc in cases:
         assert pdf_text._load_stream(_stream_body(filt, enc)) == data, filt
     # the corpus selector itself must agree with the kernel for many urls

@@ -30,3 +30,50 @@ def test_declared_dependencies_match_imports():
     declared = {re.match(r"[A-Za-z0-9_.-]+", d).group(0).lower()
                 for d in deps}
     assert _third_party_imports() == declared
+
+
+def _floor() -> tuple[int, int]:
+    with open(REPO / "pyproject.toml", "rb") as f:
+        spec = tomllib.load(f)["project"]["requires-python"]
+    major, minor = re.fullmatch(r">=\s*(\d+)\.(\d+)", spec).groups()
+    return int(major), int(minor)
+
+
+def _newer_regex_syntax(pattern) -> list[str]:
+    """Names of 3.11-only constructs (atomic groups, possessive
+    quantifiers) in one regex source."""
+    import re._constants as C
+    import re._parser as P
+
+    def walk(node):
+        if isinstance(node, P.SubPattern):
+            node = node.data
+        if isinstance(node, (list, tuple)):
+            for item in node:
+                yield from walk(item)
+        elif node is C.ATOMIC_GROUP or node is C.POSSESSIVE_REPEAT:
+            yield str(node)
+
+    return list(walk(P.parse(pattern)))
+
+
+def test_source_runs_on_the_declared_python_floor():
+    """Every module parses with the grammar of the oldest Python that
+    pyproject.toml admits, and no literal regex uses syntax `re` gained
+    later: one such pattern fails at import on the floor version."""
+    floor = _floor()
+    assert floor == (3, 10)  # the regex check below knows 3.11's additions
+    bad = []
+    for path in (REPO / "docvision_spark").rglob("*.py"):
+        tree = ast.parse(path.read_text(), str(path), feature_version=floor)
+        for node in ast.walk(tree):
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and isinstance(node.func.value, ast.Name)
+                    and node.func.value.id == "re" and node.args
+                    and isinstance(node.args[0], ast.Constant)
+                    and isinstance(node.args[0].value, (str, bytes))):
+                hits = _newer_regex_syntax(node.args[0].value)
+                if hits:
+                    bad.append((path.name, node.lineno, hits))
+    assert not bad

@@ -202,11 +202,13 @@ def test_literal_string_id_decrypts():
 
 def test_wrong_key_bad_padding_is_typed_error():
     """AES-256 (V5/R6) doc whose /UE is corrupted: /U auth still passes,
-    but the unwrapped file key is wrong, so the first stream's CBC pad
-    mismatch must surface as the typed pdf_encrypted row, not
-    silently-empty pages. Only the last pad byte is checked, so a wrong
-    key passes it for about 1 stream in 16; such a doc parses garbage and
-    must still end as an error row with no text."""
+    but the unwrapped file key is wrong. A failed /Perms check (ISO
+    32000-2 Algorithm 13) makes any stream pad failure key-level, so every
+    such doc must end as the typed pdf_encrypted row, while a corrupted
+    /Perms under the right key must still extract. Without /Perms only the
+    first stream's CBC pad check guards the key; it looks at the last pad
+    byte only, so a wrong key passes it for about 1 stream in 16 and such
+    a doc must still end as an error row with no text."""
     import random
     import re
 
@@ -218,7 +220,8 @@ def test_wrong_key_bad_padding_is_typed_error():
         url = f"https://ue-{i}.example.com/doc"
         pdf = make_pdf(url, random.Random(i), "en", force_encrypt="aes256",
                        force_layout15=False, force_type0=False)
-        assert extract(url, pdf).error is None
+        good = extract(url, pdf)
+        assert good.error is None
         u = bytes.fromhex(re.search(rb"/U <([0-9a-f]+)>", pdf)
                           .group(1).decode())
         m = re.search(rb"/UE <([0-9a-f]+)>", pdf)
@@ -227,8 +230,13 @@ def test_wrong_key_bad_padding_is_typed_error():
         good_key = pc.check_user_password_v5(b"", u, ue, 6)
         bad_key = pc.check_user_password_v5(b"", u, bad_ue, 6)
         assert bad_key is not None and bad_key != good_key  # auth passes
-        r = extract(url, pdf.replace(
-            m.group(0), b"/UE <" + bad_ue.hex().encode() + b">"))
+        bad = pdf.replace(m.group(0), b"/UE <" + bad_ue.hex().encode() + b">")
+        assert extract(url, bad).error == "pdf_encrypted", url
+        pm = re.search(rb" /Perms <([0-9a-f]+)>", pdf)
+        assert pc.check_perms_v5(good_key, bytes.fromhex(pm.group(1).decode()))
+        bad_perms = extract(url, pdf.replace(pm.group(1), pm.group(1)[::-1]))
+        assert (bad_perms.error, bad_perms.text) == (None, good.text), url
+        r = extract(url, bad.replace(pm.group(0), b""))
         assert r.error is not None and not r.text, (url, r.error)
         streams = re.findall(rb"stream\r?\n(.*?)endstream", pdf, re.S)
         assert streams

@@ -72,6 +72,9 @@ def test_malformed_markup_degrades_without_exception():
     assert i["n_elements"] == 1
     i = svg_info(b'<svg width="5" height="5"><style>never closed')
     assert i["n_elements"] == 2
+    # a quoted '>' stays inside its attribute value
+    i = svg_info(b'<svg width="5" height="5"><text font="a>b">Hi</text></svg>')
+    assert (i["text"], i["n_elements"]) == ("Hi", 2)
     # mismatched end tags pop to the nearest match
     i = svg_info(b'<svg><g><text>a</g></text>b<text>c</text></svg>'
                  b'x' * 10)
