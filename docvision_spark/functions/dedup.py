@@ -7,10 +7,14 @@ Scale notes (the 100 TB design):
    signing and banding — whole-stage-codegen expressions (higher-order
    functions over arrays + xxhash64), NO Python — and every near-dup entry
    point (minhash_lsh_pairs, incremental_minhash_pairs, curate's persisted
-   artifacts) reads its (shingled, banded) frames. The only shuffles are
-   the band-bucket groupBy/join and the verify join-backs, all on 64-bit
-   keys. Buckets with one member produce no candidates; a hot bucket
-   (degenerate content, e.g. empty strings) is capped to bound the join.
+   artifacts) reads its (shingled, banded) frames, both materialized so
+   shingling and signing run once. band_bucket_pairs is the one
+   band-bucket join (embedding LSH uses it too): the only shuffles are its
+   bucket exchange, which a self-join reads twice, and the verify
+   join-backs, all on 64-bit keys. Buckets with one member produce no
+   candidates; a hot bucket (degenerate content, e.g. empty strings) is
+   capped to its max_bucket smallest ids by a map-side partial top-k, so
+   it is never gathered whole.
  - SimHash: 64-bit signature; tokens are hashed JVM-side and the bit
    majority vote runs over whole Arrow batches in numpy. Near-dup pairs are
    found by banding the signature into 4x16-bit keys; recall is complete
@@ -233,7 +237,11 @@ def minhash_artifacts(df: DataFrame, id_col: str = "doc_id",
     ).localCheckpoint()
     sig = minhash_signatures_expr(shingled, "id", "sh", num_hashes)
     # bands carry only (id, band, bkey) — never the shingle sets (an 8-way
-    # band explode of 2000-element arrays would 8x the shuffle for nothing)
+    # band explode of 2000-element arrays would 8x the shuffle for nothing).
+    # banded is materialized too, by the first action that reads it: its
+    # consumers (the pair finders, a published corpus's band table, an
+    # increment's history probe) would otherwise each re-run the signing
+    # aggregate over the shingles.
     banded = sig.select(
         "id",
         F.explode(F.array(*[
@@ -243,8 +251,42 @@ def minhash_artifacts(df: DataFrame, id_col: str = "doc_id",
             )
             for b in range(bands)
         ])).alias("bb"),
-    ).select("id", "bb.band", "bb.bkey")
+    ).select("id", "bb.band", "bb.bkey").localCheckpoint(eager=False)
     return shingled, banded
+
+
+def band_bucket_pairs(banded: DataFrame, max_bucket: int,
+                      other: DataFrame | None = None) -> DataFrame:
+    """Distinct candidate pairs (id_a, id_b) from (id, band, bkey) rows:
+    the one band-bucket join behind minhash_lsh_pairs,
+    incremental_minhash_pairs and embedding_dup_pairs_lsh.
+
+    Each (band, bkey) bucket keeps its max_bucket smallest ids (null ids
+    never pair, so they take no slot). The cap is row_number() <=
+    max_bucket, which Spark plans as a partial top-k (WindowGroupLimit
+    Partial) below the bucket exchange and a final one above it: a hot
+    bucket (degenerate content, e.g. thousands of identical docs) ships at
+    most max_bucket ids per map task through a spillable sort and is never
+    gathered whole. Without `other`, buckets self-join with id_a < id_b and
+    both sides read the one capped exchange; with it, ids of `banded`
+    (id_a) meet the ids of `other` (id_b) in the same capped bucket.
+    """
+    def cap(df: DataFrame) -> DataFrame:
+        w = Window.partitionBy("band", "bkey").orderBy("id")
+        return (df.filter(F.col("id").isNotNull())
+                  .withColumn("_rn", F.row_number().over(w))
+                  .filter(F.col("_rn") <= max_bucket)
+                  .drop("_rn"))
+
+    a = cap(banded)
+    b = a if other is None else cap(other)
+    cand = a.alias("a").join(b.alias("b"), ["band", "bkey"])
+    if other is None:
+        cand = cand.filter(F.col("a.id") < F.col("b.id"))
+    # a pair sharing k buckets appears k times; the dedup shuffles only
+    # candidate pairs
+    return (cand.select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+                .dropDuplicates(["id_a", "id_b"]))
 
 
 def minhash_lsh_pairs(
@@ -257,32 +299,8 @@ def minhash_lsh_pairs(
     buckets give candidates, jaccard_verify checks them exactly. Returns
     (id_a, id_b, jaccard) with id_a < id_b and jaccard >= threshold.
     """
-    # Bucket members gathered per (band, bkey) in ONE partial-agg exchange;
-    # the hot-bucket cap is slice(array_sort(...), 1, max_bucket) — the
-    # same smallest-max_bucket-ids set the old row_number window kept —
-    # and candidate pairs expand IN-ROW from the sorted array (id_a < id_b
-    # by construction). vs the previous window-cap + self-join: one
-    # exchange instead of a window sort feeding a join, and no reliance on
-    # the planner broadcasting the banded side (which it cannot at corpus
-    # scale). Pair set verified identical (round-6). dropDuplicates here
-    # shuffles only candidate PAIRS, which 64-bit band keys keep small
-    # (real near-dups plus 2^-64 collisions — unlike 8-bit image bands).
-    grouped = (
-        banded.groupBy("band", "bkey")
-              .agg(F.slice(F.array_sort(F.collect_list("id")), 1, max_bucket)
-                    .alias("ids"))
-              .filter(F.size("ids") >= 2)
-    )
-    pair_expr = F.expr(
-        "flatten(transform(ids, (x, i) -> "
-        "transform(slice(ids, i + 2, size(ids)), "
-        "y -> struct(x as id_a, y as id_b))))")
-    cand = (
-        grouped.select(F.explode(pair_expr).alias("p"))
-               .select("p.id_a", "p.id_b")
-               .dropDuplicates(["id_a", "id_b"])
-    )
-    return jaccard_verify(cand, shingled, jaccard_threshold)
+    return jaccard_verify(band_bucket_pairs(banded, max_bucket), shingled,
+                          jaccard_threshold)
 
 
 # ---------------------------------------------------------------- simhash --
@@ -654,20 +672,7 @@ def incremental_minhash_pairs(
     history-internal pair on every run). Verification joins each side's
     candidates back to its OWN shingle table, so history text is never
     read. Hot-bucket cap applies per side."""
-    def cap(banded: DataFrame) -> DataFrame:
-        return (banded.withColumn(
-                    "rn",
-                    F.row_number().over(
-                        Window.partitionBy("band", "bkey").orderBy("id")))
-                .filter(F.col("rn") <= max_bucket)
-                .drop("rn"))
-
-    cand = (
-        cap(new_banded).alias("n")
-        .join(cap(hist_banded).alias("h"), ["band", "bkey"])
-        .select(F.col("n.id").alias("id_a"), F.col("h.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    cand = band_bucket_pairs(new_banded, max_bucket, other=hist_banded)
     return (jaccard_verify(cand, new_shingled, jaccard_threshold,
                            sets_b=hist_shingled)
             .withColumnRenamed("id_a", "new_id")

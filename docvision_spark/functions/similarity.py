@@ -103,39 +103,6 @@ def hyperplane_signature(vec_col: Column, n_planes: int = 16, dim: int = 64) -> 
     return sig
 
 
-def lsh_topk(
-    emb: DataFrame, query_vec: list[float], k: int = 10,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    n_planes: int = 12, max_probe_hamming: int = 2,
-    exclude_id: int | None = None,
-) -> DataFrame:
-    """ANN top-k: score only vectors whose hyperplane signature is within
-    max_probe_hamming bits of the query's signature (multi-probe LSH).
-
-    At bench scale this scans the signature column (8 bytes/row) and computes
-    the exact cosine for ~(sum_{i<=h} C(n_planes,i))/2^n_planes of the table.
-    """
-    dim = len(query_vec)
-    sig_col = hyperplane_signature(F.col(vec_col), n_planes, dim)
-    signed = emb.withColumn("_sig", sig_col)
-
-    qdf = emb.sparkSession.createDataFrame([(query_vec,)], f"qv array<double>")
-    qsig_row = qdf.select(hyperplane_signature(F.col("qv"), n_planes, dim).alias("s")).collect()
-    qsig = qsig_row[0]["s"]
-
-    cand = signed.filter(
-        F.bit_count(F.col("_sig").bitwiseXOR(F.lit(qsig).cast("long"))) <= max_probe_hamming
-    )
-    if exclude_id is not None:
-        cand = cand.filter(F.col(id_col) != exclude_id)
-    q = F.array(*[F.lit(float(v)).cast("double") for v in query_vec])
-    return (
-        cand.select(F.col(id_col), cosine(F.col(vec_col).cast("array<double>"), q).alias("score"))
-            .orderBy(F.col("score").desc(), F.col(id_col).asc())
-            .limit(k)
-    )
-
-
 def lsh_index_write(
     emb: DataFrame, path: str,
     id_col: str = "vec_id", vec_col: str = "embedding",
@@ -217,7 +184,7 @@ def embedding_dup_pairs_lsh(
     THIS is the shape that survives 10^12 rows — the join keys are 4
     shuffle-cheap ints and verification touches only bucket collisions.
     """
-    from pyspark.sql.window import Window
+    from docvision_spark.functions.dedup import band_bucket_pairs
 
     dim_row = emb.select(F.size(vec_col).alias("d")).first()
     dim = int(dim_row["d"])
@@ -235,17 +202,7 @@ def embedding_dup_pairs_lsh(
             for b in range(bands)
         ])).alias("bb"),
     ).select("id", "bb.band", "bb.bkey")
-    banded = (
-        banded.withColumn(
-            "rn", F.row_number().over(Window.partitionBy("band", "bkey").orderBy("id")))
-        .filter(F.col("rn") <= max_bucket).drop("rn")
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(b, ["band", "bkey"]).filter(F.col("a.id") < F.col("b.id"))
-         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-         .dropDuplicates(["id_a", "id_b"])
-    )
+    cand = band_bucket_pairs(banded, max_bucket)
     units = signed.select("id", "u")
     cand = (
         cand.join(units.select(F.col("id").alias("id_a"), F.col("u").alias("u_a")), "id_a")

@@ -35,11 +35,14 @@ ENTRY_SCHEMA = StructType([
 ])
 
 _MAX_ENTRIES = 50000  # the protocol's own per-file cap
+_URL_PREFIXES = ("http://", "https://")  # an entry must be an absolute url
 
 
 def parse_sitemap(payload: bytes) -> dict:
     """Sitemap bytes -> {kind, entries: [(loc, lastmod)], error}.
-    For a sitemapindex, entries are the CHILD sitemap locations."""
+    For a sitemapindex, entries are the CHILD sitemap locations. An XML
+    sitemap's kind is its root element's name; in both formats only
+    http(s) urls become entries."""
     from docvision_spark.kernel.entities import decode_entities
     from docvision_spark.kernel.xml_scan import CDATA, START, TEXT, scan
 
@@ -55,7 +58,7 @@ def parse_sitemap(payload: bytes) -> dict:
         entries = []
         for line in text.splitlines():
             line = line.strip()
-            if line.startswith(("http://", "https://")):
+            if line.startswith(_URL_PREFIXES):
                 entries.append((line, None))
             if len(entries) >= _MAX_ENTRIES:
                 break
@@ -79,7 +82,9 @@ def parse_sitemap(payload: bytes) -> dict:
                 buf.append(decode_entities(tok.data) if tok.kind == TEXT
                            else tok.data)
         elif tok.kind == START:
-            if name in ("urlset", "sitemapindex") and kind is None:
+            if kind is None:
+                if name not in ("urlset", "sitemapindex"):
+                    break  # the root element is not a sitemap
                 kind = name
             elif name in ("loc", "lastmod") and not tok.selfclose:
                 capture, buf = name, []
@@ -90,12 +95,12 @@ def parse_sitemap(payload: bytes) -> dict:
             lastmod = "".join(buf).strip() or None
             capture = None
         elif name in ("url", "sitemap"):
-            if loc:
+            if loc and loc.startswith(_URL_PREFIXES):
                 entries.append((loc, lastmod))
             loc = lastmod = None
     if kind is None:
         return {"kind": None, "entries": [], "error": "no urlset root"}
-    if loc:  # truncated final entry
+    if loc and loc.startswith(_URL_PREFIXES):  # truncated final entry
         entries.append((loc, lastmod))
     return {"kind": kind, "entries": entries, "error": None}
 

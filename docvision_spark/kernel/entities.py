@@ -1,17 +1,38 @@
 """Fixed HTML entity table + deterministic entity decoding.
 
-The COMPLETE WHATWG named-character-references table (2,125 names), as a
-FROZEN in-repo snapshot (kernel/entities_table.py) so that kernel output
-never changes when the host Python's `html.entities` table is updated —
-byte-identity of extracted text is the north-rule invariant. A handful of
-whitespace entities carry deliberate normalization overrides (see
-_OVERRIDES below)."""
+The COMPLETE WHATWG named-character-references table (2,125 names), read
+from the stdlib's `html.entities.html5`, a verbatim copy of the WHATWG
+list, which the spec declares static. Byte-identity of extracted text is
+the north-rule invariant, so the derived table is checked at import
+against a pinned sha256: a host whose table differs fails loudly instead
+of changing kernel output. A handful of whitespace entities carry
+deliberate normalization overrides (see _WS_FOLD below)."""
 
 from __future__ import annotations
 
+import hashlib
+import json
 import re
+from html.entities import html5
 
-from docvision_spark.kernel.entities_table import FULL, LEGACY
+# FULL maps every spec name (semicolon stripped) to its replacement text.
+# LEGACY: names browsers accept WITHOUT a trailing semicolon (the WHATWG
+# legacy set, 106 names incl. uppercase forms). Everything newer requires
+# the ';', so '&integer' must NOT decode via the 'int' prefix.
+FULL: dict[str, str] = {k[:-1]: v for k, v in html5.items() if k.endswith(";")}
+LEGACY = frozenset(k for k in html5 if not k.endswith(";"))
+TABLE_SHA256 = "432e9f82cdff1c52f68d7d02a83250ffc55bea1654d0c3e96fe6c856c378676a"
+
+
+def table_digest(full: dict[str, str], legacy: frozenset[str]) -> str:
+    return hashlib.sha256(
+        json.dumps([sorted(full.items()), sorted(legacy)]).encode()).hexdigest()
+
+
+if table_digest(FULL, LEGACY) != TABLE_SHA256:
+    raise ImportError(
+        "html.entities.html5 differs from the pinned WHATWG table "
+        f"(sha256 {table_digest(FULL, LEGACY)}); extracted text would change")
 
 # Whitespace-normalization policy, CHARACTER-based (round-4 ADVICE: the
 # old name-keyed overrides {nbsp, shy, ensp, emsp, thinsp} let WHATWG
@@ -44,15 +65,9 @@ def _fold_ws(rep: str) -> str:
     return rep
 
 
-# The COMPLETE 2,125-name WHATWG table (frozen snapshot in entities_table,
-# regenerated only via scripts/make_entities_table.py) + the whitespace
-# policy applied uniformly by character.
+# The COMPLETE 2,125-name WHATWG table + the whitespace policy applied
+# uniformly by character.
 ENTITIES: dict[str, str] = {n: _fold_ws(r) for n, r in FULL.items()}
-
-# Names browsers accept WITHOUT a trailing semicolon (the WHATWG legacy
-# set, 106 names incl. uppercase forms). Everything newer requires the
-# ';', so '&integer' must NOT decode via the 'int' prefix.
-_LEGACY = LEGACY
 
 _ENTITY_RE = re.compile(r"&(#x?[0-9a-fA-F]+|[a-zA-Z][a-zA-Z0-9]*);?")
 
@@ -92,14 +107,14 @@ def _sub_entity(m: re.Match) -> str:
     # the HTML5 spec's own example. '&integer' stays literal ('int' is not
     # legacy), '&notify' -> '¬ify'.
     for n in range(len(body), 1, -1):
-        if body[:n] in _LEGACY:
+        if body[:n] in LEGACY:
             rep = ENTITIES.get(body[:n]) or ENTITIES[body[:n].lower()]
             return rep + body[n:] + (";" if has_semi else "")
     return m.group(0)
 
 
 def decode_entities(s: str) -> str:
-    """Decode entity references using the frozen table only."""
+    """Decode entity references using the pinned table only."""
     if "&" not in s:
         return s
     return _ENTITY_RE.sub(_sub_entity, s)

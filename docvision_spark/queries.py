@@ -322,8 +322,8 @@ def s06_emb_dup_lsh(spark: SparkSession, sf: str) -> DataFrame:
 def s04_cosine_dup_pairs(spark: SparkSession, sf: str) -> DataFrame:
     """Embedding-cosine near-dup pairs (exact, threshold 0.4). Exact
     all-pairs is O(n^2) — correct at oracle scale; the 100 TB path is the
-    LSH-bucketed variant (s03/similarity.lsh_topk) which trades exactness
-    for a signature self-join."""
+    LSH-bucketed variant (s06/similarity.embedding_dup_pairs_lsh) which
+    trades exactness for a signature band self-join."""
     from docvision_spark.functions.similarity import dot, with_unit_vectors
 
     emb = with_unit_vectors(load(spark, sf, "embeddings")).select("vec_id", "u")

@@ -240,11 +240,10 @@ def test_curate_robots_and_canonical_stage(tmp_path):
 def test_curate_sf01_scale_stage_counts(tmp_path):
     """Round-4 verdict #7: the 7-stage pipeline end-to-end on the REAL
     20k-page sf0.1 corpus (not planted fixtures), asserting the report's
-    stage counts are deterministic and monotone. Counts are pinned as
-    INVARIANTS (monotone funnel, nonzero attrition at the stages the
-    corpus is known to exercise) rather than exact numbers, so a corpus
-    version bump shifts volumes without rewriting the test; determinism
-    is asserted by structure (the corpus and kernel are both seeded)."""
+    stage counts are deterministic and monotone. Besides the invariants
+    (monotone funnel, nonzero attrition at the stages the corpus is known
+    to exercise), the exact counts are pinned per CORPUS_VERSION; a
+    version with no pins fails until they are re-derived from its run."""
     from docvision_spark.corpus import ensure_corpus
 
     pages_dir = ensure_corpus(os.path.join(REPO, "data", "pages_sf0.1"), 20000)
@@ -282,18 +281,20 @@ def test_curate_sf01_scale_stage_counts(tmp_path):
     # promo template, so robots drops shrink and boilerplate line counts
     # shift): extract_errors 47 / robots 19435 -> 19444 / quality
     # 19408 -> 19417 / boiler 4454 -> 4345. v16 and v17 keep v15's text
-    # content (v17 adds /Perms to AES-256 PDFs).
-    if CORPUS_VERSION in (15, 16, 17):
-        # exact deterministic counts for this corpus version (seeded corpus
-        # + seeded kernel -> the whole report is reproducible bit-for-bit);
-        # on a version bump the invariants above still gate while these pins
-        # get re-derived. v8 -> v9: extract_errors 71 -> 47 (the 24
-        # scanned-slice docs whose CCITT rasters now decode extract their
-        # text instead of erroring; only the 1% JBIG2 slice remains).
-        assert rep["extract_errors"] == 47
-        assert rep["after_robots"] == 19444
-        assert rep["quality_pass"] == 19417
-        assert rep["boiler_lines_stripped"] == 4345
+    # content (v17 adds /Perms to AES-256 PDFs). v8 -> v9: extract_errors
+    # 71 -> 47 (the 24 scanned-slice docs whose CCITT rasters now decode
+    # extract their text instead of erroring; only the 1% JBIG2 slice
+    # remains).
+    v15 = {"extract_errors": 47, "after_robots": 19444,
+           "quality_pass": 19417, "boiler_lines_stripped": 4345}
+    pins = {15: v15, 16: v15, 17: v15}
+    # exact deterministic counts (seeded corpus + seeded kernel -> the
+    # whole report is reproducible bit-for-bit)
+    got = {k: rep[k] for k in v15}
+    assert CORPUS_VERSION in pins, (
+        f"no exact pins for corpus v{CORPUS_VERSION}: re-derive them from "
+        f"this run's report and add them to `pins` (this run: {got})")
+    assert got == pins[CORPUS_VERSION]
     # curated output is readable and consistent with the report
     import duckdb
     n = duckdb.sql(

@@ -340,14 +340,16 @@ def test_winnow_fingerprint_overlap(spark, docs):
 
 
 @pytest.mark.spark
-def test_similarity_lsh_recall_vs_bruteforce(spark):
-    """On clustered data (where ANN is meaningful) hyperplane LSH at a small
-    probe radius must recover most true neighbors. The sf testdata embeddings
-    are near-uniform random (top-1 cosine ≈ 0.33) — no ANN method can beat
-    probe-fraction there, so we construct 3 well-separated clusters."""
+def test_similarity_lsh_recall_vs_bruteforce(spark, tmp_path):
+    """On clustered data (where ANN is meaningful) the hyperplane-LSH index
+    probe at a small radius must recover most true neighbors. The sf
+    testdata embeddings are near-uniform random (top-1 cosine ≈ 0.33) — no
+    ANN method can beat probe-fraction there, so we construct 3
+    well-separated clusters."""
     import random
 
-    from docvision_spark.functions.similarity import brute_force_topk, lsh_topk
+    from docvision_spark.functions.similarity import (
+        brute_force_topk, lsh_index_topk, lsh_index_write)
 
     rng = random.Random(42)
     dim, per_cluster = 64, 60
@@ -361,9 +363,11 @@ def test_similarity_lsh_recall_vs_bruteforce(spark):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     q = [x + rng.gauss(0, 0.15) for x in cents[0]]
 
+    path = str(tmp_path / "lsh_index")
+    lsh_index_write(emb, path, n_planes=12)
     exact = [r["vec_id"] for r in brute_force_topk(emb, q, k=10).collect()]
-    ann = [r["vec_id"] for r in lsh_topk(emb, q, k=10,
-                                         n_planes=12, max_probe_hamming=2).collect()]
+    ann = [r["vec_id"] for r in lsh_index_topk(
+        spark, path, q, k=10, n_planes=12, max_probe_hamming=2).collect()]
     recall = len(set(exact) & set(ann)) / 10
     assert recall >= 0.7, f"LSH recall {recall} too low vs brute force"
     assert all(v < per_cluster for v in exact), "true neighbors are cluster 0"
@@ -372,12 +376,16 @@ def test_similarity_lsh_recall_vs_bruteforce(spark):
 @pytest.mark.spark
 def test_lsh_index_partition_pruned_probe(spark, tmp_path):
     """The write-time signature table makes the ANN probe a partition-pruned
-    scan (visible in the plan), and the probe returns exactly what the
-    in-memory signature scan returns (same signatures, same Hamming ball)."""
+    scan (visible in the plan), and the probe returns exactly the oracle's
+    answer: every vector whose full hyperplane signature is within
+    Hamming 2 of the query's, ranked by brute-force cosine. The clusters
+    are loose enough that the ball holds a vector whose signature prefix
+    (its partition) is 2 bits from the query's."""
+    import math
     import random
 
     from docvision_spark.functions.similarity import (
-        lsh_index_topk, lsh_index_write, lsh_topk)
+        hyperplane_signature, lsh_index_topk, lsh_index_write)
     from tests.test_plans import plan_of
 
     rng = random.Random(11)
@@ -386,21 +394,34 @@ def test_lsh_index_partition_pruned_probe(spark, tmp_path):
     rows = []
     for i in range(200):
         c = centers[i % 4]
-        rows.append((i, [x + rng.uniform(-0.05, 0.05) for x in c]))
+        rows.append((i, [x + rng.uniform(-0.6, 0.6) for x in c]))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
     path = str(tmp_path / "lsh_index")
     lsh_index_write(emb, path)
     q = rows[0][1]
-    via_index = lsh_index_topk(spark, path, q, k=10, exclude_id=0)
+    via_index = lsh_index_topk(spark, path, q, k=len(rows), exclude_id=0)
 
     plan = plan_of(via_index)
     assert "PartitionFilters" in plan and "sig_prefix" in plan, plan
 
-    got = [(r["vec_id"], round(r["score"], 6)) for r in via_index.collect()]
-    want = [(r["vec_id"], round(r["score"], 6))
-            for r in lsh_topk(emb, q, k=10, exclude_id=0).collect()]
-    assert got == want and len(got) > 0
+    # oracle: the signatures are the production expression's (what the
+    # index stores); the Hamming ball and the ranking are recomputed here
+    sig = {r["vec_id"]: r["s"] for r in emb.select(
+        "vec_id", hyperplane_signature(F.col("embedding"), 12, dim)
+        .alias("s")).collect()}
+
+    def cos(a, b):
+        return (sum(x * y for x, y in zip(a, b))
+                / math.sqrt(sum(x * x for x in a) * sum(y * y for y in b)))
+
+    ball = [(cos(v, q), i) for i, v in rows
+            if i != 0 and bin(sig[i] ^ sig[0]).count("1") <= 2]
+    assert any(bin((sig[i] ^ sig[0]) & 63).count("1") == 2 for _, i in ball)
+    want = [(i, s) for s, i in sorted(ball, key=lambda t: (-t[0], t[1]))]
+    got = [(r["vec_id"], r["score"]) for r in via_index.collect()]
+    assert [i for i, _ in got] == [i for i, _ in want] and len(got) > 0
+    assert all(abs(a - b) < 1e-9 for (_, a), (_, b) in zip(got, want))
 
 
 def test_ivf_recall_on_clusters(spark):
@@ -476,6 +497,78 @@ def test_embedding_dup_lsh_vs_exact(spark):
     recall = len(got & exact) / max(1, len(exact))
     assert recall >= 0.9, f"LSH dedup recall {recall}"
     assert got <= exact  # verification step admits no false positives
+
+
+def _first_stage_subtrees(plan: str, node: str) -> list[str]:
+    """Subtrees below each `node` line of a physical-plan tree string that
+    hold no further Exchange: the map stages feeding that exchange."""
+    lines = plan.splitlines()
+    depth = [ln.find("+- ") for ln in lines]
+    out = []
+    for i, ln in enumerate(lines):
+        if node in ln:
+            sub = []
+            for j in range(i + 1, len(lines)):
+                if depth[j] <= depth[i]:
+                    break
+                sub.append(lines[j])
+            if not any("Exchange" in x for x in sub):
+                out.append("\n".join(sub))
+    return out
+
+
+@pytest.mark.spark
+def test_hot_bucket_keeps_smallest_ids_without_gathering(spark):
+    """A hot (band, bkey) bucket is capped to its max_bucket smallest ids
+    in every band-bucket operator: 160 identical docs (and vectors) give
+    exactly the pairs among the 64 smallest ids. The MinHash plan caps the
+    bucket map-side (a Partial WindowGroupLimit under the bucket exchange)
+    instead of collecting each whole bucket into one array, and reads
+    bands that minhash_artifacts signed once."""
+    import random
+
+    from docvision_spark.functions.dedup import (
+        incremental_minhash_pairs, minhash_artifacts, minhash_lsh_pairs)
+    from docvision_spark.functions.similarity import embedding_dup_pairs_lsh
+
+    rng = random.Random(5)
+    hot = rng.sample(range(10_000), 160)      # unordered, non-contiguous
+    rows = [(i, BASE) for i in hot] + [
+        (20_000 + i, f"distinct document {i} about topic {i * 7} and more")
+        for i in range(20)]
+    rng.shuffle(rows)
+    docs = spark.createDataFrame(rows, "doc_id long, text string").repartition(4)
+    low = sorted(hot)[:64]
+    want = {(a, b) for a in low for b in low if a < b}
+
+    shingled, banded = minhash_artifacts(docs)
+    # banded is materialized: its readers never re-run the signing aggregate
+    assert "aggregate(" not in \
+        banded._jdf.queryExecution().executedPlan().toString()
+    pairs = minhash_lsh_pairs(shingled, banded, max_bucket=64)
+    # the initial plan: once run, AQE prints its stages around it
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert {(r["id_a"], r["id_b"]) for r in pairs.collect()} == want
+
+    hist = spark.createDataFrame([(i + 100_000, BASE) for i in hot],
+                                 "doc_id long, text string")
+    inc = incremental_minhash_pairs(*minhash_artifacts(docs),
+                                    *minhash_artifacts(hist), max_bucket=64)
+    assert {(r["new_id"], r["hist_id"]) for r in inc.collect()} == \
+        {(a, b + 100_000) for a in low for b in low}
+
+    vec = [rng.gauss(0, 1) for _ in range(16)]
+    emb = spark.createDataFrame([(i, vec) for i in hot],
+                                "vec_id long, embedding array<double>")
+    got = {(r["id_a"], r["id_b"])
+           for r in embedding_dup_pairs_lsh(emb.repartition(4),
+                                            max_bucket=64).collect()}
+    assert got == want
+
+    assert "collect_list" not in plan, plan
+    stages = _first_stage_subtrees(plan, "Exchange hashpartitioning(band")
+    assert stages, plan
+    assert all("WindowGroupLimit" in st and "Partial" in st for st in stages), plan
 
 
 @pytest.mark.spark

@@ -265,4 +265,5 @@ def test_parse_sitemap_total_and_deterministic(s):
         a = parse_sitemap(doc.encode())
         assert a == parse_sitemap(doc.encode())
         assert (a["error"] is None) == (a["kind"] is not None)
-        assert all(loc for loc, _ in a["entries"])
+        assert all(loc.startswith(("http://", "https://"))
+                   for loc, _ in a["entries"])

@@ -607,13 +607,13 @@ def test_pdf_unsupported_filter_typed_error():
 
 
 def test_entities_full_whatwg_table():
-    """Round 4: the COMPLETE frozen WHATWG snapshot — rare names decode,
+    """Round 4: the COMPLETE WHATWG table — rare names decode,
     multi-codepoint replacements work, HTML5 codepoint corrections applied
     (lang/rang are U+27E8/U+27E9, not the HTML4 U+2329/232A), and the
     whitespace-normalization overrides stay in force."""
-    from docvision_spark.kernel.entities import ENTITIES, _LEGACY
+    from docvision_spark.kernel.entities import ENTITIES, LEGACY
 
-    assert len(ENTITIES) == 2125 and len(_LEGACY) == 106
+    assert len(ENTITIES) == 2125 and len(LEGACY) == 106
     assert decode_entities("&CounterClockwiseContourIntegral;") == "∳"
     assert decode_entities("&NotEqualTilde;") == "≂̸"  # multi-codepoint
     assert decode_entities("&lang;x&rang;") == "⟨x⟩"
@@ -625,6 +625,28 @@ def test_entities_full_whatwg_table():
     # post-legacy names still REQUIRE the semicolon
     assert decode_entities("&CounterClockwiseContourIntegral") == \
         "&CounterClockwiseContourIntegral"
+
+
+def test_entity_table_is_pinned():
+    """The table is read from the stdlib and pinned by digest: the literal
+    below was computed from the frozen in-repo table the stdlib read
+    replaced. A host whose `html.entities.html5` differs cannot import the
+    kernel."""
+    import os
+    import subprocess
+    import sys
+
+    from docvision_spark.kernel.entities import FULL, LEGACY, table_digest
+
+    assert table_digest(FULL, LEGACY) == \
+        "432e9f82cdff1c52f68d7d02a83250ffc55bea1654d0c3e96fe6c856c378676a"
+    proc = subprocess.run(
+        [sys.executable, "-c",
+         "import html.entities as h; h.html5['amp;'] = '+'; "
+         "import docvision_spark.kernel.entities"],
+        capture_output=True, text=True, timeout=60,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    assert proc.returncode != 0 and "ImportError" in proc.stderr, proc.stderr
 
 
 def test_entity_whitespace_policy_is_character_based():

@@ -144,6 +144,18 @@ def test_sitemap_parse_formats_and_edges():
     # truncated final entry still yields its loc
     r = parse_sitemap(b"<urlset><url><loc>https://h.ex.com/cut</loc>")
     assert r["entries"] == [("https://h.ex.com/cut", None)]
+    # the kind comes from the root element, and a <loc> must be an
+    # http(s) url like a plain-text line: a <urlset> further in does not
+    # make a sitemap of a document rooted elsewhere
+    r = parse_sitemap(b"</lastmod><?xml?></loc></url>https://x/<loc>2026 "
+                      b"<urlset>2026 >&amp;amp;</loc></url>")
+    assert (r["kind"], r["entries"]) == (None, []) and r["error"]
+    r = parse_sitemap(b"<sitemapindex><urlset/><sitemap><loc>https://h.ex.com/a"
+                      b"</loc></sitemap><sitemap><loc>/relative</loc></sitemap>"
+                      b"<sitemap><loc>ftp://h.ex.com/b</loc></sitemap>"
+                      b"</sitemapindex>")
+    assert r["kind"] == "sitemapindex"
+    assert r["entries"] == [("https://h.ex.com/a", None)]
 
 
 @pytest.mark.spark
