@@ -95,19 +95,24 @@ def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
     change it: +40 length in [200, 20000]; +20 avg token len in [3, 12];
     +20 punct ratio in (0, 8] per 100 chars; +20 stopword ratio >= 10%.
     """
+    from docvision_spark.functions.dedup import let_
+
     c = F.col(text_col)
-    toks = token_count(c)
     n_chars = F.length(c)
     punct = F.length(c) - F.length(F.regexp_replace(c, r"[.,;:!?]", ""))
-    all_stop = None
-    for lang in sorted(LANG_STOPWORDS):
-        h = stopword_hits(c, lang)
-        all_stop = h if all_stop is None else all_stop + h
+    # one tokenization serves both counts; the per-language lists are
+    # disjoint, so one filter over their union counts each hit once
+    words = [w for ws in LANG_STOPWORDS.values() for w in ws]
+    counts = let_(tokens(F.lower(c)), lambda t: F.struct(
+        F.size(t).alias("n"),
+        F.size(F.filter(t, lambda w: w.isin(*words))).alias("stop")))
     df = (
-        df.withColumn("n_tokens", toks)
+        df.withColumn("_quality_counts", counts)
+          .withColumn("n_tokens", F.col("_quality_counts.n"))
           .withColumn("n_chars_txt", n_chars)
           .withColumn("n_punct", punct)
-          .withColumn("n_stopwords", all_stop)
+          .withColumn("n_stopwords", F.col("_quality_counts.stop"))
+          .drop("_quality_counts")
     )
     score = (
         F.when((F.col("n_chars_txt") >= 200) & (F.col("n_chars_txt") <= 20000), 40).otherwise(0)

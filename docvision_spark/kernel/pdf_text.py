@@ -6,10 +6,18 @@ text parsing: object scan -> page tree walk -> content-stream tokenizer ->
 text-state machine (Tf/Td/TD/Tm/TL/T*/Tj/TJ/'/\") -> y-clustered lines ->
 reading-order blocks -> heading detection by font-size rank.
 
-Supported subset (the corpus synthesizer emits only this): uncompressed or
-FlateDecode content streams, literal/hex strings, the text operators above.
-PDF 1.5 container features are handled: object streams (/Type /ObjStm,
-Flate) are expanded into the object table, and cross-reference-stream files
+Supported subset: content, ToUnicode and object streams stored raw or under
+a /Filter chain of FlateDecode, LZWDecode, ASCIIHexDecode, ASCII85Decode and
+RunLengthDecode (with /DecodeParms PNG and TIFF predictors for Flate/LZW);
+any other filter on such a stream raises PdfUnsupportedFilterError. String
+objects follow ISO 32000-1 §7.3.4 in one parser, `_string_at`: hex strings
+skip whitespace and pad an odd final digit with 0; literal strings nest
+balanced unescaped parentheses, decode the named escapes, 1-3 octal digits
+and backslash-EOL line continuation, and keep the character of an unknown
+escape. The same parser reads content-stream strings, /ID and the
+encryption dict's /O /U /UE /Perms.
+PDF 1.5 container features are handled: object streams (/Type /ObjStm)
+are expanded into the object table, and cross-reference-stream files
 parse fine because object discovery is a full-file scan (the xref is only a
 byte-offset index — a scanner never needs it). CID/Type0 fonts carry
 multi-byte code-to-glyph mappings this parser cannot decode; documents
@@ -37,11 +45,11 @@ _NAME_VAL_RE = {
     b"Filter": re.compile(rb"/Filter\s*/(\w+)"),
 }
 
-# content-stream tokens: literal string, hex string, number, name, operator
+# content-stream tokens: string opener (parsed by _string_at), number,
+# array bracket, name, operator
 _CS_TOKEN_RE = re.compile(
     rb"""
-      (?P<str>\((?:\\.|[^\\()])*\))
-    | (?P<hex><[0-9a-fA-F\s]*>)
+      (?P<str>[(<])
     | (?P<num>[+-]?\d+(?:\.\d+)?|[+-]?\.\d+)
     | (?P<arr>[\[\]])
     | (?P<name>/[^\s\[\]()<>/]+)
@@ -50,48 +58,57 @@ _CS_TOKEN_RE = re.compile(
     re.VERBOSE,
 )
 
-_ESC = {
-    ord("n"): "\n", ord("r"): "\r", ord("t"): "\t",
-    ord("b"): "\b", ord("f"): "\f",
-    ord("("): "(", ord(")"): ")", ord("\\"): "\\",
-}
+# string objects (ISO 32000-1 §7.3.4)
+_HEX_STRING_RE = re.compile(rb"<([0-9a-fA-F\s]*)>")
+_LITERAL_SPECIAL_RE = re.compile(rb"[\\()]")
+# after a backslash: 1-3 octal digits, an EOL (line continuation, dropped)
+# or any one byte; nothing at all for a backslash that ends the input
+_LITERAL_ESCAPE_RE = re.compile(rb"\\(?:([0-7]{1,3})|(\r\n?|.))?", re.DOTALL)
+_NAMED_ESCAPES = {b"n": b"\n", b"r": b"\r", b"t": b"\t", b"b": b"\b",
+                  b"f": b"\f", b"\n": b"", b"\r": b"", b"\r\n": b""}
 
 
-def _decode_pdf_string(raw: bytes) -> str:
-    """Decode a literal string body (without outer parens), WinAnsi≈latin-1."""
-    out: list[str] = []
-    i, n = 0, len(raw)
-    while i < n:
-        b = raw[i]
-        if b == 0x5C and i + 1 < n:  # backslash
-            nxt = raw[i + 1]
-            if nxt in _ESC:
-                out.append(_ESC[nxt])
-                i += 2
-                continue
-            if 0x30 <= nxt <= 0x37:  # octal
-                j = i + 1
-                oct_digits = []
-                while j < n and len(oct_digits) < 3 and 0x30 <= raw[j] <= 0x37:
-                    oct_digits.append(raw[j] - 0x30)
-                    j += 1
-                code = 0
-                for d in oct_digits:
-                    code = code * 8 + d
-                out.append(chr(code & 0xFF))
-                i = j
-                continue
-            if nxt in (0x0A, 0x0D):  # line continuation
-                i += 2
-                if nxt == 0x0D and i < n and raw[i] == 0x0A:
-                    i += 1
-                continue
-            out.append(chr(nxt))
-            i += 2
+def _string_at(body: bytes, i: int) -> tuple[bytes, int] | None:
+    """(bytes, end) of the hex `<..>` or literal `(..)` string object that
+    starts at body[i], or None if none does. A literal nests balanced
+    unescaped parentheses; an escape is a named one (\\n \\r \\t \\b \\f),
+    1-3 octal digits (high bits dropped) or a backslash-EOL continuation,
+    and any other escaped character stands for itself. A bare CR or CRLF
+    is kept byte for byte, where §7.3.4.2 would read it as LF. An
+    unterminated literal runs to the end of `body`."""
+    if body.startswith(b"<", i):
+        m = _HEX_STRING_RE.match(body, i)
+        if m is None:
+            return None
+        hx = re.sub(rb"\s", b"", m.group(1))
+        if len(hx) % 2:
+            hx += b"0"  # §7.3.4.3: odd final digit implies trailing 0
+        return bytes.fromhex(hx.decode("ascii")), m.end()
+    if not body.startswith(b"(", i):
+        return None
+    out = bytearray()
+    depth = 1
+    i += 1
+    while (m := _LITERAL_SPECIAL_RE.search(body, i)) is not None:
+        j = m.start()
+        out += body[i:j]
+        c = body[j]
+        if c == 0x5C:
+            em = _LITERAL_ESCAPE_RE.match(body, j)
+            if em.group(1):
+                out.append(int(em.group(1), 8) & 0xFF)
+            else:
+                ch = em.group(2) or b""
+                out += _NAMED_ESCAPES.get(ch, ch)
+            i = em.end()
             continue
-        out.append(chr(b))
-        i += 1
-    return "".join(out)
+        depth += 1 if c == 0x28 else -1
+        if not depth:
+            return bytes(out), j + 1
+        out.append(c)
+        i = j + 1
+    out += body[i:]
+    return bytes(out), len(body)
 
 
 @dataclass
@@ -184,11 +201,6 @@ def parse_tounicode(data: bytes) -> dict[int, str]:
 _FILTER_VAL_RE = re.compile(rb"/(?:Filter|F(?![A-Za-z]))\s*(\[[^\]]*\]|/\w+)")
 _DECODEPARMS_RE = re.compile(rb"/(?:DecodeParms|DP)\s*(\[.*?\]|<<.*?>>|null)",
                              re.DOTALL)
-_PARM_INT = {
-    k: re.compile(rb"/" + k + rb"\s+(-?\d+)")
-    for k in (b"Predictor", b"Colors", b"BitsPerComponent", b"Columns",
-              b"EarlyChange")
-}
 
 # short filter abbreviations are legal in inline images only, but some
 # writers leak them into stream dicts; accept both spellings
@@ -200,36 +212,41 @@ _SUPPORTED_FILTERS = {b"FlateDecode", b"LZWDecode", b"ASCIIHexDecode",
                       b"ASCII85Decode", b"RunLengthDecode"}
 
 
-def _parm_dicts(body: bytes) -> list[bytes]:
-    """The /DecodeParms value as a list of per-filter dict bodies (b'' for
-    null / absent slots) aligned with the filter chain."""
-    m = _DECODEPARMS_RE.search(body)
-    if not m:
+def _dict_int(body: bytes, key: bytes, default: int | None = None) -> int | None:
+    """The integer value of /key in a dict body, or `default`."""
+    m = re.search(rb"/" + key + rb"\s+(-?\d+)", body)
+    return int(m.group(1)) if m else default
+
+
+def _filter_chain(dict_part: bytes) -> list[tuple[bytes, bytes]]:
+    """(filter name, /DecodeParms dict body) per stage of a stream dict's
+    /Filter chain, in decode order; b'' stands for null or absent parms."""
+    fm = _FILTER_VAL_RE.search(dict_part)
+    if not fm:
         return []
-    v = m.group(1)
-    if v == b"null":
-        return []
-    if v.startswith(b"<<"):
-        return [v]
-    # array: split on '<<...>>' / 'null' items in order
-    return [g if g != b"null" else b""
-            for g in re.findall(rb"<<.*?>>|null", v, re.DOTALL)]
+    v = fm.group(1)
+    names = re.findall(rb"/(\w+)", v) if v.startswith(b"[") else [v[1:]]
+    pm = _DECODEPARMS_RE.search(dict_part)
+    pv = pm.group(1) if pm else b"null"
+    if pv.startswith(b"<<"):
+        parms = [pv]
+    else:  # array: '<<...>>' / 'null' items in order
+        parms = [g if g != b"null" else b""
+                 for g in re.findall(rb"<<.*?>>|null", pv, re.DOTALL)]
+    return [(name, parms[i] if i < len(parms) else b"")
+            for i, name in enumerate(names)]
 
 
 def _png_unpredict(data: bytes, parms: bytes) -> bytes:
     """Reverse PNG row predictors 10-15 (ISO 32000-1 §7.4.4.4 defers to the
     PNG spec) or TIFF predictor 2; predictor 1/absent is identity. Used for
     Flate/LZW streams whose /DecodeParms carry /Predictor."""
-    pm = _PARM_INT[b"Predictor"].search(parms)
-    pred = int(pm.group(1)) if pm else 1
+    pred = _dict_int(parms, b"Predictor", 1)
     if pred <= 1:
         return data
-    def _i(key: bytes, dflt: int) -> int:
-        m = _PARM_INT[key].search(parms)
-        return int(m.group(1)) if m else dflt
-    colors = _i(b"Colors", 1)
-    bpc = _i(b"BitsPerComponent", 8)
-    columns = _i(b"Columns", 1)
+    colors = _dict_int(parms, b"Colors", 1)
+    bpc = _dict_int(parms, b"BitsPerComponent", 8)
+    columns = _dict_int(parms, b"Columns", 1)
     bpp = max(1, (colors * bpc + 7) // 8)
     rowlen = (columns * colors * bpc + 7) // 8
     import numpy as np
@@ -271,8 +288,7 @@ def _apply_one_filter(name: bytes, data: bytes, parms: bytes) -> bytes:
         return _png_unpredict(data, parms)
     if name == b"LZWDecode":
         from docvision_spark.kernel.tiff_codec import _lzw_decode
-        em = _PARM_INT[b"EarlyChange"].search(parms)
-        early = (int(em.group(1)) if em else 1) != 0
+        early = _dict_int(parms, b"EarlyChange", 1) != 0
         data = _lzw_decode(data, 1 << 30, early=early)
         return _png_unpredict(data, parms)
     if name == b"ASCIIHexDecode":
@@ -318,29 +334,16 @@ def _load_stream(body: bytes, oid: int = 0, crypt: "_Crypt | None" = None) -> by
     sm = _STREAM_RE.search(body)
     if not sm:
         return b""
-    data = sm.group(1)
-    if crypt is not None:
-        try:
-            data = crypt.decrypt(oid, data)
-        except PdfEncryptedError:
-            raise  # first-stream pad failure: key-level, kills the doc
-        except ValueError:
-            return b""  # later per-stream pad failure: corrupt stream
-    dict_part = body[:sm.start()]
-    fm = _FILTER_VAL_RE.search(dict_part)
-    if not fm:
-        return data
-    v = fm.group(1)
-    names = re.findall(rb"/(\w+)", v) if v.startswith(b"[") else [v[1:]]
-    parms = _parm_dicts(dict_part)
-    for i, name in enumerate(names):
-        p = parms[i] if i < len(parms) else b""
-        try:
-            data = _apply_one_filter(name, data, p)
-        except PdfUnsupportedFilterError:
-            raise
-        except (ValueError, zlib.error):
-            return b""
+    data = _decrypted(crypt, oid, sm.group(1))
+    if data is None:
+        return b""
+    try:
+        for name, parms in _filter_chain(body[:sm.start()]):
+            data = _apply_one_filter(name, data, parms)
+    except PdfUnsupportedFilterError:
+        raise
+    except (ValueError, zlib.error):
+        return b""
     return data
 
 
@@ -350,109 +353,11 @@ _ENCRYPT_REF_RE = re.compile(rb"/Encrypt\s+(\d+)\s+\d+\s+R")
 _ID_RE = re.compile(rb"/ID\s*\[\s*(?=[<(])")
 
 
-def _string_at(body: bytes, i: int) -> bytes | None:
-    """Parse the PDF string object starting at body[i] — hex `<..>` or
-    literal `(..)` with full escape handling (same escape semantics as
-    _dict_string). Real-world PDFs write /ID both ways; the old hex-only
-    regex made literal-string IDs fall back to b'' and derive a wrong file
-    key (round-3 advice)."""
-    if i >= len(body):
-        return None
-    if body[i:i + 1] == b"<":
-        hm = re.match(rb"<([0-9a-fA-F\s]*)>", body[i:])
-        if not hm:
-            return None
-        hx = re.sub(rb"\s", b"", hm.group(1))
-        if len(hx) % 2:
-            hx += b"0"
-        return bytes.fromhex(hx.decode("ascii"))
-    if body[i:i + 1] != b"(":
-        return None
-    out = bytearray()
-    i += 1
-    n, depth = len(body), 1
-    esc = {ord("n"): 0x0A, ord("r"): 0x0D, ord("t"): 0x09,
-           ord("b"): 0x08, ord("f"): 0x0C,
-           ord("("): 0x28, ord(")"): 0x29, ord("\\"): 0x5C}
-    while i < n and depth:
-        b = body[i]
-        if b == 0x5C and i + 1 < n:
-            nxt = body[i + 1]
-            if nxt in esc:
-                out.append(esc[nxt])
-                i += 2
-                continue
-            if 0x30 <= nxt <= 0x37:
-                code, j = 0, i + 1
-                while j < n and j - i <= 3 and 0x30 <= body[j] <= 0x37:
-                    code = code * 8 + (body[j] - 0x30)
-                    j += 1
-                out.append(code & 0xFF)
-                i = j
-                continue
-            i += 2
-            continue
-        if b == 0x28:
-            depth += 1
-        elif b == 0x29:
-            depth -= 1
-            if not depth:
-                break
-        out.append(b)
-        i += 1
-    return bytes(out)
-_INT_FIELD = {
-    k: re.compile(rb"/" + k + rb"\s+(-?\d+)") for k in (b"V", b"R", b"P", b"Length")
-}
-
-
 def _dict_string(body: bytes, key: bytes) -> bytes | None:
-    """The raw bytes of a hex (<..>) or literal ((..)) string value for
-    /key in a dict body — enough escape handling for /O and /U."""
-    m = re.search(rb"/" + key + rb"\s*(\(|<)", body)
-    if not m:
-        return None
-    if m.group(1) == b"<":
-        hm = re.match(rb"([0-9a-fA-F\s]*)>", body[m.end():])
-        if not hm:
-            return None
-        hx = re.sub(rb"\s", b"", hm.group(1))
-        if len(hx) % 2:
-            hx += b"0"
-        return bytes.fromhex(hx.decode("ascii"))
-    out = bytearray()
-    i, n, depth = m.end(), len(body), 1
-    esc = {ord("n"): 0x0A, ord("r"): 0x0D, ord("t"): 0x09,
-           ord("b"): 0x08, ord("f"): 0x0C,
-           ord("("): 0x28, ord(")"): 0x29, ord("\\"): 0x5C}
-    while i < n and depth:
-        b = body[i]
-        if b == 0x5C and i + 1 < n:
-            nxt = body[i + 1]
-            if nxt in esc:
-                out.append(esc[nxt])
-                i += 2
-                continue
-            if 0x30 <= nxt <= 0x37:
-                code, j = 0, i + 1
-                while j < n and j - i <= 3 and 0x30 <= body[j] <= 0x37:
-                    code = code * 8 + (body[j] - 0x30)
-                    j += 1
-                out.append(code & 0xFF)
-                i = j
-                continue
-            out.append(nxt)
-            i += 2
-            continue
-        if b == 0x28:
-            depth += 1
-        elif b == 0x29:
-            depth -= 1
-            if not depth:
-                break
-        out.append(b)
-        i += 1
-    return bytes(out)
+    """The bytes of the string value of /key in a dict body, or None."""
+    m = re.search(rb"/" + key + rb"\s*[(<]", body)
+    s = _string_at(body, m.end() - 1) if m else None
+    return None if s is None else s[0]
 
 
 class _Crypt:
@@ -471,7 +376,9 @@ class _Crypt:
         self.n_ok = 0
         self.perms_ok = perms_ok
 
-    def decrypt(self, oid: int, data: bytes) -> bytes:
+    def decrypt(self, oid: int, data: bytes) -> bytes | None:
+        """`data` decrypted for object `oid`; None when this one stream
+        fails its pad check, PdfEncryptedError when the key does."""
         from docvision_spark.kernel import pdf_crypt
         try:
             if self.v5:
@@ -496,7 +403,14 @@ class _Crypt:
             # a document that yields no text at all (parse_pdf).
             if self.n_ok == 0 or not self.perms_ok:
                 raise PdfEncryptedError(f"decrypt failed: {e}") from e
-            raise ValueError(f"stream decrypt pad failure: {e}") from e
+            return None
+
+
+def _decrypted(crypt: _Crypt | None, oid: int, data: bytes) -> bytes | None:
+    """Stream bytes of object `oid` as stored, decrypted when the document
+    is; None when this one stream fails its pad check. A key-level failure
+    raises PdfEncryptedError."""
+    return data if crypt is None else crypt.decrypt(oid, data)
 
 
 def _build_crypt(payload: bytes, objs: dict[int, bytes]) -> _Crypt | None:
@@ -513,12 +427,8 @@ def _build_crypt(payload: bytes, objs: dict[int, bytes]) -> _Crypt | None:
         raise PdfEncryptedError("encrypt dict object missing")
     if not re.search(rb"/Filter\s*/Standard\b", body):
         raise PdfEncryptedError("non-standard security handler")
-    fields = {}
-    for k, rx in _INT_FIELD.items():
-        fm = rx.search(body)
-        fields[k] = int(fm.group(1)) if fm else None
-    v = fields[b"V"] or 0
-    r = fields[b"R"] or 2
+    v = _dict_int(body, b"V") or 0
+    r = _dict_int(body, b"R") or 2
     if v not in (1, 2, 4, 5):
         raise PdfEncryptedError(f"unsupported /V {v}")
     if v in (4, 5):
@@ -549,12 +459,12 @@ def _build_crypt(payload: bytes, objs: dict[int, bytes]) -> _Crypt | None:
         perms = _dict_string(body, b"Perms")
         return _Crypt(key, aes=True, v5=True, perms_ok=(
             perms is None or pdf_crypt.check_perms_v5(key, perms)))
-    n = (fields[b"Length"] or 40) // 8 if v != 1 else 5
+    n = (_dict_int(body, b"Length") or 40) // 8 if v != 1 else 5
     if v == 4:
         n = 16
     o = _dict_string(body, b"O")
     u = _dict_string(body, b"U")
-    p = fields[b"P"]
+    p = _dict_int(body, b"P")
     if o is None or u is None or p is None:
         raise PdfEncryptedError("incomplete encrypt dict")
     aes = v == 4 and b"/AESV2" in body
@@ -563,7 +473,7 @@ def _build_crypt(payload: bytes, objs: dict[int, bytes]) -> _Crypt | None:
     for im in _ID_RE.finditer(payload):  # last /ID wins (incremental updates)
         s = _string_at(payload, im.end())
         if s is not None:
-            id0 = s
+            id0 = s[0]
     key = pdf_crypt.check_user_password(b"", o, u, p, id0, n, r, enc_meta)
     if key is None:
         raise PdfEncryptedError("password required")
@@ -600,10 +510,6 @@ def _page_fonts(objs: dict[int, bytes], page_body: bytes,
     return out
 
 
-_OBJSTM_N_RE = re.compile(rb"/N\s+(\d+)")
-_OBJSTM_FIRST_RE = re.compile(rb"/First\s+(\d+)")
-
-
 def _expand_objstm(body: bytes, oid: int = 0,
                    crypt: _Crypt | None = None) -> dict[int, bytes]:
     """Parse one /Type /ObjStm body into {obj_id: obj_body} (PDF 1.5 §7.5.7):
@@ -612,14 +518,13 @@ def _expand_objstm(body: bytes, oid: int = 0,
     ObjStm stream itself is encrypted; the objects inside are NOT separately
     encrypted (spec §7.6.2). Stream extraction/decrypt/inflate is shared
     with every other stream via _load_stream."""
-    nm = _OBJSTM_N_RE.search(body)
-    fm = _OBJSTM_FIRST_RE.search(body)
-    if not (nm and fm):
+    n = _dict_int(body, b"N", -1)
+    first = _dict_int(body, b"First", -1)
+    if n < 0 or first < 0:
         return {}
     data = _load_stream(body, oid, crypt)
     if not data:
         return {}
-    n, first = int(nm.group(1)), int(fm.group(1))
     header = data[:first].split()
     if len(header) < 2 * n:
         return {}
@@ -653,6 +558,10 @@ def _parse_objects(payload: bytes) -> tuple[dict[int, bytes], _Crypt | None]:
     for oid, body in expanded.items():
         objs.setdefault(oid, body)
     return objs, crypt
+
+
+_RASTER_FILTERS = {b"CCITTFaxDecode", b"DCTDecode", b"JBIG2Decode",
+                   b"JPXDecode"}
 
 
 def pdf_image_xobjects(payload: bytes, max_images: int = 8) -> list:
@@ -700,44 +609,24 @@ def pdf_image_xobjects(payload: bytes, max_images: int = 8) -> list:
         is_jpx = b"/JPXDecode" in d
         if not (is_ccitt or is_dct or is_jbig2 or is_jpx):
             continue
-
-        def _i(key: bytes, dflt: int) -> int:
-            m = re.search(rb"/" + key + rb"\s+(-?\d+)", d)
-            return int(m.group(1)) if m else dflt
-
-        w, h, k = _i(b"Width", 0), _i(b"Height", 0), _i(b"K", 0)
-        cols = _i(b"Columns", 1728)
+        w, h = _dict_int(d, b"Width", 0), _dict_int(d, b"Height", 0)
+        k, cols = _dict_int(d, b"K", 0), _dict_int(d, b"Columns", 1728)
         if w <= 0 or h <= 0 or cols <= 0:
             continue
         balign = re.search(rb"/EncodedByteAlign\s+true", d) is not None
-        data = sm.group(1)
-        if crypt is not None:
-            try:
-                data = crypt.decrypt(oid, data)
-            except PdfEncryptedError:
-                raise
-            except ValueError:
-                continue  # per-stream pad corruption: skip this image
+        data = _decrypted(crypt, oid, sm.group(1))
+        if data is None:
+            continue  # per-stream pad corruption: skip this image
         # real scanners sometimes wrap the raster in transport filters,
         # e.g. [/FlateDecode /DCTDecode]: apply every filter BEFORE the
         # terminal raster filter through the text-side filter machinery
-        fm = _FILTER_VAL_RE.search(d)
-        if fm and fm.group(1).startswith(b"["):
-            names = re.findall(rb"/(\w+)", fm.group(1))
-            parms = _parm_dicts(d)
-            ok = True
-            for i, name in enumerate(names):
-                if name in (b"CCITTFaxDecode", b"DCTDecode",
-                            b"JBIG2Decode", b"JPXDecode"):
+        try:
+            for name, parms in _filter_chain(d):
+                if name in _RASTER_FILTERS:
                     break
-                try:
-                    data = _apply_one_filter(
-                        name, data, parms[i] if i < len(parms) else b"")
-                except (PdfUnsupportedFilterError, ValueError, zlib.error):
-                    ok = False
-                    break
-            if not ok:
-                continue  # undecodable transport filter: skip this image
+                data = _apply_one_filter(name, data, parms)
+        except (ValueError, zlib.error):
+            continue  # undecodable transport filter: skip this image
         if is_ccitt:
             try:
                 bm = ccitt_codec.g3_decode(data, cols, rows=h, k=k,
@@ -748,20 +637,10 @@ def pdf_image_xobjects(payload: bytes, max_images: int = 8) -> list:
         elif is_jbig2:
             from docvision_spark.kernel.jbig2_codec import (Jbig2Error,
                                                             decode_jbig2)
-            gdata = b""
             gm = re.search(rb"/JBIG2Globals\s+(\d+)\s+\d+\s+R", d)
-            if gm and int(gm.group(1)) in objs:
-                gid = int(gm.group(1))
-                gsm = _STREAM_RE.search(objs[gid])
-                if gsm:
-                    gdata = gsm.group(1)
-                    if crypt is not None:
-                        try:
-                            gdata = crypt.decrypt(gid, gdata)
-                        except PdfEncryptedError:
-                            raise
-                        except ValueError:
-                            gdata = b""
+            gid = int(gm.group(1)) if gm else -1
+            gsm = _STREAM_RE.search(objs.get(gid, b""))
+            gdata = (_decrypted(crypt, gid, gsm.group(1)) if gsm else None) or b""
             try:
                 bm = decode_jbig2(data, gdata)
             except Jbig2Error:
@@ -861,14 +740,15 @@ def _runs_from_stream(data: bytes, fonts: dict | None = None) -> list[Run]:
 
     stack: list[object] = []  # operand stack (numbers / strings / arrays)
     arr: list[object] | None = None
-    for m in _CS_TOKEN_RE.finditer(data):
+    pos = 0
+    while (m := _CS_TOKEN_RE.search(data, pos)) is not None:
+        pos = m.end()
         if m.group("str") is not None:
-            val: object = _decode_pdf_string(m.group("str")[1:-1])
-        elif m.group("hex") is not None:
-            hx = re.sub(rb"\s", b"", m.group("hex")[1:-1])
-            if len(hx) % 2:
-                hx += b"0"
-            val = bytes.fromhex(hx.decode("ascii")).decode("latin-1")
+            s = _string_at(data, m.start())
+            if s is None:
+                continue  # a '<' that opens no hex string (e.g. '<<')
+            val: object = s[0].decode("latin-1")
+            pos = s[1]
         elif m.group("num") is not None:
             val = float(m.group("num"))
         elif m.group("arr") is not None:

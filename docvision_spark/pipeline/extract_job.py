@@ -185,27 +185,32 @@ def extract_pages(pages: DataFrame, partitions: int | None = None) -> DataFrame:
         prepared = pages.sortWithinPartitions(
             F.octet_length("html").desc())
         return map_in_pandas(prepared, _extract_batches, OUTPUT_SCHEMA)
+    # packing: descending size within partition -> the byte-budget
+    # re-chunker in _extract_batches sees big docs first and emits
+    # near-constant-byte units; also avoids a giant doc landing at the
+    # tail of an otherwise-finished partition
+    prepared = salted_spread(pages, partitions).sortWithinPartitions(
+        F.octet_length("html").desc())
+    return map_in_pandas(prepared, _extract_batches, OUTPUT_SCHEMA)
+
+
+def salted_spread(pages: DataFrame, partitions: int | None = None) -> DataFrame:
+    """Repartition pages by (host, crc32(url) mod N_SALT). A hot host
+    spreads across N_SALT partitions while every other host keeps its
+    locality (north rule: salted repartition of skewed hosts; AQE cannot
+    rebalance a map-only python stage by value). `partitions` defaults to
+    2x total cores: enough slack to level stragglers (giant docs, hot-host
+    salt keys) while each task still amortizes its worker handoff over
+    many Arrow batches."""
     if partitions is None:
-        # 2x total cores: enough slack to level stragglers (giant docs,
-        # hot-host salt keys) while each task still amortizes its worker
-        # handoff over many Arrow batches.
-        partitions = 2 * default_parallelism
-    prepared = (
+        partitions = 2 * pages.sparkSession.sparkContext.defaultParallelism
+    return (
         pages
-        # skew: spread the hot host across N_SALT partitions while keeping
-        # host locality for everyone else (north rule: salted repartition of
-        # skewed hosts; AQE cannot rebalance a map-only python stage by value)
         .withColumn("host", F.parse_url(F.col("url"), F.lit("HOST")))
         .withColumn("salt", F.pmod(F.crc32(F.col("url")), F.lit(N_SALT)))
         .repartition(partitions, F.col("host"), F.col("salt"))
-        # packing: descending size within partition -> the byte-budget
-        # re-chunker in _extract_batches sees big docs first and emits
-        # near-constant-byte units; also avoids a giant doc landing at the
-        # tail of an otherwise-finished partition
-        .sortWithinPartitions(F.octet_length("html").desc())
         .drop("host", "salt")
     )
-    return map_in_pandas(prepared, _extract_batches, OUTPUT_SCHEMA)
 
 
 def page_rows(

@@ -19,14 +19,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from docvision_spark.functions.dedup import let_
+
 
 def validation_flags(out: DataFrame) -> DataFrame:
     """Attach boolean v1..v5 columns + an overall `valid` column."""
     ok = F.col("error").isNull()
     v1 = ~ok | (F.length(F.trim("text")) > 0)
-    v2 = ~ok | ~F.exists(
-        "spans", lambda s: (s["start"] < 0) | (s["end"] > F.length("text"))
-                           | (s["start"] > s["end"]))
+    # length(text) is bound once: inside the lambda it would be recounted
+    # for every span (higher-order functions get no subexpression reuse)
+    v2 = ~ok | ~let_(F.length("text"), lambda n: F.exists(
+        "spans", lambda s: (s["start"] < 0) | (s["end"] > n)
+                           | (s["start"] > s["end"])))
     # ordered + non-overlapping: left fold carrying the previous span end;
     # any span starting before it poisons the accumulator to NULL
     fold = F.aggregate(

@@ -26,7 +26,8 @@ from pyspark.sql.types import (
     BinaryType, StringType, StructField, StructType, TimestampType,
 )
 
-from docvision_spark.pipeline.extract_job import N_SALT, OUTPUT_SCHEMA, _extract_batches
+from docvision_spark.pipeline.extract_job import (OUTPUT_SCHEMA, _extract_batches,
+                                                  salted_spread)
 from docvision_spark.pipeline.shipping import map_in_pandas
 
 PAGES_SCHEMA = StructType([
@@ -49,16 +50,7 @@ def read_pages_stream(spark: SparkSession, pages_dir: str,
 
 def extract_stream(pages: DataFrame, partitions: int | None = None) -> DataFrame:
     """Stateless streaming extraction — same kernel, same output schema."""
-    spark = pages.sparkSession
-    if partitions is None:
-        partitions = 2 * spark.sparkContext.defaultParallelism
-    prepared = (
-        pages.select("url", "html", "lang")
-        .withColumn("host", F.parse_url(F.col("url"), F.lit("HOST")))
-        .withColumn("salt", F.pmod(F.crc32(F.col("url")), F.lit(N_SALT)))
-        .repartition(partitions, F.col("host"), F.col("salt"))
-        .drop("host", "salt")
-    )
+    prepared = salted_spread(pages.select("url", "html", "lang"), partitions)
     return map_in_pandas(prepared, _extract_batches, OUTPUT_SCHEMA)
 
 

@@ -217,6 +217,16 @@ def test_cjk_tokenization(spark):
     assert toks == ["spark", "处", "理", "数", "据", "pipeline"]
 
 
+def test_stopword_lists_are_disjoint():
+    """with_quality counts stopword hits with one filter over the union of
+    the per-language lists; that equals the per-language sum its SQL twin
+    computes only while no word is listed by two languages."""
+    from docvision_spark.functions.text import LANG_STOPWORDS
+
+    words = [w for ws in LANG_STOPWORDS.values() for w in ws]
+    assert len(words) == len(set(words)) == 50
+
+
 @pytest.mark.spark
 def test_cjk_minhash_near_dup(spark):
     """Planted zh near-dups are found by the minhash path (char-granular

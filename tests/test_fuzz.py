@@ -145,6 +145,75 @@ def test_pdf_filter_decode_total(data, filt):
     assert isinstance(out, bytes)
 
 
+@st.composite
+def pdf_string_spellings(draw):
+    """Random bytes plus a literal and a hex spelling of them (ISO 32000-1
+    §7.3.4): the literal mixes plain bytes, 1-3 digit octal, the named
+    escapes, unknown escapes, backslash-EOL continuations and unescaped
+    balanced parentheses; the hex form has whitespace, mixed case and, when
+    the last nibble is 0, an odd final digit."""
+    # bias toward the bytes the literal syntax gives meaning to
+    raw = bytes(draw(st.lists(st.one_of(
+        st.integers(0, 255), st.sampled_from(b"()\\\r\n07nq")), max_size=40)))
+    if draw(st.booleans()):
+        raw += bytes([draw(st.integers(0, 15)) << 4])
+    # pair parentheses like a bracket matcher: any subset of the pairs may
+    # stay bare and the literal still balances
+    bare, opened = set(), []
+    for i, x in enumerate(raw):
+        if x == 0x28:
+            opened.append(i)
+        elif x == 0x29 and opened:
+            j = opened.pop()
+            if draw(st.booleans()):
+                bare |= {i, j}
+    named = {0x0A: b"n", 0x0D: b"r", 0x09: b"t", 0x08: b"b", 0x0C: b"f",
+             0x28: b"(", 0x29: b")", 0x5C: b"\\"}
+    pieces = []
+    for i, x in enumerate(raw):
+        how = draw(st.sampled_from(["plain", "octal", "escape"]))
+        if i in bare or (how == "plain" and x not in b"()\\\r\n"):
+            pieces.append(bytes([x]))
+        elif x in named and how != "octal":
+            pieces.append(b"\\" + named[x])
+        elif how == "octal" or x in b"01234567nrtbf":
+            digits = draw(st.integers(len("%o" % x), 3))
+            pieces.append(b"\\" + ("%0*o" % (digits, x)).encode())
+        else:  # no escape meaning: the backslash is dropped
+            pieces.append(b"\\" + bytes([x]))
+    for k in range(len(pieces) - 1):
+        # an octal escape shorter than 3 digits must not run into a digit
+        if (b"0" <= pieces[k][1:2] <= b"7"
+                and b"0" <= pieces[k + 1][:1] <= b"7"):
+            pieces[k] = b"\\" + ("%03o" % int(pieces[k][1:], 8)).encode()
+    pieces = [(b"\\" + draw(st.sampled_from([b"\n", b"\r", b"\r\n"]))
+               if draw(st.integers(0, 5)) == 0 else b"") + p for p in pieces]
+    literal = b"(" + b"".join(pieces) + b")"
+    hx = raw.hex()
+    if hx.endswith("0") and draw(st.booleans()):
+        hx = hx[:-1]
+    hex_form = b"<" + b"".join(
+        draw(st.sampled_from([b"", b" ", b"\n", b"\r\n\t"]))
+        + (c.upper() if draw(st.booleans()) else c).encode()
+        for c in hx) + b">"
+    return raw, literal, hex_form
+
+
+@settings(max_examples=300, deadline=None)
+@given(spelled=pdf_string_spellings())
+def test_pdf_string_spellings_agree(spelled):
+    """One parser reads every spelling of a string to the same bytes, and a
+    content stream shows them with Tj as their latin-1 text."""
+    from docvision_spark.kernel.pdf_text import _runs_from_stream, _string_at
+
+    raw, literal, hex_form = spelled
+    assert _string_at(literal, 0) == (raw, len(literal)), literal
+    assert _string_at(hex_form, 0) == (raw, len(hex_form)), hex_form
+    for s in (literal, hex_form):
+        runs = _runs_from_stream(b"BT /F1 12 Tf 72 700 Td " + s + b" Tj ET")
+        assert [r.text for r in runs] == [raw.decode("latin-1")], s
+
+
 @settings(max_examples=150, deadline=None)
 @given(data=st.binary(max_size=600))
 def test_vp8l_decode_total_on_garbage(data):

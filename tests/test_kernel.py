@@ -228,10 +228,31 @@ def test_pdf_parse():
 
 
 def test_pdf_string_escapes():
-    from docvision_spark.kernel.pdf_text import _decode_pdf_string
-    assert _decode_pdf_string(rb"a\(b\)c\\d") == "a(b)c\\d"
-    assert _decode_pdf_string(rb"\101\102") == "AB"
-    assert _decode_pdf_string(rb"x\ny") == "x\ny"
+    from docvision_spark.kernel.pdf_text import _string_at
+    assert _string_at(rb"(a\(b\)c\\d)", 0) == (b"a(b)c\\d", 12)
+    assert _string_at(rb"(\101\102)", 0) == (b"AB", 10)
+    assert _string_at(rb"(x\ny)", 0) == (b"x\ny", 6)
+    # unknown escape keeps its character; backslash-EOL continues the line
+    assert _string_at(rb"(a\qb)", 0) == (b"aqb", 6)
+    for eol in (b"\n", b"\r", b"\r\n"):
+        assert _string_at(b"(a\\" + eol + b"b)", 0)[0] == b"ab"
+    # at most 3 octal digits; balanced parentheses need no escape
+    assert _string_at(rb"(\0053(p(q)r))", 0)[0] == b"\x053(p(q)r)"
+    assert _string_at(b"x<4 1 4>", 1) == (b"A@", 8)  # odd digit: trailing 0
+    assert _string_at(b"<<", 0) is None
+
+
+def test_pdf_nested_parens_in_content_stream():
+    """Unescaped balanced parentheses are legal inside a literal string
+    (ISO 32000-1 §7.3.4.2); the shown text keeps them."""
+    from docvision_spark.kernel.pdf_text import _runs_from_stream
+
+    def shown(cs: bytes) -> list[str]:
+        return [r.text for r in _runs_from_stream(cs)]
+
+    assert shown(b"BT /F1 12 Tf (p(q)r) Tj ET") == ["p(q)r"]
+    assert shown(b"BT [(Hello) -200 (W(or)ld)] TJ ET") == ["Hello W(or)ld"]
+    assert shown(b"BT <</MCID 0>> BDC <48 69> Tj EMC ET") == ["Hi"]
 
 
 def test_pdf15_layout_parity():

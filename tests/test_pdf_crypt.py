@@ -166,7 +166,9 @@ def test_cbc_decrypt_garbage_is_safe():
 def test_literal_string_id_decrypts():
     """/ID written as literal strings [(..)(..)] — common in real PDFs —
     must derive the same file key as the hex form; the old hex-only regex
-    fell back to id0=b'' and misclassified the doc as pdf_encrypted."""
+    fell back to id0=b'' and misclassified the doc as pdf_encrypted. The
+    escapes follow ISO 32000-1 §7.3.4.2 there and in /O: an unknown escape
+    stands for its character, a backslash-EOL adds nothing."""
     import random
     import re
 
@@ -191,13 +193,33 @@ def test_literal_string_id_decrypts():
                 out += ("\\%03o" % x).encode()
         return bytes(out + b")")
 
-    pdf_lit = pdf.replace(m.group(0),
-                          b"/ID [" + lit(id0) + b" " + lit(id0) + b"]")
-    assert pdf_lit != pdf
-    r_hex, r_lit = extract(url, pdf), extract(url, pdf_lit)
+    def lit_unknown(b: bytes) -> bytes:
+        # every byte that has no escape meaning is written as `\<byte>`
+        out = bytearray(b"(")
+        for x in b:
+            if x in b"nrtbf01234567\r\n":
+                out += ("\\%03o" % x).encode()
+            else:
+                out += b"\\" + bytes([x])
+        return bytes(out + b")")
+
+    om = re.search(rb"/O <([0-9a-f]+)>", pdf)
+    o = bytes.fromhex(om.group(1).decode())
+    o_split = lit(o[:8])[:-1] + b"\\\n" + lit(o[8:])[1:]
+    variants = {
+        "literal /ID": pdf.replace(
+            m.group(0), b"/ID [" + lit(id0) + b" " + lit(id0) + b"]"),
+        "unknown-escape /ID": pdf.replace(
+            m.group(0), b"/ID [" + lit_unknown(id0) + b" <00>]"),
+        "continued /O": pdf.replace(om.group(0), b"/O " + o_split),
+    }
+    r_hex = extract(url, pdf)
     assert r_hex.error is None and r_hex.text
-    assert r_lit.error is None, f"literal /ID misread: {r_lit.error}"
-    assert r_lit.text == r_hex.text
+    for what, pdf_lit in variants.items():
+        assert pdf_lit != pdf, what
+        r_lit = extract(url, pdf_lit)
+        assert r_lit.error is None, f"{what} misread: {r_lit.error}"
+        assert r_lit.text == r_hex.text, what
 
 
 def test_wrong_key_bad_padding_is_typed_error():
