@@ -11,10 +11,13 @@ host is boilerplate, whatever its density.
 Scale shape (100 TB): one explode over lines, one dropDuplicates shuffle on
 (host, line, url), one partial-aggregated count per (host, line) — all keys
 are host-prefixed so the hot-host skew fixture spreads over (host, line)
-buckets, far finer than host alone. The strip joins the small frequent-line
-set back; at real scale that side is tiny relative to the corpus (template
-lines per host are bounded) and the join key (host, line) is again fine-
-grained. No driver-side collection anywhere.
+buckets, far finer than host alone. The strip semi-joins those deduplicated
+lines to the small frequent-line set, collects only the matched lines per
+url and joins them back by url; each document's own line array is filtered
+in the row, never exploded and regrouped. Over an uncached input AQE runs
+the census's explode + dedup exchange once for both uses, so the input is
+read on two plan branches; above a cached relation Spark reuses no
+exchange, and it is read on three. No driver-side collection anywhere.
 
 Reference parity note: the reference has no corpus-level operator at all
 (per-document VLM calls, src/docvision/core/parser.py); this is part of the
@@ -25,7 +28,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-HOST_RE = r"^[a-z]+://([^/:?#]+)"  # same spec as x03's oracle host regex
+# the one Spark-side host regex; the DuckDB oracles spell the SAME pattern
+# (Java regex and RE2 agree on every construct it uses)
+HOST_RE = r"^[a-z]+://([^/:?#]+)"
 
 
 def with_host(df: DataFrame, url_col: str = "url") -> DataFrame:
@@ -38,9 +43,12 @@ def with_host(df: DataFrame, url_col: str = "url") -> DataFrame:
 def _doc_lines(df: DataFrame, url_col: str, text_col: str,
                min_chars: int) -> DataFrame:
     """(host, url, line) with one row per DISTINCT line per document —
-    a line repeated inside one doc still counts that doc once."""
+    a line repeated inside one doc still counts that doc once. A null-url
+    row is no document of any host and gives no lines (the explicit filter
+    also makes the strip's two uses of this frame plan the same exchange,
+    so AQE can reuse it)."""
     return (
-        with_host(df, url_col)
+        with_host(df.filter(F.col(url_col).isNotNull()), url_col)
         .select("host", F.col(url_col).alias("url"),
                 F.explode(F.split(F.col(text_col), "\n")).alias("line"))
         .filter(F.length(F.trim("line")) >= min_chars)
@@ -72,51 +80,31 @@ def strip_frequent_lines(df: DataFrame, url_col: str = "url",
     with no line surviving keep an empty string (callers' empty-content
     filter then drops them); null-url and null-text rows pass through
     untouched (silently clearing them would hide upstream corruption).
-    Implemented as posexplode -> left_anti join against the frequent-line
-    set on (host, line) -> ordered reassembly; deterministic under any
-    partitioning.
 
-    PRECONDITION: `url_col` must be unique per row (run url_dedup/exact
-    dedup first, as jobs/curate.py does). Two rows sharing a url would have
-    their exploded lines merged by the reassembly groupBy and both rows
-    would receive the interleaved mixture."""
+    Only the frequent lines move: each doc's lines that the census marks
+    frequent are collected per url as `_hits`, joined back by url and
+    filtered out of the row's own line array, so line order needs no
+    positions or sort. Rows sharing a url share a host, so every entry of
+    their merged `_hits` is frequent for each of them and each row still
+    loses exactly its own frequent lines."""
     freq = host_frequent_lines(df, url_col, text_col, min_docs, min_chars)
-    exploded = (
-        with_host(df, url_col)
-        .select("host", F.col(url_col).alias("url"),
-                F.posexplode(F.split(F.col(text_col), "\n"))
-                 .alias("pos", "line"))
+    hits = (
+        _doc_lines(df, url_col, text_col, min_chars)
+        .join(freq.select("host", "line"), ["host", "line"], "left_semi")
+        .groupBy("url")
+        .agg(F.collect_list("line").alias("_hits"))
     )
-    kept = exploded.join(freq.select("host", "line"), ["host", "line"],
-                         "left_anti")
-    rebuilt = (
-        kept.groupBy("url")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "line"))),
-                    lambda s: s["line"]),
-                "\n").alias("_clean"),
-            F.count(F.lit(1)).alias("_n_kept"),
-        )
-    )
-    n_lines = F.size(F.split(F.col(text_col), "\n"))
+    lines = F.split(F.col(text_col), "\n")
+    kept = F.filter(lines, lambda ln: ~F.array_contains(F.col("_hits"), ln))
+    hit = F.col("_hits").isNotNull()
     return (
-        df.withColumn("_n_lines", n_lines)
-          .join(rebuilt, on=df[url_col] == rebuilt["url"], how="left")
-          .drop(rebuilt["url"])
-          # null-url / null-text rows pass through untouched (the rebuilt
-          # join can never match them — clearing their text would silently
-          # drop them downstream); a doc whose EVERY line was frequent has
-          # no rebuilt row and becomes empty (not silently restored)
-          .withColumn("_passthru", F.col(url_col).isNull()
-                      | F.col("_n_lines").isNull())
-          .withColumn(text_col,
-                      F.when(F.col("_passthru"), F.col(text_col))
-                       .otherwise(F.coalesce("_clean", F.lit(""))))
+        df.join(hits, on=df[url_col] == hits["url"], how="left")
+          .drop(hits["url"])
           .withColumn("n_stripped_lines",
-                      F.when(F.col("_passthru"), F.lit(0))
-                       .otherwise(F.col("_n_lines")
-                                  - F.coalesce("_n_kept", F.lit(0))))
-          .drop("_clean", "_n_kept", "_n_lines", "_passthru")
+                      F.when(hit, (F.size(lines) - F.size(kept)).cast("long"))
+                       .otherwise(F.lit(0)))
+          .withColumn(text_col,
+                      F.when(hit, F.array_join(kept, "\n"))
+                       .otherwise(F.col(text_col)))
+          .drop("_hits")
     )

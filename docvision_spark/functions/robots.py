@@ -35,6 +35,8 @@ from pyspark.sql.types import (
     ArrayType, BooleanType, IntegerType, StringType, StructField, StructType,
 )
 
+from docvision_spark.functions.boilerplate import HOST_RE
+
 RULES_SCHEMA = StructType([
     StructField("host", StringType()),
     StructField("agent", StringType()),     # lowercased user-agent token
@@ -167,7 +169,7 @@ def crawl_allowed(urls: DataFrame, rules: DataFrame,
     per_host = rules.groupBy("host").agg(
         F.collect_list(F.struct("length", "allow", "regex")).alias("_rules"))
     u = (urls.withColumn("_host",
-                         F.regexp_extract(url_col, r"^[a-z]+://([^/:?#]+)", 1))
+                         F.regexp_extract(url_col, HOST_RE, 1))
              .withColumn("_path",
                          F.coalesce(
                              F.nullif(F.regexp_extract(

@@ -60,7 +60,8 @@ _CS_TOKEN_RE = re.compile(
 
 # string objects (ISO 32000-1 §7.3.4)
 _HEX_STRING_RE = re.compile(rb"<([0-9a-fA-F\s]*)>")
-_LITERAL_SPECIAL_RE = re.compile(rb"[\\()]")
+# CR is special too: a bare CR or CRLF inside a literal reads as one LF
+_LITERAL_SPECIAL_RE = re.compile(rb"[\\()\r]")
 # after a backslash: 1-3 octal digits, an EOL (line continuation, dropped)
 # or any one byte; nothing at all for a backslash that ends the input
 _LITERAL_ESCAPE_RE = re.compile(rb"\\(?:([0-7]{1,3})|(\r\n?|.))?", re.DOTALL)
@@ -74,8 +75,8 @@ def _string_at(body: bytes, i: int) -> tuple[bytes, int] | None:
     unescaped parentheses; an escape is a named one (\\n \\r \\t \\b \\f),
     1-3 octal digits (high bits dropped) or a backslash-EOL continuation,
     and any other escaped character stands for itself. A bare CR or CRLF
-    is kept byte for byte, where §7.3.4.2 would read it as LF. An
-    unterminated literal runs to the end of `body`."""
+    reads as one LF (§7.3.4.2). An unterminated literal runs to the end of
+    `body`."""
     if body.startswith(b"<", i):
         m = _HEX_STRING_RE.match(body, i)
         if m is None:
@@ -101,6 +102,10 @@ def _string_at(body: bytes, i: int) -> tuple[bytes, int] | None:
                 ch = em.group(2) or b""
                 out += _NAMED_ESCAPES.get(ch, ch)
             i = em.end()
+            continue
+        if c == 0x0D:
+            out.append(0x0A)
+            i = j + 2 if body.startswith(b"\n", j + 1) else j + 1
             continue
         depth += 1 if c == 0x28 else -1
         if not depth:
@@ -724,7 +729,8 @@ def _runs_from_stream(data: bytes, fonts: dict | None = None) -> list[Run]:
     strings shown under a cmap font decode as 2-byte big-endian codes."""
     fonts = fonts or {}
     runs: list[Run] = []
-    size = 12.0
+    font_size = size = 12.0  # size = Tf size x text-matrix scale
+    scale = 1.0
     leading = 14.0
     x = y = 0.0
     line_x = line_y = 0.0
@@ -765,8 +771,9 @@ def _runs_from_stream(data: bytes, fonts: dict | None = None) -> list[Run]:
             op = m.group("op")
             if op == b"Tf":
                 if stack and isinstance(stack[-1], float):
-                    size = stack[-1]
-                    leading = size * 1.2
+                    font_size = stack[-1]
+                    size = font_size * scale
+                    leading = font_size * 1.2
                 if (len(stack) >= 2 and isinstance(stack[-2], str)
                         and stack[-2].startswith("/")):
                     cmap = fonts.get(stack[-2])
@@ -780,11 +787,11 @@ def _runs_from_stream(data: bytes, fonts: dict | None = None) -> list[Run]:
             elif op == b"Tm":
                 if len(stack) >= 6:
                     try:
-                        a, _b, _c, d, e, f = (float(v) for v in stack[-6:])
-                        size_scale = abs(d) if abs(d) > 0 else 1.0
+                        _a, _b, _c, d, e, f = (float(v) for v in stack[-6:])
+                        scale = abs(d) or 1.0
+                        size = font_size * scale
                         line_x, line_y = e, f
                         x, y = e, f
-                        _ = a, size_scale
                     except (TypeError, ValueError):
                         pass
             elif op == b"TL":

@@ -21,6 +21,7 @@ import os
 import shutil
 import time
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -108,13 +109,16 @@ def _collect_files(root: str) -> list[str]:
     return sorted(out)
 
 
-def commit(table_dir: str, staging: str, data_dir: str, row_count: int) -> str:
-    """Move staged files into data/ and atomically publish a new snapshot.
+def _publish(table_dir: str, staging: str, data_dir: str,
+             build: Callable[[dict | None, str, list[str]], dict]) -> str:
+    """Move staged files into data/ and atomically publish the manifest
+    `build(prev, snapshot_id, moved)` returns, then its history entry.
 
     The data-file moves happen OUTSIDE the commit lock (they are keyed by a
     fresh snapshot id, so they can't collide with a concurrent writer); only
-    the manifest read-modify-write is serialized, so a concurrent append and
-    compact() each land with the other's files carried over."""
+    the manifest read-modify-write is serialized, and `build` runs inside
+    it, so a concurrent append and compact() each land with the other's
+    files carried over."""
     snapshot_id = uuid.uuid4().hex[:16]
     moved: list[str] = []
     for rel in _collect_files(staging):
@@ -129,15 +133,7 @@ def commit(table_dir: str, staging: str, data_dir: str, row_count: int) -> str:
     shutil.rmtree(staging, ignore_errors=True)
 
     with _commit_lock(table_dir):
-        prev = read_manifest(table_dir)
-        manifest = {
-            "snapshot_id": snapshot_id,
-            "parent_id": prev["snapshot_id"] if prev else None,
-            "sequence": (prev["sequence"] + 1) if prev else 0,
-            "committed_at": time.time(),
-            "row_count_delta": row_count,
-            "files": (prev["files"] if prev else []) + moved,
-        }
+        manifest = build(read_manifest(table_dir), snapshot_id, moved)
         _write_json_atomic(_manifest_path(table_dir), manifest)  # publish
         # immutable per-snapshot manifest (Iceberg metadata-log analogue) —
         # written AFTER the pointer flip: a crash in between must never
@@ -153,6 +149,22 @@ def commit(table_dir: str, staging: str, data_dir: str, row_count: int) -> str:
                          f"{manifest['sequence']:06d}-{snapshot_id}.json"),
             manifest)
     return snapshot_id
+
+
+def commit(table_dir: str, staging: str, data_dir: str, row_count: int) -> str:
+    """Move staged files into data/ and atomically publish a new snapshot
+    that appends them to the current file list."""
+    def build(prev, snapshot_id, moved):
+        return {
+            "snapshot_id": snapshot_id,
+            "parent_id": prev["snapshot_id"] if prev else None,
+            "sequence": (prev["sequence"] + 1) if prev else 0,
+            "committed_at": time.time(),
+            "row_count_delta": row_count,
+            "files": (prev["files"] if prev else []) + moved,
+        }
+
+    return _publish(table_dir, staging, data_dir, build)
 
 
 def committed_urls(spark: SparkSession, table_dir: str) -> DataFrame | None:
@@ -228,21 +240,10 @@ def commit_replace(table_dir: str, staging: str, data_dir: str,
     primitive for compaction (Iceberg rewrite_data_files analogue). The
     replaced files stay on disk: older snapshots still reference them for
     time travel until expire_snapshots() reclaims them."""
-    snapshot_id = uuid.uuid4().hex[:16]
-    moved: list[str] = []
-    for rel in _collect_files(staging):
-        d, fn = os.path.split(rel)
-        dst_rel = os.path.join(d, f"{snapshot_id}-{fn}")
-        dst = os.path.join(data_dir, dst_rel)
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        shutil.move(os.path.join(staging, rel), dst)
-        moved.append(dst_rel)
-    shutil.rmtree(staging, ignore_errors=True)
-    with _commit_lock(table_dir):
+    def build(prev, snapshot_id, moved):
         # prev is read INSIDE the lock: a concurrent append between
         # compact()'s planning scan and this commit adds files that must
         # carry over into `kept` (they were not among the rewritten ones).
-        prev = read_manifest(table_dir)
         if prev is None:
             raise ValueError("commit_replace on a table with no snapshot")
         missing = set(replaced) - set(prev["files"])
@@ -250,7 +251,7 @@ def commit_replace(table_dir: str, staging: str, data_dir: str,
             raise ValueError(
                 f"replace of files not in current snapshot: {missing}")
         kept = [f for f in prev["files"] if f not in set(replaced)]
-        manifest = {
+        return {
             "snapshot_id": snapshot_id,
             "parent_id": prev["snapshot_id"],
             "sequence": prev["sequence"] + 1,
@@ -260,14 +261,8 @@ def commit_replace(table_dir: str, staging: str, data_dir: str,
             "replaced_files": sorted(replaced),
             "files": kept + moved,
         }
-        _write_json_atomic(_manifest_path(table_dir), manifest)
-        log_dir = os.path.join(table_dir, "snapshots")
-        os.makedirs(log_dir, exist_ok=True)
-        _write_json_atomic(
-            os.path.join(log_dir,
-                         f"{manifest['sequence']:06d}-{snapshot_id}.json"),
-            manifest)
-    return snapshot_id
+
+    return _publish(table_dir, staging, data_dir, build)
 
 
 def compact(spark: SparkSession, table_dir: str,

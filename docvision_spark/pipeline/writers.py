@@ -15,35 +15,31 @@ A1 page assembly  (core/parser.py:308-322): gather per-page rows, order by
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _document_md(pages: F.Column, page_col: str, text_col: str) -> F.Column:
+    """Byte parity with the reference markdown writer (core/parser.py:536-546):
+    each page is '<!-- page N -->' + ONE newline + content; pages separated
+    by '\n\n---\n\n'."""
+    return F.concat_ws(
+        "\n\n---\n\n",
+        F.transform(pages, lambda p: F.concat(
+            F.lit("<!-- page "), p[page_col].cast("string"),
+            F.lit(" -->\n"), p[text_col])),
+    ).alias("document_md")
+
+
 def assemble_pages(df: DataFrame, key: str = "url",
                    page_col: str = "page_no", text_col: str = "markdown") -> DataFrame:
-    """A1: one row per document with pages ordered by page number.
-
-    Byte parity with the reference markdown writer (core/parser.py:536-546):
-    each page is '<!-- page N -->' + ONE newline + content; pages separated
-    by '\\n\\n---\\n\\n'."""
+    """A1: one row per document from separate page rows, pages ordered by
+    page number."""
     return (
         df.groupBy(key)
           .agg(F.array_sort(F.collect_list(F.struct(page_col, text_col))).alias("pages"))
-          .select(
-              key,
-              F.size("pages").alias("n_pages"),
-              F.concat_ws(
-                  "\n\n---\n\n",
-                  F.transform(
-                      "pages",
-                      lambda p: F.concat(
-                          F.lit("<!-- page "), p[page_col].cast("string"),
-                          F.lit(" -->\n"), p[text_col]),
-                  ),
-              ).alias("document_md"),
-          )
+          .select(key, F.size("pages").alias("n_pages"),
+                  _document_md(F.col("pages"), page_col, text_col))
     )
 
 
@@ -67,14 +63,17 @@ def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
 
 
 def write_markdown_parts(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """K3: one markdown 'file' per document as (url, document_md) parquet —
-    at 10^12 docs a file-per-document sink is an anti-pattern; consumers
-    slice by bucket. df must have url + the nested `pages` column (real
-    per-page rows; multi-page PDFs keep their 1-indexed page numbers)."""
-    pages = df.select("url", F.explode("pages").alias("p")) \
-              .select("url", "p.page_no", "p.markdown")
-    assembled = assemble_pages(pages)
-    assembled.write.mode(mode).parquet(path)
+    """K3: one markdown 'file' per document as (url, n_pages, document_md)
+    parquet — at 10^12 docs a file-per-document sink is an anti-pattern;
+    consumers slice by bucket. df must have url + the nested `pages` column
+    (real per-page rows in page order, as the kernel emits them; multi-page
+    PDFs keep their 1-indexed page numbers). Each row's document is built
+    from its own pages array, with no shuffle; a row without pages writes
+    nothing."""
+    (df.filter(F.size("pages") > 0)
+       .select("url", F.size("pages").alias("n_pages"),
+               _document_md(F.col("pages"), "page_no", "markdown"))
+       .write.mode(mode).parquet(path))
 
 
 def sink_dispatch(df: DataFrame, path: str, mode: str = "overwrite") -> str:

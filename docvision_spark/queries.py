@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from docvision_spark.functions import dedup, similarity, text
+from docvision_spark.functions.boilerplate import HOST_RE, with_host
 from docvision_spark.functions.fingerprint import winnow_fingerprints
 from docvision_spark.pipeline.shipping import map_in_pandas
 
@@ -802,8 +803,7 @@ def x03_host_stats(spark: SparkSession, sf: str) -> DataFrame:
     # host via the SAME regex as the oracle (parse_url and a regex disagree
     # on ports/userinfo/query-only urls — one spec, two engines)
     return (
-        d.withColumn("host",
-                     F.regexp_extract("url", r"^[a-z]+://([^/:?#]+)", 1))
+        with_host(d)
          .groupBy("host")
          .agg(F.count("*").alias("n_docs"),
               F.sum("n_chars").alias("chars_out"),
@@ -832,10 +832,6 @@ def b01_host_boilerplate(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-# host-extraction regex shared by the webgraph queries — the SAME pattern
-# string runs in Spark (Java regex) and the DuckDB oracle (RE2); it uses no
-# construct the two engines disagree on
-_HOST_PAT = r"^[a-z]+://([^/:?#]+)"
 # PageRank fixed-point arithmetic: all-integer so Spark and the SQL oracle
 # agree bit-for-bit (float summation order differs between engines)
 _PR_SCALE = 10 ** 12
@@ -854,8 +850,8 @@ def _host_edges(spark: SparkSession, sf: str) -> DataFrame:
     d = _xdocs(spark, sf).filter(F.col("error").isNull())
     e = (d.select("url", F.explode("links").alias("href"))
           .withColumn("target", resolve_href(F.col("url"), F.col("href")))
-          .withColumn("src_host", F.regexp_extract("url", _HOST_PAT, 1))
-          .withColumn("dst_host", F.regexp_extract("target", _HOST_PAT, 1)))
+          .withColumn("src_host", F.regexp_extract("url", HOST_RE, 1))
+          .withColumn("dst_host", F.regexp_extract("target", HOST_RE, 1)))
     return e.filter((F.col("src_host") != "") & (F.col("dst_host") != ""))
 
 
@@ -948,8 +944,7 @@ def r01_robots_gate(spark: SparkSession, sf: str) -> DataFrame:
 
     urls = _xdocs(spark, sf).select("url")
     rules = robots_rules_df(spark, _robots_fixture(), agent="docvision-bot")
-    return (crawl_allowed(urls, rules)
-            .withColumn("host", F.regexp_extract("url", _HOST_PAT, 1))
+    return (with_host(crawl_allowed(urls, rules))
             .groupBy("host")
             .agg(F.count(F.lit(1)).alias("n_urls"),
                  F.sum(F.when(F.col("allowed"), 1).otherwise(0))
@@ -1010,8 +1005,7 @@ def _sitemap_fixture_df(spark: SparkSession, sf: str) -> DataFrame:
     format varies by host hash (gzip / plain-text / XML) so all three
     parser branches run. Built DISTRIBUTED — collect_list per host +
     mapInPandas encode; no driver collect."""
-    u = (_xdocs(spark, sf).select("url")
-         .withColumn("host", F.regexp_extract("url", _HOST_PAT, 1))
+    u = (with_host(_xdocs(spark, sf).select("url"))
          .withColumn("d", F.substring(F.md5("url"), 1, 1)))
     listed = u.filter(F.col("d") <= "7").select("host", "url")
     novel = u.filter(F.col("d") == "0").select(
@@ -1052,8 +1046,7 @@ def r02_sitemap_frontier(spark: SparkSession, sf: str) -> DataFrame:
     entries = (sitemap_entries(_sitemap_fixture_df(spark, sf))
                .filter(F.col("loc").isNotNull())
                .select("host", F.col("loc").alias("url")))
-    crawled = (_xdocs(spark, sf).select("url")
-               .withColumn("host", F.regexp_extract("url", _HOST_PAT, 1)))
+    crawled = with_host(_xdocs(spark, sf).select("url"))
     n_listed = entries.groupBy("host").agg(
         F.count(F.lit(1)).alias("n_listed"))
     n_frontier = (entries.join(crawled.select("url"), "url", "left_anti")

@@ -182,7 +182,9 @@ def main() -> None:
     #     >= 4 distinct docs of one host are template text whatever their
     #     density (newsletter pitches, disclaimers) — excised corpus-wide
     #     (CCNet-style). Cached above: the strip reads the frame on three
-    #     plan branches (frequent-line census, explode, join-back).
+    #     plan branches (the line census, the matched-line collection and
+    #     the url join-back; Spark reuses no exchange above a cached
+    #     relation, so the census's explode runs twice).
     from docvision_spark.functions.boilerplate import strip_frequent_lines
 
     valid = strip_frequent_lines(valid, text_col="text", min_docs=4)

@@ -99,3 +99,21 @@ def test_strip_preserves_line_order(spark):
         assert r.text == (f"alpha first line of real content number {i}\n"
                           f"omega last line of real content number {i}")
         assert r.n_stripped_lines == 1
+
+
+def test_rows_sharing_a_url_keep_their_own_lines(spark):
+    """Two rows of one host with the same url and different texts: each
+    loses only its own frequent lines and keeps its own other lines, in
+    order, never the other row's."""
+    template = "shared template line across documents here"
+    rows = [(f"https://f.com/{i}", f"body line number {i} of a doc\n{template}")
+            for i in range(4)]
+    rows += [("https://f.com/dup",
+              f"first row opening line\n{template}\nfirst row closing line"),
+             ("https://f.com/dup", f"{template}\nsecond row only line")]
+    df = spark.createDataFrame(rows, "url string, text string")
+    got = sorted((r.text, r.n_stripped_lines)
+                 for r in strip_frequent_lines(df, min_docs=4).collect()
+                 if r.url == "https://f.com/dup")
+    assert got == [("first row opening line\nfirst row closing line", 1),
+                   ("second row only line", 1)]

@@ -148,9 +148,9 @@ def test_pdf_filter_decode_total(data, filt):
 @st.composite
 def pdf_string_spellings(draw):
     """Random bytes plus a literal and a hex spelling of them (ISO 32000-1
-    §7.3.4): the literal mixes plain bytes, 1-3 digit octal, the named
-    escapes, unknown escapes, backslash-EOL continuations and unescaped
-    balanced parentheses; the hex form has whitespace, mixed case and, when
+    §7.3.4): the literal mixes plain bytes, bare CR or CRLF for LF, 1-3
+    digit octal, the named escapes, unknown escapes, backslash-EOL
+    continuations and unescaped balanced parentheses; the hex form has whitespace, mixed case and, when
     the last nibble is 0, an odd final digit."""
     # bias toward the bytes the literal syntax gives meaning to
     raw = bytes(draw(st.lists(st.one_of(
@@ -174,6 +174,10 @@ def pdf_string_spellings(draw):
         how = draw(st.sampled_from(["plain", "octal", "escape"]))
         if i in bare or (how == "plain" and x not in b"()\\\r\n"):
             pieces.append(bytes([x]))
+        elif x == 0x0A and how == "plain":
+            # a bare EOL reads as one LF; no piece starts with a bare LF,
+            # so a lone CR cannot pair up with the next piece
+            pieces.append(draw(st.sampled_from([b"\r", b"\r\n"])))
         elif x in named and how != "octal":
             pieces.append(b"\\" + named[x])
         elif how == "octal" or x in b"01234567nrtbf":

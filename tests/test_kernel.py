@@ -236,6 +236,9 @@ def test_pdf_string_escapes():
     assert _string_at(rb"(a\qb)", 0) == (b"aqb", 6)
     for eol in (b"\n", b"\r", b"\r\n"):
         assert _string_at(b"(a\\" + eol + b"b)", 0)[0] == b"ab"
+    # a bare EOL inside a literal reads as one LF (§7.3.4.2)
+    assert _string_at(b"(a\r\nb)", 0) == (b"a\nb", 6)
+    assert _string_at(b"(a\rb)", 0) == (b"a\nb", 5)
     # at most 3 octal digits; balanced parentheses need no escape
     assert _string_at(rb"(\0053(p(q)r))", 0)[0] == b"\x053(p(q)r)"
     assert _string_at(b"x<4 1 4>", 1) == (b"A@", 8)  # odd digit: trailing 0
@@ -253,6 +256,23 @@ def test_pdf_nested_parens_in_content_stream():
     assert shown(b"BT /F1 12 Tf (p(q)r) Tj ET") == ["p(q)r"]
     assert shown(b"BT [(Hello) -200 (W(or)ld)] TJ ET") == ["Hello W(or)ld"]
     assert shown(b"BT <</MCID 0>> BDC <48 69> Tj EMC ET") == ["Hi"]
+
+
+def test_pdf_text_matrix_scales_font_size():
+    """A run's size is the Tf size times the text-matrix scale: a title
+    written as `/F1 1 Tf 24 0 0 24 x y Tm` is the same heading as one
+    written with `/F1 24 Tf`."""
+    from docvision_spark.kernel.pdf_text import _runs_from_stream, _runs_to_blocks
+
+    body = b"".join(
+        b"/F1 10 Tf 1 0 0 1 72 %d Tm (Body line %d of the page text) Tj "
+        % (650 - 14 * i, i) for i in range(3))
+    by_tm = b"BT /F1 1 Tf 24 0 0 24 72 700 Tm (A Big Title) Tj " + body + b"ET"
+    by_tf = b"BT /F1 24 Tf 1 0 0 1 72 700 Tm (A Big Title) Tj " + body + b"ET"
+    blocks = _runs_to_blocks(_runs_from_stream(by_tm))
+    assert blocks == _runs_to_blocks(_runs_from_stream(by_tf))
+    assert [(b.kind, b.size) for b in blocks] == [("heading", 24.0),
+                                                  ("paragraph", 10.0)]
 
 
 def test_pdf15_layout_parity():

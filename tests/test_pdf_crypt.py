@@ -168,24 +168,28 @@ def test_literal_string_id_decrypts():
     must derive the same file key as the hex form; the old hex-only regex
     fell back to id0=b'' and misclassified the doc as pdf_encrypted. The
     escapes follow ISO 32000-1 §7.3.4.2 there and in /O: an unknown escape
-    stands for its character, a backslash-EOL adds nothing."""
+    stands for its character, a backslash-EOL adds nothing and a bare CR or
+    CRLF reads as one LF."""
     import random
     import re
 
     from docvision_spark.corpus import make_pdf
     from docvision_spark.kernel.extract import extract
 
-    url = "http://literal-id.example.com/doc"
+    url = "http://literal-id.example.com/doc4"  # its /ID holds an LF byte
     pdf = make_pdf(url, random.Random(3), "en", force_encrypt="rc4",
                    force_layout15=False)
     m = re.search(rb"/ID \[<([0-9a-f]+)> <([0-9a-f]+)>\]", pdf)
     assert m, "corpus PDF should carry a hex /ID"
     id0 = bytes.fromhex(m.group(1).decode())
+    assert b"\n" in id0
 
-    def lit(b: bytes) -> bytes:
+    def lit(b: bytes, lf: bytes = b"\\012") -> bytes:
         out = bytearray(b"(")
         for x in b:
-            if x in (0x28, 0x29, 0x5C):
+            if x == 0x0A:
+                out += lf
+            elif x in (0x28, 0x29, 0x5C):
                 out += b"\\" + bytes([x])
             elif 32 <= x < 127:
                 out.append(x)
@@ -212,6 +216,9 @@ def test_literal_string_id_decrypts():
         "unknown-escape /ID": pdf.replace(
             m.group(0), b"/ID [" + lit_unknown(id0) + b" <00>]"),
         "continued /O": pdf.replace(om.group(0), b"/O " + o_split),
+        "bare-EOL /ID": pdf.replace(
+            m.group(0), b"/ID [" + lit(id0, b"\r\n") + b" " + lit(id0, b"\r")
+            + b"]"),
     }
     r_hex = extract(url, pdf)
     assert r_hex.error is None and r_hex.text

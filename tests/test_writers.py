@@ -48,6 +48,39 @@ def test_markdown_sink_assembly(extracted, spark, tmp_path):
 
 
 @pytest.mark.spark
+def test_markdown_sink_builds_rows_in_place(extracted, spark, tmp_path,
+                                            monkeypatch, capsys):
+    """The sink builds each document from its own pages array: a multi-page
+    PDF's document_md equals the page-row regroup of assemble_pages, and
+    the sink's plan over a parquet scan has no Exchange."""
+    from docvision_spark.pipeline.extract_job import page_rows
+    from docvision_spark.pipeline.writers import (assemble_pages,
+                                                  write_markdown_parts)
+
+    src = str(tmp_path / "extracted")
+    extracted.write.parquet(src)
+    written = []
+    frame_cls = type(extracted)
+    writer = frame_cls.write
+    monkeypatch.setattr(frame_cls, "write", property(
+        lambda df: written.append(df) or writer.fget(df)))
+    path = str(tmp_path / "doc_md")
+    write_markdown_parts(spark.read.parquet(src), path)
+    monkeypatch.undo()
+    written[-1].explain()
+    assert "Exchange" not in capsys.readouterr().out
+
+    multi = extracted.filter(F.col("page_count") > 1)
+    want = dict(assemble_pages(page_rows(multi).select(
+        "url", "page_no", "markdown")).select("url", "document_md").collect())
+    assert want, "the unit corpus should hold multi-page PDFs"
+    got = dict(spark.read.parquet(path)
+               .join(multi.select("url"), "url")
+               .select("url", "document_md").collect())
+    assert got == want
+
+
+@pytest.mark.spark
 def test_parquet_default_sink(extracted, spark, tmp_path):
     from docvision_spark.pipeline.writers import sink_dispatch
 
