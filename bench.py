@@ -1,4 +1,5 @@
-"""Benchmark harness — prints ONE JSON line per the driver contract.
+"""Benchmark harness — prints ONE JSON line per the driver contract, and
+writes the same line to BENCH/last.json.
 
 Headline metric (BASELINE.json): documents/sec extraction throughput on the
 Common-Crawl-style pages corpus, measured over the mapInPandas kernel stage
@@ -190,7 +191,11 @@ def main() -> None:
         "query_protocol_medians": qproto or None,
         "cpus": CPUS,
     }
-    print(json.dumps(result))
+    line = json.dumps(result)
+    # BENCH/last.json keeps the line even when stdout drowns in Spark noise
+    with open(os.path.join(REPO, "BENCH", "last.json"), "w") as f:
+        f.write(line + "\n")
+    print(line, flush=True)
     spark.stop()
 
 

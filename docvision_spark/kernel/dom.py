@@ -84,6 +84,16 @@ class Block:
 # the hottest allocation in the kernel (one per start tag); a dataclass
 # here measurably slows the 100 TB path (attribute access + __init__).
 # signal: -1 / 0 / +1 resolved at open time.
+#
+# _Builder's open-element state is that stack plus `open`: how many of
+# each _NESTED name are on it. A count goes up at the one push in _open and
+# down at each pop; a block's kind, a list item's ordered flag and a text
+# run's anchor/whitespace handling read it. Only these six names are
+# counted: counting every tag costs a dict update per element.
+_NESTED = frozenset({"a", "pre", "li", "ol", "blockquote", "table"})
+_HEADINGS = frozenset({"h1", "h2", "h3", "h4", "h5", "h6"})
+# elements whose pop has an effect beyond its count (see _popped)
+_POP_EFFECTS = _HEADINGS | {"td", "th", "tr", "table"}
 
 
 # out-link capture: one cheap regex per <a ... href=...>; hrefs stay RAW
@@ -106,14 +116,11 @@ class _Builder:
         self.stack: list[tuple[str, int]] = []
         self.buf: list[str] = []
         self.buf_anchor = 0
-        self.anchor_depth = 0
-        self.pre_depth = 0
+        self.open = dict.fromkeys(_NESTED, 0)
+        # level of the most recently opened heading; any heading close
+        # resets it, so it is not a count
         self.heading: int = 0
-        self.li_depth = 0
-        self.ol_depth = 0
-        self.quote_depth = 0
         # table assembly (outermost table only)
-        self.table_depth = 0
         self.tab_rows: list[list[str]] = []
         self.tab_cur_row: list[str] | None = None
         self.tab_cell: list[str] | None = None
@@ -143,7 +150,7 @@ class _Builder:
 
     # -- text buffering ----------------------------------------------------
     def _append_text(self, raw: str) -> None:
-        if self.pre_depth:
+        if self.open["pre"]:
             text = decode_entities(raw)
         else:
             # whitespace separators must land in the buffer the text will
@@ -153,7 +160,7 @@ class _Builder:
             if raw.isspace():  # hot path: inter-tag whitespace, no alloc
                 if dest and not dest[-1].endswith(" "):
                     dest.append(" ")
-                    if self.anchor_depth and dest is self.buf:
+                    if self.open["a"] and dest is self.buf:
                         self.buf_anchor += 1
                 return
             text = " ".join(decode_entities(raw).split())
@@ -167,7 +174,7 @@ class _Builder:
             self.tab_cell.append(text)
             return
         self.buf.append(text)
-        if self.anchor_depth:
+        if self.open["a"]:
             self.buf_anchor += len(text)
 
     def _flush(self) -> None:
@@ -175,7 +182,8 @@ class _Builder:
             self.buf_anchor = 0
             return
         text = "".join(self.buf)
-        if not self.pre_depth:
+        open_ = self.open
+        if not open_["pre"]:
             text = text.strip()
         else:
             text = text.strip("\n")
@@ -185,26 +193,27 @@ class _Builder:
         if not text.strip():
             return
         sig = self.stack[-1][1] if self.stack else 0
-        if self.pre_depth:
+        if open_["pre"]:
             kind, level = "pre", 0
         elif self.heading:
             kind, level = "heading", min(self.heading, 3)
-        elif self.li_depth:
+        elif open_["li"]:
             kind, level = "list_item", 0
-        elif self.quote_depth:
+        elif open_["blockquote"]:
             kind, level = "quote", 0
         else:
             kind, level = "paragraph", 0
         self.blocks.append(Block(
             kind=kind, text=text, level=level, chars=len(text),
             anchor_chars=anchor, words=len(text.split()), signal=sig,
-            ordered=self.ol_depth > 0 and kind == "list_item",
+            ordered=open_["ol"] > 0 and kind == "list_item",
         ))
 
     # -- element open/close ------------------------------------------------
     def _open(self, name: str, attrs_raw: str, self_closing: bool) -> None:
         if name == "a":
-            self.anchor_depth += 1
+            # an anchor implies no end tag and no block boundary, and a
+            # self-closing <a/> still opens one
             if attrs_raw and len(self.links) < MAX_LINKS:
                 m = _HREF_RE.search(attrs_raw)
                 if m:
@@ -214,12 +223,10 @@ class _Builder:
                             and href not in self._links_seen:
                         self._links_seen.add(href)
                         self.links.append(href)
-            self.stack.append((name, self._resolve_signal(name, attrs_raw)))
-            return
-        if name == "br":
+        elif name == "br":
             self._append_text(" ")
             return
-        if name == "img":
+        elif name == "img":
             attrs = parse_attrs(attrs_raw)
             alt = " ".join(decode_entities(attrs.get("alt", "")).split())
             self._flush()
@@ -227,7 +234,7 @@ class _Builder:
             self.blocks.append(Block(kind="figure", text=alt, chars=len(alt),
                                      words=len(alt.split()), signal=sig))
             return
-        if name == "link":
+        elif name == "link":
             attrs = parse_attrs(attrs_raw)
             if (attrs.get("rel", "").strip().lower() == "canonical"
                     and self.canonical is None):
@@ -235,7 +242,7 @@ class _Builder:
                 if href:
                     self.canonical = href
             return
-        if name == "meta":
+        elif name == "meta":
             attrs = parse_attrs(attrs_raw)
             if (attrs.get("name", "").strip().lower() == "robots"
                     and self.robots is None):
@@ -243,79 +250,51 @@ class _Builder:
                 if content:
                     self.robots = content
             return
-        if name in VOID_ELEMENTS:
+        elif name in VOID_ELEMENTS:
             return
-        # implied end tags
-        closers = _SELF_CLOSERS.get(name)
-        if closers:
-            for i in range(len(self.stack) - 1, -1, -1):
-                nm = self.stack[i][0]
-                if nm in closers:
-                    self._close_to(i)
-                    break
-                if nm in ("table", "ul", "ol", "dl", "div", "section", "article", "body"):
-                    break
-        elif name in _P_CLOSERS:
-            if self.stack and self.stack[-1][0] == "p":
-                self._close_to(len(self.stack) - 1)
-
-        if name in BLOCK_TAGS and self.buf:
-            self._flush()
+        else:
+            # implied end tags
+            closers = _SELF_CLOSERS.get(name)
+            if closers:
+                for i in range(len(self.stack) - 1, -1, -1):
+                    nm = self.stack[i][0]
+                    if nm in closers:
+                        self._close_to(i)
+                        break
+                    if nm in ("table", "ul", "ol", "dl", "div", "section", "article", "body"):
+                        break
+            elif name in _P_CLOSERS:
+                if self.stack and self.stack[-1][0] == "p":
+                    self._close_to(len(self.stack) - 1)
+            if name in BLOCK_TAGS and self.buf:
+                self._flush()
+            if self_closing:
+                return
         sig = self._resolve_signal(name, attrs_raw)
-        if self_closing:
-            return
         self.stack.append((name, sig))
-        self._enter_effects(name, sig)
-
-    def _enter_effects(self, name: str, sig: int) -> None:
-        if name == "pre":
-            self.pre_depth += 1
-        elif name in ("h1", "h2", "h3", "h4", "h5", "h6"):
-            self.heading = int(name[1])
-        elif name == "li":
-            self.li_depth += 1
-        elif name == "ol":
-            self.ol_depth += 1
-        elif name == "blockquote":
-            self.quote_depth += 1
-        elif name == "table":
-            self.table_depth += 1
-            if self.table_depth == 1:
+        open_ = self.open
+        if name in open_:
+            open_[name] += 1
+            if name == "table" and open_["table"] == 1:
                 self.tab_rows = []
                 self.tab_cur_row = None
                 self.tab_signal = sig
-        elif name == "tr" and self.table_depth == 1:
-            self.tab_cur_row = []
-        elif name in ("td", "th") and self.table_depth == 1:
-            if self.tab_cur_row is None:
+        elif name in _HEADINGS:
+            self.heading = int(name[1])
+        elif open_["table"] == 1:
+            if name == "tr":
                 self.tab_cur_row = []
-            self.tab_cell = []
-
-    def _exit_effects(self, name: str) -> None:
-        if name == "pre":
-            self.pre_depth = max(0, self.pre_depth - 1)
-        elif name in ("h1", "h2", "h3", "h4", "h5", "h6"):
-            self.heading = 0
-        elif name == "li":
-            self.li_depth = max(0, self.li_depth - 1)
-        elif name == "ol":
-            self.ol_depth = max(0, self.ol_depth - 1)
-        elif name == "blockquote":
-            self.quote_depth = max(0, self.quote_depth - 1)
-        elif name in ("td", "th"):
-            if self.table_depth == 1 and self.tab_cell is not None:
-                cell = " ".join("".join(self.tab_cell).split())
+            elif name in ("td", "th"):
                 if self.tab_cur_row is None:
                     self.tab_cur_row = []
-                self.tab_cur_row.append(cell)
-                self.tab_cell = None
-        elif name == "tr":
-            if self.table_depth == 1 and self.tab_cur_row is not None:
-                if any(c.strip() for c in self.tab_cur_row):
-                    self.tab_rows.append(self.tab_cur_row)
-                self.tab_cur_row = None
+                self.tab_cell = []
+
+    def _popped(self, name: str) -> None:
+        """Effects of `name` leaving the stack; its count is already down."""
+        if name in _HEADINGS:
+            self.heading = 0
         elif name == "table":
-            if self.table_depth == 1:
+            if self.open["table"] == 0:
                 if self.tab_cur_row is not None and any(c.strip() for c in self.tab_cur_row):
                     self.tab_rows.append(self.tab_cur_row)
                 rows = self.tab_rows
@@ -328,26 +307,39 @@ class _Builder:
                         kind="table", text=txt, chars=len(txt),
                         words=len(txt.split()), signal=self.tab_signal, rows=rows,
                     ))
-            self.table_depth = max(0, self.table_depth - 1)
+        elif self.open["table"] != 1:
+            return
+        elif name == "tr":
+            if self.tab_cur_row is not None:
+                if any(c.strip() for c in self.tab_cur_row):
+                    self.tab_rows.append(self.tab_cur_row)
+                self.tab_cur_row = None
+        elif self.tab_cell is not None:  # td / th
+            cell = " ".join("".join(self.tab_cell).split())
+            if self.tab_cur_row is None:
+                self.tab_cur_row = []
+            self.tab_cur_row.append(cell)
+            self.tab_cell = None
 
     def _close_to(self, idx: int) -> None:
         """Pop stack down to and including idx, flushing block boundaries."""
+        open_ = self.open
         while len(self.stack) > idx:
             top = self.stack[-1][0]
             if top != "a" and self.buf and top in BLOCK_TAGS:
                 self._flush()  # before pop: block text carries its own signal
             self.stack.pop()
-            if top == "a":
-                self.anchor_depth = max(0, self.anchor_depth - 1)
-            else:
-                self._exit_effects(top)
+            if top in open_:
+                open_[top] -= 1
+            if top in _POP_EFFECTS:
+                self._popped(top)
 
     def _close(self, name: str) -> None:
         if name == "a":
             for i in range(len(self.stack) - 1, -1, -1):
                 if self.stack[i][0] == "a":
                     self.stack.pop(i)
-                    self.anchor_depth = max(0, self.anchor_depth - 1)
+                    self.open["a"] -= 1
                     return
             return
         for i in range(len(self.stack) - 1, -1, -1):

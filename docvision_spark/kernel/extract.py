@@ -16,7 +16,7 @@ from docvision_spark.kernel import pdf_text
 from docvision_spark.kernel.charset import decode_html
 from docvision_spark.kernel.dom import segment_with_meta
 from docvision_spark.kernel.feed import feed_blocks, looks_like_feed
-from docvision_spark.kernel.markdown import Span, emit
+from docvision_spark.kernel.markdown import Span, emit, render
 
 # Truncation guard: analogue of the reference's adaptive-resize work cap
 # (processing/image.py:351-366 caps pixels; we cap bytes). Oversized docs are
@@ -112,37 +112,22 @@ def _extract_pdf(payload: bytes) -> ExtractResult:
         # of silently emitting an empty document
         return ExtractResult(id=sha3_id(""), processing_mode="pdf",
                              charset="binary", error="pdf_no_pages")
-    from docvision_spark.kernel.markdown import _pipe_table
-
-    text_parts: list[str] = []
     page_results: list[tuple[int, str, str]] = []
     spans: list[Span] = []
-    pos = 0
-    bid = 0
+    pos = 0  # offset of the next page's text in the document text
     for pno, blocks in enumerate(pages, start=1):
         if not blocks:
             continue
-        page_texts: list[str] = []
-        page_mds: list[str] = []
-        for b in blocks:
-            if pos:
-                pos += 2
-            text_parts.append(b.text)
-            page_texts.append(b.text)
-            if b.kind == "heading":
-                kind = "heading"
-                page_mds.append("#" * b.level + " " + b.text)
-            elif b.kind == "table" and b.rows:
-                kind = "table"
-                page_mds.append(_pipe_table(b.rows))
-            else:
-                kind = "paragraph"
-                page_mds.append(b.text)
-            spans.append((bid, kind, pos, pos + len(b.text)))
-            pos += len(b.text)
-            bid += 1
-        page_results.append((pno, "\n\n".join(page_texts), "\n\n".join(page_mds)))
-    text = "\n\n".join(text_parts)
+        page_text, page_md, page_spans = render(blocks)
+        if page_results:
+            pos += 2  # the "\n\n" between pages
+        # block ids stay dense across pages: the next id is len(spans)
+        bid = len(spans)
+        spans.extend((bid + i, kind, pos + s, pos + e)
+                     for i, kind, s, e in page_spans)
+        pos += len(page_text)
+        page_results.append((pno, page_text, page_md))
+    text = "\n\n".join(t for _pno, t, _md in page_results)
     # document markdown = the reference markdown-writer byte format
     # (core/parser.py:536-546): '<!-- page N -->\n' + page content, pages
     # separated by '\n\n---\n\n'

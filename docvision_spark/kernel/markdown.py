@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from docvision_spark.kernel.classify import classify
 from docvision_spark.kernel.dom import Block
+from docvision_spark.kernel.pdf_text import PdfBlock
 
 Span = tuple[int, str, int, int]  # (block_id, kind, start, end)
 
@@ -31,23 +32,24 @@ def _pipe_table(rows: list[list[str]]) -> str:
     return "\n".join(lines)
 
 
-def emit(blocks: list[Block]) -> tuple[str, str, list[Span]]:
-    """Return (text, markdown, spans).
+def render(blocks: list[Block] | list[PdfBlock]) -> tuple[str, str, list[Span]]:
+    """Return (text, markdown, spans) for every block, in order.
 
-    text  = content blocks' plain text joined by \n\n (pre blocks keep
+    text  = the blocks' plain text joined by \n\n (pre blocks keep
             internal newlines); spans index into this string.
     spans = (block_id, kind, start, end); block_id is the index within the
-            *kept* sequence (dense, 0-based).
+            rendered sequence (dense, 0-based; an empty non-figure block is
+            skipped and takes no id).
+
+    HTML/feed blocks and PDF page blocks both render here; a PdfBlock is
+    only ever a heading, paragraph or table, so it needs no `ordered`.
     """
-    keep = classify(blocks)
     text_parts: list[str] = []
     md_parts: list[str] = []
     spans: list[Span] = []
     pos = 0
     bid = 0
-    for b, k in zip(blocks, keep):
-        if not k:
-            continue
+    for b in blocks:
         t = b.text
         if not t and b.kind != "figure":
             continue
@@ -81,3 +83,8 @@ def emit(blocks: list[Block]) -> tuple[str, str, list[Span]]:
         pos += len(t)
         bid += 1
     return "\n\n".join(text_parts), "\n\n".join(md_parts), spans
+
+
+def emit(blocks: list[Block]) -> tuple[str, str, list[Span]]:
+    """render() over the blocks classify() keeps as content."""
+    return render([b for b, k in zip(blocks, classify(blocks)) if k])

@@ -732,9 +732,15 @@ def _runs_from_stream(data: bytes, fonts: dict | None = None) -> list[Run]:
     font_size = size = 12.0  # size = Tf size x text-matrix scale
     scale = 1.0
     leading = 14.0
-    x = y = 0.0
-    line_x = line_y = 0.0
+    a, b, c, d = 1.0, 0.0, 0.0, 1.0  # text matrix without translation (Tm)
+    x = y = 0.0  # start of the current line in user space
     cmap: dict | None = None
+
+    def next_line(tx: float, ty: float) -> None:
+        """Move the line start by (tx, ty) in text space (§9.4.2)."""
+        nonlocal x, y
+        x += tx * a + ty * c
+        y += tx * b + ty * d
 
     def shown(s: str) -> str:
         if cmap is None:
@@ -779,27 +785,22 @@ def _runs_from_stream(data: bytes, fonts: dict | None = None) -> list[Run]:
                     cmap = fonts.get(stack[-2])
             elif op in (b"Td", b"TD"):
                 if len(stack) >= 2 and isinstance(stack[-1], float) and isinstance(stack[-2], float):
-                    line_x += stack[-2]
-                    line_y += stack[-1]
-                    x, y = line_x, line_y
+                    next_line(stack[-2], stack[-1])
                     if op == b"TD":
                         leading = -stack[-1] if stack[-1] else leading
             elif op == b"Tm":
                 if len(stack) >= 6:
                     try:
-                        _a, _b, _c, d, e, f = (float(v) for v in stack[-6:])
+                        a, b, c, d, x, y = (float(v) for v in stack[-6:])
                         scale = abs(d) or 1.0
                         size = font_size * scale
-                        line_x, line_y = e, f
-                        x, y = e, f
                     except (TypeError, ValueError):
                         pass
             elif op == b"TL":
                 if stack and isinstance(stack[-1], float):
                     leading = stack[-1]
             elif op == b"T*":
-                line_y -= leading
-                x, y = line_x, line_y
+                next_line(0.0, -leading)
             elif op == b"Tj":
                 if stack and isinstance(stack[-1], str):
                     runs.append(Run(int(round(y)), x, size, shown(stack[-1])))
@@ -814,8 +815,7 @@ def _runs_from_stream(data: bytes, fonts: dict | None = None) -> list[Run]:
                     if parts:
                         runs.append(Run(int(round(y)), x, size, "".join(parts)))
             elif op in (b"'", b'"'):
-                line_y -= leading
-                x, y = line_x, line_y
+                next_line(0.0, -leading)
                 if stack and isinstance(stack[-1], str):
                     runs.append(Run(int(round(y)), x, size, shown(stack[-1])))
             stack = []

@@ -180,11 +180,14 @@ def main() -> None:
     with open(hist_path) as f:
         for line in f:
             h = json.loads(line)
+            # only runs on this ladder: another host's lines (other core
+            # counts) are not records for this one
+            if h.get("ladder") != [lo, hi]:
+                continue
             for c, r in h["results"].items():
                 best_ever[int(c)] = max(best_ever.get(int(c), 0.0),
                                         r["docs_per_sec"])
-            if h.get("ladder") == [lo, hi]:
-                effs.append(h["eff"])
+            effs.append(h["eff"])
     # median across every recorded run on this ladder — a single degraded-
     # (or golden-) window run can't set the headline (round-3 advice)
     med_eff = sorted(effs)[len(effs) // 2]
@@ -224,7 +227,8 @@ median across all {len(effs)} recorded runs on this ladder: {med_eff:.2f}**
 (target >= 0.8). A degraded window cannot set a record because the
 headline is the cross-run median.
 
-Best docs/sec ever observed per config (BENCH/history.jsonl):
+Best docs/sec ever observed per config on this ladder
+(BENCH/history.jsonl):
 {best_rows}
 
 ## Headline-query protocol walls (local[{qcores}], sf0.1)

@@ -172,6 +172,54 @@ def test_anchor_chars_tracked():
     assert 0 < b.anchor_chars < b.chars
 
 
+def _shape(html: str) -> list[tuple]:
+    return [(b.kind, b.text, b.level, b.anchor_chars, b.ordered, b.rows)
+            for b in segment(html)]
+
+
+def test_segment_nesting_rules():
+    """_Builder's error-recovery and nesting rules, pinned case by case."""
+    # a table nested in a cell: only the outermost table assembles rows;
+    # the inner table's text lands in the open outer cell
+    assert _shape("<table><tr><td>a<table><tr><td>x</td><td>y</td></tr>"
+                  "</table>b</td><td>c</td></tr></table><p>after</p>") == [
+        ("table", "axyb c", 0, 0, False, [["axyb", "c"]]),
+        ("paragraph", "after", 0, 0, False, [])]
+    # closing the inner heading ends heading mode for the outer one too
+    assert _shape("<h1>a<h2>b</h2> tail</h1>") == [
+        ("heading", "a", 1, 0, False, []), ("heading", "b", 2, 0, False, []),
+        ("paragraph", "tail", 0, 0, False, [])]
+    # an unmatched end tag is ignored: no block boundary
+    assert _shape("<p>one</div>two</p><p>three</p>") == [
+        ("paragraph", "onetwo", 0, 0, False, []),
+        ("paragraph", "three", 0, 0, False, [])]
+    # </a> closes the anchor across a still-open block
+    assert _shape("<p><a href=x>link<div>inner</a> rest</div> more</p>") == [
+        ("paragraph", "link", 0, 4, False, []),
+        ("paragraph", "inner rest", 0, 5, False, []),
+        ("paragraph", "more", 0, 0, False, [])]
+    # a self-closing <a/> stays open: its chars count until the parent closes
+    assert _shape("<p><a/>anchored text</p><p>plain</p>") == [
+        ("paragraph", "anchored text", 0, 13, False, []),
+        ("paragraph", "plain", 0, 0, False, [])]
+    # nested <pre>: each level splits a block, all of them stay pre
+    assert _shape("<pre>x\n  <pre>y\n  z</pre>  w\n</pre><p>after</p>") == [
+        ("pre", "x\n  ", 0, 0, False, []), ("pre", "y\n  z", 0, 0, False, []),
+        ("pre", "  w", 0, 0, False, []),
+        ("paragraph", "after", 0, 0, False, [])]
+    # an <ol> inside a <ul> item: only its own items are ordered, also when
+    # the </ul> closes the <ol> implicitly
+    for html in ("<ul><li>u1<ol><li>o1</li></ol></li><li>u2</li></ul>",
+                 "<ul><li>u1<ol><li>o1</ul><li>u2</li>"):
+        assert [(b.text, b.ordered) for b in segment(html)] == [
+            ("u1", False), ("o1", True), ("u2", False)]
+    # stray cells and row ends outside any table are plain blocks
+    assert _shape("<td>cell</td></tr><p>para</p><tr><td>c2</td></tr>") == [
+        ("paragraph", "cell", 0, 0, False, []),
+        ("paragraph", "para", 0, 0, False, []),
+        ("paragraph", "c2", 0, 0, False, [])]
+
+
 # ------------------------------------------------------------- classify ---
 def test_classify_rules():
     html = """<body>
@@ -273,6 +321,43 @@ def test_pdf_text_matrix_scales_font_size():
     assert blocks == _runs_to_blocks(_runs_from_stream(by_tf))
     assert [(b.kind, b.size) for b in blocks] == [("heading", 24.0),
                                                   ("paragraph", 10.0)]
+
+
+def test_pdf_line_moves_go_through_text_matrix():
+    """Td/TD/T*/' offsets are in text space: under `12 0 0 12 x y Tm` a
+    `0 -1.2 Td` moves the baseline down 14.4 units, not 1.2."""
+    from docvision_spark.kernel.pdf_text import _runs_from_stream
+
+    def baselines(ops: bytes) -> list[tuple[int, float]]:
+        cs = b"BT /F1 1 Tf 12 0 0 12 72 700 Tm (one) Tj " + ops + b" ET"
+        return [(r.yq, r.x) for r in _runs_from_stream(cs)]
+
+    assert baselines(b"0 -1.2 Td (two) Tj") == [(700, 72.0), (686, 72.0)]
+    assert baselines(b"1 -1.2 TD (two) Tj T* (three) Tj") == [
+        (700, 72.0), (686, 84.0), (671, 84.0)]
+    assert baselines(b"1.2 TL T* (two) Tj (three) '") == [
+        (700, 72.0), (686, 72.0), (671, 72.0)]
+
+
+def test_pdf_spans_across_pages():
+    """Document spans index the document text across pages: every span
+    covers its block's text, block ids are dense over all pages, and the
+    document text is the page texts joined by a blank line."""
+    import random
+
+    from docvision_spark.corpus import make_pdf
+
+    payload = make_pdf("v", random.Random(5), "en")
+    pages, _ = parse_pdf(payload)
+    blocks = [b for page in pages for b in page]
+    r = extract("v", payload)
+    assert r.error is None and len(r.pages) == 3
+    assert [bid for bid, _k, _s, _e in r.spans] == list(range(len(blocks)))
+    for (_bid, kind, s, e), b in zip(r.spans, blocks):
+        assert r.text[s:e] == b.text
+        assert kind == b.kind
+    assert "table" in {b.kind for b in blocks}
+    assert "\n\n".join(t for _pno, t, _md in r.pages) == r.text
 
 
 def test_pdf15_layout_parity():
