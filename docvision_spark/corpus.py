@@ -92,7 +92,7 @@ HOSTS = [
 LANGS = ["en", "id", "es", "de", "fr"]
 
 # per-language word pools; the leading words are stopwords shared with
-# kernel.classify.STOPWORDS so stopword-ratio features are meaningful
+# functions/text.LANG_STOPWORDS so stopword-ratio features are meaningful
 _WORDS = {
     "en": ("the of and to in is was for with on as at by it this that from "
            "market growth report annual revenue system analysis data model "

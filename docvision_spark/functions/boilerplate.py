@@ -40,30 +40,32 @@ def with_host(df: DataFrame, url_col: str = "url") -> DataFrame:
     return df.withColumn("host", F.regexp_extract(F.col(url_col), HOST_RE, 1))
 
 
-def _doc_lines(df: DataFrame, url_col: str, text_col: str,
-               min_chars: int) -> DataFrame:
-    """(host, url, line) with one row per DISTINCT line per document —
-    a line repeated inside one doc still counts that doc once. A null-url
-    row is no document of any host and gives no lines (the explicit filter
-    also makes the strip's two uses of this frame plan the same exchange,
-    so AQE can reuse it)."""
+# Shorter lines are skipped: connective fragments that repeat by chance.
+_MIN_CHARS = 12
+
+
+def _doc_lines(df: DataFrame, url_col: str, text_col: str) -> DataFrame:
+    """(host, url, line) with one row per DISTINCT line of at least
+    _MIN_CHARS chars per document — a line repeated inside one doc still
+    counts that doc once. A null-url row is no document of any host and
+    gives no lines (the explicit filter also makes the strip's two uses of
+    this frame plan the same exchange, so AQE can reuse it)."""
     return (
         with_host(df.filter(F.col(url_col).isNotNull()), url_col)
         .select("host", F.col(url_col).alias("url"),
                 F.explode(F.split(F.col(text_col), "\n")).alias("line"))
-        .filter(F.length(F.trim("line")) >= min_chars)
+        .filter(F.length(F.trim("line")) >= _MIN_CHARS)
         .dropDuplicates(["host", "url", "line"])
     )
 
 
 def host_frequent_lines(df: DataFrame, url_col: str = "url",
-                        text_col: str = "text", min_docs: int = 4,
-                        min_chars: int = 12) -> DataFrame:
-    """(host, line, n_docs): lines appearing in >= min_docs distinct docs
-    of the same host. min_chars skips short connective fragments that
-    repeat by chance; min_docs is the CCNet-style frequency knob."""
+                        text_col: str = "text", min_docs: int = 4) -> DataFrame:
+    """(host, line, n_docs): lines of >= _MIN_CHARS chars appearing in >=
+    min_docs distinct docs of the same host; min_docs is the CCNet-style
+    frequency knob."""
     return (
-        _doc_lines(df, url_col, text_col, min_chars)
+        _doc_lines(df, url_col, text_col)
         .groupBy("host", "line")
         .agg(F.count(F.lit(1)).alias("n_docs"))
         .filter(F.col("n_docs") >= min_docs)
@@ -71,8 +73,7 @@ def host_frequent_lines(df: DataFrame, url_col: str = "url",
 
 
 def strip_frequent_lines(df: DataFrame, url_col: str = "url",
-                         text_col: str = "text", min_docs: int = 4,
-                         min_chars: int = 12) -> DataFrame:
+                         text_col: str = "text", min_docs: int = 4) -> DataFrame:
     """Remove each host's frequent lines from every document of that host.
 
     Returns the input frame with `text_col` rewritten (line order
@@ -87,9 +88,9 @@ def strip_frequent_lines(df: DataFrame, url_col: str = "url",
     positions or sort. Rows sharing a url share a host, so every entry of
     their merged `_hits` is frequent for each of them and each row still
     loses exactly its own frequent lines."""
-    freq = host_frequent_lines(df, url_col, text_col, min_docs, min_chars)
+    freq = host_frequent_lines(df, url_col, text_col, min_docs)
     hits = (
-        _doc_lines(df, url_col, text_col, min_chars)
+        _doc_lines(df, url_col, text_col)
         .join(freq.select("host", "line"), ["host", "line"], "left_semi")
         .groupBy("url")
         .agg(F.collect_list("line").alias("_hits"))

@@ -34,7 +34,7 @@ from pyspark.sql.window import Window
 from docvision_spark.functions.text import fingerprint_md5, normalized
 
 
-def parallelize_input(df: DataFrame, factor: int = 1) -> DataFrame:
+def parallelize_input(df: DataFrame) -> DataFrame:
     """Repartition an UNDERPARTITIONED input before a CPU-heavy projection.
 
     A small parquet table scans as a handful of splits (often one), which
@@ -43,8 +43,7 @@ def parallelize_input(df: DataFrame, factor: int = 1) -> DataFrame:
     cores and this returns the input unchanged (no shuffle is ever added on
     a properly-partitioned table).
     """
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism * factor
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
@@ -133,22 +132,6 @@ def let_(value: Column, body) -> Column:
     return F.element_at(F.transform(F.array(value), body), 1)
 
 
-def char_shingles(col: Column, k: int = 5) -> Column:
-    """Distinct k-char shingles of the normalized text (expression-only:
-    sequence + transform + substring + array_distinct)."""
-    def over(norm: Column) -> Column:
-        n = F.length(norm)
-        return F.when(n < k, F.array(norm)).otherwise(
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), n - F.lit(k - 1)),
-                    lambda i: norm.substr(i, F.lit(k)),
-                )
-            )
-        )
-    return let_(normalized(col), over)
-
-
 def word_shingles(col: Column, k: int = 3) -> Column:
     """Distinct k-word shingles (n-grams joined by a space)."""
     def over(toks: Column) -> Column:
@@ -183,6 +166,13 @@ def word_shingle_hashes(col: Column, k: int = 3) -> Column:
 
 # ---------------------------------------------------------------- minhash --
 
+# MinHash signature length, LSH bands and words per shingle — the one
+# setting of every band key (see minhash_artifacts).
+MINHASH_HASHES = 16
+MINHASH_BANDS = 8
+SHINGLE_WORDS = 3
+
+
 def minhash_signatures_expr(
     df: DataFrame, id_col: str, shingles_col: str, num_hashes: int,
 ) -> DataFrame:
@@ -203,10 +193,7 @@ def minhash_signatures_expr(
 
 
 def minhash_artifacts(df: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text", num_hashes: int = 16,
-                      bands: int = 8, shingle_k: int = 3,
-                      shingle_mode: str = "word",
-                      ) -> tuple[DataFrame, DataFrame]:
+                      text_col: str = "text") -> tuple[DataFrame, DataFrame]:
     """The one MinHash pipeline: shingle, sign and band a corpus once.
 
     shingled = (id, sh array): exact-verification sets.
@@ -214,18 +201,16 @@ def minhash_artifacts(df: DataFrame, id_col: str = "doc_id",
     Both pair finders (minhash_lsh_pairs, incremental_minhash_pairs) take
     these frames, and a published corpus persists them (banded bucketed by
     (band, bkey), shingled by id) so increments probe it without touching
-    its text. The MinHash settings live here only, so band keys from one
-    pipeline are always comparable.
+    its text. The MinHash settings are module constants, so band keys
+    from one pipeline are always comparable.
 
-    rows/band r = num_hashes/bands; collision prob ≈ 1-(1-j^r)^b. Defaults
-    16/8 (r=2): j=0.8 -> >99.9% recall; false candidates are cheap because
-    every candidate is exactly verified. Word 3-gram shingle hashes by
-    default (~7x fewer shingles than char-5 at equal dedup quality on
-    prose; pass shingle_mode='char' for short/CJK-ish text). Band key =
-    xxhash64 of the band's signature slice.
+    rows/band r = MINHASH_HASHES/MINHASH_BANDS; collision prob ≈
+    1-(1-j^r)^b. 16/8 (r=2): j=0.8 -> >99.9% recall; false candidates are
+    cheap because every candidate is exactly verified. Shingles are
+    hashed word 3-grams (~7x fewer than char 5-grams at equal dedup
+    quality on prose). Band key = xxhash64 of the band's signature slice.
     """
-    r = num_hashes // bands
-    mk = char_shingles if shingle_mode == "char" else word_shingle_hashes
+    r = MINHASH_HASHES // MINHASH_BANDS
     # shingled feeds THREE consumers (signatures + both verify join-backs);
     # materialize it once so the shingling HOF is never re-evaluated, and
     # never evaluated on both sides of a self-join. localCheckpoint spills
@@ -233,9 +218,9 @@ def minhash_artifacts(df: DataFrame, id_col: str = "doc_id",
     # write, strictly cheaper than 3x recompute of the shingling pass.
     shingled = parallelize_input(df.select(id_col, text_col)).select(
         F.col(id_col).alias("id"),
-        mk(F.col(text_col), shingle_k).alias("sh"),
+        word_shingle_hashes(F.col(text_col), SHINGLE_WORDS).alias("sh"),
     ).localCheckpoint()
-    sig = minhash_signatures_expr(shingled, "id", "sh", num_hashes)
+    sig = minhash_signatures_expr(shingled, "id", "sh", MINHASH_HASHES)
     # bands carry only (id, band, bkey) — never the shingle sets (an 8-way
     # band explode of 2000-element arrays would 8x the shuffle for nothing).
     # banded is materialized too, by the first action that reads it: its
@@ -249,7 +234,7 @@ def minhash_artifacts(df: DataFrame, id_col: str = "doc_id",
                 F.lit(b).alias("band"),
                 F.xxhash64(*[F.col("mh")[b * r + i] for i in range(r)]).alias("bkey"),
             )
-            for b in range(bands)
+            for b in range(MINHASH_BANDS)
         ])).alias("bb"),
     ).select("id", "bb.band", "bb.bkey").localCheckpoint(eager=False)
     return shingled, banded

@@ -21,23 +21,6 @@ MIN_CHARS = 25
 # Link-density cutoff: boilerplate when anchor_chars/chars >= 1/3.
 LD_NUM, LD_DEN = 1, 3
 
-# Small fixed multilingual stopword set (en/id/es/de/fr — the corpus langs).
-STOPWORDS = frozenset(
-    "the a an and or of to in is are was were be on for with as at by it "
-    "this that from "
-    "dan yang di ke dari untuk dengan pada adalah ini itu "
-    "el la los las de en y que un una es por con para "
-    "der die das und ist von zu mit den im für "
-    "le les des du et est une dans qui pour sur".split()
-)
-
-
-def stopword_hits(text: str) -> tuple[int, int]:
-    """(stopword tokens, total tokens) — lowercased whitespace tokens."""
-    toks = text.lower().split()
-    hits = sum(1 for t in toks if t.strip('.,;:!?"“”()') in STOPWORDS)
-    return hits, len(toks)
-
 
 def classify(blocks: list[Block]) -> list[bool]:
     """Return a parallel list: True = content, False = boilerplate.

@@ -74,7 +74,6 @@ class Block:
     level: int = 0                # heading level (1..3 after clamping)
     chars: int = 0                # collapsed char count
     anchor_chars: int = 0         # chars emitted inside <a>
-    words: int = 0
     signal: int = 0               # +1 content ancestor, -1 boilerplate ancestor, 0 neutral
     rows: list[list[str]] = field(default_factory=list)   # table rows
     ordered: bool = False         # for list items: inside <ol>
@@ -205,7 +204,7 @@ class _Builder:
             kind, level = "paragraph", 0
         self.blocks.append(Block(
             kind=kind, text=text, level=level, chars=len(text),
-            anchor_chars=anchor, words=len(text.split()), signal=sig,
+            anchor_chars=anchor, signal=sig,
             ordered=open_["ol"] > 0 and kind == "list_item",
         ))
 
@@ -232,7 +231,7 @@ class _Builder:
             self._flush()
             sig = self.stack[-1][1] if self.stack else 0
             self.blocks.append(Block(kind="figure", text=alt, chars=len(alt),
-                                     words=len(alt.split()), signal=sig))
+                                     signal=sig))
             return
         elif name == "link":
             attrs = parse_attrs(attrs_raw)
@@ -305,7 +304,7 @@ class _Builder:
                     txt = " ".join(" ".join(r) for r in rows)
                     self.blocks.append(Block(
                         kind="table", text=txt, chars=len(txt),
-                        words=len(txt.split()), signal=self.tab_signal, rows=rows,
+                        signal=self.tab_signal, rows=rows,
                     ))
         elif self.open["table"] != 1:
             return

@@ -59,8 +59,7 @@ def _text_blocks(text: str, kind: str = "paragraph",
     t = " ".join(text.split())
     if not t:
         return []
-    return [Block(kind=kind, text=t, level=level, chars=len(t),
-                  words=len(t.split()), signal=1)]
+    return [Block(kind=kind, text=t, level=level, chars=len(t), signal=1)]
 
 
 def _fragment_blocks(raw: str, cdata: list[str], saw_child: bool) -> list[Block]:

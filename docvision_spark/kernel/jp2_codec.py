@@ -56,17 +56,12 @@ _SOC = 0xFF4F
 _SIZ = 0xFF51
 _COD = 0xFF52
 _COC = 0xFF53
-_TLM = 0xFF55
-_PLM = 0xFF57
-_PLT = 0xFF58
 _QCD = 0xFF5C
 _QCC = 0xFF5D
 _RGN = 0xFF5E
 _POC = 0xFF5F
 _PPM = 0xFF60
 _PPT = 0xFF61
-_CRG = 0xFF63
-_COM = 0xFF64
 _SOT = 0xFF90
 _SOP = 0xFF91
 _EPH = 0xFF92

@@ -44,7 +44,6 @@ ZIGZAG = np.array([
     29, 22, 15, 23, 30, 37, 44, 51,
     58, 59, 52, 45, 38, 31, 39, 46,
     53, 60, 61, 54, 47, 55, 62, 63], dtype=np.int64)
-UNZIGZAG = np.argsort(ZIGZAG)
 
 # Annex K.1 luminance / chrominance quantization tables (quality 50 base)
 QUANT_LUMA = np.array([

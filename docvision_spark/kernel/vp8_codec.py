@@ -7,10 +7,12 @@ boolean (arithmetic) decoder, uncompressed + compressed frame headers
 (segmentation, loop-filter and quantizer syntax included), keyframe
 intra mode coding, DCT token decoding with the coefficient-band /
 nonzero-context schedule, dequantization, the normative integer inverse
-DCT/WHT, all 16x16 / chroma / 4x4 intra predictors, and the normal +
-simple loop filters. The reference reads these via cv2/libwebp
-(reference core/parser.py:554-563); this container has neither, so the
-pixel path is built from the spec.
+DCT/WHT, all 16x16 / chroma / 4x4 intra predictors, and the normal loop
+filter. The header's filter-type bit is read but not honoured: a frame
+that selects the simple filter is filtered with the normal one too (the
+corpus encoder writes the normal type only). The reference reads these
+via cv2/libwebp (reference core/parser.py:554-563); neither is available
+here, so the pixel path is built from the spec.
 
 VERIFICATION STATUS (same honesty contract as kernel/vp8l_codec.py —
 no libwebp, no real-world lossy WebP file, and no RFC text exist in this
@@ -486,12 +488,6 @@ def _common_adjust(use_outer, pix, idx, stride):
     return f
 
 
-def _simple_threshold(pix, idx, stride, limit):
-    p1, p0, q0, q1 = (int(pix[idx - 2 * stride]), int(pix[idx - stride]),
-                      int(pix[idx]), int(pix[idx + stride]))
-    return abs(p0 - q0) * 2 + abs(p1 - q1) // 2 <= limit
-
-
 def _normal_mask(pix, idx, stride, interior, edge):
     vals = [int(pix[idx + k * stride]) for k in range(-4, 4)]
     p3, p2, p1, p0, q0, q1, q2, q3 = vals
@@ -608,7 +604,7 @@ def vp8_decode(data: bytes) -> np.ndarray:
                 if bd.get(128):
                     seg_tree_probs[i] = bd.literal(8)
 
-    bd.get(128)  # filter type (simple=1) — both applied identically here
+    bd.get(128)  # filter type (simple=1) — ignored: the normal filter runs
     filter_level = bd.literal(6)
     sharpness = bd.literal(3)
     if bd.get(128):  # loop filter adj enable

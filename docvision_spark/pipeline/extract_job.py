@@ -20,6 +20,9 @@ cumulative payload bytes so a partition of 200 KB docs and a partition of
 2 KB docs both hand the kernel ~equal-byte units (the analogue of the
 reference's bounded concurrency + size caps, core/parser.py:289,
 processing/image.py:351-366).
+
+Every fact of a row is a typed column (OUTPUT_SCHEMA); the JSONL sink,
+writers.write_jsonl, rebuilds the reference's metadata dict from them.
 """
 
 from __future__ import annotations
@@ -33,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType, BooleanType, DoubleType, IntegerType, LongType,
-    MapType, StringType, StructField, StructType,
+    StringType, StructField, StructType,
 )
 
 from docvision_spark import EXTRACTOR_VERSION
@@ -55,6 +58,9 @@ PAGE_TYPE = ArrayType(StructType([
     StructField("markdown", StringType()),
 ]))
 
+# the reference's ParseResult {id, content, metadata} (core/types.py:46-52)
+# as typed columns: content is text/markdown, metadata's file_name is url,
+# total_pages is page_count and parsing_mode is processing_mode
 OUTPUT_SCHEMA = StructType([
     StructField("url", StringType()),
     StructField("id", StringType()),
@@ -76,9 +82,6 @@ OUTPUT_SCHEMA = StructType([
     StructField("processing_time", DoubleType()),
     StructField("bytes_in", LongType()),
     StructField("partition_id", IntegerType()),
-    # open-ended remainder — the analogue of the reference's schemaless
-    # metadata merge (core/parser.py:186-190); fixed facts stay typed columns
-    StructField("metadata", MapType(StringType(), StringType())),
     StructField("error", StringType()),
 ])
 
@@ -143,13 +146,6 @@ def _extract_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 "processing_time": dt,
                 "bytes_in": nbytes,
                 "partition_id": pid,
-                "metadata": {
-                    "file_name": urls[i],
-                    "total_pages": str(r.page_count),
-                    "parsing_mode": r.processing_mode,
-                    "charset": r.charset,
-                    "truncated": "1" if r.truncated else "0",
-                },
                 "error": r.error,
             })
             acc_bytes += nbytes

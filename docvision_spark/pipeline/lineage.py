@@ -18,13 +18,6 @@ from pyspark.sql import functions as F
 
 from docvision_spark import EXTRACTOR_VERSION
 
-METRICS_SCHEMA = (
-    "snapshot_id STRING, partition_id INT, input_split STRING, doc_count BIGINT, "
-    "bytes_in BIGINT, bytes_out BIGINT, n_failures BIGINT, "
-    "failure_samples ARRAY<STRUCT<url STRING, error STRING>>, "
-    "extractor_version STRING, wall_time_s DOUBLE, committed_at TIMESTAMP"
-)
-
 
 def partition_metrics(staged: DataFrame) -> DataFrame:
     """One row per task partition of ONE snapshot's staged rows: doc and

@@ -16,15 +16,9 @@ def get_spark(
     app_name: str = "docvision-spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
-    max_records_per_batch: int = 256,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Create/get a local SparkSession.
-
-    max_records_per_batch bounds Arrow batch row count; combined with the
-    size-aware packing stage (extract_job.py) it bounds batch *bytes*, which
-    is what actually matters for Python-worker memory at 100 TB.
-    """
+    """Create/get a local SparkSession."""
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
@@ -36,7 +30,10 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(max_records_per_batch))
+        # Arrow batch row bound; with the size-aware packing stage
+        # (extract_job.py) it bounds batch *bytes*, which is what matters
+        # for Python-worker memory at 100 TB
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
         # small splits so the pages scan parallelizes to the core count
         # WITHOUT a payload repartition (extract_job skips its salt
         # exchange when the scan is already parallel enough). 4m is sized

@@ -822,8 +822,7 @@ def b01_host_boilerplate(spark: SparkSession, sf: str) -> DataFrame:
     from docvision_spark.functions.boilerplate import host_frequent_lines
 
     d = _xdocs(spark, sf).select("url", "markdown")
-    freq = host_frequent_lines(d, text_col="markdown", min_docs=4,
-                               min_chars=12)
+    freq = host_frequent_lines(d, text_col="markdown", min_docs=4)
     return (
         freq.groupBy("host")
             .agg(F.count(F.lit(1)).alias("n_boiler_lines"),

@@ -148,29 +148,27 @@ def test_minhash_signature_variant_parity(spark, docs):
     d01/d06/curate) must equal, on every doc, the per-hash-function min of
     xxhash64(j, shingle) computed by explode + groupBy — including short
     and empty texts, where the shingle fallback path (n < k -> single
-    whole-text shingle) is exercised. Both shingle modes of
-    minhash_artifacts: word 3-gram hashes and char 5-gram strings."""
+    whole-text shingle) is exercised. Shingles are minhash_artifacts'
+    word 3-gram hashes."""
     from docvision_spark.functions.dedup import (
-        char_shingles, minhash_signatures_expr, word_shingle_hashes)
+        minhash_signatures_expr, word_shingle_hashes)
 
     extra = docs.unionByName(spark.createDataFrame(
         [(7, "one"), (8, "two words")], "doc_id long, text string"))
-    for shingles in (word_shingle_hashes(F.col("text"), 3),
-                     char_shingles(F.col("text"), 5)):
-        sh = extra.select("doc_id", shingles.alias("sh"))
-        mins = (sh.select("doc_id", F.explode("sh").alias("s"))
-                  .groupBy("doc_id")
-                  .agg(*[F.min(F.xxhash64(F.lit(j), F.col("s"))).alias(f"m{j}")
-                         for j in range(16)]))
-        want = {r["doc_id"]: [r[f"m{j}"] for j in range(16)]
-                for r in mins.collect()}
-        got = {r["id"]: r["mh"] for r in
-               minhash_signatures_expr(sh, "doc_id", "sh", 16).collect()}
-        assert got == want
-        assert set(got) == {1, 2, 3, 4, 5, 6, 7, 8}
-        assert got[1] == got[2]                    # exact dups: equal minhash
-        agree_13 = sum(a == b for a, b in zip(got[1], got[3]))
-        assert agree_13 >= 8                       # near dup: most mins agree
+    sh = extra.select("doc_id", word_shingle_hashes(F.col("text"), 3).alias("sh"))
+    mins = (sh.select("doc_id", F.explode("sh").alias("s"))
+              .groupBy("doc_id")
+              .agg(*[F.min(F.xxhash64(F.lit(j), F.col("s"))).alias(f"m{j}")
+                     for j in range(16)]))
+    want = {r["doc_id"]: [r[f"m{j}"] for j in range(16)]
+            for r in mins.collect()}
+    got = {r["id"]: r["mh"] for r in
+           minhash_signatures_expr(sh, "doc_id", "sh", 16).collect()}
+    assert got == want
+    assert set(got) == {1, 2, 3, 4, 5, 6, 7, 8}
+    assert got[1] == got[2]                        # exact dups: equal minhash
+    agree_13 = sum(a == b for a, b in zip(got[1], got[3]))
+    assert agree_13 >= 8                           # near dup: most mins agree
 
 
 @pytest.mark.spark

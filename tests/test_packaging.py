@@ -6,6 +6,7 @@ import pathlib
 import re
 import sys
 import tomllib
+from collections import Counter
 
 REPO = pathlib.Path(__file__).resolve().parent.parent
 
@@ -77,3 +78,57 @@ def test_source_runs_on_the_declared_python_floor():
                 if hits:
                     bad.append((path.name, node.lineno, hits))
     assert not bad
+
+
+def _python_sources():
+    for top in ("docvision_spark", "jobs", "scripts", "perfbench", "tests"):
+        yield from sorted((REPO / top).rglob("*.py"))
+    yield REPO / "bench.py"
+    yield REPO / "__spark_entry__.py"
+
+
+def _uses(tree: ast.AST) -> Counter:
+    """How often each identifier is read in a tree: loaded names,
+    attribute names and imported names."""
+    out = Counter()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+            out[node.id] += 1
+        elif isinstance(node, ast.Attribute):
+            out[node.attr] += 1
+        elif isinstance(node, ast.alias):
+            out[node.name.rsplit(".", 1)[-1]] += 1
+    return out
+
+
+def _module_level_names(tree: ast.Module):
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                             ast.ClassDef)):
+            yield node.name, node
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for target in targets:
+                for n in ast.walk(target):
+                    if isinstance(n, ast.Name):
+                        yield n.id, node
+
+
+def test_no_unreferenced_module_level_names():
+    """Every module-level function, class and assigned name in the package
+    (dunders aside) is used somewhere in the repo's Python outside its own
+    definition. Matching is by identifier, so a dead name that shares its
+    spelling with a live one elsewhere is not caught."""
+    uses = Counter()
+    defined = []
+    for path in _python_sources():
+        tree = ast.parse(path.read_text(), str(path))
+        uses += _uses(tree)
+        if path.is_relative_to(REPO / "docvision_spark"):
+            rel = path.relative_to(REPO)
+            defined += [(f"{rel}:{name}", name, node)
+                        for name, node in _module_level_names(tree)]
+    dead = [where for where, name, node in defined
+            if not (name.startswith("__") and name.endswith("__"))
+            and uses[name] <= _uses(node)[name]]
+    assert not dead

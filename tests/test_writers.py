@@ -28,11 +28,23 @@ def test_jsonl_sink_envelope(extracted, tmp_path):
         with open(part, encoding="utf-8") as f:
             lines.extend(json.loads(ln) for ln in f if ln.strip())
     assert len(lines) == 300
-    # ParseResult envelope parity (reference core/types.py:46-52)
-    row = lines[0]
-    assert set(row) == {"id", "content", "metadata"}
-    assert {"file_name", "total_pages", "parsing_mode", "processing_time"} <= set(row["metadata"])
-    assert len(row["id"]) == 64
+    # ParseResult envelope parity (reference core/types.py:46-52); the
+    # envelope is the one place the reference's metadata dict is built, so
+    # every line's values must be its row's typed columns
+    want = {r["url"]: r for r in extracted.select(
+        "url", "id", "page_count", "processing_mode").collect()}
+    assert len(want) == 300
+    got = {}
+    for row in lines:
+        assert set(row) == {"id", "content", "metadata"}
+        meta = row["metadata"]
+        assert {"file_name", "total_pages", "parsing_mode",
+                "processing_time"} <= set(meta)
+        got[meta["file_name"]] = (row["id"], meta["total_pages"],
+                                  meta["parsing_mode"])
+    assert got == {u: (r["id"], r["page_count"], r["processing_mode"])
+                   for u, r in want.items()}
+    assert all(len(i) == 64 for i, _, _ in got.values())
 
 
 @pytest.mark.spark
