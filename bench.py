@@ -9,7 +9,7 @@ property; cold-start is reported separately as `startup_s`).
 Also times the headline relational/dedup/similarity queries at the given sf.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32),
+     SPARK_GRAFT_CPUS (default: the cores this process may run on),
      BENCH_DOCS (default 48000 — bench pages corpus size, the SAME corpus
      as the BENCH/BASELINE.md scaling protocol so round-over-round and
      bench-vs-baseline numbers are directly comparable).
@@ -27,8 +27,10 @@ from pyspark.sql import functions as F
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
+from docvision_spark.pipeline.session import default_cores  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_cores()
 BENCH_DOCS = int(os.environ.get("BENCH_DOCS", "48000"))
 
 # Early-exit for the best-of-3 extraction retry loop is RELATIVE (round-3

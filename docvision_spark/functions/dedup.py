@@ -17,8 +17,11 @@ Scale notes (the 100 TB design):
    it is never gathered whole.
  - SimHash: 64-bit signature; tokens are hashed JVM-side and the bit
    majority vote runs over whole Arrow batches in numpy. Near-dup pairs are
-   found by banding the signature into 4x16-bit keys; recall is complete
-   for Hamming<=3 (pigeonhole), and radius-1 band probes extend it to <=7.
+   found by banding the signature; banded_hamming_pairs works the layout
+   out from max_hamming: the fewest bands of at most 16 bits that keep
+   recall complete at probe radius <= 1 (4x16-bit bands while
+   max_hamming < 8, else the smallest power of two above max_hamming / 2),
+   probed at radius 0 while max_hamming < the band count, else 1.
  - n-gram Jaccard: exact verification on candidate pairs only (never all
    pairs — that's O(n^2) and unrunnable at 10^12 docs).
 """
@@ -132,21 +135,6 @@ def let_(value: Column, body) -> Column:
     return F.element_at(F.transform(F.array(value), body), 1)
 
 
-def word_shingles(col: Column, k: int = 3) -> Column:
-    """Distinct k-word shingles (n-grams joined by a space)."""
-    def over(toks: Column) -> Column:
-        n = F.size(toks)
-        return F.when(n < k, F.array(F.concat_ws(" ", toks))).otherwise(
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(0), n - F.lit(k)),
-                    lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)),
-                )
-            )
-        )
-    return let_(F.split(F.trim(normalized(col)), " "), over)
-
-
 def word_shingle_hashes(col: Column, k: int = 3) -> Column:
     """Distinct 64-bit hashes of k-word shingles — no n-gram string is ever
     materialized (xxhash64 takes the k token columns directly). Jaccard over
@@ -167,10 +155,13 @@ def word_shingle_hashes(col: Column, k: int = 3) -> Column:
 # ---------------------------------------------------------------- minhash --
 
 # MinHash signature length, LSH bands and words per shingle — the one
-# setting of every band key (see minhash_artifacts).
+# setting of every band key (see minhash_artifacts) — and the ids a band
+# bucket keeps (see band_bucket_pairs), one cap for a corpus's own pairs
+# and for its increments' probes.
 MINHASH_HASHES = 16
 MINHASH_BANDS = 8
 SHINGLE_WORDS = 3
+MINHASH_MAX_BUCKET = 64
 
 
 def minhash_signatures_expr(
@@ -277,15 +268,14 @@ def band_bucket_pairs(banded: DataFrame, max_bucket: int,
 def minhash_lsh_pairs(
     shingled: DataFrame,
     banded: DataFrame,
-    max_bucket: int = 64,
     jaccard_threshold: float = 0.8,
 ) -> DataFrame:
     """Near-duplicate pairs within one minhash_artifacts output: band
     buckets give candidates, jaccard_verify checks them exactly. Returns
     (id_a, id_b, jaccard) with id_a < id_b and jaccard >= threshold.
     """
-    return jaccard_verify(band_bucket_pairs(banded, max_bucket), shingled,
-                          jaccard_threshold)
+    return jaccard_verify(band_bucket_pairs(banded, MINHASH_MAX_BUCKET),
+                          shingled, jaccard_threshold)
 
 
 # ---------------------------------------------------------------- simhash --
@@ -360,43 +350,49 @@ def simhash_pairs(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     max_hamming: int = 3,
 ) -> DataFrame:
-    """Near-dup pairs by SimHash banding: 4 x 16-bit bands, candidates
-    verified at Hamming distance <= max_hamming by banded_hamming_pairs.
-    Its probe radius follows max_hamming: exact band keys while
-    max_hamming < 4 (the default 3), radius-1 probes up to 7. Recall is
-    complete for max_hamming < 8 and probabilistic above, like all SimHash
+    """Near-dup pairs by SimHash banding: candidates verified at Hamming
+    distance <= max_hamming by banded_hamming_pairs, which works its band
+    layout out from max_hamming (4 x 16-bit bands up to 7, exact band keys
+    while max_hamming < 4). Recall of the pairs within max_hamming is
+    complete for every max_hamming in 0..63; how well a SimHash distance
+    tracks text similarity stays probabilistic, as in all SimHash
     deployments."""
     sig = simhash_signatures_np(
         parallelize_input(df.select(id_col, text_col)), id_col, text_col)
-    return banded_hamming_pairs(sig, "id", "sh", n_bands=4,
-                                max_hamming=max_hamming)
+    return banded_hamming_pairs(sig, "id", "sh", max_hamming)
 
 
 def banded_hamming_pairs(
-    sig: DataFrame, id_col: str, sig_col: str,
-    n_bands: int = 4, max_hamming: int = 3,
+    sig: DataFrame, id_col: str, sig_col: str, max_hamming: int,
 ) -> DataFrame:
     """Near-dup pairs over any 64-bit signature column by multi-index
-    Hamming probing: split the signature into n_bands equal bands and index
-    each signature under its exact (band_idx, band_value) keys; candidates
-    are pairs whose probe key hits an index key, and the exact bit_count
+    Hamming probing: split the signature into equal bands and index each
+    signature under its exact (band_idx, band_value) keys; candidates are
+    pairs whose probe key hits an index key, and the exact bit_count
     verify runs on candidates only — never an all-pairs join.
 
-    The probe radius is derived from the inputs. While max_hamming <
-    n_bands it is 0: probes are the exact band keys and, by pigeonhole,
-    every pair within max_hamming agrees exactly on some band. Otherwise it
-    is 1: probes also enumerate every 1-bit flip of each band key, and a
-    pair whose every band differs by >= 2 bits is >= 2 * n_bands apart.
-    So recall is COMPLETE whenever max_hamming < 2 * n_bands and
-    probabilistic above. Band width is the scale knob: 8-bit keys have only
-    256 values and collapse into hot buckets at corpus scale (measured on
-    m02 at sf1.0: 72M candidate rows from 37k images at 8x8-bit exact
-    bands; 4x16-bit bands at radius 1 cut that ~20x for the same
-    guaranteed recall). Shared by simhash_pairs (text) and image_dup_pairs
-    (dHash). Returns (id_a, id_b, hamming:int), id_a < id_b.
+    The layout is worked out from max_hamming (0..63, else ValueError): the
+    fewest bands of at most 16 bits that keep recall COMPLETE at probe
+    radius <= 1. While max_hamming < n_bands the radius is 0: probes are the
+    exact band keys and, by pigeonhole, every pair within max_hamming
+    agrees exactly on some band. Otherwise it is 1: probes also enumerate
+    every 1-bit flip of each band key, and a pair whose every band differs
+    by >= 2 bits is >= 2 * n_bands apart. So n_bands is 4 while
+    max_hamming < 8, else the smallest power of two above max_hamming / 2
+    (8, 16 or 32). Fewest bands means widest keys, because band width is
+    the skew knob: 8-bit keys have only 256 values and collapse into hot
+    buckets at corpus scale (measured on m02 at sf1.0: 72M candidate rows
+    from 37k images at 8x8-bit exact bands; 4x16-bit bands at radius 1 cut
+    that ~20x for the same guaranteed recall). 32-bit bands are left out:
+    2x32 at radius 1 ran d02 slower than 4x16 at radius 0 on sf0.1. Shared
+    by simhash_pairs (text) and image_dup_pairs (dHash). Returns (id_a,
+    id_b, hamming:int), id_a < id_b.
     """
-    if 64 % n_bands != 0:
-        raise ValueError("n_bands must divide 64")
+    if not 0 <= max_hamming <= 63:
+        raise ValueError(f"max_hamming must be in 0..63, got {max_hamming}")
+    n_bands = 4
+    while 2 * n_bands <= max_hamming:
+        n_bands *= 2
     width = 64 // n_bands
     mask = (1 << width) - 1
     radius = 0 if max_hamming < n_bands else 1
@@ -486,10 +482,13 @@ def inverted_candidates(postings: DataFrame,
 
 def ngram_jaccard_pairs(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    k: int = 3, threshold: float = 0.5, max_postings: int | None = 128,
+    threshold: float = 0.5, max_postings: int | None = 128,
 ) -> DataFrame:
-    """Word-k-gram Jaccard near-dup pairs via an inverted shingle index
+    """Word-3-gram Jaccard near-dup pairs via an inverted shingle index
     (explode -> self-join on shingle -> candidates -> exact verify).
+    Shingles are the SHINGLE_WORDS-word hashes MinHash signs, so no n-gram
+    string is built (Jaccard over hash sets equals Jaccard over shingle
+    sets up to 2^-64 collisions).
 
     The inverted-index join only pairs documents that SHARE at least one
     shingle; a df-style cross join never happens. Hot shingles (present in
@@ -502,7 +501,7 @@ def ngram_jaccard_pairs(
     """
     sh = df.select(
         F.col(id_col).alias("id"),
-        word_shingles(F.col(text_col), k).alias("sh"),
+        word_shingle_hashes(F.col(text_col), SHINGLE_WORDS).alias("sh"),
     )
     postings = sh.select("id", F.explode("sh").alias("key"))
     cand = inverted_candidates(postings, max_postings)
@@ -644,7 +643,6 @@ def incremental_minhash_pairs(
     new_banded: DataFrame,
     hist_shingled: DataFrame,
     hist_banded: DataFrame,
-    max_bucket: int = 64,
     jaccard_threshold: float = 0.8,
 ) -> DataFrame:
     """(new_id, hist_id, jaccard) pairs: increment docs near-duplicate with
@@ -657,7 +655,7 @@ def incremental_minhash_pairs(
     history-internal pair on every run). Verification joins each side's
     candidates back to its OWN shingle table, so history text is never
     read. Hot-bucket cap applies per side."""
-    cand = band_bucket_pairs(new_banded, max_bucket, other=hist_banded)
+    cand = band_bucket_pairs(new_banded, MINHASH_MAX_BUCKET, other=hist_banded)
     return (jaccard_verify(cand, new_shingled, jaccard_threshold,
                            sets_b=hist_shingled)
             .withColumnRenamed("id_a", "new_id")

@@ -10,9 +10,9 @@ The hot path is fully numpy-vectorized: k-gram hashes are a k-term
 polynomial over the codepoint array in uint64 wraparound arithmetic
 (mod 2^64 — exact under numpy overflow, unlike a Mersenne-61 modulus whose
 122-bit products numpy cannot form), and the per-window rightmost-min is an
-argmin over a reversed sliding view. `winnow()` is the scalar reference
-implementation (pure Python ints, same mod-2^64 spec) that the vectorized
-path is parity-tested against.
+argmin over a reversed sliding view. tests/test_functions.py keeps a
+scalar reference (pure Python ints, same mod-2^64 spec) that the
+vectorized path is parity-tested against.
 """
 
 from __future__ import annotations
@@ -43,44 +43,10 @@ def _hash_str(s: str) -> int:
     return h
 
 
-def winnow(text: str, k: int = 8, w: int = 16) -> list[int]:
-    """Winnowing fingerprint set — scalar REFERENCE implementation.
-
-    Returned hashes are signed int64 views of the uint64 values (what the
-    Spark LongType column carries)."""
-    s = " ".join(text.lower().split())
-    n = len(s)
-    if n < k:
-        return [_signed(_hash_str(s))] if s else []
-    hs: list[int] = []
-    h = 0
-    for i in range(k):
-        h = (h * _B + ord(s[i])) & _MASK
-    hs.append(h)
-    bk = pow(_B, k - 1, 1 << 64)
-    for i in range(k, n):
-        h = ((h - ord(s[i - k]) * bk) * _B + ord(s[i])) & _MASK
-        hs.append(h)
-    out: list[int] = []
-    last_idx = -1
-    for start in range(0, max(1, len(hs) - w + 1)):
-        window = hs[start:start + w]
-        m = min(window)
-        # rightmost occurrence of the min
-        idx = start + len(window) - 1 - window[::-1].index(m)
-        if idx != last_idx:
-            out.append(_signed(m))
-            last_idx = idx
-    return out
-
-
-def _signed(h: int) -> int:
-    return h - (1 << 64) if h >= (1 << 63) else h
-
-
 def winnow_np(text: str, k: int = 8, w: int = 16) -> np.ndarray:
-    """Vectorized winnowing — identical output to winnow(), O(n·k + n·w)
-    numpy ops, no per-character Python loop."""
+    """Vectorized winnowing, O(n·k + n·w) numpy ops, no per-character
+    Python loop. Hashes are signed int64 views of the uint64 values (what
+    the Spark LongType column carries)."""
     s = " ".join(text.lower().split())
     n = len(s)
     if n == 0:

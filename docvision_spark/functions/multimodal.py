@@ -454,39 +454,25 @@ def resize_images(df: DataFrame, max_side: int = 16) -> DataFrame:
     return map_in_pandas(df, fn, THUMB_SCHEMA)
 
 
-def image_dup_pairs(features: DataFrame, max_hamming: int = 6,
-                    n_bands: int = 8) -> DataFrame:
+def image_dup_pairs(features: DataFrame, max_hamming: int = 6) -> DataFrame:
     """Near-duplicate image pairs by dHash hamming distance.
 
     Scale shape (same operator as simhash_pairs): dedup.banded_hamming_pairs
     splits the 64-bit dhash into equal bands, joins on (band_idx,
     band_value) keys and runs the exact bit_count verify on candidates
-    only. Never an all-pairs join. The contract here is COMPLETE recall
-    (the O(n^2) SQL oracle matches exactly), so max_hamming < n_bands is
-    required. An even n_bands is halved: twice-as-wide bands keep complete
-    recall, because the operator derives a radius-1 probe once max_hamming
-    reaches the halved count and max_hamming < n_bands = 2 * (n_bands/2)
-    (the default 6 over 4x16-bit bands probes at radius 1). Perceptual hashes
-    cluster hard and narrow bands collapse into hot buckets as the corpus
-    grows (8-bit keys have only 256 values); wide bands keep the candidate
-    volume ~n^2/2^width instead of ~n^2/2^(width/2).
+    only. Never an all-pairs join. Recall is COMPLETE (the O(n^2) SQL
+    oracle matches exactly) for every max_hamming, because the operator
+    works its band layout out from max_hamming (the default 6 probes
+    4x16-bit bands at radius 1). Perceptual hashes cluster hard, so wide
+    bands matter here: 8-bit keys have only 256 values and collapse into
+    hot buckets as the corpus grows.
 
     Input: output of extract_media_features (needs media_id + dhash).
     Output: (id_a, id_b, hamming:int) with id_a < id_b.
     """
     from docvision_spark.functions.dedup import banded_hamming_pairs
 
-    if max_hamming >= n_bands:
-        # the documented contract here is COMPLETE recall (the SQL oracle
-        # depends on it) — refuse configs that silently lose pairs
-        raise ValueError(
-            f"image_dup_pairs requires max_hamming < n_bands for complete "
-            f"recall (got {max_hamming} >= {n_bands}); raise n_bands or use "
-            f"banded_hamming_pairs directly for probabilistic recall")
-    if n_bands % 2 == 0:
-        n_bands //= 2
-    return banded_hamming_pairs(features, "media_id", "dhash",
-                                n_bands=n_bands, max_hamming=max_hamming)
+    return banded_hamming_pairs(features, "media_id", "dhash", max_hamming)
 
 
 def synthesize_media(df: DataFrame, id_col: str = "doc_id",

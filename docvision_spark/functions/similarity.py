@@ -103,28 +103,35 @@ def hyperplane_signature(vec_col: Column, n_planes: int = 16, dim: int = 64) -> 
     return sig
 
 
+# The LSH index layout: signature planes, partition prefix bits and the
+# probe's Hamming radius. A table is always probed with the settings it
+# was written with.
+LSH_INDEX_PLANES = 12
+LSH_INDEX_PREFIX_BITS = 6
+LSH_INDEX_PROBE_HAMMING = 2
+
+
 def lsh_index_write(
     emb: DataFrame, path: str,
     id_col: str = "vec_id", vec_col: str = "embedding",
-    n_planes: int = 12, prefix_bits: int = 6,
 ) -> None:
     """Write-time LSH signature table: (id, sig, vec) partitioned on the low
-    `prefix_bits` bits of the hyperplane signature.
+    LSH_INDEX_PREFIX_BITS bits of the hyperplane signature.
 
     This is what makes ANN lookup a PARTITION-PRUNED scan instead of a
     full-table signature recompute: a query within Hamming h of a stored
     signature necessarily lands in a prefix within Hamming h of the query's
-    prefix, so a probe touches only sum_{i<=h} C(prefix_bits, i) of the
-    2^prefix_bits partitions (22/64 at h=2, prefix_bits=6) and reads the
-    8-byte sig column before any vector math.
+    prefix, so a probe touches only sum_{i<=h} C(6, i) of the 2^6
+    partitions (22/64 at h=2) and reads the 8-byte sig column before any
+    vector math.
     """
     dim_row = emb.select(F.size(vec_col).alias("d")).first()
     dim = int(dim_row["d"])
-    mask = (1 << prefix_bits) - 1
+    mask = (1 << LSH_INDEX_PREFIX_BITS) - 1
     signed = emb.select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).cast("array<double>").alias("vec"),
-        hyperplane_signature(F.col(vec_col), n_planes, dim).alias("sig"),
+        hyperplane_signature(F.col(vec_col), LSH_INDEX_PLANES, dim).alias("sig"),
     ).withColumn("sig_prefix", F.col("sig").bitwiseAND(F.lit(mask)).cast("int"))
     (signed.repartition("sig_prefix")
            .write.mode("overwrite").partitionBy("sig_prefix").parquet(path))
@@ -132,7 +139,6 @@ def lsh_index_write(
 
 def lsh_index_topk(
     spark, path: str, query_vec: list[float], k: int = 10,
-    n_planes: int = 12, prefix_bits: int = 6, max_probe_hamming: int = 2,
     exclude_id: int | None = None,
 ) -> DataFrame:
     """Probe a lsh_index_write table: enumerate the prefix Hamming ball on
@@ -143,12 +149,12 @@ def lsh_index_topk(
     dim = len(query_vec)
     qdf = spark.createDataFrame([(query_vec,)], "qv array<double>")
     qsig = qdf.select(
-        hyperplane_signature(F.col("qv"), n_planes, dim).alias("s")
+        hyperplane_signature(F.col("qv"), LSH_INDEX_PLANES, dim).alias("s")
     ).collect()[0]["s"]
-    qpre = qsig & ((1 << prefix_bits) - 1)
+    qpre = qsig & ((1 << LSH_INDEX_PREFIX_BITS) - 1)
     probes = []
-    for h in range(max_probe_hamming + 1):
-        for bits in combinations(range(prefix_bits), h):
+    for h in range(LSH_INDEX_PROBE_HAMMING + 1):
+        for bits in combinations(range(LSH_INDEX_PREFIX_BITS), h):
             flip = 0
             for b in bits:
                 flip |= 1 << b
@@ -158,7 +164,7 @@ def lsh_index_topk(
     cand = (
         idx.filter(F.col("sig_prefix").isin(probes))   # partition pruning
            .filter(F.bit_count(F.col("sig").bitwiseXOR(
-               F.lit(qsig).cast("long"))) <= max_probe_hamming)
+               F.lit(qsig).cast("long"))) <= LSH_INDEX_PROBE_HAMMING)
     )
     if exclude_id is not None:
         cand = cand.filter(F.col("vec_id") != exclude_id)

@@ -8,9 +8,9 @@ boolean (arithmetic) decoder, uncompressed + compressed frame headers
 intra mode coding, DCT token decoding with the coefficient-band /
 nonzero-context schedule, dequantization, the normative integer inverse
 DCT/WHT, all 16x16 / chroma / 4x4 intra predictors, and the normal loop
-filter. The header's filter-type bit is read but not honoured: a frame
-that selects the simple filter is filtered with the normal one too (the
-corpus encoder writes the normal type only). The reference reads these
+filter. A frame that selects the simple loop filter at a nonzero level
+raises ImageDecodeError rather than decoding to wrong pixels (the corpus
+encoder writes the normal type only). The reference reads these
 via cv2/libwebp (reference core/parser.py:554-563); neither is available
 here, so the pixel path is built from the spec.
 
@@ -604,8 +604,10 @@ def vp8_decode(data: bytes) -> np.ndarray:
                 if bd.get(128):
                     seg_tree_probs[i] = bd.literal(8)
 
-    bd.get(128)  # filter type (simple=1) — ignored: the normal filter runs
+    simple_filter = bd.get(128)
     filter_level = bd.literal(6)
+    if simple_filter and filter_level:
+        raise ImageDecodeError("vp8: simple loop filter unsupported")
     sharpness = bd.literal(3)
     if bd.get(128):  # loop filter adj enable
         if bd.get(128):  # mode/ref delta update

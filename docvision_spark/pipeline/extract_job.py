@@ -263,13 +263,13 @@ def run_extract_job(
     t0 = time.perf_counter()
     pages = read_pages(spark, pages_path)
 
-    committed = snapshots.committed_urls(spark, out_dir)
+    committed = snapshots.read_table(spark, out_dir)
     if resume and committed is not None:
         # resume: anti-join against already-committed urls (Iceberg-snapshot
         # emulation; the committed scan is column-pruned to `url` only). At
         # 10^12 scale this is a shuffle join on url; AQE downgrades it to a
         # broadcast join automatically when the committed set is small.
-        pages = pages.join(committed, "url", "left_anti")
+        pages = pages.join(committed.select("url"), "url", "left_anti")
 
     out = extract_pages(pages, partitions)
     n_dropped = 0

@@ -12,15 +12,23 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cores() -> int:
+    """Local-mode core count: $SPARK_GRAFT_CPUS, else every core this
+    process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS",
+                              len(os.sched_getaffinity(0))))
+
+
 def get_spark(
     app_name: str = "docvision-spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Create/get a local SparkSession."""
+    """Create/get a local SparkSession on `cores` (default_cores() when
+    None)."""
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = default_cores()
     if shuffle_partitions is None:
         shuffle_partitions = max(2 * cores, 32)
     b = (
@@ -59,17 +67,6 @@ def get_spark(
         .config("spark.driver.extraJavaOptions",
                 "-XX:+UseG1GC -XX:G1HeapRegionSize=32m")
         .config("spark.python.worker.reuse", "true")
-        # spark.task.cpus: round-4 measured the python-heavy extract stage
-        # 25% faster with task.cpus=2 at local[32] (python worker per slot
-        # starved the JVM Arrow-feed threads) — but that predates the UDS
-        # transport below, which removed the feed bottleneck. Re-measured
-        # in round 6: task.cpus=1 is now faster for extraction AND gives
-        # every JVM-side query its full 32 slots (the =2 setting halved
-        # parallelism for the whole relational/dedup surface). Kept as an
-        # env knob so a cluster with a different python/JVM core ratio can
-        # restore the headroom without a code change.
-        .config("spark.task.cpus",
-                os.environ.get("SPARK_GRAFT_TASK_CPUS", "1"))
         # JVM<->python-worker transport over unix domain sockets (Spark 4):
         # the TCP-loopback default suffers Nagle/delayed-ACK stalls that cap
         # Arrow feed at ~20 MB/s; UDS measured 20x faster on binary columns

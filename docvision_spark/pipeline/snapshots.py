@@ -5,7 +5,7 @@ snapshot semantics are emulated with the same guarantees the pipeline needs:
  - atomic commit: data files land in a staging dir, are moved into data/,
    and become visible only when the manifest is atomically replaced
    (os.replace) pointing at the new snapshot
- - resume: committed_urls() lists only files recorded in the manifest, so a
+ - resume: read_table() lists only files recorded in the manifest, so a
    crashed run's partial staging output is invisible to the resume anti-join
  - lineage: each snapshot records parent id, file list, and row count
 
@@ -165,17 +165,6 @@ def commit(table_dir: str, staging: str, data_dir: str, row_count: int) -> str:
         }
 
     return _publish(table_dir, staging, data_dir, build)
-
-
-def committed_urls(spark: SparkSession, table_dir: str) -> DataFrame | None:
-    """DataFrame of urls in the current snapshot (column-pruned scan), or
-    None when the table has no committed snapshot yet."""
-    m = read_manifest(table_dir)
-    if not m or not m["files"]:
-        return None
-    data_dir = os.path.join(table_dir, "data")
-    paths = [os.path.join(data_dir, rel) for rel in m["files"]]
-    return spark.read.option("basePath", data_dir).parquet(*paths).select("url")
 
 
 def snapshot_log(table_dir: str) -> list[dict]:

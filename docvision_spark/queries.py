@@ -675,7 +675,7 @@ def d03_ngram_jaccard_pairs(spark: SparkSession, sf: str) -> DataFrame:
     # scale, so the DuckDB all-pairs exact-Jaccard twin must match exactly.
     # Production default (128) is the documented 100 TB recall/cost knob.
     d = load(spark, sf, "documents")
-    return dedup.ngram_jaccard_pairs(d, k=3, threshold=0.5, max_postings=None)
+    return dedup.ngram_jaccard_pairs(d, threshold=0.5, max_postings=None)
 
 
 def d05_winnow_overlap(spark: SparkSession, sf: str) -> DataFrame:
@@ -1227,13 +1227,13 @@ def m03_av_features(spark: SparkSession, sf: str) -> DataFrame:
 
 def m02_image_dups(spark: SparkSession, sf: str) -> DataFrame:
     """Perceptual near-dup image pairs: dHash banded hamming join
-    (8 bands -> complete recall at hamming <= 6, so the O(n^2) SQL oracle
-    matches exactly). Twins are planted by synthesize_media (id%17==1).
+    (4x16-bit bands at radius 1 -> complete recall at hamming <= 6, so the
+    O(n^2) SQL oracle matches exactly). Twins are planted by synthesize_media (id%17==1).
     The dup JOIN runs live over the cached features (m01 is the live
     decode determinism check)."""
     from docvision_spark.functions.multimodal import image_dup_pairs
 
-    return image_dup_pairs(_mfeats(spark, sf), max_hamming=6, n_bands=8)
+    return image_dup_pairs(_mfeats(spark, sf), max_hamming=6)
 
 
 def u01_url_canonical(spark: SparkSession, sf: str) -> DataFrame:

@@ -55,9 +55,9 @@ def main() -> None:
     from docvision_spark.corpus import ensure_corpus
     from docvision_spark.pipeline import snapshots
     from docvision_spark.pipeline.extract_job import read_pages, run_extract_job
-    from docvision_spark.pipeline.session import get_spark
+    from docvision_spark.pipeline.session import default_cores, get_spark
 
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = default_cores()
     spark = get_spark(app_name="compaction-bench", cores=cores)
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -1,6 +1,7 @@
 """Two-cluster-size scaling evidence (north rule: efficiency >= 0.8 from N
 to 4N executors): the same job on the same input at local[N] and local[4N],
-where 4N is every core of this host and N = max(1, 4N // 4).
+where 4N is the session's default core count ($SPARK_GRAFT_CPUS, else
+every core this process may run on) and N = max(1, 4N // 4).
 
 Each measurement runs in a fresh subprocess (a JVM can't change master), on
 the same cached bench corpus, with warmed python workers; throughput is
@@ -94,9 +95,10 @@ def run_queries_once(cores: int, sf_dir: str, names: list[str]) -> dict:
 
 
 def ladder() -> tuple[int, int]:
-    """The N -> 4N pair from this host: 4N is every core the process may
-    use, N = max(1, 4N // 4)."""
-    n_cpu = len(os.sched_getaffinity(0))
+    """The N -> 4N pair: 4N is session.default_cores(), N = max(1, 4N // 4)."""
+    from docvision_spark.pipeline.session import default_cores
+
+    n_cpu = default_cores()
     return max(1, n_cpu // 4), n_cpu
 
 
@@ -133,13 +135,12 @@ def main() -> None:
               f"({best['docs']} docs in {best['wall_s']:.1f}s)")
 
     # per-query protocol medians (cores = the bench's own core count)
-    qcores = int(os.environ.get("SPARK_GRAFT_CPUS", str(hi)))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from bench import HEADLINE
     qwalls: dict[str, list[float]] = {n: [] for n in HEADLINE}
     if "--no-queries" not in sys.argv:
         for rep in range(repeat):
-            w = run_queries_once(qcores, sf_dir, HEADLINE)
+            w = run_queries_once(hi, sf_dir, HEADLINE)
             for n, per in w.items():
                 qwalls[n].append(min(per))
             print(f"  rep{rep} queries: "
@@ -173,7 +174,7 @@ def main() -> None:
             "eff_cap": round(eff_cap, 3),
             "query_protocol_medians": query_protocol,
             "query_protocol_walls": {n: v for n, v in qwalls.items() if v},
-            "query_protocol_cores": qcores,
+            "query_protocol_cores": hi,
         }) + "\n")
     best_ever: dict[int, float] = {}
     effs: list[float] = []
@@ -207,7 +208,7 @@ def main() -> None:
         f.write(f"""# BENCH/BASELINE — scaling evidence (north rule)
 
 Protocol (no real cluster here): the same extraction job on the same input
-at N = {lo} and 4N = {hi} cores ({hi} is every core of this host), python
+at N = {lo} and 4N = {hi} cores ({hi} is the default core count), python
 workers warmed, throughput = docs over extraction-stage wall time (best of
 {repeat} interleaved fresh-JVM runs per config).
 
@@ -231,7 +232,7 @@ Best docs/sec ever observed per config on this ladder
 (BENCH/history.jsonl):
 {best_rows}
 
-## Headline-query protocol walls (local[{qcores}], sf0.1)
+## Headline-query protocol walls (local[{hi}], sf0.1)
 
 Same fresh-JVM protocol as extraction: per JVM each query runs twice and
 the min is kept (first wall folds in plan compile + python-worker

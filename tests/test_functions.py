@@ -54,11 +54,13 @@ def test_minhash_finds_near_dups(docs):
 @pytest.mark.spark
 def test_banded_hamming_multiprobe_parity(spark):
     """banded_hamming_pairs must return the EXACT brute-force O(n^2) pair
-    set at a radius it guarantees complete recall for, both with exact band
-    keys (6 < 8 = n_bands: probe radius 0) and with radius-1 probes over
-    wide bands (6 >= 4 = n_bands, 6 < 2*4: what image_dup_pairs runs).
-    Signatures are crafted to exercise: equal sigs, 1-bit per band,
-    all-6-bits-in-one-band, 2+2+1+1 spread, just-over-threshold."""
+    set for every max_hamming, whatever layout it works out: exact band
+    keys (0 and 3: 4x16-bit, radius 0), radius-1 probes over 4x16-bit
+    bands (6: what m02 runs), 8x8-bit (8) and 16x4-bit (16) bands at
+    radius 1. Signatures are crafted to exercise: equal sigs, 1-bit per
+    band, all-6-bits-in-one-band, 2+2+1+1 spread, just-over-threshold,
+    and 1 bit in every 8-bit and every 4-bit band (found only by
+    radius-1 probes). A max_hamming outside 0..63 is refused."""
     from itertools import combinations
 
     from docvision_spark.functions.dedup import banded_hamming_pairs
@@ -73,19 +75,22 @@ def test_banded_hamming_multiprobe_parity(spark):
         (8, 0x0123456789ABCDEF ^ 0x0001000100010001),          # 1 bit per 16-bit band
         (9, 0x0123456789ABCDEF ^ 0x0003000300010001),          # 2+2+1+1 over 16-bit bands
         (10, 0x0123456789ABCDEF ^ 0x0003000300030001),         # 7 bits: just over
+        (11, 0x0123456789ABCDEF ^ 0x0101010101010101),         # 1 bit per 8-bit band
+        (12, 0x0123456789ABCDEF ^ 0x1111111111111111),         # 1 bit per 4-bit band
     ]
     df = spark.createDataFrame(sigs, "media_id long, dhash long")
-    brute = set()
     vals = {i: s for i, s in sigs if s is not None}
-    for a, b in combinations(sorted(vals), 2):
-        h = bin((vals[a] ^ vals[b]) & ((1 << 64) - 1)).count("1")
-        if h <= 6:
-            brute.add((a, b, h))
-    for n_bands in (8, 4):
+    dist = {(a, b): bin((vals[a] ^ vals[b]) & ((1 << 64) - 1)).count("1")
+            for a, b in combinations(sorted(vals), 2)}
+    for max_hamming in (0, 3, 6, 8, 16):
+        brute = {(a, b, h) for (a, b), h in dist.items() if h <= max_hamming}
         got = {(r["id_a"], r["id_b"], r["hamming"]) for r in
-               banded_hamming_pairs(df, "media_id", "dhash", n_bands, 6)
+               banded_hamming_pairs(df, "media_id", "dhash", max_hamming)
                .collect()}
-        assert got == brute, n_bands
+        assert got == brute, max_hamming
+    for bad in (-1, 64):
+        with pytest.raises(ValueError):
+            banded_hamming_pairs(df, "media_id", "dhash", bad)
 
 
 @pytest.mark.spark
@@ -102,7 +107,7 @@ def test_ngram_jaccard_pairs(docs):
     from docvision_spark.functions.dedup import ngram_jaccard_pairs
 
     pairs = {(r["id_a"], r["id_b"]): r["jaccard"]
-             for r in ngram_jaccard_pairs(docs, k=3, threshold=0.5).collect()}
+             for r in ngram_jaccard_pairs(docs, threshold=0.5).collect()}
     assert pairs[(1, 2)] == 1.0
     assert (1, 3) in pairs
     assert not any({a, b} & {4} for a, b in pairs)
@@ -335,16 +340,56 @@ def test_lang_id_zh_cjk_ratio(spark):
     assert out[4] == "en"
 
 
+def _winnow(text: str, k: int = 8, w: int = 16) -> list[int]:
+    """Winnowing fingerprint list — the scalar reference (pure Python ints,
+    mod 2^64, rightmost min per window) that fingerprint.winnow_np must
+    match, as signed int64 views of the uint64 hashes."""
+    from docvision_spark.functions.fingerprint import _B, _MASK, _hash_str
+
+    def signed(h: int) -> int:
+        return h - (1 << 64) if h >= (1 << 63) else h
+
+    s = " ".join(text.lower().split())
+    n = len(s)
+    if n < k:
+        return [signed(_hash_str(s))] if s else []
+    hs: list[int] = []
+    h = 0
+    for i in range(k):
+        h = (h * _B + ord(s[i])) & _MASK
+    hs.append(h)
+    bk = pow(_B, k - 1, 1 << 64)
+    for i in range(k, n):
+        h = ((h - ord(s[i - k]) * bk) * _B + ord(s[i])) & _MASK
+        hs.append(h)
+    out: list[int] = []
+    last_idx = -1
+    for start in range(0, max(1, len(hs) - w + 1)):
+        window = hs[start:start + w]
+        m = min(window)
+        idx = start + len(window) - 1 - window[::-1].index(m)
+        if idx != last_idx:
+            out.append(signed(m))
+            last_idx = idx
+    return out
+
+
 def test_winnow_fingerprint_overlap(spark, docs):
-    from docvision_spark.functions.fingerprint import winnow, winnow_fingerprints
+    from docvision_spark.functions.fingerprint import (winnow_fingerprints,
+                                                       winnow_np)
 
     out = {r["doc_id"]: r for r in winnow_fingerprints(docs).collect()}
     assert out[5]["fingerprints"] == []
     f1, f2, f4 = (set(out[i]["fingerprints"]) for i in (1, 2, 4))
     assert f1 == f2
     assert len(f1 & f4) / max(1, len(f1 | f4)) < 0.05
-    # pure-function parity: distributed == local
-    assert set(winnow(BASE)) == f1
+    # distributed == scalar reference, and the vectorized kernel matches
+    # it hash for hash: short text (n < k), a window wider than the
+    # grams, runs of equal hashes (rightmost-min ties), non-ASCII
+    assert set(_winnow(BASE)) == f1
+    for t in (BASE, "", "short", "abcdefghijkl", "a" * 40, "ab" * 30,
+              "Grüße aus Köln — 東京 " * 3):
+        assert winnow_np(t).tolist() == _winnow(t), t
 
 
 @pytest.mark.spark
@@ -372,10 +417,9 @@ def test_similarity_lsh_recall_vs_bruteforce(spark, tmp_path):
     q = [x + rng.gauss(0, 0.15) for x in cents[0]]
 
     path = str(tmp_path / "lsh_index")
-    lsh_index_write(emb, path, n_planes=12)
+    lsh_index_write(emb, path)
     exact = [r["vec_id"] for r in brute_force_topk(emb, q, k=10).collect()]
-    ann = [r["vec_id"] for r in lsh_index_topk(
-        spark, path, q, k=10, n_planes=12, max_probe_hamming=2).collect()]
+    ann = [r["vec_id"] for r in lsh_index_topk(spark, path, q, k=10).collect()]
     recall = len(set(exact) & set(ann)) / 10
     assert recall >= 0.7, f"LSH recall {recall} too low vs brute force"
     assert all(v < per_cluster for v in exact), "true neighbors are cluster 0"
@@ -536,7 +580,8 @@ def test_hot_bucket_keeps_smallest_ids_without_gathering(spark):
     import random
 
     from docvision_spark.functions.dedup import (
-        incremental_minhash_pairs, minhash_artifacts, minhash_lsh_pairs)
+        MINHASH_MAX_BUCKET, incremental_minhash_pairs, minhash_artifacts,
+        minhash_lsh_pairs)
     from docvision_spark.functions.similarity import embedding_dup_pairs_lsh
 
     rng = random.Random(5)
@@ -546,14 +591,14 @@ def test_hot_bucket_keeps_smallest_ids_without_gathering(spark):
         for i in range(20)]
     rng.shuffle(rows)
     docs = spark.createDataFrame(rows, "doc_id long, text string").repartition(4)
-    low = sorted(hot)[:64]
+    low = sorted(hot)[:MINHASH_MAX_BUCKET]
     want = {(a, b) for a in low for b in low if a < b}
 
     shingled, banded = minhash_artifacts(docs)
     # banded is materialized: its readers never re-run the signing aggregate
     assert "aggregate(" not in \
         banded._jdf.queryExecution().executedPlan().toString()
-    pairs = minhash_lsh_pairs(shingled, banded, max_bucket=64)
+    pairs = minhash_lsh_pairs(shingled, banded)
     # the initial plan: once run, AQE prints its stages around it
     plan = pairs._jdf.queryExecution().executedPlan().toString()
     assert {(r["id_a"], r["id_b"]) for r in pairs.collect()} == want
@@ -561,7 +606,7 @@ def test_hot_bucket_keeps_smallest_ids_without_gathering(spark):
     hist = spark.createDataFrame([(i + 100_000, BASE) for i in hot],
                                  "doc_id long, text string")
     inc = incremental_minhash_pairs(*minhash_artifacts(docs),
-                                    *minhash_artifacts(hist), max_bucket=64)
+                                    *minhash_artifacts(hist))
     assert {(r["new_id"], r["hist_id"]) for r in inc.collect()} == \
         {(a, b + 100_000) for a in low for b in low}
 
@@ -569,8 +614,8 @@ def test_hot_bucket_keeps_smallest_ids_without_gathering(spark):
     emb = spark.createDataFrame([(i, vec) for i in hot],
                                 "vec_id long, embedding array<double>")
     got = {(r["id_a"], r["id_b"])
-           for r in embedding_dup_pairs_lsh(emb.repartition(4),
-                                            max_bucket=64).collect()}
+           for r in embedding_dup_pairs_lsh(
+               emb.repartition(4), max_bucket=MINHASH_MAX_BUCKET).collect()}
     assert got == want
 
     assert "collect_list" not in plan, plan

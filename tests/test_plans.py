@@ -41,7 +41,7 @@ def test_resume_antijoin_prunes_committed_scan(spark, pages_dir, tmp_path):
 
     out_dir = str(tmp_path / "out")
     run_extract_job(spark, pages_dir, out_dir, partitions=4)
-    committed = snapshots.committed_urls(spark, out_dir)
+    committed = snapshots.read_table(spark, out_dir).select("url")
     plan = plan_of(committed)
     scan = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
     assert scan and "markdown" not in scan[0] and "text" not in scan[0]

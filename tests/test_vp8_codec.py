@@ -193,6 +193,41 @@ def test_loop_filter_smooths_block_edges():
     assert np.abs(d1.astype(int) - d0.astype(int)).mean() < 12
 
 
+def test_simple_loop_filter_frame_is_refused(monkeypatch):
+    """A frame header that selects the simple loop filter (type 1) at a
+    nonzero level raises the typed error instead of running the normal
+    filter over it; at level 0 no filter runs, so the frame decodes as the
+    same frame with the normal type does."""
+    from docvision_spark.kernel import vp8_codec
+
+    made = []
+
+    class SimpleFilterHeader(BoolEncoder):
+        # the 4th bit of the first (header) partition is the filter type
+        def __init__(self):
+            super().__init__()
+            self.n_puts = 0
+            made.append(self)
+
+        def put(self, bit: int, prob: int) -> None:
+            self.n_puts += 1
+            if self is made[0] and self.n_puts == 4:
+                bit = 1
+            super().put(bit, prob)
+
+    rng = np.random.default_rng(9)
+    img = rng.integers(0, 256, (32, 48, 3), dtype=np.uint8)
+    normal = vp8_decode(vp8_encode(img, qi=60, filter_level=0))
+    vp8_decode(vp8_encode(img, qi=60, filter_level=20))  # normal type: fine
+    monkeypatch.setattr(vp8_codec, "BoolEncoder", SimpleFilterHeader)
+    simple20 = vp8_encode(img, qi=60, filter_level=20)
+    with pytest.raises(ImageDecodeError, match="simple loop filter"):
+        vp8_decode(simple20)
+    made.clear()
+    assert np.array_equal(
+        vp8_decode(vp8_encode(img, qi=60, filter_level=0)), normal)
+
+
 def test_simple_and_mbedge_filters_respect_masks():
     """Direct unit checks: a flat region is untouched (no edge), a huge
     step is untouched (mask fails on interior limits), a moderate step is
