@@ -3,6 +3,10 @@
 Scale notes (the 100 TB design):
  - exact: one hash-shuffle on a 32-char fingerprint — the cheapest possible
    dedup; fingerprint is computed JVM-side (md5 of normalized text).
+   keep_first is the one keep-one-row-per-key operator (url dedup,
+   incremental exact dedup, re-crawl extract, curate's exact step): a
+   window and the anti-join against published keys share one exchange
+   over the rows, and null keys pass through spread by a row hash.
  - MinHash+LSH: minhash_artifacts is the single definition of shingling,
    signing and banding — whole-stage-codegen expressions (higher-order
    functions over arrays + xxhash64), NO Python — and every near-dup entry
@@ -118,6 +122,30 @@ def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
 def exact_dup_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Fingerprints with more than one document (the duplicate report)."""
     return exact_dedup(df, id_col, text_col).filter(F.col("n_copies") > 1)
+
+
+def keep_first(df: DataFrame, key: Column, order: list[Column],
+               published: DataFrame | None = None) -> DataFrame:
+    """One row per non-null string `key`: the first by `order` (sort
+    expressions; rows tied on key and order keep exactly one of them).
+    Rows whose key is null pass through. Keys found in `published`, a
+    one-column frame of keys, drop outright. Output columns are `df`'s.
+
+    One exchange over the rows: the window partitions on a single column,
+    the key, and the anti-join against `published` reads that partitioning
+    (only the published keys shuffle to meet it). A null key becomes
+    "\\0" + a hash of its row, a value no real key equals, so null-key
+    rows spread over the exchange instead of piling onto one task, and
+    never match a published key."""
+    spread = F.concat(F.lit("\0"), F.xxhash64(*df.columns).cast("string"))
+    w = Window.partitionBy("_k").orderBy(*order)
+    kept = (df.withColumn("_key", key)
+              .withColumn("_k", F.coalesce("_key", spread))
+              .withColumn("_rn", F.row_number().over(w))
+              .filter((F.col("_rn") == 1) | F.col("_key").isNull()))
+    if published is not None:
+        kept = kept.join(published.toDF("_k"), "_k", "left_anti")
+    return kept.select(*df.columns)
 
 
 # --------------------------------------------------------------- shingles --
@@ -601,41 +629,19 @@ def fingerprint_table(df: DataFrame, id_col: str = "doc_id",
 
 def incremental_exact_dedup(new_df: DataFrame, history_fps: DataFrame,
                             id_col: str = "doc_id",
-                            text_col: str = "text",
-                            fp_col: str | None = None) -> DataFrame:
+                            text_col: str = "text") -> DataFrame:
     """Rows of a new crawl increment that survive exact dedup against a
     published fingerprint table (and within the increment itself).
 
-    Within-batch policy matches exact_dedup (min id per fingerprint);
-    cross-history is a left-anti join on fp. Only (fp, id) pairs ever
-    shuffle — the increment's text rides a final left-semi join on the id
-    column and the history table is touched fp-column-only (column-pruned
-    scan of the persisted artifact). NULL-text rows pass through
-    unconditionally: they are never dedup keys (see fingerprint_table).
-
-    fp_col: use an EXISTING fingerprint column instead of computing
-    md5(normalized(text)) — the extract pipeline already carries a
-    sha3-256 content id, so dedup against a published extract table is an
-    anti-join between two persisted id columns with no text read on
-    either side (rows with NULL fp_col pass through like NULL text).
-    """
-    key = F.col(fp_col) if fp_col else F.col(text_col)
-    nulls = new_df.filter(key.isNull())
-    # fp computation parallelized like fingerprint_table; when fp_col is
-    # given the select is projection-only and the repartition is skipped
-    # (nothing heavy runs map-side there)
-    fp_src = new_df.filter(key.isNotNull())
-    if not fp_col:
-        fp_src = parallelize_input(fp_src.select(id_col, text_col))
-    fps = fp_src.select(F.col(id_col).alias("_id"),
-                        (F.col(fp_col) if fp_col
-                         else fingerprint_md5(F.col(text_col))).alias("fp"))
-    batch_winner = fps.groupBy("fp").agg(F.min("_id").alias("_id"))
-    survivor_ids = (batch_winner
-                    .join(history_fps.select("fp"), "fp", "left_anti")
-                    .select(F.col("_id").alias(id_col)))
-    return (new_df.join(survivor_ids, id_col, "left_semi")
-                  .unionByName(nulls))
+    Fingerprint, then keep_first: within-batch policy matches exact_dedup
+    (min id per fingerprint), and cross-history is the anti-join on fp
+    that reads the window's exchange, so the increment's rows shuffle once
+    and the history table is touched fp-column-only (column-pruned scan of
+    the persisted artifact). NULL-text rows pass through unconditionally:
+    they are never dedup keys (see fingerprint_table)."""
+    return keep_first(new_df, fingerprint_md5(F.col(text_col)),
+                      [F.col(id_col).asc_nulls_last()],
+                      published=history_fps.select("fp"))
 
 
 def incremental_minhash_pairs(

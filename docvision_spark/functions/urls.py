@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from docvision_spark.functions.dedup import keep_first
+
 # tracked params dropped from query strings (lowercase-matched as-is; the
 # query's case is preserved so only literally-lowercase params match — the
 # conservative choice)
@@ -108,7 +110,7 @@ def url_dedup(df: DataFrame, url_col: str = "url") -> DataFrame:
     Output row CONTENT is therefore stable across runs and partitionings
     (up to 2^-64 hash collisions between differing rows).
 
-    One shuffle: a single window per canonical url ordered by url first
+    One shuffle: dedup.keep_first per canonical url, ordered by url first,
     keeps the lowest url and, among its re-crawls, the policy survivor —
     so downstream stages (the kernel) get the partitions AQE sizes for
     this exchange, not a union with the scan's splits. Null-url rows pass
@@ -117,7 +119,6 @@ def url_dedup(df: DataFrame, url_col: str = "url") -> DataFrame:
     columns: canonical_url, the url column, then the input's other
     columns in input order."""
     from pyspark.sql import types as T
-    from pyspark.sql.window import Window
 
     rest = [c for c in df.columns if c not in (url_col, "canonical_url")]
     base = with_canonical_url(df, url_col)
@@ -139,13 +140,8 @@ def url_dedup(df: DataFrame, url_col: str = "url") -> DataFrame:
         scalar.remove("warc_ts")
     order += [F.col(c).asc_nulls_last() for c in scalar]
     order += [h.asc_nulls_last() for h in hashed]
-    # null urls share one null canonical_url; spread them over the
-    # exchange by content so they never pile onto a single task
-    spread = F.when(F.col(url_col).isNull(), F.xxhash64(*rest or [F.lit(0)]))
-    w = Window.partitionBy("canonical_url", spread).orderBy(*order)
-    return (base.withColumn("_rn", F.row_number().over(w))
-                .filter((F.col("_rn") == 1) | F.col(url_col).isNull())
-                .select("canonical_url", url_col, *rest))
+    return (keep_first(base, F.col("canonical_url"), order)
+            .select("canonical_url", url_col, *rest))
 
 
 def resolve_href(base: Column, href: Column) -> Column:

@@ -9,8 +9,10 @@ Physical plan (SURVEY.md §4.3):
       -> withColumn host/salt, repartition        [skew: hot host ~30%]
       -> sortWithinPartitions(octet_length desc)  [size-aware packing]
       -> mapInPandas(extract_batches)             [the only Python stage]
+      -> dedup.keep_first on id vs published ids  [re-crawl: one exchange]
       -> write output parquet (bucketed)
-      -> metrics + failure samples from the written output (column-pruned)
+      -> metrics + failure samples from the written output (column-pruned),
+         collected once as Arrow and written from the driver
 
 No per-row Python dispatch: the kernel runs over Arrow record batches via
 mapInPandas (Iterator variant, one call per partition, in Python workers
@@ -32,7 +34,8 @@ from binascii import crc32
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType, BooleanType, DoubleType, IntegerType, LongType,
@@ -164,7 +167,6 @@ def read_pages(spark: SparkSession, pages_path: str) -> DataFrame:
 
 def extract_pages(pages: DataFrame, partitions: int | None = None) -> DataFrame:
     """Logical plan for the kernel stage over a (url, html, lang) frame."""
-    spark = pages.sparkSession
     # Map-only fast path (guide §2.4/§8): when the SCAN already yields
     # enough splits (row-grouped corpus + small maxPartitionBytes), the
     # payload column never needs to cross an exchange at all — scan and
@@ -175,18 +177,15 @@ def extract_pages(pages: DataFrame, partitions: int | None = None) -> DataFrame:
     # giant files, post-limit plans) where an exchange is the only way to
     # reach the cluster's parallelism. An explicit `partitions` is
     # honoured: the scan is kept only if it already has that many splits.
-    n_scan = pages.rdd.getNumPartitions()
-    default_parallelism = spark.sparkContext.defaultParallelism
-    if n_scan >= (default_parallelism if partitions is None else partitions):
-        prepared = pages.sortWithinPartitions(
-            F.octet_length("html").desc())
-        return map_in_pandas(prepared, _extract_batches, OUTPUT_SCHEMA)
+    target = (pages.sparkSession.sparkContext.defaultParallelism
+              if partitions is None else partitions)
+    if pages.rdd.getNumPartitions() < target:
+        pages = salted_spread(pages, partitions)
     # packing: descending size within partition -> the byte-budget
     # re-chunker in _extract_batches sees big docs first and emits
     # near-constant-byte units; also avoids a giant doc landing at the
     # tail of an otherwise-finished partition
-    prepared = salted_spread(pages, partitions).sortWithinPartitions(
-        F.octet_length("html").desc())
+    prepared = pages.sortWithinPartitions(F.octet_length("html").desc())
     return map_in_pandas(prepared, _extract_batches, OUTPUT_SCHEMA)
 
 
@@ -247,10 +246,12 @@ def run_extract_job(
     dedup_against: path of a PUBLISHED extract table — re-crawl mode. The
     increment's extracted docs are content-deduped against that table's
     persisted sha3-256 `id` column (and within the increment, min-url per
-    id) before the snapshot commit: an anti-join between two id columns,
-    no text read on either side. Error rows and empty extractions pass
-    through — they carry no content identity. The summary then includes
-    `dedup_dropped`.
+    id) before the snapshot commit: one dedup.keep_first pass over the
+    kernel output, whose anti-join reads two id columns and no text on
+    either side. Error rows and empty extractions pass through — they
+    carry no content identity. The summary then includes `dedup_dropped`:
+    the kernel's rows, observed while the write runs, minus the committed
+    docs.
 
     Returns a summary dict {snapshot_id, docs, failures, wall_s}.
     """
@@ -272,27 +273,17 @@ def run_extract_job(
         pages = pages.join(committed.select("url"), "url", "left_anti")
 
     out = extract_pages(pages, partitions)
-    n_dropped = 0
     if dedup_against is not None:
-        from docvision_spark.functions.dedup import incremental_exact_dedup
+        from docvision_spark.functions.dedup import keep_first
 
-        corpus = snapshots.read_table(spark, dedup_against)
-        corpus_fps = (corpus.filter(F.col("error").isNull()
-                                    & (F.length("text") > 0))
-                            .select(F.col("id").alias("fp")))
-        eligible = (F.col("error").isNull() & F.col("text").isNotNull()
-                    & (F.length("text") > 0))
-        # docs entering dedup; cheap relative to the extract stage, and
-        # needed so `dedup_dropped` is reported, not recomputed. The
-        # localCheckpoint stops the mapInPandas extract stage from running
-        # twice (once for this count, once for the write below).
-        out = out.localCheckpoint()
-        n_before = out.count()
-        kept = incremental_exact_dedup(
-            out.filter(eligible), corpus_fps, id_col="url",
-            text_col="text", fp_col="id")
-        out = kept.unionByName(out.filter(~eligible))
-        n_dropped = n_before - out.count()
+        # the kernel rows, counted while the write runs over them
+        kernel = Observation("kernel")
+        extracted = out.observe(kernel, F.count(F.lit(1)).alias("rows"))
+        eligible = F.col("error").isNull() & (F.length("text") > 0)
+        published = (snapshots.read_table(spark, dedup_against)
+                     .filter(eligible).select("id"))
+        out = keep_first(extracted, F.when(eligible, F.col("id")),
+                         [F.col("url").asc_nulls_last()], published=published)
     out = out.withColumn("bucket", F.pmod(F.crc32(F.col("url")), F.lit(N_BUCKETS)))
 
     data_dir = os.path.join(out_dir, "data")
@@ -301,32 +292,35 @@ def run_extract_job(
         .partitionBy("bucket")
         .parquet(staging))
 
+    def summarize(snap, n_docs: int, n_fail: int) -> dict:
+        summary = {"snapshot_id": snap, "docs": n_docs, "failures": n_fail,
+                   "wall_s": time.perf_counter() - t0}
+        if dedup_against is not None:
+            # filled by the write, unless AQE pruned the kernel stage from
+            # its plan (an empty input): only then is it counted on its own
+            try:
+                rows = kernel.get["rows"]
+            except Py4JJavaError:
+                rows = extracted.count()
+            summary["dedup_dropped"] = rows - n_docs
+        return summary
+
     if not snapshots._collect_files(staging):
         # resumed run with nothing left to do: no new snapshot
         import shutil
         shutil.rmtree(staging, ignore_errors=True)
-        summary = {"snapshot_id": None, "docs": 0, "failures": 0,
-                   "wall_s": time.perf_counter() - t0}
-        if dedup_against is not None:
-            summary["dedup_dropped"] = n_dropped
-        return summary
+        return summarize(None, 0, 0)
 
     # one aggregate over this snapshot's staged rows gives the summary
-    # counts and the lineage rows (one small row per task partition). It
-    # is checkpointed: commit moves the staged files, so the metrics write
-    # must read the aggregate, not scan staging again. (cache() would pin
-    # the aggregate at spark.sql.shuffle.partitions, where AQE coalesces
-    # it to the few partitions the rows need.)
-    per_part = partition_metrics(spark.read.parquet(staging)) \
-        .localCheckpoint(eager=False)
-    parts = per_part.collect()
-    n_docs = sum(r["doc_count"] for r in parts)
-    n_fail = sum(r["n_failures"] for r in parts)
+    # counts and the lineage rows (one per task partition), collected once
+    # as Arrow: commit moves the staged files, so the metrics table is
+    # written from them, in one file (Python rows would make that write
+    # run a Python worker: +0.6 s per job, measured on 4 vCPUs).
+    parts = partition_metrics(spark.read.parquet(staging)).toArrow()
+    n_docs = sum(parts["doc_count"].to_pylist())
+    n_fail = sum(parts["n_failures"].to_pylist())
     snap = snapshots.commit(out_dir, staging, data_dir, n_docs)
-    wall = time.perf_counter() - t0
-    write_metrics(per_part, out_dir, snap, pages_path, wall)
-    summary = {"snapshot_id": snap, "docs": n_docs, "failures": n_fail,
-               "wall_s": wall}
-    if dedup_against is not None:
-        summary["dedup_dropped"] = n_dropped
+    summary = summarize(snap, n_docs, n_fail)
+    write_metrics(spark.createDataFrame(parts).coalesce(1), out_dir, snap,
+                  pages_path, summary["wall_s"])
     return summary

@@ -66,11 +66,10 @@ def dedup_against_corpus_stream(pages: DataFrame, history_fps: DataFrame,
     it at a compacted, fp-bucketed artifact — then each micro-batch's
     anti-join is a pruned scan + hash join, never a full-corpus shuffle.
     NULL-fp rows pass through both stages unchanged (same rationale as
-    dedup_pages_stream)."""
-    deduped = dedup_pages_stream(pages, watermark)
-    survivors = (deduped.filter(F.col("fp").isNotNull())
-                        .join(history_fps.select("fp"), "fp", "left_anti"))
-    return survivors.unionByName(deduped.filter(F.col("fp").isNull()))
+    dedup_pages_stream): a null key matches nothing, so the left-anti join
+    keeps them without a split."""
+    return (dedup_pages_stream(pages, watermark)
+            .join(history_fps.select("fp"), "fp", "left_anti"))
 
 
 def start_incremental_dedup_query(

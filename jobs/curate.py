@@ -95,7 +95,8 @@ def main() -> None:
     from pyspark.sql import DataFrame, Observation
     from pyspark.sql import functions as F
 
-    from docvision_spark.functions.dedup import (minhash_artifacts,
+    from docvision_spark.functions.dedup import (keep_first,
+                                                 minhash_artifacts,
                                                  minhash_lsh_pairs)
     from docvision_spark.functions.text import with_quality
     from docvision_spark.pipeline.extract_job import extract_pages, read_pages
@@ -190,12 +191,13 @@ def main() -> None:
     valid = strip_frequent_lines(valid, text_col="text", min_docs=4)
     valid = valid.filter(F.length(F.trim("text")) > 0)
 
-    # 3. quality floor (scored on the stripped text). Cached: read on two
-    #    plan branches (the content-hash census and its join-back in step
-    #    4, or the LM's training and scoring passes). The boiler metric
-    #    belongs to the QUALITY-PASSED set — observed before the optional
-    #    LM gate reassigns `kept`, so its meaning does not depend on an
-    #    unrelated flag; coalesce: the sum over no rows is null.
+    # 3. quality floor (scored on the stripped text). Cached: two jobs run
+    #    step 4 over it, step 5's shingling checkpoint and the curated
+    #    write (or, with the LM gate, the LM's training and scoring
+    #    passes). The boiler metric belongs to the QUALITY-PASSED set —
+    #    observed before the optional LM gate reassigns `kept`, so its
+    #    meaning does not depend on an unrelated flag; coalesce: the sum
+    #    over no rows is null.
     scored = with_quality(valid, "text")
     kept = observe(
         scored.filter(F.col("quality_score") >= args.min_quality)
@@ -216,7 +218,8 @@ def main() -> None:
                                                     train_bigram_lm)
 
         lm = train_bigram_lm(kept, "text", top_k=args.lm_top_k)
-        # cached: read on both plan branches of step 4
+        # cached: step 5's shingling checkpoint and the curated write
+        # both run step 4 over it
         kept = observe(lm_score(kept, lm, text_col="text")
                        .filter(F.col("mb_per_token") <= args.lm_max_millibits)
                        .drop("n_tokens", "total_millibits", "mb_per_token"),
@@ -225,20 +228,18 @@ def main() -> None:
     # 4. exact dedup: keep the lexicographically smallest url per content
     #    hash, recomputed on the STRIPPED text (the doc id stays the sha3 of
     #    the original extraction — lineage — but docs that differed only in
-    #    now-removed template lines must collapse here)
-    kept = kept.withColumn("content_md5", F.md5(F.col("text")))
-    w_min = kept.groupBy("content_md5").agg(F.min("url").alias("url"))
-    exact = observe(kept.join(w_min, ["content_md5", "url"]),
+    #    now-removed template lines must collapse here). In re-crawl mode
+    #    the same pass drops copies of the published corpus: an anti-join
+    #    on its persisted content_md5 column (column-pruned, no history
+    #    text read) that reads the dedup window's exchange. content_md5
+    #    leads so the curated table keeps its column order.
+    h_md5 = (spark.read.parquet(os.path.join(args.history, "data"))
+             .select("content_md5") if args.history else None)
+    kept = kept.select(F.md5(F.col("text")).alias("content_md5"), "*")
+    exact = observe(keep_first(kept, F.col("content_md5"),
+                               [F.col("url").asc_nulls_last()],
+                               published=h_md5),
                     after_exact_dedup=rows)
-
-    # 4b. re-crawl mode: exact dedup against the published corpus's
-    #     persisted content_md5 column — a column-pruned anti-join, no
-    #     history text read
-    if args.history:
-        h_md5 = (spark.read.parquet(os.path.join(args.history, "data"))
-                 .select("content_md5"))
-        exact = observe(exact.join(h_md5, "content_md5", "left_anti"),
-                        after_history_exact=rows)
 
     # 5. near-dup drop: keep-lowest-url policy. `exact` is shingled,
     #    signed and banded here ONCE; steps 5b and 6 restrict these two

@@ -308,8 +308,9 @@ def test_curate_sf01_scale_stage_counts(tmp_path):
 def test_curate_history_recrawl_mode(tmp_path):
     """Re-crawl mode: curate a history corpus (publishing content_md5 +
     minhash artifacts), then curate an increment with --history pointing at
-    it. Exact copies of history drop at the content_md5 anti-join, near-dups
-    at the artifact band-probe; novel docs survive."""
+    it. Exact copies of history drop at the content_md5 anti-join (in the
+    same step as in-batch exact dups), near-dups at the artifact
+    band-probe; novel docs survive."""
     import random
 
     rng = random.Random(20260817)
@@ -360,8 +361,9 @@ def test_curate_history_recrawl_mode(tmp_path):
     r2 = curate(tmp_path / "inc_pages", tmp_path / "out_inc",
                 "--history", str(tmp_path / "out_hist"))
 
-    assert r2["after_exact_dedup"] == 6          # in-batch dup collapses
-    assert r2["after_history_exact"] == 5        # h0 copy drops
+    # one exact step: the in-batch dup collapses and the h0 copy drops
+    assert r2["after_exact_dedup"] == 5
+    assert "after_history_exact" not in r2
     assert r2["after_near_dedup"] == 5           # no in-batch near-dups
     assert r2["after_history_neardup"] == 4      # h1 near-dup drops
 

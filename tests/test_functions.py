@@ -38,6 +38,67 @@ def test_exact_dedup(docs):
     assert by_fp  # fingerprints non-null
 
 
+def _keyed(spark, rows):
+    return spark.createDataFrame(rows, "id long, k string")
+
+
+@pytest.mark.spark
+def test_keep_first_null_keys_pass_and_spread(spark):
+    """Every null-key row survives, and they do not pile onto one task:
+    each becomes its own row-derived key, spread over the exchange."""
+    from docvision_spark.functions.dedup import keep_first
+
+    rows = [(i, None) for i in range(64)] + [(100, "a"), (101, "a")]
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        got = (keep_first(_keyed(spark, rows), F.col("k"), [F.col("id")])
+               .withColumn("p", F.spark_partition_id()).collect())
+    finally:
+        spark.conf.set(key, old)
+    nulls = [r for r in got if r["k"] is None]
+    assert sorted(r["id"] for r in nulls) == list(range(64))
+    assert len({r["p"] for r in nulls}) > 1
+    assert [r["id"] for r in got if r["k"] == "a"] == [100]
+
+
+@pytest.mark.spark
+def test_keep_first_survivor_is_partitioning_invariant(spark):
+    from docvision_spark.functions.dedup import keep_first
+
+    rows = [(i, f"k{i % 7}") for i in range(50, 0, -1)] + [(0, None)]
+    df = _keyed(spark, rows)
+    for n in (1, 3, 8):
+        got = sorted(tuple(r) for r in keep_first(
+            df.repartition(n), F.col("k"), [F.col("id").desc()]).collect())
+        assert got == [(0, None)] + [(44 + j, f"k{(44 + j) % 7}")
+                                     for j in range(7)], n
+
+
+@pytest.mark.spark
+def test_keep_first_published_keys_drop(spark):
+    """A published key drops its rows; a null-key row survives the
+    anti-join, even against a published null."""
+    from docvision_spark.functions.dedup import keep_first
+
+    df = _keyed(spark, [(1, "a"), (2, "a"), (3, "b"), (4, None)])
+    published = spark.createDataFrame([("a",), (None,)], "fp string")
+    got = keep_first(df, F.col("k"), [F.col("id")], published=published)
+    assert sorted(r["id"] for r in got.collect()) == [3, 4]
+
+
+@pytest.mark.spark
+def test_keep_first_full_ties_keep_one(spark):
+    from docvision_spark.functions.dedup import keep_first
+
+    df = _keyed(spark, [(7, "a")] * 5 + [(8, "b")])
+    for n in (1, 3):
+        got = keep_first(df.repartition(n), F.col("k"),
+                         [F.col("id")]).collect()
+        assert sorted(tuple(r) for r in got) == [(7, "a"), (8, "b")]
+
+
 @pytest.mark.spark
 def test_minhash_finds_near_dups(docs):
     from docvision_spark.functions.dedup import (minhash_artifacts,

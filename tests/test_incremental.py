@@ -128,34 +128,58 @@ def test_incremental_plans_stay_jvm_side(spark):
         assert "BroadcastNestedLoopJoin" not in plan
 
 
-@pytest.mark.spark
-def test_recrawl_extract_dedup_against_published(spark, pages_dir, tmp_path):
-    """Re-crawl e2e at the job boundary: publish a corpus table, then
-    extract an increment of (a) re-crawled pages — same html bytes under
-    new urls — and (b) novel pages (one planted within-increment dup) with
-    dedup_against pointing at the published table. Only novel content
-    commits; the id anti-join catches the re-crawls without reading
-    either side's text."""
+@pytest.fixture(scope="module")
+def published(spark, pages_dir, tmp_path_factory):
+    """The unit pages corpus extracted into a published table."""
+    from docvision_spark.pipeline.extract_job import run_extract_job
+
+    pub_dir = str(tmp_path_factory.mktemp("published"))
+    s1 = run_extract_job(spark, pages_dir, pub_dir, partitions=4)
+    assert s1["docs"] == 300
+    return pub_dir
+
+
+def _copies(spark, pages_dir, pub_dir, n=None):
+    """Pages whose published extraction is clean and non-empty, under new
+    urls, html bytes kept (re-crawled content); the first `n` of them."""
     from pyspark.sql import functions as F
 
     from docvision_spark.pipeline import snapshots
-    from docvision_spark.pipeline.extract_job import read_pages, run_extract_job
+    from docvision_spark.pipeline.extract_job import read_pages
 
-    pub_dir = str(tmp_path / "published")
-    s1 = run_extract_job(spark, pages_dir, pub_dir, partitions=4)
-    assert s1["docs"] == 300
-
-    # 40 re-crawled pages: pick urls whose published extraction is clean
-    # and non-empty, remap the url, keep the html bytes
     pub = snapshots.read_table(spark, pub_dir)
-    clean = (pub.filter(F.col("error").isNull() & (F.length("text") > 0))
-                .select("url").limit(40))
-    pages = read_pages(spark, pages_dir)
-    recrawled = (pages.join(F.broadcast(clean), "url", "left_semi")
-                 .withColumn("url", F.concat(F.lit("http://recrawl.test/"),
-                                             F.col("url"))))
+    clean = pub.filter(F.col("error").isNull() & (F.length("text") > 0)) \
+               .select("url")
+    if n is not None:
+        clean = clean.limit(n)
+    return (read_pages(spark, pages_dir)
+            .join(F.broadcast(clean), "url", "left_semi")
+            .withColumn("url", F.concat(F.lit("http://recrawl.test/"),
+                                        F.col("url"))))
 
+
+@pytest.mark.spark
+def test_recrawl_extract_dedup_against_published(spark, pages_dir, published,
+                                                 tmp_path):
+    """Re-crawl e2e at the job boundary: extract an increment of (a)
+    re-crawled pages — same html bytes under new urls — and (b) novel
+    pages (one planted within-increment dup, one url crawled twice with
+    the same bytes) with dedup_against pointing at the published table.
+    Only novel content commits, once; the id anti-join catches the
+    re-crawls without reading either side's text. The job pins nothing:
+    no RDD blocks are held after it that were not held before (a lost
+    checkpoint block would fail the job; an unpersisted cache only holds
+    memory)."""
+    from docvision_spark.pipeline import snapshots
+    from docvision_spark.pipeline.extract_job import run_extract_job
+
+    def held():
+        return {i.id() for i in spark.sparkContext._jsc.sc()
+                                     .getRDDStorageInfo()}
+
+    recrawled = _copies(spark, pages_dir, published, 40)
     # 4 novel pages + 1 exact within-increment dup of the first novel page
+    # + the second novel page crawled again under its own url
     novel_rows = []
     for i in range(4):
         html = (f"<html><body><p>entirely novel increment page {i} with "
@@ -163,6 +187,7 @@ def test_recrawl_extract_dedup_against_published(spark, pages_dir, tmp_path):
                 ).encode()
         novel_rows.append((f"http://novel.test/{i}", html, "en"))
     novel_rows.append(("http://novel.test/dup-of-0", novel_rows[0][1], "en"))
+    novel_rows.append(novel_rows[1])
     novel = spark.createDataFrame(
         novel_rows, "url string, html binary, lang string")
 
@@ -171,10 +196,28 @@ def test_recrawl_extract_dedup_against_published(spark, pages_dir, tmp_path):
         .write.parquet(inc_dir)
 
     out_dir = str(tmp_path / "recrawl_out")
+    before = held()
     s2 = run_extract_job(spark, inc_dir, out_dir, partitions=4,
-                         dedup_against=pub_dir)
+                         dedup_against=published)
+    assert held() <= before
     assert s2["docs"] == 4, s2
-    assert s2["dedup_dropped"] == 41, s2  # 40 re-crawls + 1 in-batch dup
-    got = {r["url"] for r in
-           snapshots.read_table(spark, out_dir).select("url").collect()}
-    assert got == {f"http://novel.test/{i}" for i in range(4)}
+    # 40 re-crawls + 1 in-batch dup + 1 repeat of a url
+    assert s2["dedup_dropped"] == 42, s2
+    got = [r["url"] for r in
+           snapshots.read_table(spark, out_dir).select("url").collect()]
+    assert sorted(got) == [f"http://novel.test/{i}" for i in range(4)]
+
+
+@pytest.mark.spark
+def test_recrawl_extract_all_copies_commits_nothing(spark, pages_dir,
+                                                    published, tmp_path):
+    """An increment that only copies the published corpus commits no
+    snapshot, and every one of its docs counts as dropped."""
+    from docvision_spark.pipeline.extract_job import run_extract_job
+
+    inc_dir = str(tmp_path / "inc_pages")
+    _copies(spark, pages_dir, published).write.parquet(inc_dir)
+    n = spark.read.parquet(inc_dir).count()
+    s = run_extract_job(spark, inc_dir, str(tmp_path / "out"), partitions=4,
+                        dedup_against=published)
+    assert (s["docs"], s["snapshot_id"], s["dedup_dropped"]) == (0, None, n)

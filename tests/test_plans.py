@@ -270,3 +270,37 @@ def test_url_dedup_is_one_shuffle_into_the_kernel(spark, pages_dir):
     assert tree.count("MapInPandas") == 1
     below = tree.split("MapInPandas", 1)[1]
     assert below.count("Exchange") == 1, tree
+
+
+@pytest.mark.spark
+def test_incremental_exact_dedup_is_one_shuffle_of_the_rows(spark, tmp_path):
+    """The within-batch window and the anti-join against the published
+    fingerprints share one exchange of the increment's rows; only the
+    published keys shuffle to meet it. Pinned before AQE, broadcast off,
+    so the shuffle join shape is what shows: 2 exchanges in all, no
+    null-row Union, and no lineage cut (a checkpointed frame scans as an
+    ExistingRDD; both inputs here are parquet scans)."""
+    from docvision_spark.functions.dedup import incremental_exact_dedup
+
+    spark.createDataFrame([(1, "a b"), (2, "a b"), (3, None)],
+                          "doc_id long, text string") \
+        .write.parquet(str(tmp_path / "new"))
+    spark.createDataFrame([("x",)], "fp string") \
+        .write.parquet(str(tmp_path / "history"))
+    conf = {"spark.sql.adaptive.enabled": "false",
+            "spark.sql.autoBroadcastJoinThreshold": "-1"}
+    old = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        plan = incremental_exact_dedup(
+            spark.read.parquet(str(tmp_path / "new")),
+            spark.read.parquet(str(tmp_path / "history")),
+        )._jdf.queryExecution().executedPlan().toString()
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+    assert plan.count("Exchange") == 2, plan
+    assert plan.count("Exchange hashpartitioning") == 2, plan
+    assert "SortMergeJoin" in plan, plan
+    assert "Union" not in plan and "ExistingRDD" not in plan, plan
